@@ -1,11 +1,11 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 Every operator family from SURVEY.md §2 (reference parity + graft geospatial
-G1-G9 + training-data ops) is represented by a ``queries()`` entry; each
-SQL-expressible one has a matching DuckDB ``oracle_sql()`` string. The driver
-runs both at sf=0.01 and compares row-count + schema + order-insensitive
-value hash, so every aggregate/computed column is aliased identically on
-both sides.
+G1-G9 + training-data ops) is represented by a ``REGISTRY`` row: its Spark
+builder plus a DuckDB oracle, or the reason it is rows-only. ``queries()`` and
+``oracle_sql()`` are derived from that one table. The driver runs both at
+sf=0.01 and compares row-count + schema + order-insensitive value hash, so
+every aggregate/computed column is aliased identically on both sides.
 
 Geo queries derive deterministic (lat, lon) from ``doc_id`` with pure
 integer/double arithmetic (portable bit-for-bit across Spark and DuckDB);
@@ -20,20 +20,52 @@ from __future__ import annotations
 import hashlib
 import os
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
+from core_spark.data.polygons import edges_sql_values
 from core_spark.functions import hexgrid as hx
 from core_spark.functions import textstats as ts
+from core_spark.functions.geoparse import DEC_PATTERN
+from core_spark.functions.repetition import duck_rep_sql
+from core_spark.functions.textstats import duck_stop_count, duck_token_count
 from core_spark.operators import dedup as dd
 from core_spark.operators import heavyhitters as hh
 from core_spark.operators import linkgraph as lg
 from core_spark.operators import lmscore as lms
+from core_spark.operators import semdedup as sdd
+from core_spark.operators.asof import sql_asof_join
 from core_spark.operators.bm25 import sql_bm25_topk
 from core_spark.operators.bpe import sql_bpe_encode, sql_bpe_train
+from core_spark.operators.cardsketch import sql_distinct_sketch
+from core_spark.operators.decontaminate import (
+    sql_contaminated_docs,
+    sql_decontaminate_spans,
+)
+from core_spark.operators.dsir import sql_importance_weights
 from core_spark.operators.history import sql_scd2_intervals
+from core_spark.operators.knn import sql_knn
+from core_spark.operators.packing import sql_pack_sequences
+from core_spark.operators.paradedup import sql_dedup_paragraphs
+from core_spark.operators.pip import sql_pip_parity_join
 from core_spark.operators.qsketch import sql_group_quantile_sketch
-from core_spark.operators import semdedup as sdd
+from core_spark.operators.quantiles import sql_exact_group_quantiles
+from core_spark.operators.rangejoin import sql_range_join_pairs
+from core_spark.operators.sampling import (
+    keep_predicate,
+    sql_mixture_sample,
+    sql_sample_quota,
+)
+from core_spark.operators.spandedup import sql_dedup_substrings
+from core_spark.operators.termstats import sql_distinctive_terms
+from core_spark.operators.tiles import sql_compact_cells
+from core_spark.operators.urlfilter import sql_filter_blocked_hosts
+from core_spark.operators.weburl import (
+    sql_canonicalize, sql_cap_per_host, sql_gate_hosts_by_quality,
+    sql_latest_snapshot,
+)
+from core_spark.operators.zorder import sql_zorder_bucket_stats
 from core_spark.plans.materialize import pin
 
 # ---------------------------------------------------------------------------
@@ -9196,363 +9228,26 @@ def _sql_skew_report() -> str:
     """
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # REGISTRATION ORDER IS LOAD-BEARING: the driver's correctness harness
-    # checks the FIRST 50 entries (CORRECTNESS_r04 stopped at entry 50
-    # exactly). The window is rotated each round so every query gets a
-    # driver-green row in SOME round's file: positions 1-50 below hold
-    # every round-5 query (the normalization/LM/C4/Gopher/pipeline
-    # batch, bm25/anchor/quantile-sketch, span_dedup, s2_zonal, ...),
-    # the 17 queries the r4 run never reached, and the operators round 5
-    # touched whose oracled VALUES changed (text_quality: BPE token
-    # count wired into its compared signals). With 98 entries and a
-    # 50-row window, six r04-GREEN queries sit just past the boundary
-    # (dedup_minhash, dedup_embedding, simhash_pairs, dedup_cluster,
-    # corpus_curation + the untouched dedup_exact): their only r5
-    # change is the shared materialize.pin() helper swap, which has its
-    # own identical-results pytest (tests/test_materialize.py), and all
-    # are still gated locally by scripts/selfcheck.py, which runs every
-    # entry with no cap (ALL MATCH, recorded in ROUND5.md). With 100
-    # entries, positions 1-50 hold EXACTLY the 50 queries with no prior
-    # driver row (the 33 round-5 queries + the 17 the r4 run never
-    # reached) — verified programmatically against CORRECTNESS_r04's
-    # key set: zero r04-green entries occupy window slots and zero
-    # never-checked entries sit past 50. text_quality (position 51) is
-    # r4-GREEN and its r5 value change (BPE token count added to the
-    # compared signals) is gated by selfcheck + the unicode-parity
-    # pytest; knn and dedup_ngram follow — both r4-GREEN with oracle
-    # values unchanged since (knn: pin-swap only, parity-pytested;
-    # dedup_ngram: oracle pins mode=exact, and the NEW routing code is
-    # in-window via dedup_ngram_routed). Later positions are
-    # queries GREEN in CORRECTNESS_r04 whose code is UNCHANGED since
-    # (verified per file against the r4 boundary commit: detect.py,
-    # s2.py, geoparse.py, similarity.py, zonal.py, pip.py, sessions.py,
-    # the inventory kernels, multimodal).
-    return {
-        # -- new this round -------------------------------------------
-        "iceberg_scan": q_iceberg_scan,
-        "semdedup": q_semdedup,
-        "incremental_bloom": q_incremental_bloom,
-        "text_normalize": q_text_normalize,
-        "text_fold": q_text_fold,
-        "bm25_topk": q_bm25_topk,
-        "anchor_topk": q_anchor_topk,
-        "quantile_sketch": q_quantile_sketch,
-        "url_history": q_url_history,
-        "robots_gate": q_robots_gate,
-        "containment_join": q_containment_join,
-        "bpe_train": q_bpe_train,
-        "bpe_encode": q_bpe_encode,
-        "lm_fluency": q_lm_fluency,
-        "c4_clean": q_c4_clean,
-        "gopher_gate": q_gopher_gate,
-        "pipeline_modern": q_pipeline_modern,
-        "warc_roundtrip": q_warc_roundtrip,
-        "frequent_hosts": q_frequent_hosts,
-        "link_pagerank": q_link_pagerank,
-        "zorder_layout": q_zorder_layout,
-        "span_dedup": q_span_dedup,
-        "s2_zonal": q_s2_zonal,
-        "dedup_ngram_routed": q_dedup_ngram_routed,
-        "dedup_keep_best": q_dedup_keep_best,
-        "url_blocklist": q_url_blocklist,
-        "site_outlinks": q_site_outlinks,
-        "outlink_pagerank": q_outlink_pagerank,
-        "dsir_weights": q_dsir_weights,
-        # -- round-4 queries without a driver row yet ------------------
-        "text_repetition": q_text_repetition,
-        "decontaminate": q_decontaminate,
-        "decontaminate_spans": q_decontaminate_spans,
-        "sample_stratified": q_sample_stratified,
-        "sample_quota": q_sample_quota,
-        "mixture_sample": q_mixture_sample,
-        "refinery_subdoc": q_refinery_subdoc,
-        "fingerprint_winnow": q_fingerprint_winnow,
-        "url_host_cap": q_url_host_cap,
-        "url_latest": q_url_latest,
-        "paragraph_dedup": q_paragraph_dedup,
-        "tfidf_topk": q_tfidf_topk,
-        "pack_sequences": q_pack_sequences,
-        "host_quality_gate": q_host_quality_gate,
-        "range_join": q_range_join,
-        "asof_join": q_asof_join,
-        "tile_compact": q_tile_compact,
-        "corpus_refinery": q_corpus_refinery,
-        "group_quantiles": q_group_quantiles,
-        "card_sketch": q_card_sketch,
-        "incremental_dedup": q_incremental_dedup,
-        # ---- driver window boundary (entry 50 = incremental_dedup) ---
-        # -- operators touched this round + geospatial core ------------
-        "text_quality": q_text_quality,
-        "knn": q_knn,
-        "dedup_ngram": q_dedup_ngram,
-        "dedup_minhash": q_dedup_minhash,
-        "dedup_embedding": q_dedup_embedding,
-        "simhash_pairs": q_simhash_pairs,
-        "dedup_cluster": q_dedup_cluster,
-        "corpus_curation": q_corpus_curation,
-        # dedup_exact + text_langid rotated below the boundary to make
-        # room for iceberg_scan: both are oracled GREEN in
-        # CORRECTNESS_r04 and their kernels are provably unchanged since
-        # the r4 boundary commit (exact dedup at dedup.py:40 sits in no
-        # r5 diff hunk; lang_id_steps likewise — r5 textstats changes
-        # were additive: BPE token count, winnowing constants). Both
-        # stay gated by scripts/selfcheck.py, which runs every entry
-        # with no cap.
-        "dedup_exact": q_dedup_exact,
-        "text_langid": q_text_langid,
-        # tile_assign rotated below likewise: r4-green, and the
-        # assign path (hexgrid.py + tiles.assign_tiles) sits in no r5
-        # diff hunk (only compact_cells changed); the in-window
-        # tile_parent_rollup... tile_compact still exercise hexgrid.
-        "tile_assign": q_tile_assign,
-        # Everything below is green in CORRECTNESS_r04 with its code
-        # unchanged since (detect.py/s2.py/etc. untouched this round) —
-        # still gated locally by scripts/selfcheck.py, which runs every
-        # entry with no cap. s2_assign is additionally rows-only by
-        # design (dual-impl pytest is its gate) and the in-window
-        # s2_zonal exercises the same cell assignment end-to-end.
-        # ann_ivf + ann_ivf_recall rotated below the boundary to make
-        # room for new oracled queries: both are rows-only by design
-        # (the IVF path's REAL gates are the recall-bound sentinel logic
-        # + pytest), both r4-green ("ran clean"), and similarity.py is
-        # unchanged since the r4 boundary commit.
-        "ann_ivf": q_ann_ivf,
-        "ann_ivf_recall": q_ann_ivf_recall,
-        # extract_invariant rotated below the boundary likewise: it is
-        # rows-only BY CONSTRUCTION (0 rows == the G1 byte-identity
-        # invariant holds; its real gates are the pytest suite + the
-        # driver-run r04 row "0 rows ✓"), and functions/extract.py is
-        # unchanged since the r4 boundary commit.
-        "extract_invariant": q_extract_invariant,
-        # zonal_rollup rotated below the boundary: oracled GREEN in
-        # CORRECTNESS_r04 and zonal.py + hexgrid.py are unchanged since
-        # the r4 boundary commit — it stays gated by selfcheck (no cap)
-        # and its r4 row, alongside its zonal_salted sibling below.
-        "zonal_rollup": q_zonal_rollup,
-        "fingerprint": q_fingerprint,
-        "framework_detect": q_framework_detect,
-        "detect_cascade": q_detect_cascade,
-        "zonal_salted": q_zonal_salted,
-        "rasterize": q_rasterize,
-        "geoparse_dec": q_geoparse_dec,
-        "ann_topk": q_ann_topk,
-        # tile_parent_rollup: only compact_cells changed in tiles.py this
-        # round (gated by the in-window tile_compact); the rollup itself
-        # is r4-green and untouched
-        "tile_parent_rollup": q_tile_parent_rollup,
-        "pip_join": q_pip_join,
-        "sessionize": q_sessionize,
-        "s2_assign": q_s2_assign,
-        "test_file_filter": q_test_file_filter,
-        "pii_redact": q_pii_redact,
-        "pipeline_stats": q_pipeline_stats,
-        "window_topk": q_window_topk,
-        "agg_histogram": q_agg_histogram,
-        "scan_filter_agg": q_scan_filter_agg,
-        "join_agg": q_join_agg,
-        "set_ops": q_set_ops,
-        "events_rollup": q_events_rollup,
-        "pricing_summary": q_pricing_summary,
-        "semi_join": q_semi_join,
-        "inventory_spans": q_inventory_spans,
-        "rollup_sets": q_rollup_sets,
-        "outline": q_outline,
-        "token_match": q_token_match,
-        "jstest_inventory": q_jstest_inventory,
-        "pytest_inventory": q_pytest_inventory,
-        "domain_hints": q_domain_hints,
-        "native_inventory": q_native_inventory,
-        "managed_inventory": q_managed_inventory,
-        "media_pipeline": q_media_pipeline,
-        "audio_features": q_audio_features,
-        "video_frames": q_video_frames,
-        "multimodal_curation": q_multimodal_curation,
-        # -- post-window round-5 additions ------------------------------
-        # Registered past the 50-entry driver window on purpose: every
-        # window slot is taken by a query with NO prior driver row, and
-        # displacing one would cost it its only chance at a driver-green
-        # row. These are fully oracled and gated by scripts/selfcheck.py
-        # (runs every entry, no cap — ALL MATCH recorded in ROUND5.md)
-        # plus their own pytest batteries.
-        "delta_scan": q_delta_scan,
-        "rag_chunks": q_rag_chunks,
-        "hll_sketch": q_hll_sketch,
-        "crawl_frontier": q_crawl_frontier,
-        "link_hits": q_link_hits,
-        "url_redirects": q_url_redirects,
-        "cms_hosts": q_cms_hosts,
-        "sitemap_parse": q_sitemap_parse,
-        "dbscan": q_dbscan,
-        "geojson_scan": q_geojson_scan,
-        "crawl_pipeline": q_crawl_pipeline,
-        "geohash_assign": q_geohash_assign,
-        "robots_sitemaps": q_robots_sitemaps,
-        "trajectories": q_trajectories,
-        "rect_join": q_rect_join,
-        "polygon_area": q_polygon_area,
-        "polygon_simplify": q_polygon_simplify,
-        "link_triangles": q_link_triangles,
-        "fuzzy_titles": q_fuzzy_titles,
-        "domain_extract": q_domain_extract,
-        "kde_heatmap": q_kde_heatmap,
-        "link_bfs": q_link_bfs,
-        "convex_hull": q_convex_hull,
-        "moran_i": q_moran_i,
-        "segment_join": q_segment_join,
-        "hotspots_gi": q_hotspots_gi,
-        "link_costs": q_link_costs,
-        "snap_join": q_snap_join,
-        "spatial_pipeline": q_spatial_pipeline,
-        "hilbert_assign": q_hilbert_assign,
-        "geary_c": q_geary_c,
-        "areal_interp": q_areal_interp,
-        "contact_join": q_contact_join,
-        "ring_validate": q_ring_validate,
-        "shipping_priority": q_shipping_priority,
-        "supplier_volume": q_supplier_volume,
-        "returned_items": q_returned_items,
-        "large_orders": q_large_orders,
-        "volume_shipping": q_volume_shipping,
-        "lisa": q_lisa,
-        "order_priority_check": q_order_priority_check,
-        "promo_share": q_promo_share,
-        "emerging_hotspots": q_emerging_hotspots,
-        "od_flows": q_od_flows,
-        "phrase_search": q_phrase_search,
-        "query_route": q_query_route,
-        "co_visits": q_co_visits,
-        "geo_terms": q_geo_terms,
-        "emerging_terms": q_emerging_terms,
-        "regionize": q_regionize,
-        "crawl_budget": q_crawl_budget,
-        "map_match": q_map_match,
-        "zorder_bbox": q_zorder_bbox,
-        "stay_points": q_stay_points,
-        "mirror_hosts": q_mirror_hosts,
-        "link_kcore": q_link_kcore,
-        "link_clustering": q_link_clustering,
-        "geo_mentions": q_geo_mentions,
-        "variogram": q_variogram,
-        "link_predict": q_link_predict,
-        "kn_counts": q_kn_counts,
-        "idw": q_idw,
-        "collocations": q_collocations,
-        "theil_sen": q_theil_sen,
-        "hausdorff": q_hausdorff,
-        "link_assortativity": q_link_assortativity,
-        "skipgram": q_skipgram,
-        "host_gini": q_host_gini,
-        # -- statistics/analytics wave (fourth continuation session) ---
-        # Entries from here down are final-session additions past the
-        # driver's 50-entry window: each is gated by scripts/selfcheck
-        # (full-registry ALL MATCH, recorded in ROUND5.md) + its pytest
-        # battery; every one is DuckDB-oracled.
-        "tile_diversity": q_tile_diversity,
-        "ripley": q_ripley,
-        "tile_richness": q_tile_richness,
-        "rank_stability": q_rank_stability,
-        "quality_shift": q_quality_shift,
-        "knox": q_knox,
-        "colocation": q_colocation,
-        "volume_shift": q_volume_shift,
-        "host_keyness": q_host_keyness,
-        "volume_acf": q_volume_acf,
-        "quadrat": q_quadrat,
-        "lang_segregation": q_lang_segregation,
-        "crawl_burstiness": q_crawl_burstiness,
-        "user_streaks": q_user_streaks,
-        "funnel": q_funnel,
-        "kanon_audit": q_kanon_audit,
-        "cohort_retention": q_cohort_retention,
-        "ldiv_audit": q_ldiv_audit,
-        "click_leads_purchase": q_click_leads_purchase,
-        "geo_report": q_geo_report,
-        "warc_scan": q_warc_scan,
-        "langid_eval": q_langid_eval,
-        "robust_host_score": q_robust_host_score,
-        "link_reciprocity": q_link_reciprocity,
-        "degree_tail": q_degree_tail,
-        "user_survival": q_user_survival,
-        "length_drift": q_length_drift,
-        # -- relational classics completion (fifth continuation) --------
-        # Adapted TPC-H shapes over the driver schema; same gating as the
-        # rest of the post-window block: selfcheck ALL MATCH + pytest
-        # (tests/test_relational.py invariant battery).
-        "revenue_forecast": q_revenue_forecast,
-        "market_share": q_market_share,
-        "product_profit": q_product_profit,
-        "late_shipments": q_late_shipments,
-        "cust_order_dist": q_cust_order_dist,
-        "part_value_share": q_part_value_share,
-        "supplier_cardinality": q_supplier_cardinality,
-        "small_qty_revenue": q_small_qty_revenue,
-        "waiting_suppliers": q_waiting_suppliers,
-        "idle_customers": q_idle_customers,
-        "min_cost_supplier": q_min_cost_supplier,
-        # -- warehouse analytics wave (fifth continuation) --------------
-        "rollup_report": q_rollup_report,
-        "pivot_report": q_pivot_report,
-        "revenue_trend": q_revenue_trend,
-        "session_markov": q_session_markov,
-        "profile_table": q_profile_table,
-        "benford_audit": q_benford_audit,
-        "host_outliers": q_host_outliers,
-        "volume_spikes": q_volume_spikes,
-        "link_communities": q_link_communities,
-        "ab_test": q_ab_test,
-        "decayed_counts": q_decayed_counts,
-        "time_weighted_avg": q_time_weighted_avg,
-        "sliding_rate": q_sliding_rate,
-        "cdc_merge": q_cdc_merge,
-        "geofence_events": q_geofence_events,
-        "frechet": q_frechet,
-        "rake_keywords": q_rake_keywords,
-        "attribution": q_attribution,
-        "pareto_front": q_pareto_front,
-        "link_ppr": q_link_ppr,
-        "abc_classes": q_abc_classes,
-        "skew_report": q_skew_report,
-    }
+class Query(NamedTuple):
+    """One driver query: its Spark builder plus EITHER a zero-argument
+    DuckDB oracle returning the SQL text OR why the query is rows-only."""
+
+    name: str
+    build: Callable[[SparkSession, str], DataFrame]
+    oracle: Callable[[], str] | None = None
+    rows_only: str | None = None
 
 
-def oracle_sql() -> dict[str, str]:
-    from core_spark.data.polygons import edges_sql_values
-    from core_spark.functions.geoparse import DEC_PATTERN
-    from core_spark.functions.repetition import duck_rep_sql
-    from core_spark.operators.decontaminate import (
-        sql_contaminated_docs,
-        sql_decontaminate_spans,
+def _sql_knn() -> str:
+    knn = sql_knn(
+        f"SELECT * FROM ({_knn_queries_values()}) AS q(query_id, qlat, qlon)",
+        f"({_POINTS_SQL})",
+        KNN_K,
     )
-    from core_spark.operators.knn import sql_knn
-    from core_spark.operators.sampling import (
-        keep_predicate,
-        sql_mixture_sample,
-        sql_sample_quota,
-    )
-    from core_spark.operators.asof import sql_asof_join
-    from core_spark.operators.tiles import sql_compact_cells
-    from core_spark.operators.packing import sql_pack_sequences
-    from core_spark.operators.cardsketch import sql_distinct_sketch
-    from core_spark.operators.quantiles import sql_exact_group_quantiles
-    from core_spark.operators.rangejoin import sql_range_join_pairs
-    from core_spark.operators.paradedup import sql_dedup_paragraphs
-    from core_spark.operators.spandedup import sql_dedup_substrings
-    from core_spark.operators.termstats import sql_distinctive_terms
-    from core_spark.functions.textstats import (
-        duck_stop_count, duck_token_count,
-    )
-    from core_spark.operators.weburl import (
-        sql_canonicalize, sql_cap_per_host, sql_gate_hosts_by_quality,
-        sql_latest_snapshot,
-    )
-    from core_spark.operators.urlfilter import (
-        sql_filter_blocked_hosts,
-    )
-    from core_spark.operators.dsir import sql_importance_weights
-    from core_spark.operators.pip import sql_pip_parity_join
-    from core_spark.operators.zorder import sql_zorder_bucket_stats
+    return f"SELECT query_id, rank, doc_id FROM ({knn})"
 
+
+def _sql_detect_cascade() -> str:
     cascade = """
     CASE
       WHEN text LIKE '%spark%' AND text LIKE '%stream%' THEN 'streaming'
@@ -9562,153 +9257,366 @@ def oracle_sql() -> dict[str, str]:
       ELSE 'unknown'
     END
     """
+    return f"""
+            SELECT framework, COUNT(*) AS n_docs
+            FROM (SELECT {cascade} AS framework FROM documents)
+            GROUP BY framework
+        """
 
-    knn_oracle = sql_knn(
-        f"SELECT * FROM ({_knn_queries_values()}) AS q(query_id, qlat, qlon)",
-        f"({_POINTS_SQL})",
-        KNN_K,
-    )
 
-    return {
-        "tile_assign": f"""
+def _sql_incremental_dedup() -> str:
+    return f"""
+            WITH f AS (
+              SELECT doc_id,
+                     md5(array_to_string((string_split(trim(text), ' '))
+                         [1:{FP_PREFIX_K}], ' ')) AS fp
+              FROM documents
+            )
+            SELECT MIN(doc_id) AS doc_id, fp
+            FROM f WHERE doc_id % 2 = 1
+            GROUP BY fp
+            HAVING fp NOT IN (SELECT fp FROM f WHERE doc_id % 2 = 0)
+        """
+
+
+# The driver's correctness harness checks only rows 1-50: they hold the first
+# 50 queries (in registry order) with no row in any CORRECTNESS_r*.json yet.
+# Rotating those to the front is the only reorder; other rows keep theirs.
+REGISTRY: tuple[Query, ...] = (
+    Query("delta_scan", q_delta_scan, lambda: _SQL_DELTA_SCAN),
+    Query("rag_chunks", q_rag_chunks, _sql_rag_chunks),
+    Query("hll_sketch", q_hll_sketch, _sql_hll_sketch_q),
+    Query("crawl_frontier", q_crawl_frontier, _sql_crawl_frontier),
+    Query("link_hits", q_link_hits, _sql_link_hits),
+    Query("url_redirects", q_url_redirects, _sql_url_redirects),
+    Query("cms_hosts", q_cms_hosts, _sql_cms_hosts),
+    Query("sitemap_parse", q_sitemap_parse, _sql_sitemap_parse),
+    Query("dbscan", q_dbscan, _sql_dbscan_q),
+    Query("geojson_scan", q_geojson_scan, _sql_geojson_scan),
+    Query("crawl_pipeline", q_crawl_pipeline, _sql_crawl_pipeline),
+    Query("geohash_assign", q_geohash_assign, _sql_geohash_assign),
+    Query("robots_sitemaps", q_robots_sitemaps, _sql_robots_sitemaps),
+    Query("trajectories", q_trajectories, _sql_trajectories),
+    Query("rect_join", q_rect_join, _sql_rect_join),
+    Query("polygon_area", q_polygon_area, _sql_polygon_area),
+    Query("polygon_simplify", q_polygon_simplify, _sql_polygon_simplify),
+    Query("link_triangles", q_link_triangles, _sql_link_triangles),
+    Query("fuzzy_titles", q_fuzzy_titles, _sql_fuzzy_titles),
+    Query("domain_extract", q_domain_extract, _sql_domain_extract),
+    Query("kde_heatmap", q_kde_heatmap, _sql_kde_heatmap),
+    Query("link_bfs", q_link_bfs, _sql_link_bfs),
+    Query("convex_hull", q_convex_hull, _sql_convex_hull),
+    Query("moran_i", q_moran_i, _sql_moran_i),
+    Query("segment_join", q_segment_join, _sql_segment_join),
+    Query("hotspots_gi", q_hotspots_gi, _sql_hotspots_gi),
+    Query("link_costs", q_link_costs, _sql_link_costs),
+    Query("snap_join", q_snap_join, _sql_snap_join),
+    Query("spatial_pipeline", q_spatial_pipeline, _sql_spatial_pipeline),
+    Query("hilbert_assign", q_hilbert_assign, _sql_hilbert_assign),
+    Query("geary_c", q_geary_c, _sql_geary_c),
+    Query("areal_interp", q_areal_interp, _sql_areal_interp),
+    Query("contact_join", q_contact_join, _sql_contact_join),
+    Query("ring_validate", q_ring_validate, _sql_ring_validate),
+    Query("shipping_priority", q_shipping_priority, _sql_shipping_priority),
+    Query("supplier_volume", q_supplier_volume, _sql_supplier_volume),
+    Query("returned_items", q_returned_items, _sql_returned_items),
+    Query("large_orders", q_large_orders, _sql_large_orders),
+    Query("volume_shipping", q_volume_shipping, _sql_volume_shipping),
+    Query("lisa", q_lisa, _sql_lisa),
+    Query("order_priority_check", q_order_priority_check, _sql_order_priority_check),
+    Query("promo_share", q_promo_share, _sql_promo_share),
+    Query("emerging_hotspots", q_emerging_hotspots, _sql_emerging_hotspots),
+    Query("od_flows", q_od_flows, _sql_od_flows),
+    Query("phrase_search", q_phrase_search, _sql_phrase_search),
+    Query("query_route", q_query_route, _sql_query_route),
+    Query("co_visits", q_co_visits, _sql_co_visits),
+    Query("geo_terms", q_geo_terms, _sql_geo_terms),
+    Query("emerging_terms", q_emerging_terms, _sql_emerging_terms_q),
+    Query("regionize", q_regionize, _sql_regionize),
+    # -- end of the driver window (rows 1-50) ---------------------------------
+    Query("iceberg_scan", q_iceberg_scan, lambda: _SQL_ICEBERG_SCAN),
+    Query("semdedup", q_semdedup, _sql_semdedup_oracle),
+    # identical oracle by design: the bloom is route-only (no false
+    # negatives), so the exact anti-join SQL gates both operators
+    Query("incremental_bloom", q_incremental_bloom, _sql_incremental_dedup),
+    Query("text_normalize", q_text_normalize, _sql_text_normalize),
+    Query("text_fold", q_text_fold, _sql_text_fold),
+    Query("bm25_topk", q_bm25_topk, lambda: sql_bm25_topk(
+        "documents", "string_split(trim(text), ' ')",
+        BM25_QUERIES, k=BM25_K,
+    )),
+    Query("anchor_topk", q_anchor_topk, _sql_anchor_topk),
+    Query("quantile_sketch", q_quantile_sketch, lambda: sql_group_quantile_sketch(
+        "documents", "lang", "len(string_split(trim(text), ' '))"
+    )),
+    Query("url_history", q_url_history, lambda: sql_scd2_intervals(
+        f"""(SELECT 'https://s' || CAST(doc_id % {SCD2_URLS} AS VARCHAR)
+                        || '.example/p' AS url,
+                        doc_id AS warc_ts,
+                        {SCD2_FP_DUCK} AS fp
+                 FROM documents)"""
+    )),
+    Query("robots_gate", q_robots_gate, _sql_robots_gate),
+    Query("containment_join", q_containment_join, _sql_containment_join),
+    Query("bpe_train", q_bpe_train, lambda: sql_bpe_train(
+        "documents",
+        "list_filter(string_split(trim(text), ' '), x -> x != '')",
+        BPE_MERGES,
+    )),
+    Query("bpe_encode", q_bpe_encode, lambda: (
+        "SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens, "
+        "md5(array_to_string(toks, ' ')) AS fp FROM ("
+        + sql_bpe_encode(
+            "documents",
+            "list_filter(string_split(trim(text), ' '), x -> x != '')",
+            BPE_ENCODE_MERGES,
+            extra_cols="doc_id, ",
+        )
+        + ")"
+    )),
+    Query("lm_fluency", q_lm_fluency,
+          lambda: lms.sql_trigram_fluency("documents", vocab_size=256)),
+    Query("c4_clean", q_c4_clean, _sql_c4_clean_oracle),
+    Query("gopher_gate", q_gopher_gate, _sql_gopher_gate_oracle),
+    Query("pipeline_modern", q_pipeline_modern, _sql_pipeline_modern),
+    Query("warc_roundtrip", q_warc_roundtrip, lambda: _SQL_WARC_ROUNDTRIP),
+    Query("frequent_hosts", q_frequent_hosts, lambda: hh.sql_frequent_items(
+        f"SELECT {_ruler_host_sql('duckdb')} AS item FROM documents",
+        "item",
+        num=1,
+        den=20,
+    )),
+    Query("link_pagerank", q_link_pagerank, lambda: lg.sql_host_pagerank(
+        "SELECT doc_id FROM documents", n_hosts=97, k_out=4, iters=3
+    )),
+    Query("zorder_layout", q_zorder_layout, lambda: sql_zorder_bucket_stats(
+        _POINTS_SQL, bucket_shift_pow2=1 << 26, dialect="duck"
+    )),
+    Query("span_dedup", q_span_dedup, lambda: sql_dedup_substrings(
+        f"(SELECT doc_id, {SPAN_GEN_SQL} AS text FROM documents)",
+        SPAN_K,
+    )),
+    Query("s2_zonal", q_s2_zonal,
+          rows_only="S2 Hilbert cells have no SQL twin; dual-implementation "
+                    "pytest (tests/test_s2.py)"),
+    Query("dedup_ngram_routed", q_dedup_ngram_routed,
+          rows_only="recall is probabilistically bounded by design; "
+                    "emitted pairs are exactness-pytested"),
+    Query("dedup_keep_best", q_dedup_keep_best, lambda: dd.sql_dedup_keep_best(
+        "documents", "length(text)", k=3, n_perm=8, bands=4,
+        threshold=0.5,
+    )),
+    Query("url_blocklist", q_url_blocklist, lambda: sql_filter_blocked_hosts(
+        sql_canonicalize(
+            f"(SELECT doc_id, source, {BL_URL_GEN_SQL} AS url"
+            " FROM documents)"
+        ),
+        ", ".join(f"('{d}')" for d in BL_DOMAINS),
+        "doc_id, host, url_canon",
+    )),
+    Query("site_outlinks", q_site_outlinks,
+          lambda: _sql_outlink_edges(OUTLINK_SRC_SQL)),
+    Query("outlink_pagerank", q_outlink_pagerank, lambda: lg.sql_pagerank_weighted(
+        _sql_outlink_edges(OUTLINK_PR_SRC_SQL), iters=3
+    )),
+    Query("dsir_weights", q_dsir_weights, lambda: sql_importance_weights(
+        "documents", DSIR_TARGET, n_buckets=DSIR_BUCKETS
+    )),
+    Query("text_repetition", q_text_repetition, lambda: duck_rep_sql("documents")),
+    Query("decontaminate", q_decontaminate, lambda: sql_contaminated_docs(
+        "documents", "doc_id % 50 = 0", k=5
+    )),
+    Query("decontaminate_spans", q_decontaminate_spans, lambda: sql_decontaminate_spans(
+        "documents", "doc_id % 50 = 0", k=5
+    )),
+    Query("sample_stratified", q_sample_stratified, lambda: (
+        "SELECT doc_id, lang, source FROM documents WHERE "
+        + keep_predicate(SAMPLE_RATES, dialect="duckdb")
+    )),
+    Query("sample_quota", q_sample_quota,
+          lambda: sql_sample_quota("documents", 25, "doc_id, lang")),
+    Query("mixture_sample", q_mixture_sample, lambda: sql_mixture_sample(
+        "documents", MIXTURE_TARGETS,
+        "len(string_split(trim(text), ' '))",
+        select_cols="doc_id, d.lang AS lang",
+    )),
+    # the sub-document refinery chain composes the three twins by
+    # nesting (each emitter's WITH is subquery-scoped in DuckDB)
+    Query("refinery_subdoc", q_refinery_subdoc, lambda: sql_mixture_sample(
+        "(SELECT s.doc_id, s.text_clean AS text, d.lang"
+        " FROM ("
+        + sql_decontaminate_spans(
+            "(SELECT s.doc_id, s.text_dedup AS text, d.lang"
+            " FROM ("
+            + sql_dedup_substrings(
+                f"(SELECT doc_id, {SPAN_GEN_SQL} AS text"
+                " FROM documents)",
+                SPAN_K,
+            )
+            + ") s JOIN documents d USING (doc_id))",
+            "doc_id % 50 = 0",
+            k=5,
+        )
+        + ") s JOIN documents d USING (doc_id))",
+        MIXTURE_TARGETS,
+        "len(string_split(trim(text), ' '))",
+        select_cols=(
+            "doc_id, d.lang AS lang,"
+            " CAST(len(string_split(trim(d.text), ' ')) AS INT)"
+            " AS n_tokens_clean"
+        ),
+    )),
+    Query("fingerprint_winnow", q_fingerprint_winnow, _sql_fingerprint_winnow),
+    Query("url_host_cap", q_url_host_cap, lambda: sql_cap_per_host(
+        sql_canonicalize(
+            f"(SELECT doc_id, source, {URL_GEN_SQL} AS url"
+            " FROM documents)"
+        ),
+        HOST_CAP,
+        "doc_id, host, url_canon",
+    )),
+    Query("url_latest", q_url_latest, lambda: sql_latest_snapshot(
+        f"SELECT doc_id, {URL_CRAWL_SQL} AS url,"
+        f" {TS_CRAWL_SQL} AS ts_epoch FROM documents",
+        "doc_id, url, ts_epoch",
+        ts_col="ts_epoch",
+    )),
+    Query("paragraph_dedup", q_paragraph_dedup,
+          lambda: sql_dedup_paragraphs("documents", PARA_TOKENS)),
+    Query("tfidf_topk", q_tfidf_topk, lambda: sql_distinctive_terms(
+        "documents", "string_split(trim(text), ' ')", VOCAB_V, TFIDF_K
+    )),
+    Query("pack_sequences", q_pack_sequences, lambda: sql_pack_sequences(
+        "SELECT doc_id, CAST(len(string_split(trim(text), ' '))"
+        " AS BIGINT) AS n_tokens FROM documents",
+        PACK_BUDGET,
+        PACK_SHARDS,
+        'doc_id, n_tokens, shard, bin, "offset"',
+    )),
+    Query("host_quality_gate", q_host_quality_gate, lambda: sql_gate_hosts_by_quality(
+        "SELECT doc_id, host,"
+        f" CAST({duck_stop_count('text')} AS BIGINT) AS stop_n,"
+        f" CAST({duck_token_count('text')} AS BIGINT) AS n_tokens"
+        " FROM ("
+        + sql_canonicalize(
+            f"(SELECT doc_id, source, text, {URL_GEN_SQL} AS url"
+            " FROM documents)"
+        )
+        + ")",
+        HOST_GATE_PCT,
+        "doc_id, host, stop_n, n_tokens",
+    )),
+    Query("range_join", q_range_join,
+          lambda: sql_range_join_pairs(_POINTS_SQL, RANGE_R)),
+    Query("asof_join", q_asof_join, lambda: sql_asof_join(
+        "SELECT event_id, user_id, ts FROM events",
+        "SELECT user_id, ts, event_id AS err_id FROM events"
+        " WHERE event_type = 'error'",
+        key="user_id",
+        ts_col="ts",
+        select_cols="l.event_id AS event_id, r.err_id AS prior_err_id",
+        inclusive=False,
+    )),
+    Query("tile_compact", q_tile_compact, lambda: (
+        "SELECT cell, " + RES_FROM_CELL + " AS res FROM ("
+        + sql_compact_cells(
+            f"SELECT {CELL_FROM_IDX} AS cell FROM ("
+            "SELECT doc_id * 7 + j AS idx FROM documents,"
+            " generate_series(0, 6) AS t(j))",
+            input_res=9,
+            min_res=5,
+        )
+        + ")"
+    )),
+    Query("corpus_refinery", q_corpus_refinery, lambda: sql_pack_sequences(
+        sql_gate_hosts_by_quality(
+            sql_cap_per_host(
+                sql_latest_snapshot(
+                    "SELECT doc_id, host, url_canon, ts_epoch,"
+                    f" CAST({duck_stop_count('text')} AS BIGINT)"
+                    " AS stop_n,"
+                    f" CAST({duck_token_count('text')} AS BIGINT)"
+                    " AS n_tokens FROM ("
+                    + sql_canonicalize(
+                        "(SELECT doc_id, source, text,"
+                        f" {URL_GEN_SQL} AS url,"
+                        f" {TS_CRAWL_SQL} AS ts_epoch FROM documents)"
+                    )
+                    + ")",
+                    "doc_id, host, url_canon, ts_epoch,"
+                    " stop_n, n_tokens",
+                    url_col="url_canon",
+                    ts_col="ts_epoch",
+                ),
+                REFINERY_CAP,
+                "doc_id, host, stop_n, n_tokens",
+            ),
+            REFINERY_PCT,
+            "doc_id, host, stop_n, n_tokens",
+        ),
+        REFINERY_BUDGET,
+        REFINERY_SHARDS,
+        'doc_id, host, n_tokens, shard, bin, "offset"',
+    )),
+    Query("group_quantiles", q_group_quantiles, lambda: sql_exact_group_quantiles(
+        "SELECT doc_id, lang, n_chars FROM documents",
+        "lang",
+        "n_chars",
+    )),
+    Query("card_sketch", q_card_sketch, lambda: sql_distinct_sketch(
+        "documents", "lang", "md5(text)"
+    )),
+    Query("incremental_dedup", q_incremental_dedup, _sql_incremental_dedup),
+    Query("text_quality", q_text_quality, lambda: (
+        "SELECT doc_id, "
+        + ", ".join(f"{e} AS {k}" for k, e in ts.duck_quality_cols("text").items())
+        + " FROM documents"
+    )),
+    Query("knn", q_knn, _sql_knn),
+    Query("dedup_ngram", q_dedup_ngram,
+          lambda: dd.sql_ngram_jaccard_pairs("documents", k=3, threshold=0.4)),
+    Query("dedup_minhash", q_dedup_minhash,
+          lambda: dd.sql_minhash_lsh_pairs("documents", k=2, n_perm=8, bands=4)),
+    Query("dedup_embedding", q_dedup_embedding,
+          lambda: dd.sql_embedding_dup_pairs("embeddings")),
+    Query("simhash_pairs", q_simhash_pairs,
+          lambda: dd.sql_simhash_pairs("documents", max_hamming=3)),
+    Query("dedup_cluster", q_dedup_cluster, lambda: dd.sql_dedup_cluster(
+        "documents", k=3, n_perm=8, bands=4, threshold=0.5
+    )),
+    Query("corpus_curation", q_corpus_curation, _sql_corpus_curation_oracle),
+    Query("dedup_exact", q_dedup_exact, lambda: dd.sql_exact_dedup("documents")),
+    Query("text_langid", q_text_langid,
+          lambda: f"SELECT doc_id, {ts.sql_lang_id('text')} AS lang_pred FROM documents"),
+    Query("tile_assign", q_tile_assign, lambda: f"""
             SELECT doc_id,
                    {hx.sql_cell('lat', 'lon', 5)} AS h3_r5,
                    {hx.sql_cell('lat', 'lon', 7)} AS h3_r7,
                    {hx.sql_cell('lat', 'lon', 9)} AS h3_r9
             FROM ({_POINTS_SQL})
-        """,
-        "tile_parent_rollup": f"""
-            SELECT {hx.sql_cell_to_parent('h3_r7')} AS h3_r6,
-                   COUNT(*) AS doc_count
-            FROM (SELECT {hx.sql_cell('lat', 'lon', 7)} AS h3_r7
-                  FROM ({_POINTS_SQL}))
-            GROUP BY 1
-        """,
-        "zonal_rollup": f"""
+        """),
+    Query("ann_ivf", q_ann_ivf,
+          rows_only="approximate by design; recall pytested against brute force"),
+    Query("ann_ivf_recall", q_ann_ivf_recall,
+          rows_only="recall-bound sentinel: 6 rows when healthy (3 queries "
+                    "x 2 n_probe tiers)"),
+    Query("extract_invariant", q_extract_invariant,
+          rows_only="0 rows == html_to_text reproduces the generator's "
+                    "text byte for byte"),
+    Query("zonal_rollup", q_zonal_rollup, lambda: f"""
             SELECT {hx.sql_cell('lat', 'lon', 5)} AS h3_r5, lang, COUNT(*) AS n
             FROM ({_POINTS_SQL})
             GROUP BY 1, 2
-        """,
-        "pip_join": sql_pip_parity_join(
-            f"SELECT doc_id AS pt_id, lat, lon FROM ({_POINTS_SQL})",
-            edges_sql_values(N_POLYGONS),
-        ),
-        "knn": f"SELECT query_id, rank, doc_id FROM ({knn_oracle})",
-        "geoparse_dec": f"""
-            SELECT doc_id,
-                   CAST(regexp_extract_all(mention_text, '{DEC_PATTERN}', 1)[1] AS DOUBLE) AS mlat,
-                   CAST(regexp_extract_all(mention_text, '{DEC_PATTERN}', 2)[1] AS DOUBLE) AS mlon
-            FROM (SELECT doc_id,
-                         'located at ' || CAST(doc_id % 90 AS VARCHAR) || '.1234' ||
-                         ', -' || CAST(doc_id % 179 AS VARCHAR) || '.5678' ||
-                         ' nearby' AS mention_text
-                  FROM documents)
-        """,
-        "detect_cascade": f"""
-            SELECT framework, COUNT(*) AS n_docs
-            FROM (SELECT {cascade} AS framework FROM documents)
-            GROUP BY framework
-        """,
-        "dedup_exact": dd.sql_exact_dedup("documents"),
-        "dedup_ngram": dd.sql_ngram_jaccard_pairs("documents", k=3, threshold=0.4),
-        "dedup_minhash": dd.sql_minhash_lsh_pairs("documents", k=2, n_perm=8, bands=4),
-        "dedup_embedding": dd.sql_embedding_dup_pairs("embeddings"),
-        "simhash_pairs": dd.sql_simhash_pairs("documents", max_hamming=3),
-        "jstest_inventory": _sql_js_inventory_oracle(),
-        "pytest_inventory": _sql_py_inventory_oracle(),
-        "domain_hints": _sql_domain_hints_oracle(),
-        "inventory_spans": _sql_inventory_spans_oracle(),
-        "corpus_curation": _sql_corpus_curation_oracle(),
-        "native_inventory": _sql_native_inventory_oracle(),
-        "managed_inventory": _sql_managed_inventory_oracle(),
-        "framework_detect": _sql_framework_detect_oracle(),
-        "test_file_filter": _sql_test_file_filter_oracle(),
-        "dedup_cluster": dd.sql_dedup_cluster(
-            "documents", k=3, n_perm=8, bands=4, threshold=0.5
-        ),
-        "dedup_keep_best": dd.sql_dedup_keep_best(
-            "documents", "length(text)", k=3, n_perm=8, bands=4,
-            threshold=0.5,
-        ),
-        # expected outline counts straight from q_outline's generation rules:
-        # every doc has h1+intro(2 words); %2 adds h2+3 words; %3 adds
-        # h2>h3+2 words
-        "outline": """
-            SELECT doc_id,
-                   CAST(1 + CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END
-                          + CASE WHEN doc_id % 3 = 0 THEN 2 ELSE 0 END AS BIGINT)
-                     AS n_headings,
-                   CAST(1 AS BIGINT) AS n_top,
-                   CAST(CASE WHEN doc_id % 3 = 0 THEN 3
-                             WHEN doc_id % 2 = 0 THEN 2
-                             ELSE 1 END AS INTEGER) AS max_depth,
-                   CAST(2 + CASE WHEN doc_id % 2 = 0 THEN 3 ELSE 0 END
-                          + CASE WHEN doc_id % 3 = 0 THEN 2 ELSE 0 END AS BIGINT)
-                     AS n_words_total
-            FROM documents
-        """,
-        "text_quality": (
-            "SELECT doc_id, "
-            + ", ".join(f"{e} AS {k}" for k, e in ts.duck_quality_cols("text").items())
-            + " FROM documents"
-        ),
-        "text_langid": f"SELECT doc_id, {ts.sql_lang_id('text')} AS lang_pred FROM documents",
-        "fingerprint": f"SELECT doc_id, {ts.duck_fingerprint('text')} AS fp FROM documents",
-        "fingerprint_winnow": _sql_fingerprint_winnow(),
-        "ann_topk": """
-            SELECT query_id, rank, vec_id FROM (
-              SELECT q.vec_id AS query_id, v.vec_id,
-                     ROW_NUMBER() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY list_dot_product(CAST(v.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[]))
-                                / (sqrt(list_dot_product(CAST(v.embedding AS DOUBLE[]), CAST(v.embedding AS DOUBLE[])))
-                                   * sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))) DESC,
-                                v.vec_id ASC) AS rank
-              FROM embeddings v
-              CROSS JOIN (SELECT * FROM embeddings WHERE vec_id < 3) q
-            ) WHERE rank <= 5
-        """,
-        "agg_histogram": """
-            -- CAST: DuckDB types SUM(INTEGER) as HUGEINT (int128) which lands in
-            -- pandas as float64; Spark SUM is BIGINT. Cast for hash portability.
-            SELECT lang, source, COUNT(*) AS n_docs,
-                   CAST(SUM(n_chars) AS BIGINT) AS total_chars
-            FROM documents GROUP BY lang, source
-        """,
-        "scan_filter_agg": """
-            SELECT CAST(ROUND(SUM(l_extendedprice * l_discount), 4) AS DOUBLE) AS revenue,
-                   COUNT(*) AS n_rows
-            FROM lineitem
-            WHERE l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24
-        """,
-        "join_agg": """
-            SELECT n_name, COUNT(*) AS n_orders,
-                   CAST(ROUND(SUM(o_totalprice), 2) AS DOUBLE) AS total_price
-            FROM orders
-            JOIN customer ON o_custkey = c_custkey
-            JOIN nation ON c_nationkey = n_nationkey
-            GROUP BY n_name
-        """,
-        "window_topk": """
-            SELECT o_custkey, rank, o_orderkey FROM (
-              SELECT o_custkey, o_orderkey,
-                     ROW_NUMBER() OVER (PARTITION BY o_custkey
-                                        ORDER BY o_totalprice DESC, o_orderkey ASC) AS rank
-              FROM orders
-            ) WHERE rank <= 2
-        """,
-        "set_ops": """
-            SELECT c_custkey FROM customer
-            WHERE c_custkey NOT IN
-                  (SELECT o_custkey FROM orders WHERE o_orderpriority LIKE '1%')
-        """,
-        "events_rollup": """
-            SELECT CAST(EXTRACT(hour FROM ts) AS INT) AS hour_of_day, event_type,
-                   COUNT(*) AS n_events,
-                   CAST(ROUND(SUM(value), 4) AS DOUBLE) AS total_value
-            FROM events GROUP BY 1, 2
-        """,
-        "rasterize": f"""
+        """),
+    Query("fingerprint", q_fingerprint,
+          lambda: f"SELECT doc_id, {ts.duck_fingerprint('text')} AS fp FROM documents"),
+    Query("framework_detect", q_framework_detect, _sql_framework_detect_oracle),
+    Query("detect_cascade", q_detect_cascade, _sql_detect_cascade),
+    Query("zonal_salted", q_zonal_salted, lambda: f"""
+            SELECT {hx.sql_cell('lat', 'lon', 5)} AS h3_r5, COUNT(*) AS doc_count
+            FROM ({_POINTS_SQL}) GROUP BY 1
+        """),
+    Query("rasterize", q_rasterize, lambda: f"""
             WITH pixels AS (
               SELECT ix, iy,
                      -180.0 + (ix + 0.5) * {RASTER_PIXEL!r} AS plon,
@@ -9725,24 +9633,42 @@ def oracle_sql() -> dict[str, str]:
             FROM (SELECT ix, iy, {hx.sql_cell('plat', 'plon', RASTER_RES)} AS pcell
                   FROM pixels) p
             LEFT JOIN zonal ON p.pcell = zonal.cell
-        """,
-        "pricing_summary": """
-            SELECT l_returnflag, l_linestatus,
-                   CAST(ROUND(SUM(l_quantity), 2) AS DOUBLE) AS sum_qty,
-                   CAST(ROUND(SUM(l_extendedprice), 2) AS DOUBLE) AS sum_base_price,
-                   CAST(ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS DOUBLE) AS sum_disc_price,
-                   CAST(ROUND(AVG(l_quantity), 6) AS DOUBLE) AS avg_qty,
-                   COUNT(*) AS count_order
-            FROM lineitem
-            WHERE l_shipdate <= TIMESTAMP '2024-09-01 00:00:00'
-            GROUP BY l_returnflag, l_linestatus
-        """,
-        "semi_join": """
-            SELECT c_custkey, c_nationkey FROM customer
-            WHERE EXISTS (SELECT 1 FROM orders
-                          WHERE o_custkey = c_custkey AND o_totalprice > 200000)
-        """,
-        "sessionize": """
+        """),
+    Query("geoparse_dec", q_geoparse_dec, lambda: f"""
+            SELECT doc_id,
+                   CAST(regexp_extract_all(mention_text, '{DEC_PATTERN}', 1)[1] AS DOUBLE) AS mlat,
+                   CAST(regexp_extract_all(mention_text, '{DEC_PATTERN}', 2)[1] AS DOUBLE) AS mlon
+            FROM (SELECT doc_id,
+                         'located at ' || CAST(doc_id % 90 AS VARCHAR) || '.1234' ||
+                         ', -' || CAST(doc_id % 179 AS VARCHAR) || '.5678' ||
+                         ' nearby' AS mention_text
+                  FROM documents)
+        """),
+    Query("ann_topk", q_ann_topk, lambda: """
+            SELECT query_id, rank, vec_id FROM (
+              SELECT q.vec_id AS query_id, v.vec_id,
+                     ROW_NUMBER() OVER (
+                       PARTITION BY q.vec_id
+                       ORDER BY list_dot_product(CAST(v.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[]))
+                                / (sqrt(list_dot_product(CAST(v.embedding AS DOUBLE[]), CAST(v.embedding AS DOUBLE[])))
+                                   * sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))) DESC,
+                                v.vec_id ASC) AS rank
+              FROM embeddings v
+              CROSS JOIN (SELECT * FROM embeddings WHERE vec_id < 3) q
+            ) WHERE rank <= 5
+        """),
+    Query("tile_parent_rollup", q_tile_parent_rollup, lambda: f"""
+            SELECT {hx.sql_cell_to_parent('h3_r7')} AS h3_r6,
+                   COUNT(*) AS doc_count
+            FROM (SELECT {hx.sql_cell('lat', 'lon', 7)} AS h3_r7
+                  FROM ({_POINTS_SQL}))
+            GROUP BY 1
+        """),
+    Query("pip_join", q_pip_join, lambda: sql_pip_parity_join(
+        f"SELECT doc_id AS pt_id, lat, lon FROM ({_POINTS_SQL})",
+        edges_sql_values(N_POLYGONS),
+    )),
+    Query("sessionize", q_sessionize, lambda: """
             SELECT user_id,
                    CAST(FLOOR(epoch(MIN(ts))) AS BIGINT) AS start_s,
                    CAST(FLOOR(epoch(MAX(ts))) AS BIGINT) AS end_s,
@@ -9762,28 +9688,110 @@ def oracle_sql() -> dict[str, str]:
                       FROM events)
               )
             ) GROUP BY user_id, sess
-        """,
-        "rollup_sets": """
+        """),
+    Query("s2_assign", q_s2_assign,
+          rows_only="S2 Hilbert cells have no SQL twin; dual-implementation "
+                    "pytest (tests/test_s2.py)"),
+    Query("test_file_filter", q_test_file_filter, _sql_test_file_filter_oracle),
+    Query("pii_redact", q_pii_redact, _sql_pii_redact_oracle),
+    Query("pipeline_stats", q_pipeline_stats,
+          rows_only="lineage metrics of a checkpointed pipeline run"),
+    Query("window_topk", q_window_topk, lambda: """
+            SELECT o_custkey, rank, o_orderkey FROM (
+              SELECT o_custkey, o_orderkey,
+                     ROW_NUMBER() OVER (PARTITION BY o_custkey
+                                        ORDER BY o_totalprice DESC, o_orderkey ASC) AS rank
+              FROM orders
+            ) WHERE rank <= 2
+        """),
+    Query("agg_histogram", q_agg_histogram, lambda: """
+            -- CAST: DuckDB types SUM(INTEGER) as HUGEINT (int128) which lands in
+            -- pandas as float64; Spark SUM is BIGINT. Cast for hash portability.
+            SELECT lang, source, COUNT(*) AS n_docs,
+                   CAST(SUM(n_chars) AS BIGINT) AS total_chars
+            FROM documents GROUP BY lang, source
+        """),
+    Query("scan_filter_agg", q_scan_filter_agg, lambda: """
+            SELECT CAST(ROUND(SUM(l_extendedprice * l_discount), 4) AS DOUBLE) AS revenue,
+                   COUNT(*) AS n_rows
+            FROM lineitem
+            WHERE l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24
+        """),
+    Query("join_agg", q_join_agg, lambda: """
+            SELECT n_name, COUNT(*) AS n_orders,
+                   CAST(ROUND(SUM(o_totalprice), 2) AS DOUBLE) AS total_price
+            FROM orders
+            JOIN customer ON o_custkey = c_custkey
+            JOIN nation ON c_nationkey = n_nationkey
+            GROUP BY n_name
+        """),
+    Query("set_ops", q_set_ops, lambda: """
+            SELECT c_custkey FROM customer
+            WHERE c_custkey NOT IN
+                  (SELECT o_custkey FROM orders WHERE o_orderpriority LIKE '1%')
+        """),
+    Query("events_rollup", q_events_rollup, lambda: """
+            SELECT CAST(EXTRACT(hour FROM ts) AS INT) AS hour_of_day, event_type,
+                   COUNT(*) AS n_events,
+                   CAST(ROUND(SUM(value), 4) AS DOUBLE) AS total_value
+            FROM events GROUP BY 1, 2
+        """),
+    Query("pricing_summary", q_pricing_summary, lambda: """
+            SELECT l_returnflag, l_linestatus,
+                   CAST(ROUND(SUM(l_quantity), 2) AS DOUBLE) AS sum_qty,
+                   CAST(ROUND(SUM(l_extendedprice), 2) AS DOUBLE) AS sum_base_price,
+                   CAST(ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS DOUBLE) AS sum_disc_price,
+                   CAST(ROUND(AVG(l_quantity), 6) AS DOUBLE) AS avg_qty,
+                   COUNT(*) AS count_order
+            FROM lineitem
+            WHERE l_shipdate <= TIMESTAMP '2024-09-01 00:00:00'
+            GROUP BY l_returnflag, l_linestatus
+        """),
+    Query("semi_join", q_semi_join, lambda: """
+            SELECT c_custkey, c_nationkey FROM customer
+            WHERE EXISTS (SELECT 1 FROM orders
+                          WHERE o_custkey = c_custkey AND o_totalprice > 200000)
+        """),
+    Query("inventory_spans", q_inventory_spans, _sql_inventory_spans_oracle),
+    Query("rollup_sets", q_rollup_sets, lambda: """
             SELECT lang, source, COUNT(*) AS n_docs,
                    GROUPING(lang) AS g_lang, GROUPING(source) AS g_source
             FROM documents GROUP BY ROLLUP(lang, source)
-        """,
-        "zonal_salted": f"""
-            SELECT {hx.sql_cell('lat', 'lon', 5)} AS h3_r5, COUNT(*) AS doc_count
-            FROM ({_POINTS_SQL}) GROUP BY 1
-        """,
-        "token_match": f"""
+        """),
+    # expected outline counts straight from q_outline's generation rules:
+    # every doc has h1+intro(2 words); %2 adds h2+3 words; %3 adds
+    # h2>h3+2 words
+    Query("outline", q_outline, lambda: """
+            SELECT doc_id,
+                   CAST(1 + CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END
+                          + CASE WHEN doc_id % 3 = 0 THEN 2 ELSE 0 END AS BIGINT)
+                     AS n_headings,
+                   CAST(1 AS BIGINT) AS n_top,
+                   CAST(CASE WHEN doc_id % 3 = 0 THEN 3
+                             WHEN doc_id % 2 = 0 THEN 2
+                             ELSE 1 END AS INTEGER) AS max_depth,
+                   CAST(2 + CASE WHEN doc_id % 2 = 0 THEN 3 ELSE 0 END
+                          + CASE WHEN doc_id % 3 = 0 THEN 2 ELSE 0 END AS BIGINT)
+                     AS n_words_total
+            FROM documents
+        """),
+    Query("token_match", q_token_match, lambda: f"""
             SELECT DISTINCT doc_id, token FROM (
               SELECT doc_id,
                      unnest(string_split_regex(trim(text), '\\s+')) AS token
               FROM documents
             ) WHERE token IN ({", ".join(f"'{t}'" for t in GAZ_TOKENS)})
-        """,
-        # generation-rule oracle (q_media_pipeline docstring): DuckDB emits
-        # the EXPECTED decode output straight from the doc_id templates —
-        # exactness relies on gray values ≡ 128 (mod 5) round-tripping
-        # bit-identically through all three codecs (pinned in tests/test_jpeg.py)
-        "media_pipeline": """
+        """),
+    Query("jstest_inventory", q_jstest_inventory, _sql_js_inventory_oracle),
+    Query("pytest_inventory", q_pytest_inventory, _sql_py_inventory_oracle),
+    Query("domain_hints", q_domain_hints, _sql_domain_hints_oracle),
+    Query("native_inventory", q_native_inventory, _sql_native_inventory_oracle),
+    Query("managed_inventory", q_managed_inventory, _sql_managed_inventory_oracle),
+    # generation-rule oracle (q_media_pipeline docstring): DuckDB emits
+    # the EXPECTED decode output straight from the doc_id templates —
+    # exactness relies on gray values ≡ 128 (mod 5) round-tripping
+    # bit-identically through all three codecs (pinned in tests/test_jpeg.py)
+    Query("media_pipeline", q_media_pipeline, lambda: """
             SELECT doc_id,
                    CASE doc_id % 5 WHEN 1 THEN 'image/png'
                                    WHEN 2 THEN 'image/jpeg'
@@ -9798,11 +9806,11 @@ def oracle_sql() -> dict[str, str]:
                    CASE WHEN doc_id % 5 = 3 THEN 'truncated_payload' END
                        AS decode_error
             FROM documents
-        """,
-        # generation-rule oracles (q_audio_features / q_video_frames
-        # docstrings): expected rows emitted straight from the doc_id
-        # templates; exactness pinned in tests/test_audio_video.py
-        "audio_features": """
+        """),
+    # generation-rule oracles (q_audio_features / q_video_frames
+    # docstrings): expected rows emitted straight from the doc_id
+    # templates; exactness pinned in tests/test_audio_video.py
+    Query("audio_features", q_audio_features, lambda: """
             SELECT doc_id,
                    CAST(doc_id % 5 <> 4 AS INT) AS audio_ok,
                    CAST(1 + doc_id % 2 AS INT) AS channels,
@@ -9821,8 +9829,8 @@ def oracle_sql() -> dict[str, str]:
                    CASE WHEN doc_id % 5 = 4 THEN 'truncated_payload' END
                        AS audio_error
             FROM documents
-        """,
-        "video_frames": """
+        """),
+    Query("video_frames", q_video_frames, lambda: """
             SELECT d.doc_id,
                    CAST(1 AS INT) AS video_ok,
                    CAST(2 + d.doc_id % 5 AS INT) AS n_frames,
@@ -9839,375 +9847,93 @@ def oracle_sql() -> dict[str, str]:
             SELECT doc_id, CAST(0 AS INT), NULL, NULL, NULL, NULL, NULL,
                    'mjpeg_truncated_frame'
             FROM documents WHERE doc_id % 7 = 6
-        """,
-        "multimodal_curation": _sql_multimodal_curation_oracle(),
-        "pii_redact": _sql_pii_redact_oracle(),
-        "text_repetition": duck_rep_sql("documents"),
-        "decontaminate": sql_contaminated_docs(
-            "documents", "doc_id % 50 = 0", k=5
-        ),
-        "decontaminate_spans": sql_decontaminate_spans(
-            "documents", "doc_id % 50 = 0", k=5
-        ),
-        "sample_stratified": (
-            "SELECT doc_id, lang, source FROM documents WHERE "
-            + keep_predicate(SAMPLE_RATES, dialect="duckdb")
-        ),
-        "sample_quota": sql_sample_quota("documents", 25, "doc_id, lang"),
-        "mixture_sample": sql_mixture_sample(
-            "documents", MIXTURE_TARGETS,
-            "len(string_split(trim(text), ' '))",
-            select_cols="doc_id, d.lang AS lang",
-        ),
-        # the sub-document refinery chain composes the three twins by
-        # nesting (each emitter's WITH is subquery-scoped in DuckDB)
-        "refinery_subdoc": sql_mixture_sample(
-            "(SELECT s.doc_id, s.text_clean AS text, d.lang"
-            " FROM ("
-            + sql_decontaminate_spans(
-                "(SELECT s.doc_id, s.text_dedup AS text, d.lang"
-                " FROM ("
-                + sql_dedup_substrings(
-                    f"(SELECT doc_id, {SPAN_GEN_SQL} AS text"
-                    " FROM documents)",
-                    SPAN_K,
-                )
-                + ") s JOIN documents d USING (doc_id))",
-                "doc_id % 50 = 0",
-                k=5,
-            )
-            + ") s JOIN documents d USING (doc_id))",
-            MIXTURE_TARGETS,
-            "len(string_split(trim(text), ' '))",
-            select_cols=(
-                "doc_id, d.lang AS lang,"
-                " CAST(len(string_split(trim(d.text), ' ')) AS INT)"
-                " AS n_tokens_clean"
-            ),
-        ),
-        "url_host_cap": sql_cap_per_host(
-            sql_canonicalize(
-                f"(SELECT doc_id, source, {URL_GEN_SQL} AS url"
-                " FROM documents)"
-            ),
-            HOST_CAP,
-            "doc_id, host, url_canon",
-        ),
-        "url_blocklist": sql_filter_blocked_hosts(
-            sql_canonicalize(
-                f"(SELECT doc_id, source, {BL_URL_GEN_SQL} AS url"
-                " FROM documents)"
-            ),
-            ", ".join(f"('{d}')" for d in BL_DOMAINS),
-            "doc_id, host, url_canon",
-        ),
-        "url_latest": sql_latest_snapshot(
-            f"SELECT doc_id, {URL_CRAWL_SQL} AS url,"
-            f" {TS_CRAWL_SQL} AS ts_epoch FROM documents",
-            "doc_id, url, ts_epoch",
-            ts_col="ts_epoch",
-        ),
-        "text_normalize": _sql_text_normalize(),
-        "text_fold": _sql_text_fold(),
-        "lm_fluency": lms.sql_trigram_fluency("documents", vocab_size=256),
-        "bm25_topk": sql_bm25_topk(
-            "documents", "string_split(trim(text), ' ')",
-            BM25_QUERIES, k=BM25_K,
-        ),
-        "anchor_topk": _sql_anchor_topk(),
-        "quantile_sketch": sql_group_quantile_sketch(
-            "documents", "lang", "len(string_split(trim(text), ' '))"
-        ),
-        "robots_gate": _sql_robots_gate(),
-        "containment_join": _sql_containment_join(),
-        "bpe_train": sql_bpe_train(
-            "documents",
-            "list_filter(string_split(trim(text), ' '), x -> x != '')",
-            BPE_MERGES,
-        ),
-        "bpe_encode": (
-            "SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens, "
-            "md5(array_to_string(toks, ' ')) AS fp FROM ("
-            + sql_bpe_encode(
-                "documents",
-                "list_filter(string_split(trim(text), ' '), x -> x != '')",
-                BPE_ENCODE_MERGES,
-                extra_cols="doc_id, ",
-            )
-            + ")"
-        ),
-        "url_history": sql_scd2_intervals(
-            f"""(SELECT 'https://s' || CAST(doc_id % {SCD2_URLS} AS VARCHAR)
-                        || '.example/p' AS url,
-                        doc_id AS warc_ts,
-                        {SCD2_FP_DUCK} AS fp
-                 FROM documents)"""
-        ),
-        "c4_clean": _sql_c4_clean_oracle(),
-        "gopher_gate": _sql_gopher_gate_oracle(),
-        "pipeline_modern": _sql_pipeline_modern(),
-        "warc_roundtrip": _SQL_WARC_ROUNDTRIP,
-        "iceberg_scan": _SQL_ICEBERG_SCAN,
-        "delta_scan": _SQL_DELTA_SCAN,
-        "rag_chunks": _sql_rag_chunks(),
-        "hll_sketch": _sql_hll_sketch_q(),
-        "crawl_frontier": _sql_crawl_frontier(),
-        "link_hits": _sql_link_hits(),
-        "url_redirects": _sql_url_redirects(),
-        "cms_hosts": _sql_cms_hosts(),
-        "sitemap_parse": _sql_sitemap_parse(),
-        "dbscan": _sql_dbscan_q(),
-        "geojson_scan": _sql_geojson_scan(),
-        "crawl_pipeline": _sql_crawl_pipeline(),
-        "geohash_assign": _sql_geohash_assign(),
-        "robots_sitemaps": _sql_robots_sitemaps(),
-        "trajectories": _sql_trajectories(),
-        "rect_join": _sql_rect_join(),
-        "polygon_area": _sql_polygon_area(),
-        "polygon_simplify": _sql_polygon_simplify(),
-        "link_triangles": _sql_link_triangles(),
-        "fuzzy_titles": _sql_fuzzy_titles(),
-        "domain_extract": _sql_domain_extract(),
-        "kde_heatmap": _sql_kde_heatmap(),
-        "link_bfs": _sql_link_bfs(),
-        "convex_hull": _sql_convex_hull(),
-        "moran_i": _sql_moran_i(),
-        "segment_join": _sql_segment_join(),
-        "hotspots_gi": _sql_hotspots_gi(),
-        "link_costs": _sql_link_costs(),
-        "snap_join": _sql_snap_join(),
-        "spatial_pipeline": _sql_spatial_pipeline(),
-        "hilbert_assign": _sql_hilbert_assign(),
-        "geary_c": _sql_geary_c(),
-        "areal_interp": _sql_areal_interp(),
-        "contact_join": _sql_contact_join(),
-        "ring_validate": _sql_ring_validate(),
-        "shipping_priority": _sql_shipping_priority(),
-        "supplier_volume": _sql_supplier_volume(),
-        "returned_items": _sql_returned_items(),
-        "large_orders": _sql_large_orders(),
-        "volume_shipping": _sql_volume_shipping(),
-        "lisa": _sql_lisa(),
-        "order_priority_check": _sql_order_priority_check(),
-        "promo_share": _sql_promo_share(),
-        "emerging_hotspots": _sql_emerging_hotspots(),
-        "od_flows": _sql_od_flows(),
-        "phrase_search": _sql_phrase_search(),
-        "query_route": _sql_query_route(),
-        "co_visits": _sql_co_visits(),
-        "geo_terms": _sql_geo_terms(),
-        "emerging_terms": _sql_emerging_terms_q(),
-        "regionize": _sql_regionize(),
-        "crawl_budget": _sql_crawl_budget(),
-        "map_match": _sql_map_match(),
-        "zorder_bbox": _sql_zorder_bbox(),
-        "stay_points": _sql_stay_points(),
-        "mirror_hosts": _sql_mirror_hosts(),
-        "link_kcore": _sql_link_kcore(),
-        "link_clustering": _sql_link_clustering(),
-        "geo_mentions": _sql_geo_mentions(),
-        "variogram": _sql_variogram(),
-        "link_predict": _sql_link_predict(),
-        "kn_counts": _sql_kn_counts(),
-        "idw": _sql_idw(),
-        "collocations": _sql_collocations(),
-        "theil_sen": _sql_theil_sen(),
-        "hausdorff": _sql_hausdorff(),
-        "link_assortativity": _sql_link_assortativity(),
-        "skipgram": _sql_skipgram(),
-        "host_gini": _sql_host_gini(),
-        "tile_diversity": _sql_tile_diversity(),
-        "ripley": _sql_ripley(),
-        "tile_richness": _sql_tile_richness(),
-        "rank_stability": _sql_rank_stability(),
-        "quality_shift": _sql_quality_shift(),
-        "knox": _sql_knox(),
-        "colocation": _sql_colocation(),
-        "volume_shift": _sql_volume_shift(),
-        "host_keyness": _sql_host_keyness(),
-        "volume_acf": _sql_volume_acf(),
-        "quadrat": _sql_quadrat(),
-        "lang_segregation": _sql_lang_segregation(),
-        "crawl_burstiness": _sql_crawl_burstiness(),
-        "user_streaks": _sql_user_streaks(),
-        "funnel": _sql_funnel(),
-        "kanon_audit": _sql_kanon_audit(),
-        "cohort_retention": _sql_cohort_retention(),
-        "ldiv_audit": _sql_ldiv_audit(),
-        "click_leads_purchase": _sql_click_leads_purchase(),
-        "geo_report": _sql_geo_report(),
-        "warc_scan": _sql_warc_scan(),
-        "langid_eval": _sql_langid_eval(),
-        "robust_host_score": _sql_robust_host_score(),
-        "link_reciprocity": _sql_link_reciprocity(),
-        "degree_tail": _sql_degree_tail(),
-        "user_survival": _sql_user_survival(),
-        "length_drift": _sql_length_drift(),
-        "revenue_forecast": _sql_revenue_forecast(),
-        "market_share": _sql_market_share(),
-        "product_profit": _sql_product_profit(),
-        "late_shipments": _sql_late_shipments(),
-        "cust_order_dist": _sql_cust_order_dist(),
-        "part_value_share": _sql_part_value_share(),
-        "supplier_cardinality": _sql_supplier_cardinality(),
-        "small_qty_revenue": _sql_small_qty_revenue(),
-        "waiting_suppliers": _sql_waiting_suppliers(),
-        "idle_customers": _sql_idle_customers(),
-        "min_cost_supplier": _sql_min_cost_supplier(),
-        "rollup_report": _sql_rollup_report(),
-        "pivot_report": _sql_pivot_report(),
-        "revenue_trend": _sql_revenue_trend(),
-        "session_markov": _sql_session_markov(),
-        "profile_table": _sql_profile_table(),
-        "benford_audit": _sql_benford_audit(),
-        "host_outliers": _sql_host_outliers(),
-        "volume_spikes": _sql_volume_spikes(),
-        "link_communities": _sql_link_communities(),
-        "ab_test": _sql_ab_test(),
-        "decayed_counts": _sql_decayed_counts(),
-        "time_weighted_avg": _sql_time_weighted_avg(),
-        "sliding_rate": _sql_sliding_rate(),
-        "cdc_merge": _sql_cdc_merge(),
-        "geofence_events": _sql_geofence_events(),
-        "frechet": _sql_frechet(),
-        "rake_keywords": _sql_rake_keywords(),
-        "attribution": _sql_attribution(),
-        "pareto_front": _sql_pareto_front(),
-        "link_ppr": _sql_link_ppr(),
-        "abc_classes": _sql_abc_classes(),
-        "skew_report": _sql_skew_report(),
-        "semdedup": _sql_semdedup_oracle(),
-        "frequent_hosts": hh.sql_frequent_items(
-            f"SELECT {_ruler_host_sql('duckdb')} AS item FROM documents",
-            "item",
-            num=1,
-            den=20,
-        ),
-        "zorder_layout": sql_zorder_bucket_stats(
-            _POINTS_SQL, bucket_shift_pow2=1 << 26, dialect="duck"
-        ),
-        "link_pagerank": lg.sql_host_pagerank(
-            "SELECT doc_id FROM documents", n_hosts=97, k_out=4, iters=3
-        ),
-        "site_outlinks": _sql_outlink_edges(OUTLINK_SRC_SQL),
-        "dsir_weights": sql_importance_weights(
-            "documents", DSIR_TARGET, n_buckets=DSIR_BUCKETS
-        ),
-        "outlink_pagerank": lg.sql_pagerank_weighted(
-            _sql_outlink_edges(OUTLINK_PR_SRC_SQL), iters=3
-        ),
-        "paragraph_dedup": sql_dedup_paragraphs("documents", PARA_TOKENS),
-        "span_dedup": sql_dedup_substrings(
-            f"(SELECT doc_id, {SPAN_GEN_SQL} AS text FROM documents)",
-            SPAN_K,
-        ),
-        "tfidf_topk": sql_distinctive_terms(
-            "documents", "string_split(trim(text), ' ')", VOCAB_V, TFIDF_K
-        ),
-        "range_join": sql_range_join_pairs(_POINTS_SQL, RANGE_R),
-        "card_sketch": sql_distinct_sketch(
-            "documents", "lang", "md5(text)"
-        ),
-        "incremental_dedup": f"""
-            WITH f AS (
-              SELECT doc_id,
-                     md5(array_to_string((string_split(trim(text), ' '))
-                         [1:{FP_PREFIX_K}], ' ')) AS fp
-              FROM documents
-            )
-            SELECT MIN(doc_id) AS doc_id, fp
-            FROM f WHERE doc_id % 2 = 1
-            GROUP BY fp
-            HAVING fp NOT IN (SELECT fp FROM f WHERE doc_id % 2 = 0)
-        """,
-        # identical oracle by design: the bloom is route-only (no false
-        # negatives), so the exact anti-join SQL gates both operators
-        "incremental_bloom": f"""
-            WITH f AS (
-              SELECT doc_id,
-                     md5(array_to_string((string_split(trim(text), ' '))
-                         [1:{FP_PREFIX_K}], ' ')) AS fp
-              FROM documents
-            )
-            SELECT MIN(doc_id) AS doc_id, fp
-            FROM f WHERE doc_id % 2 = 1
-            GROUP BY fp
-            HAVING fp NOT IN (SELECT fp FROM f WHERE doc_id % 2 = 0)
-        """,
-        "group_quantiles": sql_exact_group_quantiles(
-            "SELECT doc_id, lang, n_chars FROM documents",
-            "lang",
-            "n_chars",
-        ),
-        "corpus_refinery": sql_pack_sequences(
-            sql_gate_hosts_by_quality(
-                sql_cap_per_host(
-                    sql_latest_snapshot(
-                        "SELECT doc_id, host, url_canon, ts_epoch,"
-                        f" CAST({duck_stop_count('text')} AS BIGINT)"
-                        " AS stop_n,"
-                        f" CAST({duck_token_count('text')} AS BIGINT)"
-                        " AS n_tokens FROM ("
-                        + sql_canonicalize(
-                            "(SELECT doc_id, source, text,"
-                            f" {URL_GEN_SQL} AS url,"
-                            f" {TS_CRAWL_SQL} AS ts_epoch FROM documents)"
-                        )
-                        + ")",
-                        "doc_id, host, url_canon, ts_epoch,"
-                        " stop_n, n_tokens",
-                        url_col="url_canon",
-                        ts_col="ts_epoch",
-                    ),
-                    REFINERY_CAP,
-                    "doc_id, host, stop_n, n_tokens",
-                ),
-                REFINERY_PCT,
-                "doc_id, host, stop_n, n_tokens",
-            ),
-            REFINERY_BUDGET,
-            REFINERY_SHARDS,
-            'doc_id, host, n_tokens, shard, bin, "offset"',
-        ),
-        "tile_compact": (
-            "SELECT cell, " + RES_FROM_CELL + " AS res FROM ("
-            + sql_compact_cells(
-                f"SELECT {CELL_FROM_IDX} AS cell FROM ("
-                "SELECT doc_id * 7 + j AS idx FROM documents,"
-                " generate_series(0, 6) AS t(j))",
-                input_res=9,
-                min_res=5,
-            )
-            + ")"
-        ),
-        "asof_join": sql_asof_join(
-            "SELECT event_id, user_id, ts FROM events",
-            "SELECT user_id, ts, event_id AS err_id FROM events"
-            " WHERE event_type = 'error'",
-            key="user_id",
-            ts_col="ts",
-            select_cols="l.event_id AS event_id, r.err_id AS prior_err_id",
-            inclusive=False,
-        ),
-        "host_quality_gate": sql_gate_hosts_by_quality(
-            "SELECT doc_id, host,"
-            f" CAST({duck_stop_count('text')} AS BIGINT) AS stop_n,"
-            f" CAST({duck_token_count('text')} AS BIGINT) AS n_tokens"
-            " FROM ("
-            + sql_canonicalize(
-                f"(SELECT doc_id, source, text, {URL_GEN_SQL} AS url"
-                " FROM documents)"
-            )
-            + ")",
-            HOST_GATE_PCT,
-            "doc_id, host, stop_n, n_tokens",
-        ),
-        "pack_sequences": sql_pack_sequences(
-            "SELECT doc_id, CAST(len(string_split(trim(text), ' '))"
-            " AS BIGINT) AS n_tokens FROM documents",
-            PACK_BUDGET,
-            PACK_SHARDS,
-            'doc_id, n_tokens, shard, bin, "offset"',
-        ),
-        # s2_assign, extract_invariant: rows-only (no SQL equivalent)
-    }
+        """),
+    Query("multimodal_curation", q_multimodal_curation,
+          _sql_multimodal_curation_oracle),
+    Query("crawl_budget", q_crawl_budget, _sql_crawl_budget),
+    Query("map_match", q_map_match, _sql_map_match),
+    Query("zorder_bbox", q_zorder_bbox, _sql_zorder_bbox),
+    Query("stay_points", q_stay_points, _sql_stay_points),
+    Query("mirror_hosts", q_mirror_hosts, _sql_mirror_hosts),
+    Query("link_kcore", q_link_kcore, _sql_link_kcore),
+    Query("link_clustering", q_link_clustering, _sql_link_clustering),
+    Query("geo_mentions", q_geo_mentions, _sql_geo_mentions),
+    Query("variogram", q_variogram, _sql_variogram),
+    Query("link_predict", q_link_predict, _sql_link_predict),
+    Query("kn_counts", q_kn_counts, _sql_kn_counts),
+    Query("idw", q_idw, _sql_idw),
+    Query("collocations", q_collocations, _sql_collocations),
+    Query("theil_sen", q_theil_sen, _sql_theil_sen),
+    Query("hausdorff", q_hausdorff, _sql_hausdorff),
+    Query("link_assortativity", q_link_assortativity, _sql_link_assortativity),
+    Query("skipgram", q_skipgram, _sql_skipgram),
+    Query("host_gini", q_host_gini, _sql_host_gini),
+    Query("tile_diversity", q_tile_diversity, _sql_tile_diversity),
+    Query("ripley", q_ripley, _sql_ripley),
+    Query("tile_richness", q_tile_richness, _sql_tile_richness),
+    Query("rank_stability", q_rank_stability, _sql_rank_stability),
+    Query("quality_shift", q_quality_shift, _sql_quality_shift),
+    Query("knox", q_knox, _sql_knox),
+    Query("colocation", q_colocation, _sql_colocation),
+    Query("volume_shift", q_volume_shift, _sql_volume_shift),
+    Query("host_keyness", q_host_keyness, _sql_host_keyness),
+    Query("volume_acf", q_volume_acf, _sql_volume_acf),
+    Query("quadrat", q_quadrat, _sql_quadrat),
+    Query("lang_segregation", q_lang_segregation, _sql_lang_segregation),
+    Query("crawl_burstiness", q_crawl_burstiness, _sql_crawl_burstiness),
+    Query("user_streaks", q_user_streaks, _sql_user_streaks),
+    Query("funnel", q_funnel, _sql_funnel),
+    Query("kanon_audit", q_kanon_audit, _sql_kanon_audit),
+    Query("cohort_retention", q_cohort_retention, _sql_cohort_retention),
+    Query("ldiv_audit", q_ldiv_audit, _sql_ldiv_audit),
+    Query("click_leads_purchase", q_click_leads_purchase, _sql_click_leads_purchase),
+    Query("geo_report", q_geo_report, _sql_geo_report),
+    Query("warc_scan", q_warc_scan, _sql_warc_scan),
+    Query("langid_eval", q_langid_eval, _sql_langid_eval),
+    Query("robust_host_score", q_robust_host_score, _sql_robust_host_score),
+    Query("link_reciprocity", q_link_reciprocity, _sql_link_reciprocity),
+    Query("degree_tail", q_degree_tail, _sql_degree_tail),
+    Query("user_survival", q_user_survival, _sql_user_survival),
+    Query("length_drift", q_length_drift, _sql_length_drift),
+    Query("revenue_forecast", q_revenue_forecast, _sql_revenue_forecast),
+    Query("market_share", q_market_share, _sql_market_share),
+    Query("product_profit", q_product_profit, _sql_product_profit),
+    Query("late_shipments", q_late_shipments, _sql_late_shipments),
+    Query("cust_order_dist", q_cust_order_dist, _sql_cust_order_dist),
+    Query("part_value_share", q_part_value_share, _sql_part_value_share),
+    Query("supplier_cardinality", q_supplier_cardinality, _sql_supplier_cardinality),
+    Query("small_qty_revenue", q_small_qty_revenue, _sql_small_qty_revenue),
+    Query("waiting_suppliers", q_waiting_suppliers, _sql_waiting_suppliers),
+    Query("idle_customers", q_idle_customers, _sql_idle_customers),
+    Query("min_cost_supplier", q_min_cost_supplier, _sql_min_cost_supplier),
+    Query("rollup_report", q_rollup_report, _sql_rollup_report),
+    Query("pivot_report", q_pivot_report, _sql_pivot_report),
+    Query("revenue_trend", q_revenue_trend, _sql_revenue_trend),
+    Query("session_markov", q_session_markov, _sql_session_markov),
+    Query("profile_table", q_profile_table, _sql_profile_table),
+    Query("benford_audit", q_benford_audit, _sql_benford_audit),
+    Query("host_outliers", q_host_outliers, _sql_host_outliers),
+    Query("volume_spikes", q_volume_spikes, _sql_volume_spikes),
+    Query("link_communities", q_link_communities, _sql_link_communities),
+    Query("ab_test", q_ab_test, _sql_ab_test),
+    Query("decayed_counts", q_decayed_counts, _sql_decayed_counts),
+    Query("time_weighted_avg", q_time_weighted_avg, _sql_time_weighted_avg),
+    Query("sliding_rate", q_sliding_rate, _sql_sliding_rate),
+    Query("cdc_merge", q_cdc_merge, _sql_cdc_merge),
+    Query("geofence_events", q_geofence_events, _sql_geofence_events),
+    Query("frechet", q_frechet, _sql_frechet),
+    Query("rake_keywords", q_rake_keywords, _sql_rake_keywords),
+    Query("attribution", q_attribution, _sql_attribution),
+    Query("pareto_front", q_pareto_front, _sql_pareto_front),
+    Query("link_ppr", q_link_ppr, _sql_link_ppr),
+    Query("abc_classes", q_abc_classes, _sql_abc_classes),
+    Query("skew_report", q_skew_report, _sql_skew_report),
+)
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {q.name: q.build for q in REGISTRY}
+
+
+def oracle_sql() -> dict[str, str]:
+    return {q.name: q.oracle() for q in REGISTRY if q.oracle is not None}

@@ -79,11 +79,8 @@ def run_flagship(spark, corpus_path: str, n_docs: int) -> float:
     Proven row-identical to the staged pipeline in tests/test_fused.py.
     """
     from core_spark.data.polygons import admin_polygons
-    from core_spark.functions.fused import fused_pipeline, fused_pipeline_arrow
+    from core_spark.functions.fused import fused_pipeline
     from core_spark.operators.zonal import zonal_rollup
-
-    if os.environ.get("SPARK_GRAFT_ARROW"):
-        fused_pipeline = fused_pipeline_arrow
 
     polys = admin_polygons(96)
     # the bench corpus is tiny next to the 128MB default split size; size

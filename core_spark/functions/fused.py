@@ -88,83 +88,3 @@ def fused_pipeline(docs_df, polygons: pd.DataFrame):
     return docs_df.select("doc_id", "url", "lang", "html").mapInPandas(
         run, FUSED_SCHEMA
     )
-
-
-def _arrow_schema():
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            ("doc_id", pa.int64()),
-            ("url", pa.string()),
-            ("lang", pa.string()),
-            ("mention_idx", pa.int32()),
-            ("lat", pa.float64()),
-            ("lon", pa.float64()),
-            ("kind", pa.string()),
-            *[(f"h3_r{res}", pa.int64()) for res in RESOLUTIONS],
-            ("admin_id", pa.int64()),
-        ]
-    )
-
-
-def fused_batch_arrow(batch, payload, payload_fp):
-    """fused_batch without the pandas detour: RecordBatch in, RecordBatch out.
-
-    Same per-document loop and the same vectorized tile/PIP tail, but the
-    input columns come off the Arrow buffers as plain Python lists (cheaper
-    to iterate than object Series) and the output skips pandas block
-    construction entirely — rows go numpy -> Arrow. Row-identical to
-    fused_batch (tests/test_fused.py)."""
-    import pyarrow as pa
-
-    doc_ids, urls, langs, midx, lats, lons, kinds = [], [], [], [], [], [], []
-    for did, url, lang, html in zip(
-        batch.column("doc_id").to_pylist(),
-        batch.column("url").to_pylist(),
-        batch.column("lang").to_pylist(),
-        batch.column("html").to_pylist(),
-    ):
-        text = html_to_text(html)
-        if text is None:
-            continue
-        for i, m in enumerate(parse_mentions(text)):
-            doc_ids.append(did)
-            urls.append(url)
-            langs.append(lang)
-            midx.append(i)
-            lats.append(m["lat"])
-            lons.append(m["lon"])
-            kinds.append(m["kind"])
-
-    lat_a = np.asarray(lats, dtype=np.float64)
-    lon_a = np.asarray(lons, dtype=np.float64)
-    arrays = [
-        pa.array(doc_ids, pa.int64()),
-        pa.array(urls, pa.string()),
-        pa.array(langs, pa.string()),
-        pa.array(midx, pa.int32()),
-        pa.array(lat_a),
-        pa.array(lon_a),
-        pa.array(kinds, pa.string()),
-    ]
-    for res in RESOLUTIONS:
-        cells = hx.latlon_to_cell(lat_a, lon_a, res).astype(np.int64)
-        arrays.append(pa.array(cells, mask=(cells == -1)))
-    aid = match_points(lon_a, lat_a, payload, fp=payload_fp).astype(np.int64)
-    arrays.append(pa.array(aid, mask=(aid == -1)))
-    return pa.RecordBatch.from_arrays(arrays, schema=_arrow_schema())
-
-
-def fused_pipeline_arrow(docs_df, polygons: pd.DataFrame):
-    """fused_pipeline via mapInArrow — identical rows, no pandas bridge."""
-    payload = [(int(r.admin_id), [list(ring) for ring in r.rings]) for r in polygons.itertuples()]
-    fp = _fingerprint(payload)
-
-    def run(batches):
-        for batch in batches:
-            yield fused_batch_arrow(batch, payload, fp)
-
-    return docs_df.select("doc_id", "url", "lang", "html").mapInArrow(
-        run, FUSED_SCHEMA
-    )

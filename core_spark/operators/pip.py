@@ -160,9 +160,7 @@ def pip_join(
             lons = pdf[lon_col].to_numpy(dtype=np.float64)
             aid = match_points(lons, lats, payload, fp=fp)
             out = pdf.copy()
-            out["admin_id"] = pd.array(
-                [None if a == -1 else int(a) for a in aid], dtype="Int64"
-            )
+            out["admin_id"] = pd.arrays.IntegerArray(aid, mask=aid == -1)
             yield out
 
     joined = df.mapInPandas(run, out_schema)

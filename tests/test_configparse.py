@@ -244,19 +244,6 @@ def test_scope_depth():
 
 # -- end-to-end D5: config bytes -> scopes table -> tie-broken winner --------
 
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[2]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
-
-
 def test_config_bytes_to_resolved_scope(spark):
     """The full D5 path the verdict asked for: parse real config bytes into
     the scopes table, broadcast-join against files, and check the

@@ -44,21 +44,3 @@ class TestFused:
         )
         assert len(fused) > 0
         assert fused == staged
-
-    def test_arrow_variant_equals_pandas(self, spark):
-        from core_spark.functions.fused import fused_pipeline, fused_pipeline_arrow
-
-        polys = admin_polygons(96)
-        docs = synth.webpages_spark(spark, 400, 4).select(
-            "doc_id", "url", "warc_ts", "html", "lang"
-        )
-        pandas_rows = (
-            fused_pipeline(docs, polys).orderBy("doc_id", "mention_idx").collect()
-        )
-        arrow_rows = (
-            fused_pipeline_arrow(docs, polys)
-            .orderBy("doc_id", "mention_idx")
-            .collect()
-        )
-        assert len(arrow_rows) > 0
-        assert arrow_rows == pandas_rows

@@ -235,19 +235,6 @@ def _family(path: str) -> str:
 
 
 @pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[2]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
-
-
-@pytest.fixture(scope="module")
 def inventory_rows(spark, tmp_path_factory):
     """Run the REAL distributed path once: file tree -> binaryFile scan ->
     inventory Arrow stage; return {path: [row, ...]} sorted canonically."""

@@ -11,8 +11,6 @@ integration end-to-end.
 
 from __future__ import annotations
 
-import pytest
-
 FIXTURE_FILES = {
     "src/app.test.ts": (
         "describe('App', () => {\n"
@@ -81,19 +79,6 @@ GOLDEN = {
     "php/WebTest.php": (1, 2, 0),
     "kotlin/Spec.kt": (1, 2, 1),
 }
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[2]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
 
 
 def test_golden_inventory_over_file_tree(spark, tmp_path_factory):

@@ -3,21 +3,6 @@ flattening, error-as-data)."""
 
 from __future__ import annotations
 
-import pytest
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[2]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
-
 
 def test_extract_inventory_dispatch_and_flatten(spark):
     from core_spark.operators.inventory import extract_inventory, inventory_counts

@@ -7,8 +7,6 @@ shared @Test; Vitest Specialized beats Jest on shared describe/it)."""
 
 from __future__ import annotations
 
-import pytest
-
 from core_spark.operators.detect import default_registry, detect, sort_registry
 
 LANGS = {
@@ -46,19 +44,6 @@ SNIPPETS = {
     "swift-testing": "import Testing\n@Suite struct S { @Test func a() { #expect(1 == 1) } }",
     "xctest": "class T: XCTestCase {\n    func testA() { XCTAssertEqual(1, 1) }\n}",
 }
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from pyspark.sql import SparkSession
-
-    s = (
-        SparkSession.builder.master("local[2]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
 
 
 def test_registry_covers_all_reference_strategies():
