@@ -2425,7 +2425,7 @@ def q_link_pagerank(spark, sf_dir):
     rounds at damping 17/20 over a deterministic md5-derived host graph
     with uniform out-degree 4 — linkgraph.py module docstring). The
     classic iterative web-scale workload: per-round materialization via
-    pin(loop=True), uniform-key shuffles, node directory joined against
+    pin, uniform-key shuffles, node directory joined against
     the edge table. Oracled bit-for-bit (derivation + all rounds are
     integer-exact on both engines; a fractions.Fraction pytest proves
     the DIV steps lose nothing)."""
@@ -2533,7 +2533,7 @@ def q_outlink_pagerank(spark, sf_dir):
     """The real-crawl capstone: HTML -> href extraction -> host edge
     rollup -> general weighted PageRank (variable out-degree, edge
     multiplicities, dangling hosts) — linkgraph.pagerank_weighted,
-    bit-portable truncating-BIGINT iteration, per-round pin(loop=True).
+    bit-portable truncating-BIGINT iteration, per-round pin.
     The oracle composes the expected-edge derivation (never parses
     HTML) with the unrolled 3-round twin."""
     from core_spark.functions.weblinks import host_edges, with_outlinks
@@ -3438,7 +3438,7 @@ def q_link_bfs(spark, sf_dir):
     derived host graph linkgraph.py ranks — the crawl-frontier priority
     / blocklist-expansion primitive. Bulk-synchronous frontier rounds
     (one uniform-key shuffle each, dist + frontier pinned per round via
-    pin(loop=True), early exit on empty frontier, static max_hops stage
+    pin, early exit on empty frontier, static max_hops stage
     graph). The DuckDB oracle is an INDEPENDENT plan — recursive-CTE
     enumeration of all (node, hops) pairs within the bound, MIN per
     node — so the incremental anti-join frontier logic itself is
@@ -4219,7 +4219,7 @@ def q_link_costs(spark, sf_dir):
     Distances are NOT append-only (a heavy direct edge can be beaten by
     a lighter multi-hop path), so each round expands AND reconciles
     (anti-join + union, never a full regroup); two pins per round via
-    pin(loop=True). The DuckDB oracle is the INDEPENDENT recursive-CTE
+    pin. The DuckDB oracle is the INDEPENDENT recursive-CTE
     path-state enumeration + MIN per node."""
     from core_spark.operators.sssp import sssp_costs
 
@@ -5093,7 +5093,7 @@ def q_link_kcore(spark, sf_dir):
     peeling to the fixed point — link-farm / spam-core detection, the
     subgraph question PageRank and triangles don't answer. Per round:
     one uniform degree hash-agg + two left-semi edge filters, pinned
-    via pin(loop=True); convergence = the kept-edge COUNT repeating
+    via pin; convergence = the kept-edge COUNT repeating
     (peeling only removes, so an unchanged count IS the fixpoint);
     non-convergence raises. Oracle: 8 UNROLLED peel rounds with
     MATERIALIZED CTEs (plain CTEs inline 3^rounds copies — measured
@@ -7297,7 +7297,7 @@ def q_bpe_train(spark, sf_dir):
     back as a broadcast (no collect anywhere), corpus-wide merge as a
     leftmost-first left fold (aggregate HOF; the string-replace trick
     is WRONG — shared delimiters — see the module docstring), one
-    pin(loop=True) per round. Output = the learned merge table."""
+    pin per round. Output = the learned merge table."""
     from core_spark.operators.bpe import bpe_train
 
     # wide=False: no md5/Python stage anywhere — per-round cost is job

@@ -274,7 +274,7 @@ def sql_cell(lat_sql: str, lon_sql: str, res: int) -> str:
     yr = f"(-{s}*{lon_n} + {c}*({lat_sql}))"
     qf = f"(({_lit(SQ3_3)}*{xr} - {_lit(ONE_3)}*{yr}) / {size})"
     rf = f"(({_lit(TWO_3)}*{yr}) / {size})"
-    cell = _sql_hexround_to_id(qf, rf, res)
+    cell = _sql_hexround_to_id(qf, rf, f"CAST({res} AS BIGINT)")
     # error-as-data: NULL out NaN / out-of-range coords instead of failing the
     # cast. `x >= a AND x <= b` is false for NaN on both Spark and DuckDB
     # (both order NaN greater than every value).
@@ -285,8 +285,9 @@ def sql_cell(lat_sql: str, lon_sql: str, res: int) -> str:
     return f"(CASE WHEN {valid} THEN {cell} ELSE NULL END)"
 
 
-def _sql_hexround_to_id(qf: str, rf: str, res: int) -> str:
-    """Cube-round fractional axial SQL exprs and pack into a cell id."""
+def _sql_hexround_to_id(qf: str, rf: str, res_sql: str) -> str:
+    """Cube-round fractional axial SQL exprs and pack into a cell id at
+    the BIGINT resolution ``res_sql``."""
     yf = f"(-{qf} - {rf})"
     rx = f"FLOOR({qf} + 0.5)"
     ry = f"FLOOR({yf} + 0.5)"
@@ -301,7 +302,7 @@ def _sql_hexround_to_id(qf: str, rf: str, res: int) -> str:
         f"ELSE -({rx}) - ({ry}) END)"
     )
     return (
-        f"(CAST({res} AS BIGINT) * {_POW59} "
+        f"({res_sql} * {_POW59} "
         f"+ (CAST({q_out} AS BIGINT) + {_POW28}) * CAST({_POW29} AS BIGINT) "
         f"+ (CAST({r_out} AS BIGINT) + {_POW28}))"
     )
@@ -319,28 +320,11 @@ def sql_cell_to_parent(cell_sql: str) -> str:
     r = f"(({rem} - {qq} * CAST({_POW29} AS BIGINT)) - {_POW28})"
     qf = f"((2.0*CAST({q} AS DOUBLE) - CAST({r} AS DOUBLE)) / 7.0)"
     rf = f"((CAST({q} AS DOUBLE) + 3.0*CAST({r} AS DOUBLE)) / 7.0)"
-    yf = f"(-{qf} - {rf})"
-    rx = f"FLOOR({qf} + 0.5)"
-    ry = f"FLOOR({yf} + 0.5)"
-    rz = f"FLOOR({rf} + 0.5)"
-    dx = f"ABS({rx} - {qf})"
-    dy = f"ABS({ry} - {yf})"
-    dz = f"ABS({rz} - {rf})"
-    fix_x = f"({dx} > {dy} AND {dx} > {dz})"
-    q_out = f"(CASE WHEN {fix_x} THEN -({ry}) - ({rz}) ELSE {rx} END)"
-    r_out = (
-        f"(CASE WHEN {fix_x} THEN {rz} WHEN {dy} > {dz} THEN {rz} "
-        f"ELSE -({rx}) - ({ry}) END)"
-    )
-    return (
-        f"((({res}) - 1) * {_POW59} "
-        f"+ (CAST({q_out} AS BIGINT) + {_POW28}) * CAST({_POW29} AS BIGINT) "
-        f"+ (CAST({r_out} AS BIGINT) + {_POW28}))"
-    )
+    return _sql_hexround_to_id(qf, rf, f"(({res}) - 1)")
 
 
 # ---------------------------------------------------------------------------
-# Spark Column helpers (thin wrappers; importable without a live session)
+# Stepwise Spark projections (importable without a live session)
 # ---------------------------------------------------------------------------
 
 def cell_steps(lat_sql: str, lon_sql: str, res: int, out: str) -> list[tuple[str, str]]:
@@ -428,16 +412,3 @@ def apply_steps(df, steps: list[tuple[str, str]]):
     for name, sql in steps:
         df = df.withColumn(name, F.expr(sql))
     return df.drop(*[n for n, _ in steps if n.startswith("_")])
-
-
-def cell_col(lat_col: str, lon_col: str, res: int):
-    """Spark Column computing the hx cell id — JVM-side, codegen'd, no UDF."""
-    from pyspark.sql import functions as F
-
-    return F.expr(sql_cell(lat_col, lon_col, res))
-
-
-def parent_col(cell_col_name: str):
-    from pyspark.sql import functions as F
-
-    return F.expr(sql_cell_to_parent(cell_col_name))

@@ -24,7 +24,7 @@ the right plan at web scale:
    it never re-runs the round).
 
 Both ``dist`` and ``frontier`` are pinned per round via
-``plans.materialize.pin(loop=True)`` — BFS is exactly the lineage-
+``plans.materialize.pin`` — BFS is exactly the lineage-
 deepening loop shape the materialize module exists for: without
 truncation, round R's plan nests all R-1 prior rounds.
 
@@ -81,8 +81,7 @@ def bfs_hops(
     pieces = [pin(
         seeds.where(f"{node} IS NOT NULL")
         .selectExpr(f"{node} AS node").distinct()
-        .selectExpr("node", "CAST(0 AS BIGINT) AS hops"),
-        loop=True,
+        .selectExpr("node", "CAST(0 AS BIGINT) AS hops")
     )]
     frontier = pieces[0].select("node")
     for h in range(1, max_hops + 1):
@@ -95,8 +94,7 @@ def bfs_hops(
             frontier.join(e, frontier.node == e._s)
             .select(F.col("_d").alias("node")).distinct()
             .join(seen, "node", "left_anti")
-            .selectExpr("node", f"CAST({h} AS BIGINT) AS hops"),
-            loop=True,
+            .selectExpr("node", f"CAST({h} AS BIGINT) AS hops")
         )
         pieces.append(nxt)
         frontier = nxt.select("node")

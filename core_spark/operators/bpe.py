@@ -27,7 +27,7 @@ corpus never leaving the cluster:
     matches share the delimiting space (``' a b a b '`` has
     non-overlapping matches only at positions 0 and 2) — a real bug the
     first cut had, caught by the cross-engine fixture;
-  - each round's corpus pins via ``plans.materialize.pin(loop=True)``
+  - each round's corpus pins via ``plans.materialize.pin``
     (plan depth grows per round otherwise — the connected-components
     lesson).
 
@@ -126,7 +126,7 @@ def bpe_train(
     Returns (round, left, right, pair_count), round 1-based. Rounds with
     an empty corpus (or no adjacent pairs left) emit nothing.
     """
-    toks = pin(df.select(F.col(toks_col).alias("toks")), loop=True)
+    toks = pin(df.select(F.col(toks_col).alias("toks")))
     out = None
     for rnd in range(1, n_merges + 1):
         winner = _argmax_pair(_pair_counts(toks)).select(
@@ -145,10 +145,7 @@ def bpe_train(
         # otherwise nest every prior round's fold).
         out = winner if out is None else out.unionByName(winner)
         if rnd < n_merges:
-            toks = pin(
-                _apply_merge(toks, winner.select("left", "right")),
-                loop=True,
-            )
+            toks = pin(_apply_merge(toks, winner.select("left", "right")))
     return out
 
 

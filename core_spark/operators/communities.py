@@ -26,7 +26,7 @@ graph) keep their previous label via the left-join COALESCE.
 
 Scale shape: per round ONE equi-join of the (2·E)-row vote table
 against the |V|-row label table on uniform host keys + two hash-aggs,
-label table re-pinned per round (pin(loop=True) — the measured
+label table re-pinned per round (pin cuts lineage — the measured
 persist-vs-local lesson); the vote table itself is pinned once. The
 DuckDB twin unrolls rounds as AS MATERIALIZED CTEs (the kcore lesson:
 without MATERIALIZED the planner inlines 3^rounds copies) and
@@ -73,7 +73,7 @@ def label_propagation(edges: DataFrame, iters: int = 3) -> DataFrame:
             lbl.join(best, F.col("node") == F.col("_bn"), "left")
             .selectExpr("node", "COALESCE(blbl, lbl) AS lbl")
         )
-        lbl = pin(lbl, loop=True)
+        lbl = pin(lbl)
     sizes = lbl.groupBy(F.col("lbl").alias("_sl")).agg(
         F.expr("CAST(COUNT(*) AS BIGINT)").alias("csize")
     )

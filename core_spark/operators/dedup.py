@@ -590,7 +590,7 @@ def connected_components(pairs, id_a: str = "id_a", id_b: str = "id_b",
     # productive one (sig == prev_sig), so a graph that reaches the star
     # fixpoint exactly at round max_iter must not be reported unconverged
     for _ in range(max_iter + 1):
-        edges = pin(_small_star(_large_star(edges)), loop=True)
+        edges = pin(_small_star(_large_star(edges)))
         # decimal(38,0) sums: BIGINT would overflow under ANSI mode
         sig = tuple(
             edges.agg(

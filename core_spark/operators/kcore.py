@@ -13,7 +13,7 @@ chain end drops its neighbor to degree 2, which peels next round —
 the fixture plants exactly such a chain (6 rounds at the driver
 scale). Each round is one degree hash-agg on uniform node keys + two
 LEFT-SEMI joins filtering the edge list to kept endpoints, pinned via
-pin(loop=True) (the CC/SSSP loop discipline — plans would deepen
+pin (the CC/SSSP loop discipline — plans would deepen
 every round otherwise). Convergence = the kept-edge COUNT repeating:
 peeling only ever removes edges, so an unchanged count IS the fixed
 point (a one-row aggregate over already-materialized partitions — no
@@ -75,8 +75,7 @@ def k_core(
         )
         sym = pin(
             sym.join(keep, "a", "left_semi")
-            .join(keep.selectExpr("a AS b"), "b", "left_semi"),
-            loop=True,
+            .join(keep.selectExpr("a AS b"), "b", "left_semi")
         )
     if not converged:
         raise RuntimeError(

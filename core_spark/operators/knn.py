@@ -215,9 +215,7 @@ def knn_adaptive(
         # materializing it once means the output branch, the remainder
         # anti-join, and the brute-force fallback all reuse the result
         # instead of re-planning and re-executing the ring join per branch
-        topk = pin(
-            knn_join(docs, remaining, k, res=res, ring=r, **kw), loop=True
-        )
+        topk = pin(knn_join(docs, remaining, k, res=res, ring=r, **kw))
         last_topk = topk
         done = topk.filter(F.col("complete"))
         parts.append(done)
@@ -235,7 +233,7 @@ def knn_adaptive(
         # AQE's empty-relation propagation is not guaranteed for a noop
         # sink). The isEmpty() is a driver check on already-materialized
         # local data — not a collect() of a data path.
-        remaining = pin(remaining, loop=True)
+        remaining = pin(remaining)
         if not remaining.isEmpty():
             parts.append(
                 knn_bruteforce(

@@ -5,7 +5,7 @@ The web-corpus analog of the reference's dependency graph rollups
 aggregates authority over the host link graph). PageRank is THE classic
 iterative web-scale workload, and it exercises exactly the machinery this
 engine centralizes for loops: per-round materialization with lineage
-truncation (``plans/materialize.pin(loop=True)``), uniform-key shuffles,
+truncation (``plans/materialize.pin``), uniform-key shuffles,
 and a small node directory joined against a large edge table.
 
 Exactness discipline (the whole point of this variant)
@@ -46,7 +46,7 @@ At 100 TB: the edge table shuffles on uniform host keys (md5-derived —
 no skew by construction; a real crawl graph would salt mega-hosts the
 same way zonal.py salts mega-cells); the rank table is |hosts| rows,
 re-pinned per round so each iteration's plan stays flat (the measured
-7x persist-vs-local lesson, materialize.py docstring). Exactly
+7x lineage-keeping-persist lesson, materialize.py docstring). Exactly
 ``iters`` joins + hash-aggs — O(log-free) fixed rounds, no convergence
 probe needed because the iteration count is part of the contract.
 """
@@ -131,7 +131,7 @@ def pagerank(
                 f"(coalesce(s, 0) DIV {share_den}) AS rank",
             )
         )
-        ranks = pin(ranks, loop=True)
+        ranks = pin(ranks)
     in_deg = edges.groupBy(F.col("dst").alias("host")).agg(
         F.count("*").alias("in_deg")
     )
@@ -167,7 +167,7 @@ def pagerank_weighted(
     Node directory = every host appearing as src or dst. Per-round
     plans: one join edges⋈ranks on src (uniform host keys), one
     hash-agg on dst, one left join back to the directory — re-pinned
-    per round (loop=True) so plans stay flat.
+    per round so plans stay flat.
     """
     edges = pin(edges)
     deg = edges.groupBy("src_host").agg(F.sum("n_links").alias("out_total"))
@@ -201,7 +201,7 @@ def pagerank_weighted(
                 f" DIV {_DAMP_DEN} AS rank",
             )
         )
-        ranks = pin(ranks, loop=True)
+        ranks = pin(ranks)
     return ranks
 
 
@@ -335,7 +335,7 @@ def hits(edges: DataFrame, iters: int = 2) -> DataFrame:
 
     Per-round plans mirror pagerank(): edges⋈scores on one uniform host
     key, hash-agg on the other, left join back to the node directory,
-    re-pinned per round (loop=True) to keep plans flat. Nodes with no
+    re-pinned per round to keep plans flat. Nodes with no
     in-links hold authority 0 (respectively hub 0) — kept, not dropped.
     """
     if iters < 1:
@@ -355,8 +355,7 @@ def hits(edges: DataFrame, iters: int = 2) -> DataFrame:
         )
         auth = pin(
             nodes.join(a_in, nodes.host == a_in.dst, "left")
-            .selectExpr("host", "CAST(coalesce(s, 0) AS BIGINT) AS authority"),
-            loop=True,
+            .selectExpr("host", "CAST(coalesce(s, 0) AS BIGINT) AS authority")
         )
         h_out = (
             edges.join(auth, edges.dst == auth.host)
@@ -364,8 +363,7 @@ def hits(edges: DataFrame, iters: int = 2) -> DataFrame:
         )
         hub = pin(
             nodes.join(h_out, nodes.host == h_out.src, "left")
-            .selectExpr("host", "CAST(coalesce(s, 0) AS BIGINT) AS hub"),
-            loop=True,
+            .selectExpr("host", "CAST(coalesce(s, 0) AS BIGINT) AS hub")
         )
     return auth.join(hub, "host")
 
@@ -528,7 +526,7 @@ def pagerank_personalized(
                 f" DIV {_DAMP_DEN} AS rank",
             )
         )
-        ranks = pin(ranks, loop=True)
+        ranks = pin(ranks)
     return ranks.join(nodes.select("host", "is_seed"), "host").select(
         "host", "rank", "is_seed"
     )

@@ -16,7 +16,7 @@ anyway (browsers cap near 20).
 Per round: ONE equi self-join of the pointer table on a uniform URL key
 + a projection — the pointer table is pinned per round (the CLAUDE.md
 self-join rule: both join branches re-evaluate their input;
-``plans/materialize.pin(loop=True)`` keeps loop plans flat). Rows
+``plans/materialize.pin`` keeps loop plans flat). Rows
 whose pointer already reached a terminal simply miss the join (LEFT)
 and carry forward unchanged — no convergence probe needed because the
 round count is part of the contract, exactly like linkgraph.pagerank.
@@ -83,7 +83,7 @@ def resolve_redirects(
         "src AS url", "dst AS next", "CAST(1 AS BIGINT) AS hops"
     )
     for _ in range(rounds):
-        p = pin(ptr, loop=True)
+        p = pin(ptr)
         a, b = p.alias("a"), p.alias("b")
         ptr = a.join(b, F.col("a.next") == F.col("b.url"), "left").select(
             F.col("a.url").alias("url"),

@@ -16,7 +16,7 @@ trick (one pin per round) does not apply — each round must both EXPAND
 (frontier x edges, min per dst) and RECONCILE (keep strictly better
 candidates, rewrite dist). Two pins per round (the improved frontier
 and the reconciled dist) is the honest cost of non-monotone state;
-both go through plans.materialize.pin(loop=True), the module built for
+both go through plans.materialize.pin, the module built for
 lineage-deepening loops.
 
 Round anatomy (all uniform-key equi shuffles):
@@ -89,8 +89,7 @@ def sssp_costs(
     dist = pin(
         seeds.where(f"{node} IS NOT NULL")
         .selectExpr(f"{node} AS node").distinct()
-        .selectExpr("node", "CAST(0 AS BIGINT) AS cost"),
-        loop=True,
+        .selectExpr("node", "CAST(0 AS BIGINT) AS cost")
     )
     frontier = dist
     for _ in range(max_hops):
@@ -106,15 +105,11 @@ def sssp_costs(
                 dist.selectExpr("node", "cost AS _old"), "node", "left_outer"
             )
             .where("_old IS NULL OR cost < _old")
-            .select("node", "cost"),
-            loop=True,
+            .select("node", "cost")
         )
         if improved.isEmpty():
             break
-        dist = pin(
-            dist.join(improved, "node", "left_anti").unionAll(improved),
-            loop=True,
-        )
+        dist = pin(dist.join(improved, "node", "left_anti").unionAll(improved))
         frontier = improved
     return dist
 

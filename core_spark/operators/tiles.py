@@ -59,8 +59,8 @@ def compact_cells(df, input_res: int, min_res: int, cell_col: str = "cell"):
     FIXED (input_res - min_res), so the plan is static, no
     iterate-to-convergence. Each level's working set is eagerly
     pinned via ``plans.materialize.pin`` (it feeds both the aggregate and
-    the anti join — the CLAUDE.md self-join rule; the
-    SPARK_GRAFT_MATERIALIZE knob selects local/reliable/persist).
+    the anti join — the CLAUDE.md self-join rule; ``pin`` picks a
+    cluster-safe checkpoint from the session's master).
 
     Returns a single ``cell`` column at mixed resolutions
     (res = cell >> 59 by construction).
@@ -70,7 +70,7 @@ def compact_cells(df, input_res: int, min_res: int, cell_col: str = "cell"):
     cur = df.select(F.col(cell_col).alias("cell")).distinct()
     kept_levels = []
     for _res in range(input_res, min_res, -1):
-        cur = pin(cur, loop=True)
+        cur = pin(cur)
         withp = hx.apply_steps(
             cur, hx.parent_steps("cell", "parent")
         ).select("cell", "parent")

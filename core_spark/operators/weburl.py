@@ -141,8 +141,8 @@ def cap_per_host(
     is a small aggregate (broadcast both ways); only mega-host rows pay
     the per-host ROW_NUMBER sort. ``plans.materialize.pin`` materializes
     the input so the two branches don't re-evaluate the upstream plan
-    twice (CLAUDE.md self-join rule; SPARK_GRAFT_MATERIALIZE selects the
-    cluster-safe strategy).
+    twice (CLAUDE.md self-join rule; ``pin`` picks the cluster-safe
+    checkpoint from the session's master).
     """
     from pyspark.sql import Window
 

@@ -1,115 +1,58 @@
-"""Central materialization strategy for self-join / multi-branch inputs.
+"""Eager materialization for self-join / multi-branch inputs and loops.
 
-Every blocking/banding pair generator in this engine materializes its
-input table before branching: each branch of a Spark self-join (and each
-branch of a union) re-evaluates its input plan, so without an eager
-materialization the tokenize/signature/bucketing pipeline runs 2x+
-(the CLAUDE.md self-join rule; measured in PLANS.md).
+Each branch of a Spark self-join (and each arm of a union) re-evaluates
+its input plan, so blocking/banding pair generators pin their input
+first; without it the tokenize/signature/bucketing pipeline runs 2x+
+(the CLAUDE.md self-join rule; measured in PLANS.md). Iterative
+operators pin once per round so each round's plan stays flat.
 
-HOW it materializes is a deployment decision, so it is centralized here
-behind one knob instead of hard-coded per call site:
+``pin`` picks HOW from the session's master, the only place the safety
+trade-off lives:
 
-``local`` (default)
-    ``DataFrame.localCheckpoint(eager=True)``. Fastest on local[N] and
-    the bench configuration: blocks live in executor block managers, no
-    DFS round-trip. Cluster caveat (BENCH_SCALING.md "localCheckpoint on
-    a real cluster"): blocks are executor-LOCAL and lineage is truncated,
-    so a lost executor FAILS the job. Never use on a multi-node cluster
-    with preemptible/spot executors.
+- in-process master (``local``, ``local[N]``, ``local[*]``,
+  ``local[N,F]``): ``localCheckpoint(eager=True)``. Blocks live in the
+  executor block manager and lineage is cut; executor loss is driver
+  loss there, so nothing is given up, and it is the fastest option.
+- any other master (``local-cluster[...]``, ``spark://``, ``yarn``,
+  ``k8s://``): ``checkpoint(eager=True)`` to the reliable checkpoint dir,
+  because executor-local blocks die with their executor and would FAIL
+  the job (BENCH_SCALING.md "localCheckpoint on a real cluster"). If no
+  dir is set, one is made under ``SPARK_GRAFT_CHECKPOINT_DIR`` (or a
+  temp dir, only sensible on one host).
 
-``reliable``
-    ``DataFrame.checkpoint(eager=True)`` to the reliable checkpoint dir
-    (HDFS / object store on a real cluster). Blocks survive executor
-    loss; this is the production-cluster setting. If no checkpoint dir
-    is configured, one is created under ``SPARK_GRAFT_CHECKPOINT_DIR``
-    (or a temp dir, which is only sensible in local mode).
-
-``persist``
-    ``persist(MEMORY_AND_DISK)`` + an eager ``count()``. Keeps lineage:
-    a lost executor RECOMPUTES the missing partitions instead of failing
-    the job — cheaper than a reliable checkpoint when the upstream plan
-    is re-runnable and the cluster is mostly stable. The eager count
-    matters: a lazy persist would let the first self-join's two branches
-    race to populate the cache and still recompute.
-
-    CAVEAT (measured, sf0.1): because lineage is NOT cut, ITERATIVE
-    operators whose loops pin each round (connected components, cell
-    compaction, adaptive kNN) accumulate ever-deeper logical plans and
-    pay growing analysis/serialization cost per round — dedup_cluster
-    2.4s (local/reliable) vs 17.6s (persist). ``persist`` fits
-    single-pass branch reuse; loops want ``local`` (bench) or
-    ``reliable`` (cluster), both of which truncate lineage.
-
-Select globally with ``SPARK_GRAFT_MATERIALIZE=local|reliable|persist``
-(read per call, so tests can flip it at runtime), or per call via the
-``strategy=`` argument. ``tests/test_materialize.py`` pins that all
-three strategies produce identical results on the dedup + kNN paths.
+Both cut lineage, which loops need: a lineage-keeping ``persist`` nests
+every prior round into each round's plan and ran connected components
+7x slower (BENCH_SCALING.md).
 """
 
 from __future__ import annotations
 
 import os
+import re
 import tempfile
 
 from pyspark.sql import DataFrame
 
-STRATEGIES = ("local", "reliable", "persist")
-
-_ENV = "SPARK_GRAFT_MATERIALIZE"
 _ENV_CKPT_DIR = "SPARK_GRAFT_CHECKPOINT_DIR"
 
 
-def current_strategy() -> str:
-    """The process-wide strategy: ``SPARK_GRAFT_MATERIALIZE`` or local."""
-    s = os.environ.get(_ENV, "local").strip().lower()
-    if s not in STRATEGIES:
-        raise ValueError(f"{_ENV}={s!r}: expected one of {STRATEGIES}")
-    return s
+def is_local_master(master: str) -> bool:
+    """True for masters that run every executor inside the driver JVM."""
+    return re.fullmatch(r"local(\[[^\]]*\])?", master) is not None
 
 
 def _ensure_checkpoint_dir(df: DataFrame) -> None:
     sc = df.sparkSession.sparkContext
-    try:
-        existing = sc.getCheckpointDir()  # pyspark >= 3.1
-    except AttributeError:  # pragma: no cover - older pyspark
-        opt = sc._jsc.sc().getCheckpointDir()
-        existing = opt.get() if opt.isDefined() else None
-    if existing:
-        return
-    target = os.environ.get(_ENV_CKPT_DIR) or tempfile.mkdtemp(
-        prefix="spark-graft-ckpt-"
-    )
-    sc.setCheckpointDir(target)
+    if not sc.getCheckpointDir():
+        sc.setCheckpointDir(
+            os.environ.get(_ENV_CKPT_DIR)
+            or tempfile.mkdtemp(prefix="spark-graft-ckpt-")
+        )
 
 
-def pin(df: DataFrame, strategy: str | None = None,
-        loop: bool = False) -> DataFrame:
-    """Eagerly materialize ``df`` before it feeds multiple plan branches.
-
-    Always eager — the whole point is that downstream branches (self-join
-    sides, union arms, convergence probes) reuse computed partitions
-    instead of re-running the upstream plan per branch.
-
-    ``loop=True`` marks a call inside an iterative operator (one pin per
-    round: connected components, cell compaction, adaptive kNN rings).
-    Loops REQUIRE lineage truncation — under ``persist`` each round's
-    plan nests all prior rounds' and analysis cost grows per round
-    (measured 7x on connected components, module docstring) — so a
-    process-wide ``persist`` setting is overridden to ``reliable`` at
-    loop sites; explicit per-call ``strategy=`` still wins.
-    """
-    s = strategy or current_strategy()
-    if loop and strategy is None and s == "persist":
-        s = "reliable"
-    if s == "local":
+def pin(df: DataFrame) -> DataFrame:
+    """Eagerly materialize ``df`` and cut its lineage (see module doc)."""
+    if is_local_master(df.sparkSession.sparkContext.master):
         return df.localCheckpoint(eager=True)
-    if s == "reliable":
-        _ensure_checkpoint_dir(df)
-        return df.checkpoint(eager=True)
-    if s == "persist":
-        from pyspark import StorageLevel
-
-        out = df.persist(StorageLevel.MEMORY_AND_DISK)
-        out.count()
-        return out
-    raise ValueError(f"unknown materialization strategy {s!r}")
+    _ensure_checkpoint_dir(df)
+    return df.checkpoint(eager=True)

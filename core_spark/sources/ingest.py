@@ -21,7 +21,6 @@ filter on the scan, applied before any UDF stage.
 
 from __future__ import annotations
 
-import fnmatch
 import os
 import re
 
@@ -101,15 +100,20 @@ def read_file_tree(
     # root-level 'coverage/' only (scanner.go:656-659: shouldSkipDir skips
     # a coverage dir iff its parent IS the scan root; nested
     # tests/*/coverage dirs are real content and stay)
-    root_uri = (
-        root if "://" in root or root.startswith("file:")
-        else "file:" + os.path.abspath(root)
-    )
     df = df.filter(
-        ~F.col("path").rlike("^" + re.escape(root_uri.rstrip("/")) + "/coverage/")
+        ~F.col("path").rlike("^" + re.escape(_root_uri(root)) + "/coverage/")
     )
     df = df.filter(F.col("length") <= max_file_size)
     return df
+
+
+def _root_uri(root: str) -> str:
+    """The scan root as the ``path`` column spells it, no trailing slash."""
+    uri = (
+        root if "://" in root or root.startswith("file:")
+        else "file:" + os.path.abspath(root)
+    )
+    return uri.rstrip("/")
 
 
 #: Arrow-safe source text from a binary content column: a plain CAST keeps
@@ -269,7 +273,7 @@ def walk_file_tree(
 
         meta = root_files.unionByName(tops.mapInPandas(_list, meta_schema))
         if glob:
-            meta = glob_filter(meta, [glob])
+            meta = glob_filter(meta, [glob], root_abs)
         return meta.mapInPandas(
             _read_contents,
             "path string, modificationTime timestamp, length long,"
@@ -306,26 +310,37 @@ def walk_file_tree(
         "path string, modificationTime timestamp, length long",
     )
     if glob:
-        meta = glob_filter(meta, [glob])
+        meta = glob_filter(meta, [glob], root_abs)
     return meta.mapInPandas(
         _read_contents,
         "path string, modificationTime timestamp, length long, content binary",
     )
 
 
-def glob_filter(df, patterns: list[str], path_col: str = "path"):
-    """User glob patterns over relative paths (F2; doublestar semantics via
-    fnmatch translation to a regex Column predicate)."""
+_GLOB_TOKEN = re.compile(r"\*\*/|\*\*|\*|\?|.", re.S)
+_GLOB_REGEX = {"**/": "(?:.*/)?", "**": ".*", "*": "[^/]*", "?": "[^/]"}
+
+
+def glob_regex(pattern: str) -> str:
+    """Doublestar glob -> regex over a root-relative path (F2): ``**/``
+    spans zero or more directories, ``**`` anything, while ``*`` and
+    ``?`` stay inside one path segment."""
+    return "".join(
+        _GLOB_REGEX.get(t) or re.escape(t) for t in _GLOB_TOKEN.findall(pattern)
+    )
+
+
+def glob_filter(df, patterns: list[str], root: str, path_col: str = "path"):
+    """Keep rows whose path, relative to the scan ``root``, matches any of
+    the doublestar ``patterns`` (one anchored regex Column predicate)."""
     from pyspark.sql import functions as F
 
     if not patterns:
         return df
-    regexes = [fnmatch.translate(p).replace("\\Z", "$") for p in patterns]
-    cond = None
-    for r in regexes:
-        c = F.col(path_col).rlike(r)
-        cond = c if cond is None else (cond | c)
-    return df.filter(cond)
+    alts = "|".join(glob_regex(p) for p in patterns)
+    return df.filter(
+        F.col(path_col).rlike(f"^{re.escape(_root_uri(root))}/(?:{alts})$")
+    )
 
 
 def write_snapshot(df, path: str, order_by: list[str], fmt: str = "parquet"):

@@ -13,6 +13,7 @@ from core_spark.operators.linkgraph import (
     pagerank,
     sql_host_pagerank,
 )
+from core_spark.plans import materialize
 
 N_HOSTS, K_OUT, ITERS = 13, 4, 3
 
@@ -102,7 +103,7 @@ def test_pagerank_identical_under_reliable_materialization(spark, monkeypatch):
         )
 
     base = run()
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "reliable")
+    monkeypatch.setattr(materialize, "is_local_master", lambda master: False)
     assert run() == base
 
 
@@ -206,7 +207,7 @@ def test_weighted_identical_under_reliable_materialization(spark, monkeypatch):
         )
 
     base = run()
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "reliable")
+    monkeypatch.setattr(materialize, "is_local_master", lambda master: False)
     assert run() == base
 
 

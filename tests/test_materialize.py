@@ -1,11 +1,13 @@
-"""plans.materialize.pin — the one materialization knob.
+"""plans.materialize.pin — the one materialization helper.
 
-All 16 former ``localCheckpoint`` call sites (the engine's only documented
+All former ``localCheckpoint`` call sites (the engine's only documented
 job-fatal hazard on a real cluster: executor-local blocks + truncated
-lineage) now route through ``pin``. These tests pin the contract: the
-``reliable`` (DFS checkpoint) and ``persist`` (MEMORY_AND_DISK + eager
-count) strategies produce results identical to ``local`` on the operators
-that branch hardest (MinHash-LSH dedup clustering, multi-round kNN).
+lineage) route through ``pin``, which picks ``localCheckpoint`` on an
+in-process master and a reliable ``checkpoint`` on any other. These tests
+pin the master predicate and show that the reliable branch, forced on the
+local test session, gives results identical to the local one on the
+operators that branch hardest (MinHash-LSH dedup clustering, multi-round
+kNN) and on the iterative ones.
 """
 
 from __future__ import annotations
@@ -18,73 +20,77 @@ from core_spark.plans import materialize
 from tests.conftest import SF_SMOKE
 
 
-@pytest.fixture()
-def strategy_env():
-    """Restore SPARK_GRAFT_MATERIALIZE after the test."""
-    saved = os.environ.get(materialize._ENV)
-    yield
-    if saved is None:
-        os.environ.pop(materialize._ENV, None)
-    else:
-        os.environ[materialize._ENV] = saved
+def _force_reliable(monkeypatch):
+    """Run ``pin``'s reliable branch on the local test session."""
+    monkeypatch.setattr(materialize, "is_local_master", lambda master: False)
 
 
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-def _run(spark, qname, strategy):
+def _reliable_matches_local(spark, qname, monkeypatch):
     import __spark_entry__ as entry
 
-    os.environ[materialize._ENV] = strategy
-    try:
-        out = _rows(entry.queries()[qname](spark, SF_SMOKE))
-    finally:
-        os.environ.pop(materialize._ENV, None)
-    spark.catalog.clearCache()
-    return out
+    def rows():
+        df = entry.queries()[qname](spark, SF_SMOKE)
+        out = sorted(tuple(r) for r in df.collect())
+        spark.catalog.clearCache()
+        return out
+
+    local = rows()
+    assert local, f"{qname} returned no rows at {SF_SMOKE}"
+    _force_reliable(monkeypatch)
+    assert rows() == local
+
+
+@pytest.mark.parametrize(
+    "master,local",
+    [
+        ("local", True),
+        ("local[4]", True),
+        ("local[*]", True),
+        ("local[4,2]", True),
+        ("local-cluster[2,1,1024]", False),
+        ("spark://h:7077", False),
+        ("yarn", False),
+        ("k8s://https://h", False),
+    ],
+)
+def test_master_predicate(master, local):
+    assert materialize.is_local_master(master) is local
 
 
 @pytest.mark.spark
 @pytest.mark.parametrize("qname", ["dedup_minhash", "knn"])
-def test_reliable_and_persist_match_local(spark, qname, strategy_env):
-    local = _run(spark, qname, "local")
-    assert local, f"{qname} returned no rows at {SF_SMOKE}"
-    assert _run(spark, qname, "reliable") == local
-    assert _run(spark, qname, "persist") == local
+def test_reliable_matches_local(spark, qname, monkeypatch):
+    _reliable_matches_local(spark, qname, monkeypatch)
 
 
 @pytest.mark.spark
 @pytest.mark.parametrize("qname", ["dedup_cluster", "tile_compact"])
-def test_reliable_matches_local_on_loop_operators(spark, qname, strategy_env):
+def test_reliable_matches_local_on_loop_operators(spark, qname, monkeypatch):
     """The ITERATIVE operators (star-contraction components, fixed-depth
     compaction) pin every round; reliable checkpointing must not change
-    their fixpoints. persist is exercised for correctness too, even
-    though it's documented as the wrong strategy for loops (slow, keeps
-    lineage — see materialize.py docstring)."""
-    local = _run(spark, qname, "local")
-    assert local, f"{qname} returned no rows at {SF_SMOKE}"
-    assert _run(spark, qname, "reliable") == local
-    assert _run(spark, qname, "persist") == local
+    their fixpoints."""
+    _reliable_matches_local(spark, qname, monkeypatch)
 
 
 @pytest.mark.spark
-def test_reliable_sets_checkpoint_dir(spark, strategy_env):
-    df = spark.range(10)
-    out = materialize.pin(df, strategy="reliable")
+def test_reliable_sets_checkpoint_dir(spark, monkeypatch):
+    def rdd_dirs():
+        ckpt = spark.sparkContext.getCheckpointDir()
+        path = ckpt and ckpt.removeprefix("file:")
+        return set(os.listdir(path)) if path and os.path.isdir(path) else set()
+
+    before = rdd_dirs()
+    _force_reliable(monkeypatch)
+    out = materialize.pin(spark.range(10))
     assert out.count() == 10
     assert spark.sparkContext.getCheckpointDir() is not None
-
-
-def test_bad_strategy_rejected(strategy_env):
-    os.environ[materialize._ENV] = "bogus"
-    with pytest.raises(ValueError):
-        materialize.current_strategy()
+    # the reliable branch wrote a new RDD checkpoint under that dir
+    assert any(n.startswith("rdd-") for n in rdd_dirs() - before)
 
 
 def test_no_raw_localcheckpoint_outside_helper():
     """Regression gate for VERDICT r4 'What's wrong #1': grep-level proof
-    that no operator bypasses the knob."""
+    that no operator bypasses ``pin``."""
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     hits = []
     for dirpath, _dirs, files in os.walk(root):
@@ -101,24 +107,3 @@ def test_no_raw_localcheckpoint_outside_helper():
                     if ".localCheckpoint(" in line:
                         hits.append(f"{path}:{i}")
     assert not hits, f"raw localCheckpoint outside materialize.py: {hits}"
-
-
-@pytest.mark.spark
-def test_loop_sites_override_persist(spark, strategy_env):
-    """loop=True must never run under persist (lineage accumulates per
-    round — the measured 7x hazard): a process-wide persist setting is
-    overridden to reliable at loop sites, visible as a reliable
-    checkpoint; an explicit per-call strategy still wins."""
-    os.environ[materialize._ENV] = "persist"
-    out = materialize.pin(spark.range(20), loop=True)
-    assert out.count() == 20
-    # reliable checkpoint ran: dir configured; a checkpointed frame's
-    # plan is a scan of the materialized RDD, not InMemoryRelation
-    assert spark.sparkContext.getCheckpointDir() is not None
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Scan ExistingRDD" in plan and "InMemoryRelation" not in plan
-    # explicit strategy beats the hint: persist -> InMemory, no rescan
-    out2 = materialize.pin(spark.range(7), strategy="persist", loop=True)
-    plan2 = out2._jdf.queryExecution().executedPlan().toString()
-    assert out2.count() == 7 and "InMemoryTableScan" in plan2
-    out2.unpersist()

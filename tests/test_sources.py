@@ -3,17 +3,43 @@
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 
 from core_spark.sources.ingest import (
     CORPUS_SCHEMA_FIELDS,
     glob_filter,
+    glob_regex,
     read_corpus,
     read_file_tree,
     with_git_lineage,
     write_snapshot,
 )
+
+
+#: Doublestar semantics over root-relative paths (SURVEY.md F2):
+#: (pattern, path, matches).
+GLOB_CASES = [
+    ("*.py", "app.py", True),
+    ("*.py", "src/app.py", False),
+    ("src/*.js", "src/x.js", True),
+    ("src/*.js", "src/a/x.js", False),
+    ("a/**/b.js", "a/b.js", True),
+    ("a/**/b.js", "a/x/y/b.js", True),
+    ("a/**/b.js", "a/xb.js", False),
+    ("**/*.py", "app.py", True),
+    ("**/*.py", "src/a/app.py", True),
+    ("?.md", "a.md", True),
+    ("?.md", "ab.md", False),
+    ("?.md", "a/b.md", False),
+    ("a.py", "axpy", False),
+]
+
+
+@pytest.mark.parametrize("pattern,path,hit", GLOB_CASES)
+def test_glob_table(pattern, path, hit):
+    assert (re.fullmatch(glob_regex(pattern), path) is not None) is hit
 
 
 @pytest.mark.spark
@@ -44,9 +70,23 @@ class TestFileTree:
 
     def test_glob_filter(self, spark, tree):
         df = read_file_tree(spark, tree)
-        py = glob_filter(df, ["*.py"])
+        py = glob_filter(df, ["**/*.py"], tree)
         assert all(r.path.endswith(".py") for r in py.collect())
         assert py.count() == 1
+
+    def test_glob_table_through_spark(self, spark):
+        """The same table through the JVM regex, on absolute ``file:``
+        paths under a scan root."""
+        prefix = "file:/scan/root/"
+        df = spark.createDataFrame(
+            sorted({(prefix + p,) for _pat, p, _hit in GLOB_CASES}),
+            "path string",
+        )
+        for pat in {pat for pat, _p, _hit in GLOB_CASES}:
+            got = {r.path for r in glob_filter(df, [pat], "/scan/root").collect()}
+            for q, p, hit in GLOB_CASES:
+                if q == pat:
+                    assert ((prefix + p) in got) is hit, (pat, p)
 
     def test_pushdown_in_plan(self, spark, tree):
         """The size/skip predicates must appear as data filters, not Python."""
