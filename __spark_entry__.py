@@ -8856,7 +8856,7 @@ def q_geofence_events(spark, sf_dir):
     finds dwells ANYWHERE, this anchors state changes to NAMED
     regions (the alerting shape). Rectangle containment keeps
     assignment pure-JVM broadcast; overlaps resolve to the lowest
-    fence id (pip first_only tie-break, live via the oversized
+    fence id (pip lowest-id tie-break, live via the oversized
     seventh fence); ONE entity-keyed window pass extracts single-row
     transitions ('switch' carries both ids — exit+enter pairs would
     force an ordering convention)."""

@@ -27,7 +27,7 @@ import pandas as pd
 from core_spark.functions import hexgrid as hx
 from core_spark.functions.extract import html_to_text
 from core_spark.functions.geoparse import parse_mentions
-from core_spark.operators.pip import _fingerprint, match_points
+from core_spark.operators.pip import match_points, polygon_payload
 
 FUSED_SCHEMA = (
     "doc_id bigint, url string, lang string, mention_idx int, "
@@ -78,8 +78,7 @@ def fused_batch(pdf: pd.DataFrame, payload, payload_fp: int) -> pd.DataFrame:
 
 def fused_pipeline(docs_df, polygons: pd.DataFrame):
     """docs (doc_id,url,html,lang) -> mention rows (FUSED_SCHEMA)."""
-    payload = [(int(r.admin_id), [list(ring) for ring in r.rings]) for r in polygons.itertuples()]
-    fp = _fingerprint(payload)
+    payload, fp = polygon_payload(polygons)
 
     def run(batches):
         for pdf in batches:

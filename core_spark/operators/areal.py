@@ -25,8 +25,9 @@ human-facing estimate divides ONCE at the end (one IEEE int64->double
 division, engine-pinned). The moran/kde quantize-first recipe again.
 
 Plan shape: each zone explodes MAP-SIDE to the cell ids its rectangle
-covers (bounded by area/G^2 — the PBSM replication knob; huge zones
-get pre-split upstream exactly like long linestrings in segjoin), then
+covers (``gridblock.cover``, bounded by area/G^2 — the PBSM replication
+knob; huge zones get pre-split upstream exactly like long linestrings in
+segjoin), then
 ONE uniform equi shuffle joins zone fragments to occupied cells on the
 cell key, and a hash-agg per zone finishes. No reference point needed:
 a (cell, zone) pair meets at that cell exactly once by construction.
@@ -44,6 +45,8 @@ the method is the published areal-weighting formulation.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from core_spark.operators import gridblock as gb
 
 
 def areal_interpolate(
@@ -79,13 +82,8 @@ def areal_interpolate(
     # closed-open right edge -> last covered cell is floor((zx1-1)/G)
     zg = z.selectExpr(
         "zone_id", "zx0", "zy0", "zx1", "zy1",
-        f"explode(sequence(CAST(FLOOR(zx0 / {gi}.0) AS BIGINT),"
-        f" CAST(FLOOR((zx1 - 1) / {gi}.0) AS BIGINT))) AS cx",
-    ).selectExpr(
-        "*",
-        f"explode(sequence(CAST(FLOOR(zy0 / {gi}.0) AS BIGINT),"
-        f" CAST(FLOOR((zy1 - 1) / {gi}.0) AS BIGINT))) AS cy",
-    )
+        f"{gb.cover('zx0', 'zx1 - 1', gi)} AS cx",
+    ).selectExpr("*", f"{gb.cover('zy0', 'zy1 - 1', gi)} AS cy")
     joined = zg.join(c, ["cx", "cy"]).selectExpr(
         "zone_id", "value",
         f"least(cx * {gi} + {gi}, zx1) - greatest(cx * {gi}, zx0) AS _ow",

@@ -55,6 +55,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from core_spark.operators import gridblock as gb
 from core_spark.plans.materialize import pin
 
 
@@ -106,19 +107,12 @@ def frechet_join(
         .selectExpr(
             "_tid", "_seq.lat AS _la", "_seq.lon AS _lo",
             f"{guard} AS _n",
-            f"CAST(FLOOR(_minlat / {threshold!r}) AS BIGINT) AS _cx",
-            f"CAST(FLOOR(_minlon / {threshold!r}) AS BIGINT) AS _cy",
+            f"{gb.cell('_minlat', threshold)} AS _cx",
+            f"{gb.cell('_minlon', threshold)} AS _cy",
         ))
-    offsets = ", ".join(
-        f"struct({dx}L AS dx, {dy}L AS dy)"
-        for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-    )
-    a = trajs.selectExpr(
-        "_tid AS _ta", "_la AS _laa", "_lo AS _loa", "_n AS _na",
-        f"explode(array({offsets})) AS _o", "_cx", "_cy",
-    ).selectExpr(
-        "_ta", "_laa", "_loa", "_na",
-        "_cx + _o.dx AS _cx", "_cy + _o.dy AS _cy",
+    a = gb.neighbours(
+        trajs, ["_tid AS _ta", "_la AS _laa", "_lo AS _loa", "_n AS _na"],
+        {"_cx": "_cx", "_cy": "_cy"},
     )
     b = trajs.selectExpr(
         "_tid AS _tb", "_la AS _lab", "_lo AS _lob", "_n AS _nb",

@@ -12,7 +12,7 @@ operator is shuffle-light and exactly twin-able. Polygon fences
 compose by swapping the assignment stage for pip_join's admin_id
 (same downstream transition logic — documented seam, the
 spatial_pipeline pattern); overlapping fences resolve to the LOWEST
-fence id, pip.match_points' first_only tie-break.
+fence id, pip.match_points' lowest-id tie-break.
 
 Transition semantics (single row per boundary crossing, never two):
 each ping's fence state is compared to the entity's PREVIOUS ping

@@ -54,6 +54,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from core_spark.operators import gridblock as gb
 from core_spark.plans.materialize import pin
 
 _EST = (
@@ -121,22 +122,14 @@ def idw_fill(
             f"_lon0 + (gj + 0.5) * {cell!r} AS glon",
         )
     )
-    offsets = ", ".join(
-        f"struct({dx}L AS dx, {dy}L AS dy)"
-        for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-    )
-    nrep = nodes.selectExpr(
-        "gi", "gj", "glat", "glon",
-        f"explode(array({offsets})) AS _o",
-    ).selectExpr(
-        "gi", "gj", "glat", "glon",
-        f"CAST(FLOOR(glat / {radius!r}) AS BIGINT) + _o.dx AS _bx",
-        f"CAST(FLOOR(glon / {radius!r}) AS BIGINT) + _o.dy AS _by",
+    nrep = gb.neighbours(
+        nodes, ["gi", "gj", "glat", "glon"],
+        {"_bx": gb.cell("glat", radius), "_by": gb.cell("glon", radius)},
     )
     phome = pts.selectExpr(
         "_plat", "_plon", "_pz",
-        f"CAST(FLOOR(_plat / {radius!r}) AS BIGINT) AS _bx",
-        f"CAST(FLOOR(_plon / {radius!r}) AS BIGINT) AS _by",
+        f"{gb.cell('_plat', radius)} AS _bx",
+        f"{gb.cell('_plon', radius)} AS _by",
     )
     d2m = _d2_micro("glat", "glon", "_plat", "_plon")
     r2m = int(radius * radius * 1_000_000)

@@ -23,12 +23,12 @@ group sums are integer — partition-order-independent and bit-identical
 across engines AND across cluster runs (double sums are neither).
 
 100-TB shape: epsilon-grid blocking at block = radius (the rangejoin
-pattern): points replicate to their 3×3 radius-block neighborhood
-(map-side ×9), cell centers stay in their home block, one equi shuffle,
-never a cartesian (plan-asserted). Dense-city mega-blocks are one hot
-key — AQE skew-join territory, same caveat as range_join_pairs. The
-points table feeds both the cell derivation and the candidate join, so
-it is eagerly pinned (CLAUDE.md self-join rule).
+pattern, gridblock.py): points replicate to their 3×3 radius-block
+neighborhood (map-side ×9), cell centers stay in their home block, one
+equi shuffle, never a cartesian (plan-asserted). Dense-city mega-blocks
+are one hot key — AQE skew-join territory, same caveat as
+range_join_pairs. The points table feeds both the cell derivation and
+the candidate join, so it is eagerly pinned (CLAUDE.md self-join rule).
 
 Geometry is PLANAR over equirectangular lon/lat — the hexgrid lattice
 caveat applies (no ±180 wrap). ``value_col`` must be integral (callers
@@ -39,6 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from core_spark.operators import gridblock as gb
 from core_spark.plans.materialize import pin
 
 WSCALE_DEFAULT = 1 << 20
@@ -85,32 +86,18 @@ def kernel_heatmap(
         .transform(pin)
     )
     centers = pts.selectExpr(
-        f"CAST(FLOOR(_plat / {g!r}) AS BIGINT) AS cell_i",
-        f"CAST(FLOOR(_plon / {g!r}) AS BIGINT) AS cell_j",
+        f"{gb.cell('_plat', g)} AS cell_i", f"{gb.cell('_plon', g)} AS cell_j",
     ).distinct().selectExpr(
         "cell_i",
         "cell_j",
         f"(cell_i + 0.5D) * {g!r} AS _clat",
         f"(cell_j + 0.5D) * {g!r} AS _clon",
-        f"CAST(FLOOR((cell_i + 0.5D) * {g!r} / {r!r}) AS BIGINT) AS _bx",
-        f"CAST(FLOOR((cell_j + 0.5D) * {g!r} / {r!r}) AS BIGINT) AS _by",
+        f"{gb.cell(f'(cell_i + 0.5D) * {g!r}', r)} AS _bx",
+        f"{gb.cell(f'(cell_j + 0.5D) * {g!r}', r)} AS _by",
     )
-    offsets = ", ".join(
-        f"struct({dx}L AS dx, {dy}L AS dy)"
-        for dx in (-1, 0, 1)
-        for dy in (-1, 0, 1)
-    )
-    cand = pts.selectExpr(
-        "_plat",
-        "_plon",
-        "_v",
-        f"CAST(FLOOR(_plat / {r!r}) AS BIGINT) AS _pbx",
-        f"CAST(FLOOR(_plon / {r!r}) AS BIGINT) AS _pby",
-        f"explode(array({offsets})) AS _o",
-    ).selectExpr(
-        "_plat", "_plon", "_v",
-        "_pbx + _o.dx AS _bx",
-        "_pby + _o.dy AS _by",
+    cand = gb.neighbours(
+        pts, ["_plat", "_plon", "_v"],
+        {"_bx": gb.cell("_plat", r), "_by": gb.cell("_plon", r)},
     )
     d2 = "(_plat - _clat) * (_plat - _clat) + (_plon - _clon) * (_plon - _clon)"
     w = f"CAST(FLOOR({wscale} * ({r * r!r} - ({d2})) / {r * r!r}) AS BIGINT)"

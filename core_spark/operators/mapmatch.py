@@ -22,9 +22,9 @@ trade; the exact cross-multiplied argmin would need a pairwise join
 per ping). eps and coordinates follow snap.py's BIGINT fixed-point
 contract.
 
-Plan shape: the candidate stage IS snap.py's (shared _STEPS/_within
-constants — one-sided eps-expanded segment replication, points never
-replicate, one uniform equi shuffle) with the distance key kept;
+Plan shape: the candidate stage IS snap.py's (``snap._candidates`` —
+one-sided eps-expanded segment replication, points never replicate,
+one uniform equi shuffle, see gridblock.py) with the distance key kept;
 argmin is one (ping)-keyed hash-agg; transitions are one lag window
 whose (entity) clustering the final count hash-agg reuses. Pings
 with NO road within eps drop out of the sequence — transitions read
@@ -39,7 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from core_spark.operators.snap import _STEPS, _STEPS2, _within
+from core_spark.operators.snap import _candidates, _within
 
 _DKEY = (
     "CAST(CASE WHEN _td = 0 OR _tn <= 0 THEN _ap2"
@@ -75,36 +75,9 @@ def map_match(
     ).where(
         "_e IS NOT NULL AND _q IS NOT NULL"
         " AND p_x IS NOT NULL AND p_y IS NOT NULL"
-    ).selectExpr(
-        "_e", "_q", "p_x", "p_y",
-        f"CAST(FLOOR(p_x / {g!r}) AS BIGINT) AS _cx",
-        f"CAST(FLOOR(p_y / {g!r}) AS BIGINT) AS _cy",
     )
-    s = roads.selectExpr(
-        f"{seg_key} AS seg",
-        "CAST(x1 AS BIGINT) AS s_x1", "CAST(y1 AS BIGINT) AS s_y1",
-        "CAST(x2 AS BIGINT) AS s_x2", "CAST(y2 AS BIGINT) AS s_y2",
-    ).where(
-        "s_x1 IS NOT NULL AND s_y1 IS NOT NULL"
-        " AND s_x2 IS NOT NULL AND s_y2 IS NOT NULL"
-    ).selectExpr(
-        "seg", "s_x1", "s_y1", "s_x2", "s_y2",
-        f"explode(sequence("
-        f" CAST(FLOOR((least(s_x1, s_x2) - {e}) / {g!r}) AS BIGINT),"
-        f" CAST(FLOOR((greatest(s_x1, s_x2) + {e}) / {g!r}) AS BIGINT)"
-        f")) AS _cx",
-    ).selectExpr(
-        "*",
-        f"explode(sequence("
-        f" CAST(FLOOR((least(s_y1, s_y2) - {e}) / {g!r}) AS BIGINT),"
-        f" CAST(FLOOR((greatest(s_y1, s_y2) + {e}) / {g!r}) AS BIGINT)"
-        f")) AS _cy",
-    )
-    stepped = (
-        p.join(s, ["_cx", "_cy"])
-        .selectExpr("*", *[f"{x} AS {c}" for c, x in _STEPS.items()])
-        .selectExpr("*", *[f"{x} AS {c}" for c, x in _STEPS2.items()])
-    )
+    s = roads.selectExpr(f"{seg_key} AS seg", "x1", "y1", "x2", "y2")
+    stepped = _candidates(p, s, e, g)
     best = (
         stepped.filter(F.expr(_within(e * e)))
         .selectExpr("_e", "_q", f"{_DKEY} AS _dk", "seg")

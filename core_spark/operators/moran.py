@@ -65,9 +65,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from core_spark.operators import gridblock as gb
 from core_spark.plans.materialize import pin
 
-_OFFSETS = ((1, 0), (-1, 0), (0, 1), (0, -1))
+_ROOK = ((1, 0), (-1, 0), (0, 1), (0, -1))
 
 
 def cell_counts(
@@ -84,8 +85,7 @@ def cell_counts(
             f" AND NOT isnan({lat}) AND NOT isnan({lon})"
         )
         .selectExpr(
-            f"CAST(FLOOR({lon} / {g!r}) AS BIGINT) AS cx",
-            f"CAST(FLOOR({lat} / {g!r}) AS BIGINT) AS cy",
+            f"{gb.cell(lon, g)} AS cx", f"{gb.cell(lat, g)} AS cy",
         )
         .groupBy("cx", "cy")
         .agg(F.count(F.lit(1)).alias("x"))
@@ -104,12 +104,8 @@ def _rook_pairs(df: DataFrame, payload: str, li: str, ri: str) -> DataFrame:
     """Ordered rook-adjacent pairs via the shifted-key explode: carry
     ``payload`` from both endpoints as (li, ri). Shared by morans_i and
     gearys_c so the adjacency plan has ONE definition."""
-    shifts = ", ".join(f"struct({dx}L AS dx, {dy}L AS dy)"
-                       for dx, dy in _OFFSETS)
-    probes = df.selectExpr(
-        f"{payload} AS {li}",
-        f"explode(array({shifts})) AS o",
-        "cx + o.dx AS nx", "cy + o.dy AS ny",
+    probes = gb.neighbours(
+        df, [f"{payload} AS {li}"], {"nx": "cx", "ny": "cy"}, _ROOK
     )
     return probes.join(
         df.selectExpr("cx AS nx", "cy AS ny", f"{payload} AS {ri}"),
@@ -198,9 +194,6 @@ FROM node, edge
 """
 
 
-_QUEEN = tuple((dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1))
-
-
 def getis_ord_gi(cells: DataFrame) -> DataFrame:
     """Getis-Ord Gi* hot-spot z-scores over (cx, cy, x BIGINT).
 
@@ -240,13 +233,8 @@ def getis_ord_gi(cells: DataFrame) -> DataFrame:
         F.sum("x").alias("s"),
         F.sum(F.expr("x * x")).alias("q"),
     )
-    shifts = ", ".join(f"struct({dx}L AS dx, {dy}L AS dy)"
-                       for dx, dy in _QUEEN)
-    probes = base.selectExpr(
-        "x AS x_j",
-        f"explode(array({shifts})) AS o",
-        "cx + o.dx AS nx", "cy + o.dy AS ny",
-    )
+    # queen + self: the default 3x3 offsets
+    probes = gb.neighbours(base, ["x AS x_j"], {"nx": "cx", "ny": "cy"})
     hood = (
         probes.join(base.selectExpr("cx AS nx", "cy AS ny"), ["nx", "ny"])
         .groupBy("nx", "ny")

@@ -44,6 +44,13 @@ def _fingerprint(payload) -> int:
     return zlib.crc32(repr(payload).encode()) & 0xFFFFFFFF
 
 
+def polygon_payload(polygons: pd.DataFrame) -> tuple[list, int]:
+    """(admin_id, rings) rows -> the broadcast payload and its fingerprint."""
+    payload = [(int(r.admin_id), [list(ring) for ring in r.rings])
+               for r in polygons.itertuples()]
+    return payload, _fingerprint(payload)
+
+
 def _normalize_entry(rings) -> list[np.ndarray]:
     """Accept one ring (list of (x, y)) or several (list of rings)."""
     first = rings[0]
@@ -61,7 +68,7 @@ def _build(payload: list[tuple[int, list]], key: int):
     holes fall out of the same ray-cast rule. Antimeridian-crossing polygons
     are pre-split at ingestion into two fragments sharing one admin_id —
     duplicate ids in the payload are deliberate and handled by the
-    first-only tie-break (identical id either way).
+    lowest-id tie-break (identical id either way).
     """
     hit = _TREE_CACHE.get(key)
     if hit is not None:
@@ -85,12 +92,11 @@ def match_points(
     lons: np.ndarray,
     lats: np.ndarray,
     payload: list[tuple[int, list[tuple[float, float]]]],
-    first_only: bool = True,
     fp: int | None = None,
 ) -> np.ndarray:
     """Pure kernel: point arrays -> admin_id per point (-1 = no match).
 
-    ``first_only`` keeps the lowest admin_id when polygons overlap —
+    Overlapping polygons resolve to the lowest admin_id —
     a deterministic tie-break (reference analog: deepest-config tie-break,
     pkg/parser/detection/detector.go:213-230).
     """
@@ -128,11 +134,8 @@ def match_points(
             inside ^= points_in_ring(lons[pts], lats[pts], ring)
         hit_pts = pts[inside]
         aid = int(ids[poly])
-        if first_only:
-            cur = out[hit_pts]
-            out[hit_pts] = np.where((cur == -1) | (aid < cur), aid, cur)
-        else:
-            out[hit_pts] = aid
+        cur = out[hit_pts]
+        out[hit_pts] = np.where((cur == -1) | (aid < cur), aid, cur)
     return out
 
 
@@ -141,7 +144,6 @@ def pip_join(
     polygons: pd.DataFrame,
     lat_col: str = "lat",
     lon_col: str = "lon",
-    keep_unmatched: bool = True,
 ):
     """Append ``admin_id`` (long, NULL if outside every polygon) to ``df``.
 
@@ -149,8 +151,7 @@ def pip_join(
     on the driver (small side) and shipped inside the UDF closure, which Spark
     broadcasts with the task binary exactly once per executor.
     """
-    payload = [(int(r.admin_id), [list(ring) for ring in r.rings]) for r in polygons.itertuples()]
-    fp = _fingerprint(payload)
+    payload, fp = polygon_payload(polygons)
     fields = ", ".join(f.name + " " + f.dataType.simpleString() for f in df.schema.fields)
     out_schema = fields + ", admin_id bigint"
 
@@ -163,10 +164,7 @@ def pip_join(
             out["admin_id"] = pd.arrays.IntegerArray(aid, mask=aid == -1)
             yield out
 
-    joined = df.mapInPandas(run, out_schema)
-    if not keep_unmatched:
-        joined = joined.filter(joined.admin_id.isNotNull())
-    return joined
+    return df.mapInPandas(run, out_schema)
 
 
 def sql_pip_parity_join(points_sql: str, edges_sql: str) -> str:

@@ -6,9 +6,10 @@ turns into an O(n²) cartesian. This is the grid-file / epsilon-grid join:
 1. bucket every point into a square grid of cell size = radius
    (``floor(lat/r)``, ``floor(lon/r)``) — one projection;
 2. replicate the LEFT side into its 3×3 neighborhood (explode ×9,
-   map-side); the right side stays in its home bucket, so every
-   qualifying pair (|Δlat| < r and |Δlon| < r ⇒ bucket delta ≤ 1 per
-   axis) is matched EXACTLY once — no post-join dedup pass;
+   map-side, ``gridblock.neighbours``); the right side stays in its
+   home bucket, so every qualifying pair (|Δlat| < r and |Δlon| < r ⇒
+   bucket delta ≤ 1 per axis) is matched EXACTLY once — no post-join
+   dedup pass;
 3. equi-join on the bucket key (uniform keys at web scale; a dense-city
    mega-bucket is one hot key — AQE skew-join splits it, and the cell
    size can be halved with a 5×5 neighborhood when one bucket exceeds
@@ -36,6 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from core_spark.operators import gridblock as gb
 from core_spark.plans.materialize import pin
 
 
@@ -50,39 +52,14 @@ def range_join_pairs(
     a < b. One explode(×9) + one equi shuffle join — never a cartesian."""
     r = float(radius)
     pts = df.select(key, lat_col, lon_col).transform(pin)
-    bucketed = pts.select(
-        F.col(key),
-        F.col(lat_col),
-        F.col(lon_col),
-        F.floor(F.col(lat_col) / F.lit(r)).cast("long").alias("_bx"),
-        F.floor(F.col(lon_col) / F.lit(r)).cast("long").alias("_by"),
+    home = {"_bx": gb.cell(lat_col, r), "_by": gb.cell(lon_col, r)}
+    left = gb.neighbours(
+        pts, [f"{key} AS a", f"{lat_col} AS _alat", f"{lon_col} AS _alon"],
+        home,
     )
-    offsets = F.expr(
-        "explode(array("
-        + ", ".join(
-            f"struct({dx}L AS dx, {dy}L AS dy)"
-            for dx in (-1, 0, 1)
-            for dy in (-1, 0, 1)
-        )
-        + "))"
-    )
-    left = bucketed.select(
-        F.col(key).alias("a"),
-        F.col(lat_col).alias("_alat"),
-        F.col(lon_col).alias("_alon"),
-        F.col("_bx").alias("_abx"),
-        F.col("_by").alias("_aby"),
-        offsets.alias("_o"),
-    ).select(
-        "a", "_alat", "_alon",
-        (F.col("_abx") + F.col("_o.dx")).alias("_bx"),
-        (F.col("_aby") + F.col("_o.dy")).alias("_by"),
-    )
-    right = bucketed.select(
-        F.col(key).alias("b"),
-        F.col(lat_col).alias("_blat"),
-        F.col(lon_col).alias("_blon"),
-        "_bx", "_by",
+    right = pts.selectExpr(
+        f"{key} AS b", f"{lat_col} AS _blat", f"{lon_col} AS _blon",
+        *[f"{e} AS {c}" for c, e in home.items()],
     )
     d2 = (
         "(_alat - _blat) * (_alat - _blat)"

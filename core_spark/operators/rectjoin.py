@@ -8,22 +8,14 @@ geometry on the survivors — exactly how pip.py's STRtree works inside
 one machine, lifted to a shuffle plan).
 
 The algorithm is Partition-Based Spatial Merge join (Patel & DeWitt
-1996), with its signature trick intact:
-
-1. grid the plane at cell size ``g``; each rect replicates to every
-   cell its extent covers (a within-row ``sequence`` explode ×
-   ceil(w/g)·ceil(h/g) — bounded by rect size over g, the documented
-   knob);
-2. equi-join on the cell key — every intersecting pair shares at least
-   the cell containing their intersection's lower-left corner;
-3. **reference-point dedup, not DISTINCT**: a candidate pair found in
-   cell c is EMITTED only when c is that canonical corner cell
-   (``floor(max(xmin_a, xmin_b) / g)``, same for y). A pair sharing 40
-   grid cells is still emitted exactly once, with no global dedup
-   shuffle — the whole point of PBSM over naive grid joins;
-4. exact predicate: closed-interval overlap (touching edges COUNT —
-   ``a.xmin <= b.xmax AND b.xmin <= a.xmax``, same for y), ``a < b``
-   so each unordered pair appears once.
+1996), with its signature trick intact: each rect replicates to every
+grid cell its extent covers (``gridblock.cover``), candidates meet on
+the cell key, and a pair is emitted only in the cell holding the lower-
+left corner of the intersection — reference-point dedup, not DISTINCT
+(the steps and why they are complete are in gridblock.py). The exact
+predicate is closed-interval overlap (touching edges COUNT —
+``a.xmin <= b.xmax AND b.xmin <= a.xmax``, same for y), ``a < b`` so
+each unordered pair appears once.
 
 At 100 TB: one equi shuffle on uniform integer cell keys; replication
 is per-rect bounded (admin boundaries are small relative to a sane
@@ -44,6 +36,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from core_spark.operators import gridblock as gb
 from core_spark.plans.materialize import pin
 
 
@@ -74,12 +67,10 @@ def rect_join_pairs(
         f"{key} AS _k",
         f"{xmin} AS _x0", f"{ymin} AS _y0",
         f"{xmax} AS _x1", f"{ymax} AS _y1",
-        f"explode(sequence(CAST(FLOOR({xmin} / {g!r}) AS BIGINT),"
-        f" CAST(FLOOR({xmax} / {g!r}) AS BIGINT))) AS _cx",
+        f"{gb.cover(xmin, xmax, g)} AS _cx",
     ).selectExpr(
         "_k", "_x0", "_y0", "_x1", "_y1", "_cx",
-        f"explode(sequence(CAST(FLOOR(_y0 / {g!r}) AS BIGINT),"
-        f" CAST(FLOOR(_y1 / {g!r}) AS BIGINT))) AS _cy",
+        f"{gb.cover('_y0', '_y1', g)} AS _cy",
     )
     gridded = pin(gridded)
     a = gridded.select(
@@ -101,8 +92,8 @@ def rect_join_pairs(
     )
     # reference point: the intersection's lower-left corner's cell
     ref = (
-        f"_cx = CAST(FLOOR(greatest(_ax0, _bx0) / {g!r}) AS BIGINT)"
-        f" AND _cy = CAST(FLOOR(greatest(_ay0, _by0) / {g!r}) AS BIGINT)"
+        f"_cx = {gb.cell('greatest(_ax0, _bx0)', g)}"
+        f" AND _cy = {gb.cell('greatest(_ay0, _by0)', g)}"
     )
     return (
         a.join(b, ["_cx", "_cy"])

@@ -22,9 +22,9 @@ endpoints COUNT (closed semantics), matching rectjoin's closed
 intervals.
 
 The blocking is PBSM on segment ENVELOPES with the reference-point
-trick (Patel & DeWitt 1996, same machinery as rectjoin): each segment
-replicates to the grid cells its bbox covers (map-side sequence
-explode, bounded by segment length over g), candidates meet in ONE
+trick (Patel & DeWitt 1996, same machinery as rectjoin, gridblock.py):
+each segment replicates to the grid cells its bbox covers (map-side
+sequence explode, bounded by segment length over g), candidates meet in ONE
 equi shuffle on uniform integer cell keys, and a pair is EMITTED only
 in the canonical cell holding the lower-left corner of the bbox
 intersection — a pair sharing 40 cells appears exactly once with no
@@ -51,6 +51,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from core_spark.operators import gridblock as gb
+
 _SEG_COLS = ("x1", "y1", "x2", "y2")
 
 
@@ -71,12 +73,9 @@ def _prep(df: DataFrame, key: str, side: str, g: float) -> DataFrame:
         f"greatest({s}_y1, {s}_y2) AS {s}_ymax",
     ).selectExpr(
         "*",
-        f"explode(sequence(CAST(FLOOR({s}_xmin / {g!r}) AS BIGINT),"
-        f" CAST(FLOOR({s}_xmax / {g!r}) AS BIGINT))) AS _cx",
+        f"{gb.cover(f'{s}_xmin', f'{s}_xmax', g)} AS _cx",
     ).selectExpr(
-        "*",
-        f"explode(sequence(CAST(FLOOR({s}_ymin / {g!r}) AS BIGINT),"
-        f" CAST(FLOOR({s}_ymax / {g!r}) AS BIGINT))) AS _cy",
+        "*", f"{gb.cover(f'{s}_ymin', f'{s}_ymax', g)} AS _cy",
     )
 
 
@@ -121,8 +120,8 @@ def segment_join(
     a = _prep(left, left_key, "a", g)
     b = _prep(right, right_key, "b", g)
     ref = (
-        f"_cx = CAST(FLOOR(greatest(a_xmin, b_xmin) / {g!r}) AS BIGINT)"
-        f" AND _cy = CAST(FLOOR(greatest(a_ymin, b_ymin) / {g!r}) AS BIGINT)"
+        f"_cx = {gb.cell('greatest(a_xmin, b_xmin)', g)}"
+        f" AND _cy = {gb.cell('greatest(a_ymin, b_ymin)', g)}"
     )
     bbox = ("a_xmin <= b_xmax AND b_xmin <= a_xmax"
             " AND a_ymin <= b_ymax AND b_ymin <= a_ymax")

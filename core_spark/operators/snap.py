@@ -41,12 +41,15 @@ expanded-bbox blocking's completeness.
 
 No reference counterpart (specvital/core has no spatial subsystem);
 the predicate is the standard segment-clamped point distance, the
-blocking is PBSM's (Patel & DeWitt 1996) one-sided variant.
+blocking is PBSM's (Patel & DeWitt 1996) one-sided variant
+(gridblock.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from core_spark.operators import gridblock as gb
 
 _STEPS = {
     "_abx": "s_x2 - s_x1", "_aby": "s_y2 - s_y1",
@@ -66,6 +69,41 @@ def _within(eps2: int) -> str:
         f"CASE WHEN _td = 0 OR _tn <= 0 THEN _ap2 <= {eps2}"
         f" WHEN _tn >= _td THEN _bp2 <= {eps2}"
         f" ELSE _ap2 * _td - _tn * _tn <= {eps2} * _td END"
+    )
+
+
+def _candidates(
+    points: DataFrame, segments: DataFrame, eps: int, g: float
+) -> DataFrame:
+    """Grid-blocked (point, segment) candidates with the _STEPS/_STEPS2
+    columns the distance predicate reads. ``points``: the caller's key
+    columns plus NULL-free BIGINT ``p_x``, ``p_y``. ``segments``: ``seg``
+    plus raw x1, y1, x2, y2 (cast here; NULL endpoints drop). Each
+    segment covers the cells of its eps-expanded bbox; each point stays
+    in its home cell."""
+    p = points.selectExpr(
+        "*", f"{gb.cell('p_x', g)} AS _cx", f"{gb.cell('p_y', g)} AS _cy",
+    )
+    s = segments.selectExpr(
+        "seg",
+        "CAST(x1 AS BIGINT) AS s_x1", "CAST(y1 AS BIGINT) AS s_y1",
+        "CAST(x2 AS BIGINT) AS s_x2", "CAST(y2 AS BIGINT) AS s_y2",
+    ).where(
+        "s_x1 IS NOT NULL AND s_y1 IS NOT NULL"
+        " AND s_x2 IS NOT NULL AND s_y2 IS NOT NULL"
+    ).selectExpr(
+        "seg", "s_x1", "s_y1", "s_x2", "s_y2",
+        gb.cover(f"least(s_x1, s_x2) - {eps}",
+                 f"greatest(s_x1, s_x2) + {eps}", g) + " AS _cx",
+    ).selectExpr(
+        "*",
+        gb.cover(f"least(s_y1, s_y2) - {eps}",
+                 f"greatest(s_y1, s_y2) + {eps}", g) + " AS _cy",
+    )
+    return (
+        p.join(s, ["_cx", "_cy"])
+        .selectExpr("*", *[f"{x} AS {c}" for c, x in _STEPS.items()])
+        .selectExpr("*", *[f"{x} AS {c}" for c, x in _STEPS2.items()])
     )
 
 
@@ -89,40 +127,11 @@ def snap_join(
     p = points.selectExpr(
         f"{point_key} AS pt", "CAST(x AS BIGINT) AS p_x",
         "CAST(y AS BIGINT) AS p_y",
-    ).where("p_x IS NOT NULL AND p_y IS NOT NULL").selectExpr(
-        "pt", "p_x", "p_y",
-        f"CAST(FLOOR(p_x / {g!r}) AS BIGINT) AS _cx",
-        f"CAST(FLOOR(p_y / {g!r}) AS BIGINT) AS _cy",
-    )
-    s = segments.selectExpr(
-        f"{seg_key} AS seg",
-        "CAST(x1 AS BIGINT) AS s_x1", "CAST(y1 AS BIGINT) AS s_y1",
-        "CAST(x2 AS BIGINT) AS s_x2", "CAST(y2 AS BIGINT) AS s_y2",
-    ).where(
-        "s_x1 IS NOT NULL AND s_y1 IS NOT NULL"
-        " AND s_x2 IS NOT NULL AND s_y2 IS NOT NULL"
-    ).selectExpr(
-        "seg", "s_x1", "s_y1", "s_x2", "s_y2",
-        f"explode(sequence("
-        f" CAST(FLOOR((least(s_x1, s_x2) - {e}) / {g!r}) AS BIGINT),"
-        f" CAST(FLOOR((greatest(s_x1, s_x2) + {e}) / {g!r}) AS BIGINT)"
-        f")) AS _cx",
-    ).selectExpr(
-        "*",
-        f"explode(sequence("
-        f" CAST(FLOOR((least(s_y1, s_y2) - {e}) / {g!r}) AS BIGINT),"
-        f" CAST(FLOOR((greatest(s_y1, s_y2) + {e}) / {g!r}) AS BIGINT)"
-        f")) AS _cy",
-    )
-    cand = p.join(s, ["_cx", "_cy"])
-    stepped = cand.selectExpr(
-        "*", *[f"{x} AS {c}" for c, x in _STEPS.items()]
-    ).selectExpr(
-        "*", *[f"{x} AS {c}" for c, x in _STEPS2.items()]
-    )
-    eps2 = e * e
+    ).where("p_x IS NOT NULL AND p_y IS NOT NULL")
+    s = segments.selectExpr(f"{seg_key} AS seg", "x1", "y1", "x2", "y2")
     return (
-        stepped.filter(F.expr(_within(eps2)))
+        _candidates(p, s, e, g)
+        .filter(F.expr(_within(e * e)))
         .selectExpr("pt", "seg")
     )
 

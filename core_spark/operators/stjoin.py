@@ -40,6 +40,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from core_spark.operators import gridblock as gb
 from core_spark.plans.materialize import pin
 
 
@@ -67,20 +68,14 @@ def contact_pairs(
                 " AND _t IS NOT NULL")
         .selectExpr(
             "_k", "_x", "_y", "_t",
-            f"CAST(FLOOR(_x / {e}.0) AS BIGINT) AS _gx",
-            f"CAST(FLOOR(_y / {e}.0) AS BIGINT) AS _gy",
-            f"CAST(FLOOR(_t / {w}.0) AS BIGINT) AS _gt",
+            f"{gb.cell('_x', e)} AS _gx", f"{gb.cell('_y', e)} AS _gy",
+            f"{gb.cell('_t', w)} AS _gt",
         )
     )
-    offsets = ", ".join(
-        f"struct({dx}L AS dx, {dy}L AS dy, {dt}L AS dt)"
-        for dx in (-1, 0, 1) for dy in (-1, 0, 1) for dt in (-1, 0, 1)
+    probe = gb.neighbours(
+        base, ["_k AS a", "_x AS _ax", "_y AS _ay", "_t AS _at"],
+        {"_gx": "_gx", "_gy": "_gy", "_gt": "_gt"},
     )
-    probe = base.selectExpr(
-        "_k AS a", "_x AS _ax", "_y AS _ay", "_t AS _at",
-        f"explode(array({offsets})) AS _o",
-        "_gx + _o.dx AS _gx", "_gy + _o.dy AS _gy", "_gt + _o.dt AS _gt",
-    ).drop("_o")
     home = base.selectExpr(
         "_k AS b", "_x AS _bx2", "_y AS _by2", "_t AS _bt2",
         "_gx", "_gy", "_gt",

@@ -1,8 +1,9 @@
 """G3/G4 operators — tile assignment (HX res 5-9 + S2) as DataFrame stages.
 
-Assignment is pure Column arithmetic (hexgrid.sql_cell via F.expr): stays in
-whole-stage codegen, never leaves the JVM, and survives any partitioning —
-exactly the property needed at 10^12 rows. S2 (functions/s2.py) is the one
+Assignment is pure Column arithmetic (hexgrid.cell_steps, one small SQL
+column per step via apply_steps): stays in whole-stage codegen, never
+leaves the JVM, and survives any partitioning — exactly the property
+needed at 10^12 rows. S2 (functions/s2.py) is the one
 numpy UDF stage, kept optional.
 
 Reference analog: per-file framework stamping before aggregation

@@ -95,8 +95,6 @@ def rasterize(spark, zonal_df, res: int, pixel_deg: float = 2.0,
             f"-90.0 + (iy + 0.5) * {pixel_deg!r} AS plat",
         )
     )
-    from core_spark.functions import hexgrid as hx
-
     pixels = hx.apply_steps(pixels, hx.cell_steps("plat", "plon", res, "pcell"))
     return (
         pixels.join(

@@ -82,8 +82,7 @@ class StageManifest:
     def stage_path(self, stage: str) -> str:
         return os.path.join(self.workdir, stage)
 
-    def run_stage(self, spark, stage: str, fingerprint: str, build_fn,
-                  partition_by: list[str] | None = None):
+    def run_stage(self, spark, stage: str, fingerprint: str, build_fn):
         """Run (or resume) one stage.
 
         ``build_fn() -> DataFrame`` is only invoked on a cache miss. Returns
@@ -97,10 +96,7 @@ class StageManifest:
 
         t0 = time.monotonic()
         df = build_fn()
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(out)
+        df.write.mode("overwrite").parquet(out)
         wall_ms = int((time.monotonic() - t0) * 1000)
 
         per_file = self._footer_counts(out)

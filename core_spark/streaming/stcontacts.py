@@ -36,6 +36,10 @@ seconds of event time.
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
+from core_spark.operators import gridblock as gb
+
 
 def stream_contacts(
     spark,
@@ -66,26 +70,14 @@ def stream_contacts(
             .withWatermark("ts", delay)
         )
 
-    offsets = ", ".join(
-        f"struct({dx}L AS dx, {dy}L AS dy)"
-        for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-    )
-    probe = side().selectExpr(
-        "event_id AS a", "x AS ax", "y AS ay", "ts AS a_ts",
-        f"CAST(FLOOR(x / {e}.0) AS BIGINT) AS _pgx",
-        f"CAST(FLOOR(y / {e}.0) AS BIGINT) AS _pgy",
-        f"explode(array({offsets})) AS _o",
-    ).selectExpr(
-        "a", "ax", "ay", "a_ts",
-        "_pgx + _o.dx AS _gx", "_pgy + _o.dy AS _gy",
+    probe = gb.neighbours(
+        side(), ["event_id AS a", "x AS ax", "y AS ay", "ts AS a_ts"],
+        {"_gx": gb.cell("x", e), "_gy": gb.cell("y", e)},
     )
     home = side().selectExpr(
         "event_id AS b", "x AS bx", "y AS by", "ts AS b_ts",
-        f"CAST(FLOOR(x / {e}.0) AS BIGINT) AS _gx",
-        f"CAST(FLOOR(y / {e}.0) AS BIGINT) AS _gy",
+        f"{gb.cell('x', e)} AS _gx", f"{gb.cell('y', e)} AS _gy",
     )
-    from pyspark.sql import functions as F
-
     cond = F.expr(
         "_gx = _gx2 AND _gy = _gy2 AND a < b"
         f" AND (ax - bx) * (ax - bx) + (ay - by) * (ay - by) <= {e * e}"
