@@ -20,3 +20,7 @@ Design principles (mirroring the reference's strongest ideas, SURVEY.md §7):
 """
 
 __version__ = "0.1.0"
+
+# Stops every Python worker task re-parsing pyspark.zip and the Spark jar
+# (see zipcache.py); installs on import, below CPython 3.12 only.
+from core_spark import zipcache  # noqa: E402,F401

@@ -34,7 +34,6 @@ _RE_DROP = re.compile(
     rb"(?is)<script\b.*?</script\s*>|<style\b.*?</style\s*>|<title\b.*?</title\s*>|<!--.*?-->"
 )
 _RE_TAG = re.compile(rb"<[^>]*>")
-_RE_WS = re.compile(r"\s+")
 
 # Fixed entity table — deliberately small and explicit (determinism over
 # completeness; extend only with golden-test coverage).
@@ -75,7 +74,7 @@ def html_to_text(html: bytes | None) -> str | None:
     stripped = _RE_TAG.sub(b" ", _RE_DROP.sub(b" ", html))
     s = stripped.decode("utf-8", errors="replace")
     s = _RE_ENTITY.sub(_entity_sub, s)
-    return _RE_WS.sub(" ", s).strip()
+    return " ".join(s.split())
 
 
 def extract_batch(html: pd.Series) -> pd.DataFrame:

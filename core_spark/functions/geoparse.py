@@ -54,8 +54,11 @@ def parse_mentions(text: str | None) -> list[dict]:
     by start offset; kind tie-broken dec < dms < geo)."""
     if not text:
         return []
+    # Each pattern contains its literal (", ", "geo:", "°"), so a text
+    # without it cannot match; the substring test is far cheaper than the
+    # regex scan that would fail.
     out = []
-    for mt in _RE_DEC.finditer(text):
+    for mt in _RE_DEC.finditer(text) if ", " in text else ():
         # a decimal pair inside a geo: URI is matched by the geo rule instead
         if text[max(0, mt.start() - 4) : mt.start()] == "geo:":
             continue
@@ -64,13 +67,13 @@ def parse_mentions(text: str | None) -> list[dict]:
             out.append(
                 {"lat": lat, "lon": lon, "kind": "dec", "start": mt.start(), "end": mt.end()}
             )
-    for mt in _RE_GEO.finditer(text):
+    for mt in _RE_GEO.finditer(text) if "geo:" in text else ():
         lat, lon = float(mt.group(1)), float(mt.group(2))
         if abs(lat) <= 90.0 and abs(lon) <= 180.0:
             out.append(
                 {"lat": lat, "lon": lon, "kind": "geo", "start": mt.start(), "end": mt.end()}
             )
-    for mt in _RE_DMS.finditer(text):
+    for mt in _RE_DMS.finditer(text) if "°" in text else ():
         lat = dms_to_decimal(mt.group(1), mt.group(2), mt.group(3), mt.group(4))
         lon = dms_to_decimal(mt.group(5), mt.group(6), mt.group(7), mt.group(8))
         if abs(lat) <= 90.0 and abs(lon) <= 180.0:

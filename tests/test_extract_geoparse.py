@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import random
+import re
+
 import duckdb
 import numpy as np
 import pandas as pd
@@ -55,6 +58,21 @@ def test_oversize_html_is_error_as_data():
     assert out.extract_error.iloc[2] == "null_html"
 
 
+def test_whitespace_collapse_matches_regex_on_every_space_code_point():
+    """``" ".join(s.split())`` == ``re.sub(r"\\s+", " ", s).strip()``: both
+    sides split on the same code points, mixed here into random strings."""
+    spaces = [
+        ch for ch in map(chr, range(0x110000))
+        if ch.isspace() or re.fullmatch(r"\s", ch)
+    ]
+    assert " " in spaces and "\u3000" in spaces
+    rng = random.Random(5)
+    alphabet = spaces + ["a", "b", "\u00e9", "x"]
+    for _ in range(20000):
+        s = "".join(rng.choices(alphabet, k=rng.randrange(12)))
+        assert html_to_text(s.encode()) == re.sub(r"\s+", " ", s).strip()
+
+
 # ---------------------------------------------------------------------- G2
 
 def test_geoparse_counts_and_first_mention_exact():
@@ -88,6 +106,48 @@ def test_geoparse_offsets_slice_back():
     t = "pre 1.500000, 2.500000 post"
     m = gp.parse_mentions(t)[0]
     assert t[m["start"] : m["end"]] == "1.500000, 2.500000"
+
+
+def _mentions_without_prefilter(text):
+    """Reference model: every pattern scanned on every text."""
+    out = []
+    for kind, rx in (("dec", gp._RE_DEC), ("geo", gp._RE_GEO), ("dms", gp._RE_DMS)):
+        for mt in rx.finditer(text or ""):
+            if kind == "dec" and text[max(0, mt.start() - 4) : mt.start()] == "geo:":
+                continue
+            if kind == "dms":
+                lat = gp.dms_to_decimal(*mt.group(1, 2, 3, 4))
+                lon = gp.dms_to_decimal(*mt.group(5, 6, 7, 8))
+            else:
+                lat, lon = float(mt.group(1)), float(mt.group(2))
+            if abs(lat) <= 90.0 and abs(lon) <= 180.0:
+                out.append({"lat": lat, "lon": lon, "kind": kind,
+                            "start": mt.start(), "end": mt.end()})
+    out.sort(key=lambda r: (r["start"], r["kind"]))
+    return out
+
+
+# Each literal the prefilter tests, with and without a full match around it.
+_PREFILTER_PIECES = [
+    "12.5, -7.25", "-89.999999, 179.5", "a, b", ", ", "1.5, x",
+    "geo:40.1,-3.2", "geo:40.1, -3.2", "geo:", "geo:1.2", "geo:91.0,0.0",
+    '40°26\'46.0"N 79°58\'56.0"W', '1°2\'3"S 4°5\'6.5"E', "°", "40°26\'",
+    "text", " ", "9.0", ",",
+]
+
+
+def test_parse_mentions_prefilter_matches_reference():
+    rng = random.Random(7)
+    seen = {lit: [False, False] for lit in (", ", "geo:", "°")}
+    for _ in range(3000):
+        text = "".join(rng.choices(_PREFILTER_PIECES, k=rng.randrange(1, 8)))
+        got, want = gp.parse_mentions(text), _mentions_without_prefilter(text)
+        assert got == want, text
+        kinds = {m["kind"] for m in want}
+        for lit, kind in ((", ", "dec"), ("geo:", "geo"), ("°", "dms")):
+            if lit in text:
+                seen[lit][kind in kinds] = True
+    assert all(all(v) for v in seen.values()), seen
 
 
 def test_gazetteer_find_places():

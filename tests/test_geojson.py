@@ -198,7 +198,7 @@ def test_feeds_pip_payload(spark):
     ]
     # (0.5, 0.5) is inside SQUARE's hole -> even-odd says OUTSIDE poly 8,
     # but inside feature 3's first part (admin 99); (0.1, 0.1) is in both
-    # 8 and 99 -> first_only keeps 8; (5.5, 5.5) only in 99's second part.
+    # 8 and 99 -> lowest-id keeps 8; (5.5, 5.5) only in 99's second part.
     got = match_points(
         np.array([0.5, 0.1, 5.5, 9.0]), np.array([0.5, 0.1, 5.5, 9.0]),
         payload,
