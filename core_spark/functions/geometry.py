@@ -19,8 +19,9 @@ fixtures rely on. The SAME inequality chain is emitted as ANSI SQL by
 ``sql_ray_cast_crossing`` for the DuckDB oracle.
 
 STRtree: classic Sort-Tile-Recursive bulk-packing (Leutenegger et al. 1997) —
-leaves hold polygon envelopes tiled by x then y; queries descend nodes whose
-envelope intersects the probe point/box. Built once per executor process over
+leaves hold polygon envelopes tiled by x then y; a batch of points descends
+the tree one level at a time, all points together, keeping the (point, node)
+pairs whose node envelope holds the point. Built once per executor process over
 the broadcast polygon table (lazy global, the analog of the reference's
 compiled-query cache, pkg/parser/tspool/query.go:33).
 """
@@ -126,16 +127,23 @@ def ring_envelope(ring: np.ndarray) -> tuple[float, float, float, float]:
 
 
 # ---------------------------------------------------------------------------
-# STRtree (Sort-Tile-Recursive packed R-tree) — bulk-load only, query by point
+# STRtree (Sort-Tile-Recursive packed R-tree) — bulk-load only, batch point query
 # ---------------------------------------------------------------------------
 
 class STRtree:
     """Packed R-tree over rectangles, bulk-loaded with the STR heuristic.
 
-    Flat-array layout (no per-node Python objects): nodes stored in
-    ``self.boxes`` (N, 4); internal nodes reference a contiguous child span.
-    Query cost O(log n + k). For admin-boundary cardinality (10^2..10^5
-    polygons) build time is negligible and the whole tree broadcasts in KBs.
+    Flat-array layout (no per-node Python objects): ``self.levels`` holds one
+    (4, m) array per level, root first, whose rows are the node boxes' minx,
+    miny, maxx and maxy (one contiguous gather per bound). Node ``j`` of a
+    level owns children ``j * NODE_CAP .. j * NODE_CAP + NODE_CAP - 1`` of
+    the level below; the last node's span is ragged.
+
+    Queries are batch, level-wise descents: a whole array of points walks the
+    tree together, one numpy pass per level over the live (point, node)
+    pairs, so tree depth (~log16 n), not point count, sets the number of
+    Python steps. For admin-boundary cardinality (10^2..10^5 polygons) build
+    time is negligible and the whole tree broadcasts in KBs.
     """
 
     NODE_CAP = 16
@@ -144,10 +152,8 @@ class STRtree:
         """boxes: (n, 4) array of (minx, miny, maxx, maxy)."""
         boxes = np.asarray(boxes, dtype=np.float64)
         n = len(boxes)
-        self.n_items = n
-        self.dense_boxes = boxes  # original order, for the small-P dense path
         if n == 0:
-            self.levels: list[tuple[np.ndarray, np.ndarray]] = []
+            self.levels: list[np.ndarray] = []
             self.item_order = np.empty(0, dtype=np.int64)
             return
 
@@ -165,58 +171,42 @@ class STRtree:
             sl_sorted = sl[np.argsort(cy[sl], kind="stable")]
             order[s : s + per_slice] = sl_sorted
         self.item_order = order.astype(np.int64)
-        sorted_boxes = boxes[order]
 
-        # --- build levels bottom-up; each level: (boxes, child_start) ---
-        self.levels = []
-        level_boxes = sorted_boxes
-        while len(level_boxes) > 1:
-            m = len(level_boxes)
-            k = math.ceil(m / cap)
-            starts = np.arange(k, dtype=np.int64) * cap
-            ends = np.minimum(starts + cap, m)
-            parent = np.empty((k, 4), dtype=np.float64)
-            for i in range(k):
-                chunk = level_boxes[starts[i] : ends[i]]
-                parent[i, 0] = chunk[:, 0].min()
-                parent[i, 1] = chunk[:, 1].min()
-                parent[i, 2] = chunk[:, 2].max()
-                parent[i, 3] = chunk[:, 3].max()
-            self.levels.append((level_boxes, starts))
-            level_boxes = parent
-        self.levels.append((level_boxes, np.zeros(1, dtype=np.int64)))
+        # --- build levels bottom-up: a parent box spans its child chunk ---
+        level = np.ascontiguousarray(boxes[order].T)
+        self.levels = [level]
+        while level.shape[1] > 1:
+            starts = np.arange(0, level.shape[1], cap)
+            level = np.vstack([np.minimum.reduceat(level[:2], starts, axis=1),
+                               np.maximum.reduceat(level[2:], starts, axis=1)])
+            self.levels.append(level)
         self.levels.reverse()  # levels[0] = root
 
-    def query_point(self, x: float, y: float) -> np.ndarray:
-        """Item indices (original order) whose envelope contains (x, y)."""
-        if self.n_items == 0:
-            return np.empty(0, dtype=np.int64)
-        cap = self.NODE_CAP
-        frontier = np.array([0], dtype=np.int64)
-        for li, (lboxes, _) in enumerate(self.levels):
-            if li > 0:
-                # expand each frontier node into its child span at this level
-                starts = frontier * cap
-                spans = [np.arange(s, min(s + cap, len(lboxes))) for s in starts]
-                frontier = np.concatenate(spans) if spans else np.empty(0, np.int64)
-            if len(frontier) == 0:
-                return np.empty(0, dtype=np.int64)
-            b = lboxes[frontier]
-            hit = (b[:, 0] <= x) & (x <= b[:, 2]) & (b[:, 1] <= y) & (y <= b[:, 3])
-            frontier = frontier[hit]
-        return self.item_order[frontier]
-
     def query_points(self, xs: np.ndarray, ys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """Batch query: -> (point_idx, item_idx) candidate pair arrays."""
-        pis, iis = [], []
-        for i in range(len(xs)):
-            items = self.query_point(float(xs[i]), float(ys[i]))
-            if len(items):
-                pis.append(np.full(len(items), i, dtype=np.int64))
-                iis.append(items)
-        if not pis:
-            return np.empty(0, np.int64), np.empty(0, np.int64)
-        return np.concatenate(pis), np.concatenate(iis)
+        """Batch query -> (point_idx, item_idx) pairs whose closed envelope
+        contains the point, ordered by point.
+
+        Level-synchronous descent: the state is two int arrays, ``pi`` (point)
+        and ``ni`` (node at the current level). Each level expands every pair
+        into its NODE_CAP child slots, drops slots past the level's end, and
+        keeps the pairs whose point lies in the child's box.
+        """
+        xs = np.asarray(xs, dtype=np.float64)
+        ys = np.asarray(ys, dtype=np.float64)
+        pi = np.arange(len(xs) if self.levels else 0, dtype=np.int64)
+        ni = np.zeros(len(pi), dtype=np.int64)
+        cap = self.NODE_CAP
+        slots = np.arange(cap, dtype=np.int64)
+        for depth, (x0, y0, x1, y1) in enumerate(self.levels):
+            if depth:
+                pi = np.repeat(pi, cap)
+                ni = (ni[:, None] * cap + slots).ravel()
+                real = ni < len(x0)
+                pi, ni = pi[real], ni[real]
+            x, y = xs[pi], ys[pi]
+            hit = (x0[ni] <= x) & (x <= x1[ni]) & (y0[ni] <= y) & (y <= y1[ni])
+            pi, ni = pi[hit], ni[hit]
+        return pi, self.item_order[ni]
 
 
 # ---------------------------------------------------------------------------

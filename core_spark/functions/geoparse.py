@@ -129,12 +129,6 @@ def sql_dec_mentions(text_col: str) -> tuple[str, str]:
     return lat, lon
 
 
-def sql_geo_mentions(text_col: str) -> tuple[str, str]:
-    lat = f"regexp_extract_all({text_col}, '{GEO_URI_PATTERN}', 1)"
-    lon = f"regexp_extract_all({text_col}, '{GEO_URI_PATTERN}', 2)"
-    return lat, lon
-
-
 # ---------------------------------------------------------------------------
 # Spark stage (all kinds, incl. DMS): Arrow-batched mapInPandas
 # ---------------------------------------------------------------------------

@@ -146,15 +146,6 @@ def duck_quality_cols(text_col: str) -> dict[str, str]:
     }
 
 
-def with_quality(df, text_col: str = "text"):
-    """Append quality-signal columns (Spark DataFrame stage, JVM-only)."""
-    from pyspark.sql import functions as F
-
-    return df.withColumns(
-        {k: F.expr(v) for k, v in spark_quality_cols(text_col).items()}
-    )
-
-
 # ---------------------------------------------------------------------------
 # Language ID: stopword-marker scoring cascade
 # ---------------------------------------------------------------------------
@@ -249,12 +240,6 @@ def lang_id_steps(text_col: str, langs: list[str] | None = None,
         f"ELSE 'und' END)",
     ))
     return steps
-
-
-def with_lang_id(df, text_col: str = "text", out_col: str = "lang_pred"):
-    from core_spark.functions.hexgrid import apply_steps
-
-    return apply_steps(df, lang_id_steps(text_col, out=out_col))
 
 
 # ---------------------------------------------------------------------------

@@ -91,20 +91,6 @@ def spark_shingles(text_col: str, k: int) -> str:
     )
 
 
-def duck_shingles_rows(docs_table: str, text_col: str, k: int, id_col: str) -> str:
-    """DuckDB: one row per (doc, shingle), distinct. list_* lambdas mirror
-    the Spark higher-order functions exactly."""
-    toks = f"string_split_regex(trim({text_col}), '\\s+')"
-    shingles = (
-        f"CASE WHEN len({toks}) < {k} THEN [array_to_string({toks}, ' ')] "
-        f"ELSE list_distinct([array_to_string({toks}[i:i+{k}-1], ' ') "
-        f"for i in range(1, len({toks}) - {k} + 2)]) END"
-    )
-    return f"""
-SELECT {id_col}, unnest({shingles}) AS shingle FROM {docs_table}
-"""
-
-
 def spark_hashed_shingles(text_col: str, k: int) -> str:
     """Spark expr: distinct word k-grams hashed to 60-bit md5-derived BIGINTs.
 

@@ -51,15 +51,6 @@ from pyspark.sql import DataFrame
 from core_spark.plans.materialize import pin
 
 
-def _del1_expr(col: str) -> str:
-    """SQL: all single-deletion variants of ``col`` (length n array)."""
-    return (
-        f"transform(sequence(1, length({col})), i ->"
-        f" concat(substr({col}, 1, i - 1),"
-        f" substr({col}, i + 1, length({col}))))"
-    )
-
-
 def deletion_variants_expr(col: str, max_dist: int) -> str:
     """SQL: ``U_d(col)`` — every string reachable by at most ``max_dist``
     single-character deletions, deduplicated, including ``col`` itself.

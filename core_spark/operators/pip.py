@@ -16,8 +16,11 @@ one-grammar-init-per-process discipline, pool.go:60-76).
 Scale notes:
   * No shuffle, no skew sensitivity: mega-cell documents distribute over
     whatever partitioning the scan produced. AQE has nothing to fix here.
-  * Cost per row is O(log P + c) envelope probes + c ray casts with c the
-    candidate count (≤1 for non-overlapping admin tiers).
+  * The envelope probe is a batch, level-wise STRtree descent: each Arrow
+    batch walks the tree together, one numpy pass per level (depth ~log16 P)
+    over the live (point, node) pairs, with no per-point Python. The refine
+    then ray-casts the c candidates per point (≤1 for non-overlapping admin
+    tiers), one vectorized pass per candidate polygon.
   * If the polygon side ever outgrows broadcast (continent-scale cadastral
     data), the escape hatch is the cell-prefix range join (SURVEY.md §4) —
     not needed at admin-boundary cardinality.
@@ -104,21 +107,7 @@ def match_points(
     out = np.full(len(lons), -1, dtype=np.int64)
     lons = np.asarray(lons, np.float64)
     lats = np.asarray(lats, np.float64)
-    if len(rings) <= 512:
-        # dense vectorized envelope test: an (n_pts x n_polys) comparison is
-        # one numpy kernel and beats a per-point Python tree descent by ~8x
-        # at admin-boundary cardinality (profiled). STRtree remains the path
-        # for large polygon sets.
-        boxes = tree.dense_boxes
-        hit = (
-            (lons[:, None] >= boxes[None, :, 0])
-            & (lons[:, None] <= boxes[None, :, 2])
-            & (lats[:, None] >= boxes[None, :, 1])
-            & (lats[:, None] <= boxes[None, :, 3])
-        )
-        pi, ii = np.nonzero(hit)
-    else:
-        pi, ii = tree.query_points(lons, lats)
+    pi, ii = tree.query_points(lons, lats)
     if len(pi) == 0:
         return out
     # group candidate pairs by polygon -> one vectorized ray-cast per polygon

@@ -51,23 +51,6 @@ def brute_force_topk(vectors, queries, k: int = 10,
     )
 
 
-def sql_brute_force_topk(vectors_table: str, queries_values: str, k: int) -> str:
-    """DuckDB oracle: same exact top-k. ``queries_values`` is a VALUES list
-    ``(query_id, qvec)`` with qvec as a list literal."""
-    dot = "list_dot_product(CAST(v.embedding AS DOUBLE[]), CAST(q.qvec AS DOUBLE[]))"
-    na = "sqrt(list_dot_product(CAST(v.embedding AS DOUBLE[]), CAST(v.embedding AS DOUBLE[])))"
-    nb = "sqrt(list_dot_product(CAST(q.qvec AS DOUBLE[]), CAST(q.qvec AS DOUBLE[])))"
-    return f"""
-SELECT query_id, rank, vec_id, score FROM (
-  SELECT q.query_id, v.vec_id, {dot} / ({na} * {nb}) AS score,
-         ROW_NUMBER() OVER (PARTITION BY q.query_id
-                            ORDER BY {dot} / ({na} * {nb}) DESC, v.vec_id ASC) AS rank
-  FROM {vectors_table} v
-  CROSS JOIN ({queries_values}) AS q(query_id, qvec)
-) WHERE rank <= {k}
-"""
-
-
 # ---------------------------------------------------------------------------
 # IVF
 # ---------------------------------------------------------------------------

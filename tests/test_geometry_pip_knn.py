@@ -68,6 +68,65 @@ class TestRayCast:
             assert vec[i] == point_in_ring(px[i], py[i], CONCAVE)
 
 
+def _brute_pairs(boxes, xs, ys) -> set[tuple[int, int]]:
+    """Every (point, box) pair with the point in the closed box."""
+    return {
+        (p, i)
+        for p in range(len(xs))
+        for i in range(len(boxes))
+        if boxes[i, 0] <= xs[p] <= boxes[i, 2] and boxes[i, 1] <= ys[p] <= boxes[i, 3]
+    }
+
+
+def _random_boxes(rng, n):
+    return np.sort(rng.uniform(-50, 50, (n, 2, 2)), axis=1).reshape(n, 4)[:, [0, 2, 1, 3]]
+
+
+def _half_grid(rng, n):
+    """Points on a 0.5 grid over [0, 20]: many land on integer box edges and
+    corners."""
+    return rng.integers(0, 41, n) / 2.0, rng.integers(0, 41, n) / 2.0
+
+
+def _integer_boxes(rng, n, max_w=4, max_h=4):
+    x0, y0 = rng.integers(0, 18, n), rng.integers(0, 18, n)
+    w, h = rng.integers(0, max_w + 1, n), rng.integers(0, max_h + 1, n)
+    return np.column_stack([x0, y0, x0 + w, y0 + h]).astype(np.float64)
+
+
+def _batch_case(name):
+    rng = np.random.default_rng(sum(map(ord, name)))
+    if name == "random":
+        xs, ys = rng.uniform(-55, 55, 600), rng.uniform(-55, 55, 600)
+        return _random_boxes(rng, 300), xs, ys
+    if name == "zero_width_and_height":
+        boxes = np.vstack([_integer_boxes(rng, 60, max_w=0), _integer_boxes(rng, 60, max_h=0),
+                           _integer_boxes(rng, 20, max_w=0, max_h=0)])
+        return boxes, *_half_grid(rng, 800)
+    if name == "duplicates":
+        boxes = np.vstack([np.tile([[3.0, 3.0, 9.0, 7.0]], (40, 1)), _integer_boxes(rng, 60),
+                           np.tile([[5.0, 5.0, 5.0, 5.0]], (17, 1))])
+        return rng.permutation(boxes), *_half_grid(rng, 600)
+    if name == "nested":
+        k = np.arange(40, dtype=np.float64) * 0.25
+        return np.column_stack([k, k, 20.0 - k, 20.0 - k]), *_half_grid(rng, 600)
+    if name == "edges_and_corners":
+        boxes = _integer_boxes(rng, 200)
+        corners = boxes[:, [0, 1, 2, 3, 0, 3, 2, 1]].reshape(-1, 2)
+        mids = np.column_stack([(boxes[:, 0] + boxes[:, 2]) / 2, boxes[:, 1]])
+        pts = np.vstack([corners, mids])
+        return boxes, pts[:, 0], pts[:, 1]
+    if name == "5000_boxes":
+        lo = rng.uniform(-100, 100, (5000, 2))
+        boxes = np.hstack([lo, lo + rng.uniform(0, 8, (5000, 2))])
+        return boxes, rng.uniform(-105, 105, 400), rng.uniform(-105, 105, 400)
+    if name == "empty_tree":
+        return np.empty((0, 4)), rng.uniform(0, 1, 50), rng.uniform(0, 1, 50)
+    if name == "no_points":
+        return _random_boxes(rng, 300), np.empty(0), np.empty(0)
+    raise ValueError(name)
+
+
 class TestSTRtree:
     def test_query_matches_bruteforce(self):
         rng = np.random.default_rng(11)
@@ -77,7 +136,7 @@ class TestSTRtree:
         tree = STRtree(boxes)
         for _ in range(200):
             x, y = rng.uniform(-55, 55, 2)
-            got = set(tree.query_point(x, y).tolist())
+            got = set(tree.query_points(np.array([x]), np.array([y]))[1].tolist())
             want = {
                 i
                 for i in range(300)
@@ -86,7 +145,25 @@ class TestSTRtree:
             assert got == want
 
     def test_empty(self):
-        assert len(STRtree(np.empty((0, 4))).query_point(0, 0)) == 0
+        tree = STRtree(np.empty((0, 4)))
+        assert len(tree.query_points(np.zeros(1), np.zeros(1))[1]) == 0
+
+    @pytest.mark.parametrize("case", [
+        "random", "zero_width_and_height", "duplicates", "nested",
+        "edges_and_corners", "5000_boxes", "empty_tree", "no_points",
+    ])
+    def test_batch_query_matches_bruteforce(self, case):
+        boxes, xs, ys = _batch_case(case)
+        tree = STRtree(boxes)
+        if case == "5000_boxes":
+            assert len(tree.levels) >= 4
+            assert len(boxes) % STRtree.NODE_CAP != 0  # ragged last children
+        pi, ii = tree.query_points(xs, ys)
+        assert pi.dtype == ii.dtype == np.int64
+        assert np.all(np.diff(pi) >= 0)  # pairs stay ordered by point
+        got = set(zip(pi.tolist(), ii.tolist()))
+        assert len(got) == len(pi)
+        assert got == _brute_pairs(boxes, xs, ys)
 
 
 class TestPolygons:
@@ -184,6 +261,44 @@ class TestMatchPoints:
                     want = r.admin_id
                     break
             assert got[i] == want
+
+    def test_matches_bruteforce_above_512_polygons(self):
+        """579 polygons: a 24x24 grid of unit squares (ids 1000..1575), one
+        holed polygon (id 1300) overlapping squares with lower and higher
+        ids, and an antimeridian pair sharing id 7. Points sit on shared
+        corners and edges, in the hole, the annulus and the fragments."""
+        squares = [
+            (1000 + 24 * r + c,
+             [[(-12.0 + c, 10.0 + r), (-11.0 + c, 10.0 + r),
+               (-11.0 + c, 11.0 + r), (-12.0 + c, 11.0 + r)]])
+            for r in range(24) for c in range(24)
+        ]
+        outer = [(8.5, 20.5), (20.5, 20.5), (20.5, 30.5), (8.5, 30.5)]
+        hole = [(14.0, 23.0), (18.0, 23.0), (18.0, 27.0), (14.0, 27.0)]
+        west = [(-180.0, -5.0), (-178.0, -5.0), (-178.0, 0.0), (-180.0, 0.0)]
+        east = [(178.0, -5.0), (180.0, -5.0), (180.0, 0.0), (178.0, 0.0)]
+        payload = squares + [(1300, [outer, hole]), (7, [west]), (7, [east])]
+        assert len(payload) > 512
+        rng = np.random.default_rng(29)
+        vx, vy = rng.integers(-12, 13, 40), rng.integers(10, 35, 40)
+        pts = np.vstack([
+            np.column_stack([vx, vy]),                       # shared corners
+            np.column_stack([vx + 0.5, vy]),                 # shared edges
+            np.column_stack([rng.uniform(-13, 21, 50), rng.uniform(9, 35, 50)]),
+            [(16.0, 25.0), (19.0, 29.0), (11.5, 20.75), (11.5, 22.0), (8.5, 25.0),
+             (20.5, 25.0), (14.0, 25.0), (-179.0, -2.0), (179.0, -2.0),
+             (-180.0, -2.0), (180.0, -2.0), (178.0, 0.0), (0.0, -2.0)],
+        ])
+        lons, lats = pts[:, 0], pts[:, 1]
+        got = match_points(lons, lats, payload)
+        for i in range(len(pts)):
+            owners = [aid for aid, rings in payload
+                      if _brute_inside(lons[i], lats[i], rings)]
+            assert got[i] == min(owners, default=-1)
+        # hole, annulus, square 1263 beating 1300, 1300 beating square 1311,
+        # then half-open edges of the holed polygon and the fragments
+        assert got[-13:].tolist() == [
+            -1, 1300, 1263, 1300, 1300, -1, -1, 7, 7, 7, -1, -1, -1]
 
 
 class TestHaversine:
