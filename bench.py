@@ -5,8 +5,9 @@ Prints ONE JSON line:
    "docs_per_sec": ..., "queries": {name: sec}, "sf": ..., "cpus": N}
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-     SPARK_GRAFT_CPUS   (default 32)
-     SPARK_GRAFT_NDOCS  (default 100000) synthetic corpus size for the
+     SPARK_GRAFT_CPUS   (default: the CPUs in this process's affinity
+                        mask) the session runs on local[SPARK_GRAFT_CPUS]
+     SPARK_GRAFT_NDOCS  (default 800000) synthetic corpus size for the
                         flagship docs/sec measurement (north-star metric:
                         spatial-join + tile-assignment throughput)
 
@@ -26,25 +27,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from core_spark.session import spark_session  # noqa: E402
 
-def build_spark(cpus: int):
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "48g")
-        # ParallelGC: G1 treats the ~7MB Arrow batches of binary html as
-        # humongous allocations and collapses under 32 concurrent Python
-        # runners (measured 22.3s -> 4.4s on a 3.2M-doc noop Arrow stage).
-        # On a real cluster this is the executor JVM's flag.
-        .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .appName("core-spark-bench")
-        .getOrCreate()
-    )
+DRIVER_MEMORY = "48g"
 
 
 def materialize_corpus(spark, n_docs: int, partitions: int) -> tuple[str, bool]:
@@ -120,42 +105,50 @@ def _isolate(spark) -> None:
     spark._jvm.System.gc()
 
 
+def time_query(spark, fn, sf_dir: str) -> float:
+    """Steady-state wall seconds of one registered query, noop sink.
+
+    One untimed warmup pass (C2 JIT + Python worker spin-up + codegen
+    cache; data is NOT cached — each pass rebuilds the full plan incl.
+    fresh localCheckpoints), then `_isolate`, the timed pass, and
+    `_isolate` again. Without this, a heavy query's leftover state inflates
+    whatever runs next by up to 3.4x (measured: dedup_ngram 24.4s after
+    the knn/decontaminate/multimodal block vs 7.1s clean — dead checkpoint
+    blocks linger until a JVM GC lets the ContextCleaner drop them, and
+    the 48g heap rarely GCs)."""
+    def run():
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+    run()
+    _isolate(spark)
+    t0 = time.monotonic()
+    run()
+    wall = time.monotonic() - t0
+    _isolate(spark)
+    return wall
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     n_docs = int(os.environ.get("SPARK_GRAFT_NDOCS", "800000"))
 
-    spark = build_spark(cpus)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = spark_session(f"local[{cpus}]", driver_memory=DRIVER_MEMORY)
 
     corpus, generated = materialize_corpus(spark, n_docs, partitions=cpus * 2)
     if generated:
         # fresh JVM for the measurement (see materialize_corpus docstring)
         spark.stop()
-        spark = build_spark(cpus)
-        spark.sparkContext.setLogLevel("ERROR")
+        spark = spark_session(f"local[{cpus}]", driver_memory=DRIVER_MEMORY)
     pipeline_sec = run_flagship(spark, corpus, n_docs)
 
     timings = {}
     if not os.environ.get("SPARK_GRAFT_SKIP_QUERIES"):
         import __spark_entry__ as entry
 
+        # same steady-state protocol as the flagship (see time_query)
         for name, fn in entry.queries().items():
-            # Same steady-state protocol as the flagship: one untimed
-            # warmup pass (C2 JIT + Python worker spin-up + codegen cache;
-            # data is NOT cached — each pass rebuilds the full plan incl.
-            # fresh localCheckpoints), then session cleanup, then the timed
-            # pass. Without this, a heavy query's leftover state inflates
-            # whatever runs next by up to 3.4x (measured: dedup_ngram 24.4s
-            # after the knn/decontaminate/multimodal block vs 7.1s clean —
-            # dead checkpoint blocks linger until a JVM GC lets the
-            # ContextCleaner drop them, and the 48g heap rarely GCs).
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            _isolate(spark)
-            t0 = time.monotonic()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            timings[name] = round(time.monotonic() - t0, 3)
-            _isolate(spark)
+            timings[name] = round(time_query(spark, fn, sf_dir), 3)
 
     # Same-window hardware ceiling: the fused kernel over the same corpus
     # via plain multiprocessing (no Spark), in a fresh subprocess. The

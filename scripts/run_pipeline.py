@@ -8,7 +8,7 @@ Cluster launch (the py-files zip ships the package to executors):
 
 Local smoke:
 
-    python scripts/run_pipeline.py --workdir /tmp/run1 --n-docs 5000 --master 'local[8]'
+    python scripts/run_pipeline.py --workdir /tmp/run1 --n-docs 5000
 
 The job is resumable: re-running with the same workdir + parameters skips
 every completed stage via the checkpoint manifest (core_spark.plans.manifest)
@@ -33,26 +33,13 @@ def main() -> None:
     ap.add_argument("--partitions", type=int, default=64)
     ap.add_argument("--input-table", default=None,
                     help="read this parquet path instead of the synthetic corpus")
-    ap.add_argument("--master", default=None,
-                    help="override master (default: whatever spark-submit set)")
     ap.add_argument("--zonal-res", type=int, default=7)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
-    b = SparkSession.builder.appName("core-spark-pipeline")
-    if args.master:
-        b = b.master(args.master)
-    spark = (
-        b.config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
-
     from core_spark.plans.pipeline import run_pipeline
+    from core_spark.session import spark_session
 
+    spark = spark_session()
     docs_df = spark.read.parquet(args.input_table) if args.input_table else None
 
     t0 = time.monotonic()

@@ -73,14 +73,9 @@ def _kernel_shard(files: list[str]) -> int:
 
     from core_spark.data.polygons import admin_polygons
     from core_spark.functions.fused import fused_batch
-    from core_spark.operators.pip import _fingerprint
+    from core_spark.operators.pip import polygon_payload
 
-    polys = admin_polygons(96)
-    payload = [
-        (int(r.admin_id), [list(ring) for ring in r.rings])
-        for r in polys.itertuples()
-    ]
-    fp = _fingerprint(payload)
+    payload, fp = polygon_payload(admin_polygons(96))
     n = 0
     for f in files:
         pdf = pq.read_table(

@@ -64,16 +64,9 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entry
-    from pyspark.sql import SparkSession
+    from core_spark.session import spark_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = spark_session()
 
     con = duckdb.connect()
     for t in TABLES:

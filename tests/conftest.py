@@ -20,18 +20,8 @@ def pytest_configure(config):
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    from core_spark.session import spark_session
 
-    s = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "4g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .appName("core-spark-tests")
-        .getOrCreate()
-    )
-    s.sparkContext.setLogLevel("ERROR")
+    s = spark_session("local[4]", driver_memory="4g")
     yield s
     s.stop()
