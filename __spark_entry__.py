@@ -132,7 +132,7 @@ def _knn_queries_values() -> str:
 
 def q_tile_assign(spark, sf_dir):
     """G3: per-doc hexgrid cell ids at res 5/7/9 — pure JVM Column arithmetic
-    (stepwise emission keeps the Catalyst tree linear; hexgrid.cell_steps)."""
+    (hexgrid.with_cells)."""
     from core_spark.operators.tiles import assign_tiles
 
     return assign_tiles(

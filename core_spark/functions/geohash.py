@@ -17,7 +17,7 @@ MSB-first starting with longitude, then emit 5-bit chunks through the
 ``0123456789bcdefghjkmnpqrstuvwxyz`` alphabet. The interleave uses the
 classic 32→64 spread cascade (masks as decimal literals; shifts as
 multiplies — the syntax both engines share), emitted as STEPWISE
-columns per the hexgrid.cell_steps rule. Which axis occupies even bit
+columns per the hexgrid.apply_steps rule. Which axis occupies even bit
 positions depends on the parity of 5p (odd precision gives lon the
 extra bit) — handled per precision, pinned against the
 interval-halving reference model and the published 'ezs42' /

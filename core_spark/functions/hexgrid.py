@@ -24,12 +24,13 @@ Cell id layout (64-bit signed, always positive):
 with (q, r) the integer axial coordinates at that resolution. Supports
 |q|,|r| < 2^28, i.e. every resolution 0..15 over the whole globe.
 
-THE key property of this module: cell assignment is emitted as a plain SQL
-arithmetic expression (floor / abs / case / IEEE-754 + * /) with all
-transcendentals pre-folded into double literals. The same string runs on
-Spark (via F.expr → whole-stage codegen, JVM-side, no UDF) and on DuckDB
-(the driver's oracle), producing bit-identical results. A mirrored numpy
-implementation backs unit tests and UDF-side consumers.
+THE key property of this module: cell assignment is emitted as plain SQL
+arithmetic (floor / abs / case / IEEE-754 + * /) with all transcendentals
+pre-folded into double literals. ``sql_cell`` is the one-expression form
+the DuckDB oracle runs; ``with_cells`` emits the same arithmetic as Spark
+projections (whole-stage codegen, JVM-side, no UDF) shaped so that every
+generated method stays JIT-compilable. Both produce bit-identical results.
+A mirrored numpy implementation backs unit tests and UDF-side consumers.
 
 Reference analog: the detection cascade's "cheap predicate first" discipline
 (pkg/parser/scanner.go:468-489) — tile assignment is the engine's cheapest,
@@ -267,14 +268,9 @@ def sql_cell(lat_sql: str, lon_sql: str, res: int) -> str:
     """
     if not 0 <= res <= MAX_RES:
         raise ValueError(f"res out of range: {res}")
-    c, s, size = _lit(COS_N[res]), _lit(SIN_N[res]), _lit(SIZES[res])
     # wrap lon into [-180, 180) so +180 == -180; NaN propagates
     lon_n = f"(({lon_sql}) - 360.0*FLOOR((({lon_sql}) + 180.0) / 360.0))"
-    xr = f"({c}*{lon_n} + {s}*({lat_sql}))"
-    yr = f"(-{s}*{lon_n} + {c}*({lat_sql}))"
-    qf = f"(({_lit(SQ3_3)}*{xr} - {_lit(ONE_3)}*{yr}) / {size})"
-    rf = f"(({_lit(TWO_3)}*{yr}) / {size})"
-    cell = _sql_hexround_to_id(qf, rf, f"CAST({res} AS BIGINT)")
+    cell = _sql_latlon_to_id(lat_sql, lon_n, res)
     # error-as-data: NULL out NaN / out-of-range coords instead of failing the
     # cast. `x >= a AND x <= b` is false for NaN on both Spark and DuckDB
     # (both order NaN greater than every value).
@@ -283,6 +279,17 @@ def sql_cell(lat_sql: str, lon_sql: str, res: int) -> str:
         f"AND {lon_n} >= (-180.0) AND {lon_n} <= (180.0))"
     )
     return f"(CASE WHEN {valid} THEN {cell} ELSE NULL END)"
+
+
+def _sql_latlon_to_id(lat_sql: str, lon_n: str, res: int) -> str:
+    """Cell id at ``res`` of a latitude and an already-wrapped longitude,
+    with no validity check (the latlon_to_qr + qr_to_id arithmetic)."""
+    c, s, size = _lit(COS_N[res]), _lit(SIN_N[res]), _lit(SIZES[res])
+    xr = f"({c}*{lon_n} + {s}*({lat_sql}))"
+    yr = f"(-{s}*{lon_n} + {c}*({lat_sql}))"
+    qf = f"(({_lit(SQ3_3)}*{xr} - {_lit(ONE_3)}*{yr}) / {size})"
+    rf = f"(({_lit(TWO_3)}*{yr}) / {size})"
+    return _sql_hexround_to_id(qf, rf, f"CAST({res} AS BIGINT)")
 
 
 def _sql_hexround_to_id(qf: str, rf: str, res_sql: str) -> str:
@@ -324,45 +331,59 @@ def sql_cell_to_parent(cell_sql: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Stepwise Spark projections (importable without a live session)
+# Spark projections
 # ---------------------------------------------------------------------------
 
-def cell_steps(lat_sql: str, lon_sql: str, res: int, out: str) -> list[tuple[str, str]]:
-    """Stepwise emission: ordered (col_name, small_sql_fragment) pairs ending
-    in ``out``; fragments reference earlier step columns by name.
+def with_cells(df, lat_sql: str, lon_sql: str, cells: dict[str, int]):
+    """Append one hx cell-id column per ``{name: res}`` entry, computed from
+    the (lat, lon) pair with the arithmetic of ``sql_cell`` (bit-identical
+    ids, NULL for invalid input) in four projections:
 
-    Motivation (measured): the monolithic ``sql_cell`` string textually
-    duplicates every subexpression at each nesting level; once Catalyst
-    collapses projections the tree is fine standalone (~8 KB) but EXPLODES
-    when a downstream expression (e.g. cell_to_parent) references the cell
-    column many times. Building through intermediate columns keeps the plan
-    linear: Spark >= 3.3 refuses to collapse projections that would
-    duplicate non-cheap aliases (SPARK-36718), so each fragment appears in
-    the tree exactly once. Same arithmetic, same results.
+    1. one longitude wrap, in DOUBLE arithmetic (``360.0D``: Spark lexes a
+       bare ``360.0`` as DECIMAL);
+    2. one validity flag, and inputs sanitized as in ``latlon_to_cell``
+       (0.0 where invalid), so no NaN or infinity reaches a BIGINT cast,
+       which ANSI mode would fail with ARITHMETIC_OVERFLOW;
+    3. every resolution's raw id, one unconditional expression each;
+    4. the mask ``CASE WHEN valid THEN COALESCE(raw, raw, 0L) END``.
+
+    The shape keeps every method whole-stage codegen generates under the
+    8,000 bytes of bytecode above which HotSpot never JIT-compiles a method
+    (gated by ``tests/test_assign_tiles.py``). The raw-id text repeats the
+    rotated coordinates many times, and subexpression elimination moves
+    those repeats into methods of their own, but only outside conditional
+    branches. COALESCE(raw, raw, 0L) equals raw, and is there for Catalyst:
+    the second reference stops CollapseProject from inlining the raw id into
+    the CASE branch (SPARK-36718), and the ``0L`` makes it non-nullable, so a
+    ``cell IS NOT NULL`` filter that a join pushes below these projections
+    folds to the validity flag instead of carrying the whole expression.
     """
-    if not 0 <= res <= MAX_RES:
-        raise ValueError(f"res out of range: {res}")
-    p = f"_{out}_"
-    c, s, size = _lit(COS_N[res]), _lit(SIN_N[res]), _lit(SIZES[res])
-    steps = [
-        (f"{p}lonn", f"(({lon_sql}) - 360.0*FLOOR((({lon_sql}) + 180.0) / 360.0))"),
-        (f"{p}xr", f"({c}*{p}lonn + {s}*({lat_sql}))"),
-        (f"{p}yr", f"(-{s}*{p}lonn + {c}*({lat_sql}))"),
-        (f"{p}qf", f"(({_lit(SQ3_3)}*{p}xr - {_lit(ONE_3)}*{p}yr) / {size})"),
-        (f"{p}rf", f"(({_lit(TWO_3)}*{p}yr) / {size})"),
-    ]
-    steps += _hexround_steps(p, f"{p}qf", f"{p}rf")
+    from pyspark.sql import functions as F
+
+    for res in cells.values():
+        if not 0 <= res <= MAX_RES:
+            raise ValueError(f"res out of range: {res}")
+    if not cells:
+        return df
+    lonn = f"(({lon_sql}) - 360.0D*FLOOR((({lon_sql}) + 180.0D) / 360.0D))"
     valid = (
         f"(({lat_sql}) >= (-90.0) AND ({lat_sql}) <= (90.0) "
-        f"AND {p}lonn >= (-180.0) AND {p}lonn <= (180.0))"
+        f"AND _hx_lonn >= (-180.0) AND _hx_lonn <= (180.0))"
     )
-    packed = (
-        f"(CAST({res} AS BIGINT) * {_POW59} "
-        f"+ (CAST({p}qo AS BIGINT) + {_POW28}) * CAST({_POW29} AS BIGINT) "
-        f"+ (CAST({p}ro AS BIGINT) + {_POW28}))"
+    raw = {name: f"_hx_{name}" for name in cells}
+    return (
+        df.withColumns({"_hx_lonn": F.expr(lonn)})
+        .withColumns({
+            "_hx_valid": F.expr(valid),
+            "_hx_lat": F.expr(f"CASE WHEN {valid} THEN ({lat_sql}) ELSE 0.0D END"),
+            "_hx_lon": F.expr(f"CASE WHEN {valid} THEN _hx_lonn ELSE 0.0D END"),
+        })
+        .withColumns({raw[name]: F.expr(_sql_latlon_to_id("_hx_lat", "_hx_lon", res))
+                      for name, res in cells.items()})
+        .withColumns({name: F.expr(f"CASE WHEN _hx_valid THEN COALESCE({r}, {r}, 0L) END")
+                      for name, r in raw.items()})
+        .drop("_hx_lonn", "_hx_valid", "_hx_lat", "_hx_lon", *raw.values())
     )
-    steps.append((out, f"(CASE WHEN {valid} THEN {packed} ELSE NULL END)"))
-    return steps
 
 
 def _hexround_steps(p: str, qf: str, rf: str) -> list[tuple[str, str]]:
@@ -383,7 +404,7 @@ def _hexround_steps(p: str, qf: str, rf: str) -> list[tuple[str, str]]:
 
 
 def parent_steps(cell_col_name: str, out: str) -> list[tuple[str, str]]:
-    """Stepwise aperture-7 parent (see cell_steps for why stepwise)."""
+    """Stepwise aperture-7 parent (see apply_steps for why stepwise)."""
     p = f"_{out}_"
     steps = [
         (f"{p}res", f"CAST(FLOOR(CAST(({cell_col_name}) AS DOUBLE) / {_lit(float(_POW59))}) AS BIGINT)"),
@@ -406,7 +427,18 @@ def parent_steps(cell_col_name: str, out: str) -> list[tuple[str, str]]:
 
 def apply_steps(df, steps: list[tuple[str, str]]):
     """Apply (name, sql) steps as sequential projections, then drop the
-    intermediates (names starting with '_')."""
+    intermediates (names starting with '_').
+
+    Why stepwise (measured): a monolithic generated expression textually
+    duplicates every subexpression at each nesting level, and EXPLODES
+    when a downstream expression (e.g. cell_to_parent) references its
+    column many times. Intermediate columns keep the plan linear: Spark
+    >= 3.3 refuses to collapse projections that would duplicate non-cheap
+    aliases (SPARK-36718), so each fragment appears in the tree once. The
+    cost: whole-stage codegen inlines every step into one ``processNext``,
+    which stops being JIT-compiled past 8,000 bytes of bytecode; long
+    chains of small steps over one row should take ``with_cells``'s shape
+    instead."""
     from pyspark.sql import functions as F
 
     for name, sql in steps:

@@ -14,7 +14,7 @@ comparisons; web documents cap n in the thousands, so it stays cheap
 relative to one shuffle per token.
 
 Spark emission is STEPWISE (tokens / bigrams as intermediate columns —
-CLAUDE.md hexgrid.cell_steps rule) so the token-array expression is not
+the hexgrid.apply_steps rule) so the token-array expression is not
 re-inlined into every downstream reference; the DuckDB twin uses nested
 subqueries for the same reason.
 

@@ -213,7 +213,7 @@ def lang_id_steps(text_col: str, langs: list[str] | None = None,
     40 KB): janino failed to compile ``processNext()`` and the stage ran
     INTERPRETED (24.6s for corpus_curation at sf0.1). Stepwise columns are
     protected from re-inlining by SPARK-36718 (CollapseProject refuses to
-    duplicate non-cheap aliases) — the hexgrid.cell_steps rule.
+    duplicate non-cheap aliases) — the hexgrid.apply_steps rule.
 
     Apply with ``hexgrid.apply_steps``; intermediates are '_'-prefixed and
     dropped. The DuckDB oracle keeps the portable ``sql_lang_id`` monolith

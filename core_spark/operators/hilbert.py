@@ -18,7 +18,7 @@ xy2d formulation): for s = n/2 .. 1, take the quadrant bits (rx, ry),
 add s^2 * gray(rx, ry) to the index, and transform the frame — if
 ry = 0, optionally point-reflect (rx = 1: p <- n-1-p) then swap x/y.
 State mutates per level, so the emission is STEPWISE COLUMNS carrying
-(x_i, y_i) through ``ORDER`` levels (the hexgrid.cell_steps rule —
+(x_i, y_i) through ``ORDER`` levels (the hexgrid.apply_steps rule —
 inlining would let Catalyst duplicate the whole cascade into every
 downstream reference), with two portability substitutions that keep
 the text byte-identical on Spark and DuckDB:

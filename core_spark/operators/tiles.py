@@ -1,10 +1,11 @@
 """G3/G4 operators — tile assignment (HX res 5-9 + S2) as DataFrame stages.
 
-Assignment is pure Column arithmetic (hexgrid.cell_steps, one small SQL
-column per step via apply_steps): stays in whole-stage codegen, never
-leaves the JVM, and survives any partitioning — exactly the property
-needed at 10^12 rows. S2 (functions/s2.py) is the one
-numpy UDF stage, kept optional.
+Assignment is pure Column arithmetic (hexgrid.with_cells: four
+projections for all resolutions, every generated method under HotSpot's
+8,000-byte JIT limit): stays in whole-stage codegen, never leaves the
+JVM, and survives any partitioning — exactly the property needed at
+10^12 rows. S2 (functions/s2.py) is the one numpy UDF stage, kept
+optional.
 
 Reference analog: per-file framework stamping before aggregation
 (pkg/parser/scanner.go:567-618 parseFile -> TestFile.Framework).
@@ -25,9 +26,7 @@ def assign_tiles(df, lat_col: str = "lat", lon_col: str = "lon",
     NULL-safe: invalid/missing coordinates produce NULL cells, which
     groupBy/join naturally segregate (error-as-data).
     """
-    out = df
-    for res in resolutions:
-        out = hx.apply_steps(out, hx.cell_steps(lat_col, lon_col, res, f"h3_r{res}"))
+    out = hx.with_cells(df, lat_col, lon_col, {f"h3_r{res}": res for res in resolutions})
     if s2_level is not None:
         from core_spark.functions.s2 import s2_cell_col
 

@@ -69,8 +69,8 @@ def rasterize(spark, zonal_df, res: int, pixel_deg: float = 2.0,
     """Raster half of G7: per-cell aggregates -> a regular equirectangular
     pixel grid.
 
-    Every pixel center is assigned its hex cell with the same JVM-side
-    sql_cell arithmetic used for documents, then joined against the zonal
+    Every pixel center is assigned its hex cell by the same JVM-side
+    emitter as documents (hexgrid.with_cells), then joined against the zonal
     aggregate — so raster pixels and document assignments can NEVER disagree
     (one shared cell function). Pixels whose cell has no documents carry 0.
 
@@ -95,7 +95,7 @@ def rasterize(spark, zonal_df, res: int, pixel_deg: float = 2.0,
             f"-90.0 + (iy + 0.5) * {pixel_deg!r} AS plat",
         )
     )
-    pixels = hx.apply_steps(pixels, hx.cell_steps("plat", "plon", res, "pcell"))
+    pixels = hx.with_cells(pixels, "plat", "plon", {"pcell": res})
     return (
         pixels.join(
             zonal_df.select(F.col(cell_col).alias("pcell"), F.col(value_col)),

@@ -13,7 +13,7 @@ full 100 TB scan and reading a few tiles' worth of files.
 
 Mechanics: each 16-bit quantized coordinate is spread to even bit
 positions with the classic 4-step mask cascade, emitted as STEPWISE
-COLUMNS (the hexgrid.cell_steps rule — Catalyst collapses projections
+COLUMNS (the hexgrid.apply_steps rule — Catalyst collapses projections
 and would otherwise duplicate each step into every downstream use).
 Shifts are written as multiply/divide by powers of two — exact on
 BIGINT and the ONE syntax both engines share — with ``&``/``|`` for the

@@ -29,7 +29,7 @@ class TestHexgridProbes:
         with pytest.raises(ValueError):
             hx.sql_cell("lat", "lon", 16)
         with pytest.raises(ValueError):
-            hx.cell_steps("lat", "lon", -1, "c")
+            hx.with_cells(None, "lat", "lon", {"c": -1})
 
 
 @pytest.mark.spark
