@@ -22,8 +22,8 @@ STRtree: classic Sort-Tile-Recursive bulk-packing (Leutenegger et al. 1997) —
 leaves hold polygon envelopes tiled by x then y; a batch of points descends
 the tree one level at a time, all points together, keeping the (point, node)
 pairs whose node envelope holds the point. Built once per executor process over
-the broadcast polygon table (lazy global, the analog of the reference's
-compiled-query cache, pkg/parser/tspool/query.go:33).
+the polygon table shipped in the task closure (lazy global, the analog of the
+reference's compiled-query cache, pkg/parser/tspool/query.go:33).
 """
 
 from __future__ import annotations
@@ -143,7 +143,9 @@ class STRtree:
     tree together, one numpy pass per level over the live (point, node)
     pairs, so tree depth (~log16 n), not point count, sets the number of
     Python steps. For admin-boundary cardinality (10^2..10^5 polygons) build
-    time is negligible and the whole tree broadcasts in KBs.
+    time is negligible. The tree itself never travels: each executor builds
+    it from the packed polygon payload (``pip.polygon_payload``, 16 bytes a
+    vertex: 814 polygons of 192 vertices ship as about 2.5 MB).
     """
 
     NODE_CAP = 16

@@ -270,7 +270,8 @@ def sql_cell(lat_sql: str, lon_sql: str, res: int) -> str:
         raise ValueError(f"res out of range: {res}")
     # wrap lon into [-180, 180) so +180 == -180; NaN propagates
     lon_n = f"(({lon_sql}) - 360.0*FLOOR((({lon_sql}) + 180.0) / 360.0))"
-    cell = _sql_latlon_to_id(lat_sql, lon_n, res)
+    qf, rf = _sql_latlon_to_qr(lat_sql, lon_n, res)
+    cell = _sql_hexround_to_id(qf, rf, f"CAST({res} AS BIGINT)")
     # error-as-data: NULL out NaN / out-of-range coords instead of failing the
     # cast. `x >= a AND x <= b` is false for NaN on both Spark and DuckDB
     # (both order NaN greater than every value).
@@ -281,15 +282,16 @@ def sql_cell(lat_sql: str, lon_sql: str, res: int) -> str:
     return f"(CASE WHEN {valid} THEN {cell} ELSE NULL END)"
 
 
-def _sql_latlon_to_id(lat_sql: str, lon_n: str, res: int) -> str:
-    """Cell id at ``res`` of a latitude and an already-wrapped longitude,
-    with no validity check (the latlon_to_qr + qr_to_id arithmetic)."""
+def _sql_latlon_to_qr(lat_sql: str, lon_n: str, res: int) -> tuple[str, str]:
+    """Fractional axial (qf, rf) at ``res`` of a latitude and an
+    already-wrapped longitude, with no validity check (the latlon_to_qr
+    arithmetic before rounding)."""
     c, s, size = _lit(COS_N[res]), _lit(SIN_N[res]), _lit(SIZES[res])
     xr = f"({c}*{lon_n} + {s}*({lat_sql}))"
     yr = f"(-{s}*{lon_n} + {c}*({lat_sql}))"
     qf = f"(({_lit(SQ3_3)}*{xr} - {_lit(ONE_3)}*{yr}) / {size})"
     rf = f"(({_lit(TWO_3)}*{yr}) / {size})"
-    return _sql_hexround_to_id(qf, rf, f"CAST({res} AS BIGINT)")
+    return qf, rf
 
 
 def _sql_hexround_to_id(qf: str, rf: str, res_sql: str) -> str:
@@ -337,21 +339,26 @@ def sql_cell_to_parent(cell_sql: str) -> str:
 def with_cells(df, lat_sql: str, lon_sql: str, cells: dict[str, int]):
     """Append one hx cell-id column per ``{name: res}`` entry, computed from
     the (lat, lon) pair with the arithmetic of ``sql_cell`` (bit-identical
-    ids, NULL for invalid input) in four projections:
+    ids, NULL for invalid input) in five projections:
 
     1. one longitude wrap, in DOUBLE arithmetic (``360.0D``: Spark lexes a
        bare ``360.0`` as DECIMAL);
     2. one validity flag, and inputs sanitized as in ``latlon_to_cell``
        (0.0 where invalid), so no NaN or infinity reaches a BIGINT cast,
        which ANSI mode would fail with ARITHMETIC_OVERFLOW;
-    3. every resolution's raw id, one unconditional expression each;
-    4. the mask ``CASE WHEN valid THEN COALESCE(raw, raw, 0L) END``.
+    3. every resolution's fractional axial coordinates (qf, rf);
+    4. every resolution's raw id, the cube rounding of its (qf, rf), one
+       unconditional expression each;
+    5. the mask ``CASE WHEN valid THEN COALESCE(raw, raw, 0L) END``.
 
     The shape keeps every method whole-stage codegen generates under the
     8,000 bytes of bytecode above which HotSpot never JIT-compiles a method
-    (gated by ``tests/test_assign_tiles.py``). The raw-id text repeats the
-    rotated coordinates many times, and subexpression elimination moves
-    those repeats into methods of their own, but only outside conditional
+    (gated by ``tests/test_assign_tiles.py``). The raw-id text repeats qf
+    and rf many times; as columns of their own (step 3, which Catalyst
+    keeps apart because the repeats are not cheap) they are analysed once
+    per resolution, not once per repeat, which is most of the driver's cost
+    of building the plan. Subexpression elimination moves the remaining
+    repeats into methods of their own, but only outside conditional
     branches. COALESCE(raw, raw, 0L) equals raw, and is there for Catalyst:
     the second reference stops CollapseProject from inlining the raw id into
     the CASE branch (SPARK-36718), and the ``0L`` makes it non-nullable, so a
@@ -371,6 +378,12 @@ def with_cells(df, lat_sql: str, lon_sql: str, cells: dict[str, int]):
         f"AND _hx_lonn >= (-180.0) AND _hx_lonn <= (180.0))"
     )
     raw = {name: f"_hx_{name}" for name in cells}
+    qr, ids = {}, {}
+    for name, res in cells.items():
+        r = raw[name]
+        qf, rf = _sql_latlon_to_qr("_hx_lat", "_hx_lon", res)
+        qr[f"{r}_qf"], qr[f"{r}_rf"] = F.expr(qf), F.expr(rf)
+        ids[r] = F.expr(_sql_hexround_to_id(f"{r}_qf", f"{r}_rf", f"CAST({res} AS BIGINT)"))
     return (
         df.withColumns({"_hx_lonn": F.expr(lonn)})
         .withColumns({
@@ -378,11 +391,11 @@ def with_cells(df, lat_sql: str, lon_sql: str, cells: dict[str, int]):
             "_hx_lat": F.expr(f"CASE WHEN {valid} THEN ({lat_sql}) ELSE 0.0D END"),
             "_hx_lon": F.expr(f"CASE WHEN {valid} THEN _hx_lonn ELSE 0.0D END"),
         })
-        .withColumns({raw[name]: F.expr(_sql_latlon_to_id("_hx_lat", "_hx_lon", res))
-                      for name, res in cells.items()})
+        .withColumns(qr)
+        .withColumns(ids)
         .withColumns({name: F.expr(f"CASE WHEN _hx_valid THEN COALESCE({r}, {r}, 0L) END")
                       for name, r in raw.items()})
-        .drop("_hx_lonn", "_hx_valid", "_hx_lat", "_hx_lon", *raw.values())
+        .drop("_hx_lonn", "_hx_valid", "_hx_lat", "_hx_lon", *qr, *raw.values())
     )
 
 

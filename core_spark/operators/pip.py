@@ -8,8 +8,11 @@ the document side, the join runs map-side inside one Arrow stage:
                                            [ray-cast refine on candidates]
          --> (key_cols..., lat, lon, admin_id)
 
-The STRtree is built ONCE PER EXECUTOR PROCESS from the broadcast polygon
-payload (lazy module-global keyed by payload fingerprint — the analog of the
+The polygon side travels inside the UDF closure as a ``PolygonPayload``: four
+flat numpy arrays (ids, ring offsets, vertex offsets, one (v, 2) float64
+vertex array), which pickle as raw buffers. Every task deserializes the
+closure; the STRtree is built ONCE PER EXECUTOR PROCESS from it (lazy
+module-global keyed by the payload's crc32 fingerprint — the analog of the
 reference's compiled-query cache, pkg/parser/tspool/query.go:33-66, and its
 one-grammar-init-per-process discipline, pool.go:60-76).
 
@@ -30,6 +33,10 @@ Unmatched documents keep admin_id NULL (left join semantics, error-as-data).
 
 from __future__ import annotations
 
+import zlib
+from itertools import chain
+from typing import NamedTuple
+
 import numpy as np
 import pandas as pd
 
@@ -39,34 +46,66 @@ from core_spark.functions.geometry import STRtree, points_in_ring
 _TREE_CACHE: dict[int, tuple] = {}
 
 
-def _fingerprint(payload) -> int:
-    """Content hash of the polygon payload — computed once on the driver so
-    every task of every stage maps to the same executor-side cache entry."""
-    import zlib
+class PolygonPayload(NamedTuple):
+    """A polygon table as flat arrays: polygon ``i`` has id ``ids[i]`` and
+    rings ``ring_offsets[i]:ring_offsets[i + 1]`` (outer first, then holes);
+    ring ``k`` is ``xy[vertex_offsets[k]:vertex_offsets[k + 1]]``, (x, y)
+    rows with the closing edge implied."""
 
-    return zlib.crc32(repr(payload).encode()) & 0xFFFFFFFF
-
-
-def polygon_payload(polygons: pd.DataFrame) -> tuple[list, int]:
-    """(admin_id, rings) rows -> the broadcast payload and its fingerprint."""
-    payload = [(int(r.admin_id), [list(ring) for ring in r.rings])
-               for r in polygons.itertuples()]
-    return payload, _fingerprint(payload)
+    ids: np.ndarray             # int64 (n,)
+    ring_offsets: np.ndarray    # int64 (n + 1,)
+    vertex_offsets: np.ndarray  # int64 (rings + 1,)
+    xy: np.ndarray              # float64 (vertices, 2)
 
 
-def _normalize_entry(rings) -> list[np.ndarray]:
+def _rings_of(rings) -> list:
     """Accept one ring (list of (x, y)) or several (list of rings)."""
     first = rings[0]
     if isinstance(first, (tuple, list)) and len(first) == 2 and not isinstance(
         first[0], (tuple, list)
     ):
-        return [np.asarray(rings, dtype=np.float64)]
-    return [np.asarray(r, dtype=np.float64) for r in rings]
+        return [rings]
+    return list(rings)
 
 
-def _build(payload: list[tuple[int, list]], key: int):
-    """payload: [(admin_id, ring | [outer, hole...])] -> (tree, rings, ids).
+def _pack(entries) -> PolygonPayload:
+    """[(admin_id, ring | [outer, hole...])] -> PolygonPayload (a
+    PolygonPayload is returned as it is)."""
+    if isinstance(entries, PolygonPayload):
+        return entries
+    entries = list(entries)
+    ringsets = [_rings_of(rs) for _, rs in entries]
+    rings = [r for rs in ringsets for r in rs]
+    vertex_counts = [len(r) for r in rings]
+    xy = np.fromiter(chain.from_iterable(chain.from_iterable(rings)), np.float64,
+                     2 * sum(vertex_counts)).reshape(-1, 2)
+    return PolygonPayload(
+        np.asarray([a for a, _ in entries], dtype=np.int64).reshape(-1),
+        np.cumsum([0] + [len(rs) for rs in ringsets], dtype=np.int64),
+        np.cumsum([0] + vertex_counts, dtype=np.int64),
+        xy,
+    )
 
+
+def _fingerprint(payload: PolygonPayload) -> int:
+    """crc32 over the payload's buffers — computed once on the driver so
+    every task of every stage maps to the same executor-side cache entry."""
+    crc = 0
+    for a in payload:
+        crc = zlib.crc32(a, crc)
+    return crc & 0xFFFFFFFF
+
+
+def polygon_payload(polygons: pd.DataFrame) -> tuple[PolygonPayload, int]:
+    """(admin_id, rings) rows -> the packed payload and its fingerprint."""
+    payload = _pack((r.admin_id, r.rings) for r in polygons.itertuples())
+    return payload, _fingerprint(payload)
+
+
+def _build(payload: PolygonPayload | list[tuple[int, list]], key: int):
+    """payload -> (tree, per-polygon ring views, ids), cached under ``key``.
+
+    A list payload, [(admin_id, ring | [outer, hole...])], is packed first.
     Multi-ring polygons use even-odd parity (crossings XOR across rings), so
     holes fall out of the same ray-cast rule. Antimeridian-crossing polygons
     are pre-split at ingestion into two fragments sharing one admin_id —
@@ -76,15 +115,13 @@ def _build(payload: list[tuple[int, list]], key: int):
     hit = _TREE_CACHE.get(key)
     if hit is not None:
         return hit
-    ringsets = [_normalize_entry(r) for _, r in payload]
-    ids = np.asarray([a for a, _ in payload], dtype=np.int64)
+    ids, ro, vo, xy = _pack(payload)
+    rings = [xy[s:e] for s, e in zip(vo[:-1].tolist(), vo[1:].tolist())]
+    ringsets = [rings[s:e] for s, e in zip(ro[:-1].tolist(), ro[1:].tolist())]
     boxes = np.empty((len(ringsets), 4), dtype=np.float64)
     for i, rs in enumerate(ringsets):
-        outer = rs[0]
-        boxes[i, 0] = outer[:, 0].min()
-        boxes[i, 1] = outer[:, 1].min()
-        boxes[i, 2] = outer[:, 0].max()
-        boxes[i, 3] = outer[:, 1].max()
+        boxes[i, :2] = rs[0].min(axis=0)
+        boxes[i, 2:] = rs[0].max(axis=0)
     built = (STRtree(boxes), ringsets, ids)
     _TREE_CACHE.clear()  # one active polygon set per executor
     _TREE_CACHE[key] = built
@@ -94,16 +131,22 @@ def _build(payload: list[tuple[int, list]], key: int):
 def match_points(
     lons: np.ndarray,
     lats: np.ndarray,
-    payload: list[tuple[int, list[tuple[float, float]]]],
+    payload: PolygonPayload | list[tuple[int, list]],
     fp: int | None = None,
 ) -> np.ndarray:
     """Pure kernel: point arrays -> admin_id per point (-1 = no match).
 
+    ``payload`` is a ``polygon_payload`` or a list of
+    (admin_id, ring | [outer, hole...]); ``fp`` is its fingerprint (a list
+    without one is packed to compute it).
     Overlapping polygons resolve to the lowest admin_id —
     a deterministic tie-break (reference analog: deepest-config tie-break,
     pkg/parser/detection/detector.go:213-230).
     """
-    tree, rings, ids = _build(payload, fp if fp is not None else _fingerprint(payload))
+    if fp is None:
+        payload = _pack(payload)
+        fp = _fingerprint(payload)
+    tree, rings, ids = _build(payload, fp)
     out = np.full(len(lons), -1, dtype=np.int64)
     lons = np.asarray(lons, np.float64)
     lats = np.asarray(lats, np.float64)
@@ -136,9 +179,10 @@ def pip_join(
 ):
     """Append ``admin_id`` (long, NULL if outside every polygon) to ``df``.
 
-    ``polygons``: pandas DataFrame with columns (admin_id, ring) — collected
-    on the driver (small side) and shipped inside the UDF closure, which Spark
-    broadcasts with the task binary exactly once per executor.
+    ``polygons``: pandas DataFrame with columns (admin_id, rings) — collected
+    on the driver (small side), packed by ``polygon_payload`` and shipped
+    inside the UDF closure, which every task deserializes; each executor
+    process builds the STRtree once.
     """
     payload, fp = polygon_payload(polygons)
     fields = ", ".join(f.name + " " + f.dataType.simpleString() for f in df.schema.fields)

@@ -1,6 +1,6 @@
 """G3/G4 operators — tile assignment (HX res 5-9 + S2) as DataFrame stages.
 
-Assignment is pure Column arithmetic (hexgrid.with_cells: four
+Assignment is pure Column arithmetic (hexgrid.with_cells: five
 projections for all resolutions, every generated method under HotSpot's
 8,000-byte JIT limit): stays in whole-stage codegen, never leaves the
 JVM, and survives any partitioning — exactly the property needed at

@@ -140,3 +140,28 @@ def test_non_nullable_input_and_join_consumer_fit_the_jit_limit(spark, points):
                assign_tiles(pixels, resolutions=(5,))):
         sizes = max_method_bytes(df)
         assert sizes and max(sizes) <= JIT_LIMIT, sizes
+
+
+def analysed_expression_nodes(df) -> int:
+    """Expression-tree nodes over every operator of ``df``'s analysed plan
+    (an expression's treeString prints one line per node)."""
+    count, stack = 0, [df._jdf.queryExecution().analyzed()]
+    while stack:
+        plan = stack.pop()
+        exprs = plan.expressions()
+        count += sum(exprs.apply(i).treeString().count("\n") for i in range(exprs.size()))
+        children = plan.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return count
+
+
+# r5-r9 analyse to 1,305 nodes with the fractional axial coordinates as
+# columns of their own, and to 4,839 when each raw id inlines them.
+ANALYSED_NODES_BOUND = 2_500
+
+
+def test_assign_tiles_analysed_plan_stays_small(spark, points):
+    """The driver analyses every expression node of the plan again on each
+    DataFrame call, on every pass; a raw id that inlines its rotated
+    coordinates at each of their repeats triples the plan."""
+    assert analysed_expression_nodes(assign_tiles(points)) <= ANALYSED_NODES_BOUND

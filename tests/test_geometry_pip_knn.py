@@ -23,7 +23,7 @@ from core_spark.functions.geometry import (
     wkt_to_ring,
 )
 from core_spark.operators.knn import guaranteed_radius_m, knn_bruteforce_pandas
-from core_spark.operators.pip import match_points
+from core_spark.operators.pip import match_points, polygon_payload
 
 SQUARE = np.array([[0.0, 0.0], [4.0, 0.0], [4.0, 4.0], [0.0, 4.0]])
 CONCAVE = np.array([[0, 0], [6, 0], [6, 6], [3, 3], [0, 6]], dtype=np.float64)
@@ -202,6 +202,35 @@ def _brute_inside(x: float, y: float, rings) -> bool:
     return inside
 
 
+def _grid_polygons_and_points():
+    """579 polygons: a 24x24 grid of unit squares (ids 1000..1575), one
+    holed polygon (id 1300) overlapping squares with lower and higher ids,
+    and an antimeridian pair sharing id 7, as a [(admin_id, rings)] list.
+    Points sit on shared corners and edges, in the hole, the annulus and the
+    fragments; the last 13 are the named cases."""
+    squares = [
+        (1000 + 24 * r + c,
+         [[(-12.0 + c, 10.0 + r), (-11.0 + c, 10.0 + r),
+           (-11.0 + c, 11.0 + r), (-12.0 + c, 11.0 + r)]])
+        for r in range(24) for c in range(24)
+    ]
+    outer = [(8.5, 20.5), (20.5, 20.5), (20.5, 30.5), (8.5, 30.5)]
+    hole = [(14.0, 23.0), (18.0, 23.0), (18.0, 27.0), (14.0, 27.0)]
+    west = [(-180.0, -5.0), (-178.0, -5.0), (-178.0, 0.0), (-180.0, 0.0)]
+    east = [(178.0, -5.0), (180.0, -5.0), (180.0, 0.0), (178.0, 0.0)]
+    rng = np.random.default_rng(29)
+    vx, vy = rng.integers(-12, 13, 40), rng.integers(10, 35, 40)
+    pts = np.vstack([
+        np.column_stack([vx, vy]),                       # shared corners
+        np.column_stack([vx + 0.5, vy]),                 # shared edges
+        np.column_stack([rng.uniform(-13, 21, 50), rng.uniform(9, 35, 50)]),
+        [(16.0, 25.0), (19.0, 29.0), (11.5, 20.75), (11.5, 22.0), (8.5, 25.0),
+         (20.5, 25.0), (14.0, 25.0), (-179.0, -2.0), (179.0, -2.0),
+         (-180.0, -2.0), (180.0, -2.0), (178.0, 0.0), (0.0, -2.0)],
+    ]).astype(np.float64)
+    return squares + [(1300, [outer, hole]), (7, [west]), (7, [east])], pts
+
+
 class TestMatchPoints:
     def test_centers_match_own_polygon(self):
         polys = admin_polygons(96)
@@ -263,32 +292,8 @@ class TestMatchPoints:
             assert got[i] == want
 
     def test_matches_bruteforce_above_512_polygons(self):
-        """579 polygons: a 24x24 grid of unit squares (ids 1000..1575), one
-        holed polygon (id 1300) overlapping squares with lower and higher
-        ids, and an antimeridian pair sharing id 7. Points sit on shared
-        corners and edges, in the hole, the annulus and the fragments."""
-        squares = [
-            (1000 + 24 * r + c,
-             [[(-12.0 + c, 10.0 + r), (-11.0 + c, 10.0 + r),
-               (-11.0 + c, 11.0 + r), (-12.0 + c, 11.0 + r)]])
-            for r in range(24) for c in range(24)
-        ]
-        outer = [(8.5, 20.5), (20.5, 20.5), (20.5, 30.5), (8.5, 30.5)]
-        hole = [(14.0, 23.0), (18.0, 23.0), (18.0, 27.0), (14.0, 27.0)]
-        west = [(-180.0, -5.0), (-178.0, -5.0), (-178.0, 0.0), (-180.0, 0.0)]
-        east = [(178.0, -5.0), (180.0, -5.0), (180.0, 0.0), (178.0, 0.0)]
-        payload = squares + [(1300, [outer, hole]), (7, [west]), (7, [east])]
+        payload, pts = _grid_polygons_and_points()
         assert len(payload) > 512
-        rng = np.random.default_rng(29)
-        vx, vy = rng.integers(-12, 13, 40), rng.integers(10, 35, 40)
-        pts = np.vstack([
-            np.column_stack([vx, vy]),                       # shared corners
-            np.column_stack([vx + 0.5, vy]),                 # shared edges
-            np.column_stack([rng.uniform(-13, 21, 50), rng.uniform(9, 35, 50)]),
-            [(16.0, 25.0), (19.0, 29.0), (11.5, 20.75), (11.5, 22.0), (8.5, 25.0),
-             (20.5, 25.0), (14.0, 25.0), (-179.0, -2.0), (179.0, -2.0),
-             (-180.0, -2.0), (180.0, -2.0), (178.0, 0.0), (0.0, -2.0)],
-        ])
         lons, lats = pts[:, 0], pts[:, 1]
         got = match_points(lons, lats, payload)
         for i in range(len(pts)):
@@ -299,6 +304,87 @@ class TestMatchPoints:
         # then half-open edges of the holed polygon and the fragments
         assert got[-13:].tolist() == [
             -1, 1300, 1263, 1300, 1300, -1, -1, 7, 7, 7, -1, -1, -1]
+
+
+class TestPackedPayload:
+    """``polygon_payload`` ships the polygon table as flat numpy arrays;
+    ``match_points`` gives the same ids on it as on the list form."""
+
+    @staticmethod
+    def _table(payload) -> pd.DataFrame:
+        return pd.DataFrame({"admin_id": [a for a, _ in payload],
+                             "rings": [rs for _, rs in payload]})
+
+    @staticmethod
+    def _list_form(polys: pd.DataFrame) -> list:
+        return [(int(r.admin_id), [list(ring) for ring in r.rings])
+                for r in polys.itertuples()]
+
+    @staticmethod
+    def _owners(lons, lats, payload) -> list:
+        """Lowest admin_id whose rings hold each point (even-odd), -1 if
+        none: every polygon against every point, no tree, no packing."""
+        out = np.full(len(lons), -1, dtype=np.int64)
+        for aid, rings in sorted(payload, key=lambda e: e[0], reverse=True):
+            inside = np.zeros(len(lons), dtype=bool)
+            for ring in rings:
+                inside ^= points_in_ring(lons, lats, np.asarray(ring, dtype=np.float64))
+            out[inside] = aid
+        return out.tolist()
+
+    def _check(self, lons, lats, payload, packed, fp) -> np.ndarray:
+        got = match_points(lons, lats, packed, fp=fp)
+        assert got.tolist() == self._owners(lons, lats, payload)
+        # the list form, under a fingerprint of the caller's own (a cache
+        # miss), packs itself and must give the same ids
+        assert match_points(lons, lats, payload, fp=fp ^ 1).tolist() == got.tolist()
+        return got
+
+    def test_admin_polygons_with_holes(self):
+        polys = admin_polygons(96)
+        assert (polys["rings"].apply(len) > 1).any()
+        packed, fp = polygon_payload(polys)
+        rng = np.random.default_rng(3)
+        holes = np.asarray([np.asarray(rs[1]).mean(axis=0)
+                            for rs in polys["rings"] if len(rs) > 1])
+        lons = np.r_[rng.uniform(-180, 180, 20_000), holes[:, 0]]
+        lats = np.r_[rng.uniform(-75, 75, 20_000), holes[:, 1]]
+        got = self._check(lons, lats, self._list_form(polys), packed, fp)
+        assert (got != -1).sum() > 800 and (got[-len(holes):] == -1).all()
+
+    def test_overlaps_and_antimeridian_pair(self):
+        payload, pts = _grid_polygons_and_points()
+        packed, fp = polygon_payload(self._table(payload))
+        assert len(packed.ids) == 579 and (packed.ids == 7).sum() == 2
+        got = self._check(pts[:, 0], pts[:, 1], payload, packed, fp)
+        assert got[-13:].tolist() == [
+            -1, 1300, 1263, 1300, 1300, -1, -1, 7, 7, 7, -1, -1, -1]
+
+    def test_empty_polygon_table(self):
+        packed, fp = polygon_payload(admin_polygons(0))
+        assert len(packed.ids) == 0 and packed.xy.shape == (0, 2)
+        lons, lats = np.array([0.0, 10.0]), np.array([0.0, -5.0])
+        assert self._check(lons, lats, [], packed, fp).tolist() == [-1, -1]
+
+    def test_fingerprint_follows_content(self):
+        _, fp = polygon_payload(admin_polygons(96))
+        polys = admin_polygons(96)
+        assert polygon_payload(polys)[1] == fp
+        ring = list(polys.at[5, "rings"][0])
+        x, y = ring[2]
+        ring[2] = (float(np.nextafter(x, np.inf)), y)
+        polys.at[5, "rings"] = [ring] + polys.at[5, "rings"][1:]
+        assert polygon_payload(polys)[1] != fp
+
+    def test_payload_is_flat_arrays(self):
+        import cloudpickle
+
+        polys = admin_polygons(144)
+        packed, _ = polygon_payload(polys)
+        assert all(isinstance(a, np.ndarray) for a in packed)
+        vertices = len(packed.xy)
+        assert vertices == sum(len(r) for rs in polys["rings"] for r in rs)
+        assert len(cloudpickle.dumps(packed)) <= 16 * vertices + 4096
 
 
 class TestHaversine:
