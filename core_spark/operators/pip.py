@@ -5,16 +5,17 @@ rows) is tiny next to 10^12 documents, so it is broadcast — zero shuffle on
 the document side, the join runs map-side inside one Arrow stage:
 
     docs --(mapInPandas, Arrow batches)--> [envelope STRtree probe]
-                                           [ray-cast refine on candidates]
+                                           [y-band ray-cast refine on candidates]
          --> (key_cols..., lat, lon, admin_id)
 
 The polygon side travels inside the UDF closure as a ``PolygonPayload``: four
 flat numpy arrays (ids, ring offsets, vertex offsets, one (v, 2) float64
 vertex array), which pickle as raw buffers. Every task deserializes the
-closure; the STRtree is built ONCE PER EXECUTOR PROCESS from it (lazy
-module-global keyed by the payload's crc32 fingerprint — the analog of the
-reference's compiled-query cache, pkg/parser/tspool/query.go:33-66, and its
-one-grammar-init-per-process discipline, pool.go:60-76).
+closure; the STRtree and the rings' y-band edge index (``RingBands``) are
+built ONCE PER EXECUTOR PROCESS from it (lazy module-global keyed by the
+payload's crc32 fingerprint — the analog of the reference's compiled-query
+cache, pkg/parser/tspool/query.go:33-66, and its one-grammar-init-per-process
+discipline, pool.go:60-76).
 
 Scale notes:
   * No shuffle, no skew sensitivity: mega-cell documents distribute over
@@ -22,8 +23,12 @@ Scale notes:
   * The envelope probe is a batch, level-wise STRtree descent: each Arrow
     batch walks the tree together, one numpy pass per level (depth ~log16 P)
     over the live (point, node) pairs, with no per-point Python. The refine
-    then ray-casts the c candidates per point (≤1 for non-overlapping admin
-    tiers), one vectorized pass per candidate polygon.
+    then ray-casts all candidate pairs of the batch in one vectorized pass:
+    each pair against only the edges in its point's y-band of each of the
+    polygon's rings (a few edges, not the ring's hundreds), so its cost
+    follows the number of pairs, not the number of polygons they touch.
+    Spark calls the kernel once per Arrow batch (at most 10k rows), so a
+    per-polygon step would be paid again in every batch.
   * If the polygon side ever outgrows broadcast (continent-scale cadastral
     data), the escape hatch is the cell-prefix range join (SURVEY.md §4) —
     not needed at admin-boundary cardinality.
@@ -40,9 +45,9 @@ from typing import NamedTuple
 import numpy as np
 import pandas as pd
 
-from core_spark.functions.geometry import STRtree, points_in_ring
+from core_spark.functions.geometry import RingBands, STRtree, expand_ranges
 
-# executor-global tree cache: {fingerprint: (tree, rings, admin_ids)}
+# executor-global index cache: {fingerprint: (tree, bands, ring_offsets, admin_ids)}
 _TREE_CACHE: dict[int, tuple] = {}
 
 
@@ -103,26 +108,23 @@ def polygon_payload(polygons: pd.DataFrame) -> tuple[PolygonPayload, int]:
 
 
 def _build(payload: PolygonPayload | list[tuple[int, list]], key: int):
-    """payload -> (tree, per-polygon ring views, ids), cached under ``key``.
+    """payload -> (tree, ring bands, ring offsets, ids), cached under ``key``.
 
     A list payload, [(admin_id, ring | [outer, hole...])], is packed first.
-    Multi-ring polygons use even-odd parity (crossings XOR across rings), so
-    holes fall out of the same ray-cast rule. Antimeridian-crossing polygons
-    are pre-split at ingestion into two fragments sharing one admin_id —
-    duplicate ids in the payload are deliberate and handled by the
-    lowest-id tie-break (identical id either way).
+    The tree indexes each polygon's outer-ring envelope; ``RingBands`` holds
+    every ring's edges, banded by y. Multi-ring polygons use even-odd parity
+    (crossings summed over all rings), so holes fall out of the same
+    ray-cast rule. Antimeridian-crossing polygons are pre-split at ingestion
+    into two fragments sharing one admin_id — duplicate ids in the payload
+    are deliberate and handled by the lowest-id tie-break (identical id
+    either way).
     """
     hit = _TREE_CACHE.get(key)
     if hit is not None:
         return hit
     ids, ro, vo, xy = _pack(payload)
-    rings = [xy[s:e] for s, e in zip(vo[:-1].tolist(), vo[1:].tolist())]
-    ringsets = [rings[s:e] for s, e in zip(ro[:-1].tolist(), ro[1:].tolist())]
-    boxes = np.empty((len(ringsets), 4), dtype=np.float64)
-    for i, rs in enumerate(ringsets):
-        boxes[i, :2] = rs[0].min(axis=0)
-        boxes[i, 2:] = rs[0].max(axis=0)
-    built = (STRtree(boxes), ringsets, ids)
+    bands = RingBands(vo, xy)
+    built = (STRtree(bands.boxes[ro[:-1]]), bands, ro, ids)
     _TREE_CACHE.clear()  # one active polygon set per executor
     _TREE_CACHE[key] = built
     return built
@@ -139,6 +141,10 @@ def match_points(
     ``payload`` is a ``polygon_payload`` or a list of
     (admin_id, ring | [outer, hole...]); ``fp`` is its fingerprint (a list
     without one is packed to compute it).
+    One vectorized pass over the candidate pairs, whatever the number of
+    polygons they touch: each (point, polygon) pair from the tree expands to
+    the polygon's rings, each (pair, ring) to the edges of the y-band that
+    holds the point, and the pair's crossing count's parity says inside.
     Overlapping polygons resolve to the lowest admin_id —
     a deterministic tie-break (reference analog: deepest-config tie-break,
     pkg/parser/detection/detector.go:213-230).
@@ -146,28 +152,20 @@ def match_points(
     if fp is None:
         payload = _pack(payload)
         fp = _fingerprint(payload)
-    tree, rings, ids = _build(payload, fp)
+    tree, bands, ro, ids = _build(payload, fp)
     out = np.full(len(lons), -1, dtype=np.int64)
     lons = np.asarray(lons, np.float64)
     lats = np.asarray(lats, np.float64)
     pi, ii = tree.query_points(lons, lats)
-    if len(pi) == 0:
-        return out
-    # group candidate pairs by polygon -> one vectorized ray-cast per polygon
-    order = np.argsort(ii, kind="stable")
-    pi, ii = pi[order], ii[order]
-    starts = np.flatnonzero(np.r_[True, ii[1:] != ii[:-1]])
-    bounds = np.r_[starts, len(ii)]
-    for s, e in zip(bounds[:-1], bounds[1:]):
-        poly = int(ii[s])
-        pts = pi[s:e]
-        inside = np.zeros(len(pts), dtype=bool)
-        for ring in rings[poly]:  # even-odd across outer + holes
-            inside ^= points_in_ring(lons[pts], lats[pts], ring)
-        hit_pts = pts[inside]
-        aid = int(ids[poly])
-        cur = out[hit_pts]
-        out[hit_pts] = np.where((cur == -1) | (aid < cur), aid, cur)
+    # every (pair, ring), outer ring and holes; even-odd over all crossings
+    pair, ring = expand_ranges(ro[ii], ro[ii + 1] - ro[ii])
+    pts = pi[pair]
+    crossed = pair[bands.crossings(lons[pts], lats[pts], ring)]
+    inside = (np.bincount(crossed, minlength=len(pi)) & 1).astype(bool)
+    hit_pts = pi[inside]
+    lowest = np.full(len(lons), np.iinfo(np.int64).max)
+    np.minimum.at(lowest, hit_pts, ids[ii[inside]])
+    out[hit_pts] = lowest[hit_pts]
     return out
 
 

@@ -13,15 +13,19 @@ import pytest
 
 from core_spark.data import synth
 from core_spark.data.polygons import admin_polygons, edges_sql_values, gen_polygon
+from core_spark.functions import geometry
 from core_spark.functions.geometry import (
+    RingBands,
     STRtree,
     haversine_m,
     point_in_ring,
     points_in_ring,
+    ray_crossings,
     ring_envelope,
     ring_to_wkt,
     wkt_to_ring,
 )
+from core_spark.operators import pip
 from core_spark.operators.knn import guaranteed_radius_m, knn_bruteforce_pandas
 from core_spark.operators.pip import match_points, polygon_payload
 
@@ -385,6 +389,181 @@ class TestPackedPayload:
         vertices = len(packed.xy)
         assert vertices == sum(len(r) for rs in polys["rings"] for r in rs)
         assert len(cloudpickle.dumps(packed)) <= 16 * vertices + 4096
+
+
+def _owners_by_polygon(lons, lats, payload) -> np.ndarray:
+    """Reference owner per point: polygon by polygon, the points in its outer
+    ring's closed envelope are ray-cast by ``points_in_ring`` ring by ring
+    (even-odd); the lowest admin_id wins, -1 if none."""
+    out = np.full(len(lons), -1, dtype=np.int64)
+    for aid, rings in sorted(payload, key=lambda e: e[0], reverse=True):
+        rings = [np.asarray(r, dtype=np.float64) for r in rings]
+        (x0, y0), (x1, y1) = rings[0].min(axis=0), rings[0].max(axis=0)
+        idx = np.flatnonzero((x0 <= lons) & (lons <= x1) & (y0 <= lats) & (lats <= y1))
+        inside = np.zeros(len(idx), dtype=bool)
+        for ring in rings:
+            inside ^= points_in_ring(lons[idx], lats[idx], ring)
+        out[idx[inside]] = aid
+    return out
+
+
+def _pip_case(name):
+    """(list-form payload, lons, lats) for the batch-size tests."""
+    rng = np.random.default_rng(sum(map(ord, name)))
+    if name == "hex_polygons":
+        from perfbench.workloads import gen_points, hex_polygons
+
+        _, lats, lons = gen_points(12_000, 0)
+        return TestPackedPayload._list_form(hex_polygons()), lons, lats
+    if name == "admin_polygons_96":
+        polys = admin_polygons(96)
+        holes = np.asarray([np.asarray(rs[1]).mean(axis=0)
+                            for rs in polys["rings"] if len(rs) > 1])
+        lons = np.r_[rng.uniform(-180, 180, 12_000), holes[:, 0]]
+        lats = np.r_[rng.uniform(-75, 75, 12_000), holes[:, 1]]
+        return TestPackedPayload._list_form(polys), lons, lats
+    payload, pts = _grid_polygons_and_points()
+    lons = np.r_[rng.integers(-26, 43, 6_000) / 2.0, rng.uniform(-13, 21, 6_000), pts[:, 0]]
+    lats = np.r_[rng.integers(18, 71, 6_000) / 2.0, rng.uniform(9, 35, 6_000), pts[:, 1]]
+    return payload, lons, lats
+
+
+class TestBatchSizeInvariance:
+    """Spark calls ``match_points`` once per Arrow batch: its answer for a
+    point must not depend on which other points share the call."""
+
+    @pytest.mark.parametrize("case", ["hex_polygons", "admin_polygons_96", "grid_579"])
+    def test_chunks_equal_whole_and_reference(self, case):
+        payload, lons, lats = _pip_case(case)
+        packed, fp = polygon_payload(TestPackedPayload._table(payload))
+        whole = match_points(lons, lats, packed, fp=fp)
+        want = _owners_by_polygon(lons, lats, payload)
+        assert whole.tolist() == want.tolist()
+        assert (whole != -1).sum() > len(lons) // 20
+        for size in (1, 7, 1_000, 10_000):
+            parts = [match_points(lons[s:s + size], lats[s:s + size], packed, fp=fp)
+                     for s in range(0, len(lons), size)]
+            assert np.concatenate(parts).tolist() == whole.tolist(), size
+
+    def test_refine_never_loops_over_polygons(self, monkeypatch):
+        """The refine tests candidate pairs in one pass; a per-polygon
+        ``points_in_ring`` loop coming back would raise here."""
+        def boom(*_):
+            raise AssertionError("per-polygon ray cast in match_points")
+
+        payload, pts = _grid_polygons_and_points()
+        want = _owners_by_polygon(pts[:, 0], pts[:, 1], payload)
+        monkeypatch.setattr(geometry, "points_in_ring", boom)
+        monkeypatch.setattr(geometry, "point_in_ring", boom)
+        monkeypatch.setattr(pip, "points_in_ring", boom, raising=False)
+        got = match_points(pts[:, 0], pts[:, 1], payload)
+        assert got.tolist() == want.tolist()
+
+
+def _comb(teeth: int, height: float) -> np.ndarray:
+    """Zig-zag comb: ``2 * teeth`` edges each spanning the full height, on a
+    base strip below."""
+    zig = [(float(i), height * (i % 2)) for i in range(2 * teeth + 1)]
+    return np.asarray(zig + [(2.0 * teeth, -1.0), (0.0, -1.0)])
+
+
+STAIRS = np.array([[0, 0], [4, 0], [4, 1], [3, 1], [3, 2], [2, 2], [2, 3],
+                   [1, 3], [1, 4], [0, 4]], dtype=np.float64)
+BAND_RINGS = {
+    "square": SQUARE,
+    "concave": CONCAVE,
+    "stairs": STAIRS,  # horizontal edges at every integer y
+    "skew": np.array([[0.1, 0.3], [3.7, 1.9], [2.2, 7.3], [0.9, 5.55], [-1.3, 2.05]]),
+    "zero_height": np.array([[0.0, 2.0], [3.0, 2.0], [6.0, 2.0]]),
+    "one_vertex": np.array([[1.0, 1.0]]),
+    "comb": _comb(20, 10.0),
+    "inf_vertex": np.array([[0.0, 0.0], [4.0, 0.0], [4.0, np.inf], [0.0, 3.0]]),
+    "nan_x_vertex": np.array([[0.0, 0.0], [4.0, 0.0], [np.nan, 3.0], [0.0, 3.0]]),
+    "nan_y_vertex": np.array([[0.0, 0.0], [4.0, 0.0], [4.0, np.nan], [0.0, 3.0]]),
+    "star": (lambda t: np.column_stack([3 + (2 + np.sin(5 * t)) * np.cos(t),
+                                        3 + (2 + np.sin(5 * t)) * np.sin(t)]))(
+        np.linspace(0, 2 * np.pi, 97, endpoint=False)),
+}
+
+
+def _band_probes(bands: RingBands, r: int, ring: np.ndarray) -> np.ndarray:
+    """y values that stress ring ``r``'s bands: every vertex y and each
+    computed band boundary, with both neighbouring doubles, plus values
+    above and below the ring, NaN and +-inf."""
+    ys = [ring[:, 1]]
+    if bands.inv_h[r] > 0:
+        ys.append(bands.ymin[r] + np.arange(bands.nb[r] + 1) / bands.inv_h[r])
+    ys = np.concatenate(ys)
+    ys = ys[np.isfinite(ys)]
+    return np.r_[ys, np.nextafter(ys, -np.inf), np.nextafter(ys, np.inf),
+                 -1e9, -50.0, 50.0, 1e9, np.nan, np.inf, -np.inf]
+
+
+class TestRingBands:
+    """``RingBands.crossings`` finds exactly the crossings a full-ring scan
+    finds, so its parity equals ``points_in_ring``."""
+
+    @staticmethod
+    def _index():
+        rings = list(BAND_RINGS.values())
+        vo = np.cumsum([0] + [len(r) for r in rings])
+        return rings, RingBands(vo, np.vstack(rings))
+
+    def test_crossings_equal_full_scan(self):
+        rings, bands = self._index()
+        xs = np.r_[np.linspace(-2.0, 8.0, 21), 3.0 + 1e-12, np.nan, np.inf, -np.inf]
+        for r, ring in enumerate(rings):
+            ys = _band_probes(bands, r, ring)
+            px, py = np.repeat(xs, len(ys)), np.tile(ys, len(xs))
+            got = np.bincount(bands.crossings(px, py, np.full(len(px), r)),
+                              minlength=len(px))
+            x0, y0 = ring[:, 0], ring[:, 1]
+            full = ray_crossings(px[:, None], py[:, None], x0, y0,
+                                 np.roll(x0, -1), np.roll(y0, -1)).sum(axis=1)
+            name = list(BAND_RINGS)[r]
+            assert got.tolist() == full.tolist(), name
+            assert ((got & 1) == 1).tolist() == points_in_ring(px, py, ring).tolist(), name
+            assert (got > 0).any() or name in ("zero_height", "one_vertex"), name
+
+    def test_band_layout(self):
+        rings, bands = self._index()
+        edges = np.array([len(r) for r in rings])
+        per_ring = np.add.reduceat(np.diff(bands.ptr), bands.band_start)
+        assert (per_ring <= RingBands.MAX_ENTRIES_PER_EDGE * edges).all()
+        names = list(BAND_RINGS)
+        # the comb's full-height edges force the halving; a skew ring keeps
+        # one band per edge, and a ring of zero or non-finite height has one
+        comb = names.index("comb")
+        assert 1 < bands.nb[comb] < edges[comb] // 2
+        assert bands.nb[names.index("skew")] == edges[names.index("skew")]
+        for name in ("zero_height", "one_vertex", "inf_vertex", "nan_y_vertex"):
+            assert bands.nb[names.index(name)] == 1, name
+        # horizontal edges are never registered
+        stairs = names.index("stairs")
+        s = bands.band_start[stairs]
+        registered = set(bands.edges[bands.ptr[s]:bands.ptr[s + bands.nb[stairs]]].tolist())
+        first = int(np.cumsum([0] + [len(r) for r in rings])[stairs])
+        assert registered == {first + e for e in range(1, len(STAIRS), 2)}
+
+    def test_match_points_on_band_edge_cases(self):
+        """The same rings as polygons (one of them holed by the zero-height
+        ring), points on vertex ys, band boundaries, outside every ring and
+        non-finite: ``match_points`` equals the per-polygon reference."""
+        # no NaN vertices here: a NaN envelope spreads to every STRtree
+        # ancestor box and blanks the whole table
+        names = [n for n in BAND_RINGS if not n.startswith("nan")]
+        payload = [(10 + i, [BAND_RINGS[n].tolist()]) for i, n in enumerate(names)]
+        payload.append((5, [BAND_RINGS["square"].tolist(),
+                            (BAND_RINGS["zero_height"] * [0.5, 1.0]).tolist()]))
+        _, bands = self._index()
+        ys = np.unique(np.concatenate([_band_probes(bands, r, ring) for r, ring in
+                                       enumerate(BAND_RINGS.values())]))
+        xs = np.r_[np.linspace(-2.0, 8.0, 41), np.nan, np.inf, -np.inf]
+        lons, lats = np.repeat(xs, len(ys)), np.tile(ys, len(xs))
+        packed, fp = polygon_payload(TestPackedPayload._table(payload))
+        got = match_points(lons, lats, packed, fp=fp)
+        assert got.tolist() == _owners_by_polygon(lons, lats, payload).tolist()
+        assert len(set(got.tolist())) > 5
 
 
 class TestHaversine:
