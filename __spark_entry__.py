@@ -734,10 +734,9 @@ def q_ann_ivf_recall(spark, sf_dir):
 
 
 def q_sessionize(spark, sf_dir):
-    """§2.10 stateful-operator seam (batch twin): gap-based sessionization
-    via window composition; the applyInPandasWithState streaming variant is
-    tested equal in tests/test_sessions.py."""
-    from core_spark.streaming.sessions import sessionize_batch
+    """Gap-based sessionization via window composition (lag -> gap flag ->
+    running sum = session id -> groupBy)."""
+    from core_spark.operators.sessions import sessionize_batch
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")

@@ -188,8 +188,9 @@ class STRtree:
         self.levels = [level]
         while level.shape[1] > 1:
             starts = np.arange(0, level.shape[1], cap)
-            level = np.vstack([np.minimum.reduceat(level[:2], starts, axis=1),
-                               np.maximum.reduceat(level[2:], starts, axis=1)])
+            # fmin/fmax skip NaN: one NaN leaf box must not blank its ancestors
+            level = np.vstack([np.fmin.reduceat(level[:2], starts, axis=1),
+                               np.fmax.reduceat(level[2:], starts, axis=1)])
             self.levels.append(level)
         self.levels.reverse()  # levels[0] = root
 

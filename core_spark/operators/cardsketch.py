@@ -181,11 +181,9 @@ def hll_partials(
     df: DataFrame, group_col: str, key_sql: str, b: int = 8
 ) -> DataFrame:
     """(group, _b, _reg, _n): registers + row counts — the mergeable
-    partial a shard/day/micro-batch contributes. Merging = MAX(_reg) +
-    SUM(_n) per (group, _b), which is exactly what a re-application of
-    the same hash-agg over unioned partials computes — so the reduction
-    is a CONTRACTION in the streaming-ledger sense (batch-local
-    application never loses information the global fold needs)."""
+    partial a shard/day contributes. Merging = MAX(_reg) + SUM(_n) per
+    (group, _b), which is exactly what a re-application of the same
+    hash-agg over unioned partials computes."""
     bucket, rank = _hll_exprs(key_sql, b, "spark")
     return (
         df.select(
@@ -196,12 +194,6 @@ def hll_partials(
         .groupBy(group_col, "_b")
         .agg(F.max("_rank").alias("_reg"), F.count("*").alias("_n"))
     )
-
-
-def merge_hll_partials(partials: DataFrame, group_col: str) -> DataFrame:
-    """Fold unioned shard partials back into one register table."""
-    return partials.groupBy(group_col, "_b").agg(
-        F.max("_reg").alias("_reg"), F.sum("_n").alias("_n"))
 
 
 def hll_sketch_from_partials(
@@ -242,8 +234,7 @@ def hll_sketch(
     is bounded by 2^61. ``hll_reg_fp`` pins the registers themselves
     (sorted "bucket:reg" string, md5'd; empties implied). Composition:
     :func:`hll_partials` → :func:`hll_sketch_from_partials`, so the
-    same rollup serves batch, shard-merge, and the streaming ledger
-    twin identically.
+    same rollup serves one batch and a shard merge identically.
     """
     return hll_sketch_from_partials(
         hll_partials(df, group_col, key_sql, b), group_col, b)

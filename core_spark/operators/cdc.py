@@ -44,37 +44,13 @@ _OPS = ("I", "U", "D")
 
 def _collapse(c: DataFrame) -> DataFrame:
     """(k, op, seq, cval) winners of a normalized change set — the
-    per-key struct-max. Seq-PRESERVING and schema-preserving, so the
-    collapse is idempotent and associative: collapsing per micro-batch
-    then re-collapsing the union equals one global collapse — the
-    contraction property the streaming ledger twin rides."""
+    per-key struct-max."""
     return (
         c.groupBy("k")
         .agg(F.expr(
             "max(named_struct('seq', seq, 'op', op, 'v', cval))"
         ).alias("w"))
         .selectExpr("k", "w.op AS op", "w.seq AS seq", "w.v AS cval")
-    )
-
-
-def collapse_changes(
-    changes: DataFrame,
-    key_col: str = "key",
-    val_col: str = "val",
-) -> DataFrame:
-    """Public per-batch reducer for the streaming ledger: collapse a
-    change batch to its per-key winners, SAME (key, op, seq, val)
-    schema as the input — associative, so batch-local collapse +
-    ledger re-collapse ≡ one global collapse (pytest-pinned against
-    the one-shot batch merge)."""
-    c = changes.where(
-        F.col(key_col).isNotNull() & F.col("seq").isNotNull()
-    ).selectExpr(
-        f"{key_col} AS k", "op", "CAST(seq AS BIGINT) AS seq",
-        f"{val_col} AS cval",
-    )
-    return _collapse(c).selectExpr(
-        f"k AS {key_col}", "op", "seq", f"cval AS {val_col}"
     )
 
 

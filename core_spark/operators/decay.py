@@ -22,10 +22,9 @@ a half-life window the weight is constant, stepping by exactly 1/2
 at each boundary. True smooth exponential decay is the float
 alternative when bit-reproducibility doesn't matter.
 
-Mergeable/streaming: at fixed T the state is a plain SUM — partition-
-and shard-invariant by construction. Advancing the horizon T → T+h
-is decayed_scaled DIV 2 per key, exact while the scale headroom
-lasts; the streaming ledger keeps (key, T, decayed_scaled).
+Mergeable: at fixed T the state is a plain SUM — partition- and
+shard-invariant by construction. Advancing the horizon T → T+h is
+decayed_scaled DIV 2 per key, exact while the scale headroom lasts.
 
 Scale shape: one codegen'd weight projection + ONE uniform-key
 hash-agg; the horizon T is a 1-row broadcast (max t) unless the

@@ -29,10 +29,6 @@ upstream removes mega-host skew at the DOCUMENT level; here each url's
 row count is its recrawl count, bounded by crawl policy). No window
 carries state beyond a url's own snapshots.
 
-The at-scale alternative for append-only ingestion is the streaming
-ledger (streaming/incremental.py) + periodic interval rebuild of touched
-urls only; this operator is the batch/backfill path.
-
 No reference counterpart (specvital/core has no temporal subsystem);
 SCD2 semantics follow Kimball's published dimensional-modeling
 definition.

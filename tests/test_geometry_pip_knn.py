@@ -279,6 +279,24 @@ class TestMatchPoints:
         )
         assert got.tolist() == [7, 7, -1]
 
+    def test_nan_polygon_matches_nothing_and_blanks_nothing(self):
+        """A NaN vertex makes its own polygon match nothing; the tree's parent
+        boxes skip its NaN envelope, so every other polygon still matches."""
+        nan_square = [(np.nan, 0.0), (3.0, 0.0), (3.0, 1.0), (2.0, 1.0)]
+        unit = [(0.0, 0.0), (1.0, 0.0), (1.0, 1.0), (0.0, 1.0)]
+        got = match_points(np.array([0.5, 2.5]), np.array([0.5, 0.5]),
+                           [(1, [unit]), (2, [nan_square])])
+        assert got.tolist() == [1, -1]
+        # a multi-level tree: 300 disjoint squares, with and without the NaN one
+        squares = [(i, [[(x, y), (x + 0.9, y), (x + 0.9, y + 0.9), (x, y + 0.9)]])
+                   for i, (x, y) in enumerate((x, y) for x in range(20) for y in range(15))]
+        rng = np.random.default_rng(5)
+        lons, lats = rng.uniform(-1, 21, 20_000), rng.uniform(-1, 16, 20_000)
+        want = match_points(lons, lats, squares)
+        assert (want != -1).sum() > 10_000
+        got = match_points(lons, lats, squares[:150] + [(999, [nan_square])] + squares[150:])
+        assert got.tolist() == want.tolist()
+
     def test_matches_bruteforce_on_corpus(self):
         polys = admin_polygons(96)
         payload = [(int(r.admin_id), [list(ring) for ring in r.rings]) for r in polys.itertuples()]

@@ -103,3 +103,56 @@ def test_rejects_bad_registry():
     ):
         with pytest.raises(ValueError):
             sql_route_queries("SELECT 1", bad)
+
+
+@pytest.mark.spark
+class TestStreamingPercolation:
+    def test_stream_routing_matches_batch(self, spark, tmp_path):
+        """route_queries is a pure map+explode (stateless), so the
+        streaming twin is foreachBatch-free: readStream -> the SAME
+        operator -> append sink, no watermark, no state. Stream output
+        over 3 incremental files == one-shot batch routing, and the
+        registry veto must fire identically across file boundaries."""
+        from core_spark.operators.percolate import route_queries
+
+        queries = [
+            ("q_spark", ["spark", "window"], []),
+            ("q_sort", ["sort", "merge"], ["slow"]),
+        ]
+        rows = [
+            (1, "spark window sort merge"),
+            (2, "spark sort slow merge"),
+            (3, "window spark"),
+            (4, "sort merge"),
+            (5, "sort"),
+            (6, None),
+        ]
+        input_dir = str(tmp_path / "in")
+        for i, (d, t) in enumerate(rows):
+            spark.createDataFrame([(d, t)], "doc_id long, text string") \
+                .coalesce(1).write.mode("append").parquet(input_dir)
+
+        out_dir = str(tmp_path / "routed")
+        stream = spark.readStream.schema("doc_id long, text string") \
+            .option("maxFilesPerTrigger", 1).parquet(input_dir)
+        q = (
+            route_queries(stream, queries)
+            .writeStream.format("parquet")
+            .option("path", out_dir)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+
+        got = {
+            (r["doc_id"], r["query_name"])
+            for r in spark.read.parquet(out_dir).collect()
+        }
+        batch = spark.read.parquet(input_dir)
+        want = {
+            (r["doc_id"], r["query_name"])
+            for r in route_queries(batch, queries).collect()
+        }
+        assert got == want
+        assert (1, "q_sort") in got and (2, "q_sort") not in got

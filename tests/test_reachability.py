@@ -1,0 +1,188 @@
+"""Reachability gate: every top-level def or class in ``core_spark`` is called
+from a root, or is a named reference model or test helper.
+
+Roots are the code that runs outside the test suite: ``__spark_entry__.py``
+(the query registry), ``bench.py``, ``scripts/*.py``, ``perfbench/*.py``, and
+the module-level code of every ``core_spark`` module except its imports. A
+def is live when a root or a live def names it. Names are NAME tokens from
+``tokenize`` plus the names in f-string replacement fields, so docstrings,
+comments and plain strings do not count as uses. The match is by bare name:
+a def is live if anything live uses its name.
+
+A def that only tests call fails the gate: delete it, wire it to a root, or
+add it to ``TEST_ONLY`` with the reason it stays.
+"""
+
+from __future__ import annotations
+
+import ast
+import os
+import re
+import time
+import tokenize
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+_NO_CALLER = "feature with no caller yet (ROADMAP direction 12)"
+
+#: Defs no root reaches, kept on purpose: "module.name" -> why it stays.
+TEST_ONLY: dict[str, str] = {
+    "functions.configparse.parse_config": _NO_CALLER,
+    "functions.configparse.scan_configs": _NO_CALLER,
+    "functions.configparse.scope_depth": "helper of scan_configs",
+    "functions.configparse.scopes_to_rows": "helper of resolve_scopes",
+    "functions.geohash.geohash_py": "reference model of the SQL geohash",
+    "functions.geometry.haversine_m": "reference distance for the kNN goldens",
+    "functions.geometry.point_in_ring": "scalar reference ray cast",
+    "functions.geometry.points_in_ring": "vectorized reference ray cast for match_points",
+    "functions.geometry.wkt_to_ring": "test helper: polygon WKT -> ring",
+    "functions.geoparse.find_places": "reference model of with_places",
+    "functions.geoparse.sql_dec_mentions": "DuckDB oracle of the decimal-pair scan",
+    "functions.geoparse.with_places": _NO_CALLER,
+    "functions.hexgrid.cell_to_center": "numpy reference of the hexgrid SQL",
+    "functions.hexgrid.cell_to_children": "numpy reference of the hexgrid SQL",
+    "functions.hexgrid.cell_to_parent": "numpy reference of the hexgrid SQL",
+    "functions.hexgrid.edge_length_m": "numpy reference of the hexgrid SQL",
+    "functions.hexgrid.kring": "numpy reference of the hexgrid SQL",
+    "functions.jstest.count_tests": "reference-parity helper of parse_js_tests",
+    "functions.jstest.detect_language": "reference-parity helper of parse_js_tests",
+    "functions.jstest.format_each_name": "reference-parity helper of parse_js_tests",
+    "functions.pii.with_pii": _NO_CALLER,
+    "functions.s2.cell_center_latlon": "numpy reference of the S2 SQL",
+    "functions.s2.face_uv_to_xyz": "helper of cell_center_latlon",
+    "functions.s2.level_of": "numpy reference of the S2 SQL",
+    "functions.s2.st_to_uv": "numpy reference of the S2 SQL",
+    "operators.bloomadmit.merge_bloom_words": "mergeability property of bloom_words",
+    "operators.c4clean.c4_clean": _NO_CALLER,
+    "operators.c4clean.sql_c4_clean": "DuckDB oracle of c4_clean",
+    "operators.cardsketch.estimate_distinct": "driver-side estimate from the oracled integers",
+    "operators.cardsketch.hll_estimate": "driver-side estimate from the oracled integers",
+    "operators.cardsketch.hll_registers": "mergeability property of the HLL sketch",
+    "operators.cardsketch.merge_hll_registers": "mergeability property of the HLL sketch",
+    "operators.cmsketch.merge_cms": "mergeability property of the count-min sketch",
+    "operators.dedup.embedding_dup_pairs": _NO_CALLER,
+    "operators.dedup.lsh_recall_bound": "analytic bound the LSH recall tests check",
+    "operators.dedup.simhash64": "pure kernel of the SimHash property tests",
+    "operators.detect.confidence_dist": _NO_CALLER,
+    "operators.detect.imports_col": _NO_CALLER,
+    "operators.detect.resolve_scopes": _NO_CALLER,
+    "operators.frontier.frontier_stats": _NO_CALLER,
+    "operators.gopherrules.gopher_gate": _NO_CALLER,
+    "operators.gopherrules.sql_gopher_gate": "DuckDB oracle of gopher_gate",
+    "operators.hilbert.hilbert_d2xy_py": "reference inverse walk for the adjacency test",
+    "operators.hilbert.hilbert_py": "reference model of the SQL Hilbert key",
+    "operators.hilbert.layout_by_hilbert": _NO_CALLER,
+    "operators.inventory.inventory_counts": _NO_CALLER,
+    "operators.knn.guaranteed_radius_m": "analytic bound the kNN tests check",
+    "operators.knn.knn_bruteforce_pandas": "reference model for the kNN goldens",
+    "operators.linkgraph.hits_bound": "analytic bound the HITS tests check",
+    "operators.multimodal.with_media_metadata": _NO_CALLER,
+    "operators.multimodal.with_thumbnail": _NO_CALLER,
+    "operators.redirects.sql_resolve_redirects": "DuckDB oracle of resolve_redirects",
+    "operators.sessions.sql_sessionize": "DuckDB oracle of sessionize_batch",
+    "operators.zonal.cells_to_boundaries": _NO_CALLER,
+    "operators.zorder.layout_by_zorder": _NO_CALLER,
+    "sources.geojson.read_geojson": _NO_CALLER,
+    "sources.ingest._empty_meta_pdf": "helper of walk_file_tree",
+    "sources.ingest._read_contents": "helper of walk_file_tree",
+    "sources.ingest._root_uri": "helper of read_file_tree",
+    "sources.ingest._walk_subtree": "helper of walk_file_tree",
+    "sources.ingest.glob_filter": _NO_CALLER,
+    "sources.ingest.glob_regex": "helper of glob_filter",
+    "sources.ingest.read_file_tree": _NO_CALLER,
+    "sources.ingest.test_file_candidates": _NO_CALLER,
+    "sources.ingest.walk_file_tree": _NO_CALLER,
+    "sources.ingest.write_snapshot": _NO_CALLER,
+    "sources.warc.build_warc": "test helper: writes WARC fixtures",
+    "sources.warc.read_warc": _NO_CALLER,
+}
+
+
+def _py_files(top: str, recurse: bool = True) -> list[str]:
+    out = []
+    for dirpath, dirs, files in os.walk(top):
+        dirs[:] = sorted(d for d in dirs if recurse and not d.startswith((".", "__")))
+        out += [os.path.join(dirpath, fn) for fn in sorted(files) if fn.endswith(".py")]
+    return out
+
+
+def _names(path: str) -> list[tuple[int, str]]:
+    """(line, name) of every NAME token in ``path``, and of every name in an
+    f-string's replacement fields (one STRING token before Python 3.12)."""
+    out = []
+    with open(path, "rb") as fh:
+        for t in tokenize.tokenize(fh.readline):
+            if t.type == tokenize.NAME:
+                out.append((t.start[0], t.string))
+            elif t.type == tokenize.STRING and "f" in re.match(r"\w*", t.string)[0].lower():
+                out += [(t.start[0], n.id if isinstance(n, ast.Name) else n.attr)
+                        for n in ast.walk(ast.parse(t.string, mode="eval"))
+                        if isinstance(n, (ast.Name, ast.Attribute))]
+    return out
+
+
+def _defs(path: str) -> tuple[dict[str, set[str]], set[str]]:
+    """({"module.name": names its body uses}, names module-level code uses).
+
+    A decorated def's span starts at its first decorator. Import statements
+    are not uses: a name counts only where the code that imports it uses it.
+    """
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read(), path)
+    module = os.path.relpath(path, os.path.join(ROOT, "core_spark"))[:-3].replace(os.sep, ".")
+    module = module.removesuffix(".__init__")
+    owner: dict[int, str | None] = {}
+    defs: dict[str, set[str]] = {}
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            key = f"{module}.{node.name}"
+            defs[key] = set()
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            key = None
+        else:
+            continue
+        first = min([node.lineno] + [d.lineno for d in getattr(node, "decorator_list", [])])
+        owner.update(dict.fromkeys(range(first, node.end_lineno + 1), key))
+    module_level = set()
+    for line, name in _names(path):
+        key = owner.get(line, "")  # "": module-level code, None: an import
+        if key:
+            defs[key].add(name)
+        elif key == "":
+            module_level.add(name)
+    return defs, module_level
+
+
+def unreached() -> set[str]:
+    """Top-level ``core_spark`` defs that no root reaches, as "module.name"."""
+    roots: set[str] = set()
+    for path in [os.path.join(ROOT, "__spark_entry__.py"), os.path.join(ROOT, "bench.py")] \
+            + _py_files(os.path.join(ROOT, "scripts"), recurse=False) \
+            + _py_files(os.path.join(ROOT, "perfbench"), recurse=False):
+        roots.update(name for _, name in _names(path))
+    uses: dict[str, set[str]] = {}
+    by_name: dict[str, list[str]] = {}
+    for path in _py_files(os.path.join(ROOT, "core_spark")):
+        defs, module_level = _defs(path)
+        uses.update(defs)
+        roots |= module_level
+        for key in defs:
+            by_name.setdefault(key.rsplit(".", 1)[1], []).append(key)
+    live: set[str] = set()
+    todo = list(roots)
+    while todo:
+        for key in by_name.get(todo.pop(), ()):
+            if key not in live:
+                live.add(key)
+                todo.extend(uses[key])
+    return set(uses) - live
+
+
+def test_only_listed_defs_are_unreached():
+    t = time.perf_counter()
+    dead = unreached()
+    assert time.perf_counter() - t < 5.0
+    new = sorted(dead - set(TEST_ONLY))
+    stale = sorted(set(TEST_ONLY) - dead)
+    assert not new, f"defs that only tests reach (delete them or wire them to a root): {new}"
+    assert not stale, f"TEST_ONLY entries that a root now reaches or that are gone: {stale}"

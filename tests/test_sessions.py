@@ -1,17 +1,11 @@
-"""Sessionization: batch window variant vs DuckDB oracle, and the
-applyInPandasWithState streaming variant vs the batch result."""
+"""Sessionization: the batch window variant vs the DuckDB oracle."""
 
 from __future__ import annotations
 
 import duckdb
-import pandas as pd
 import pytest
 
-from core_spark.streaming.sessions import (
-    sessionize_batch,
-    sessionize_stream,
-    sql_sessionize,
-)
+from core_spark.operators.sessions import sessionize_batch, sql_sessionize
 
 SF = "/root/testdata/sf0.001"
 
@@ -56,50 +50,3 @@ class TestSessionizeBatch:
             (20, 1, 4.0),
         ]
 
-
-@pytest.mark.spark
-class TestSessionizeStream:
-    def test_stream_closed_sessions_match_batch(self, spark, tmp_path):
-        """Feed the events table as a file stream; every session the batch
-        variant closes (has a successor event or watermark passes) must be
-        emitted identically by the stateful stream."""
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        ev = spark.read.parquet(f"{SF}/events.parquet").select(
-            "event_id", "ts", "user_id", "value"
-        )
-        src = str(tmp_path / "src")
-        ev.coalesce(2).write.parquet(src)
-
-        stream = spark.readStream.schema(
-            "event_id bigint, ts timestamp, user_id bigint, value double"
-        ).parquet(src)
-        q = (
-            sessionize_stream(stream, gap_minutes=30, watermark="0 seconds")
-            .writeStream.format("memory")
-            .queryName("sessions_out")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        got = (
-            spark.table("sessions_out")
-            .orderBy("user_id", "session_start")
-            .toPandas()
-        )
-        want = (
-            sessionize_batch(ev, gap_minutes=30)
-            .orderBy("user_id", "session_start")
-            .toPandas()
-        )
-        # the stream can only emit sessions already closed by a successor or
-        # by the final watermark; every emitted row must match the batch
-        # result exactly
-        assert len(got) > 0
-        merged = got.merge(
-            want,
-            on=["user_id", "session_start", "session_end", "n_events"],
-            how="left",
-            indicator=True,
-        )
-        assert (merged["_merge"] == "both").all()
