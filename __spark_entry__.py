@@ -57,6 +57,7 @@ from core_spark.operators.sampling import (
     sql_mixture_sample,
     sql_sample_quota,
 )
+from core_spark.operators.sessions import sql_sessionize
 from core_spark.operators.spandedup import sql_dedup_substrings
 from core_spark.operators.termstats import sql_distinctive_terms
 from core_spark.operators.tiles import sql_compact_cells
@@ -284,8 +285,8 @@ def q_dedup_embedding(spark, sf_dir):
     """Embedding-cosine near-dup, integer-exact oracled variant: quantized
     vectors + planted md5-noise near-dup copies (the raw table is random
     vectors with no near pairs), literal-hyperplane sketch blocking, exact
-    cross-multiplied integer cosine verify. The float-general operator is
-    dd.embedding_dup_pairs (pytest-gated); this one is bit-portable."""
+    cross-multiplied integer cosine verify, bit-portable between Spark and
+    DuckDB."""
     vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return dd.embedding_dup_pairs_int(vecs, dim=64, n_planes=8)
 
@@ -1251,8 +1252,8 @@ _DETECT_ARMS = [
 def q_framework_detect(spark, sf_dir):
     """D6/D7 over the REAL registry: per-framework snippets generated from
     doc_id run the full priority cascade (incl. the TestNG-over-JUnit5
-    collision via import arms and language filtering); the oracle emits the
-    expected framework from the generation rules."""
+    collision via priority order and language filtering); the oracle emits
+    the expected framework from the generation rules."""
     from pyspark.sql import functions as F
 
     from core_spark.operators.detect import default_registry, detect
@@ -1274,10 +1275,8 @@ def q_framework_detect(spark, sf_dir):
 
 def _sql_framework_detect_oracle() -> str:
     n = len(_DETECT_ARMS)
-    # detect_source per arm: testng/go-testing/pytest/vitest/kotest/rspec
-    # hit via content or import arms; every arm here fires its content
-    # battery except testng (import list isn't populated in this query, so
-    # testng matches via its import-looking CONTENT pattern)
+    # every arm here fires its content battery (testng via its
+    # import-looking CONTENT pattern)
     sources = {
         "jest": "content-pattern", "vitest": "content-pattern",
         "pytest": "content-pattern", "go-testing": "content-pattern",
@@ -9667,26 +9666,13 @@ REGISTRY: tuple[Query, ...] = (
         f"SELECT doc_id AS pt_id, lat, lon FROM ({_POINTS_SQL})",
         edges_sql_values(N_POLYGONS),
     )),
-    Query("sessionize", q_sessionize, lambda: """
+    Query("sessionize", q_sessionize, lambda: f"""
             SELECT user_id,
-                   CAST(FLOOR(epoch(MIN(ts))) AS BIGINT) AS start_s,
-                   CAST(FLOOR(epoch(MAX(ts))) AS BIGINT) AS end_s,
-                   COUNT(*) AS n_events,
-                   CAST(ROUND(SUM(value), 4) AS DOUBLE) AS total_value
-            FROM (
-              SELECT *, SUM(new_sess) OVER (PARTITION BY user_id
-                                            ORDER BY ts, event_id
-                                            ROWS UNBOUNDED PRECEDING) AS sess
-              FROM (
-                SELECT *, CASE WHEN prev_ts IS NULL
-                                 OR epoch(ts) - epoch(prev_ts) > 1800
-                          THEN 1 ELSE 0 END AS new_sess
-                FROM (SELECT user_id, ts, event_id, value,
-                             LAG(ts) OVER (PARTITION BY user_id
-                                           ORDER BY ts, event_id) AS prev_ts
-                      FROM events)
-              )
-            ) GROUP BY user_id, sess
+                   CAST(FLOOR(epoch(session_start)) AS BIGINT) AS start_s,
+                   CAST(FLOOR(epoch(session_end)) AS BIGINT) AS end_s,
+                   n_events,
+                   CAST(ROUND(total_value, 4) AS DOUBLE) AS total_value
+            FROM ({sql_sessionize("events")})
         """),
     Query("s2_assign", q_s2_assign,
           rows_only="S2 Hilbert cells have no SQL twin; dual-implementation "

@@ -1,10 +1,9 @@
-"""G2 — geoparsing: coordinate & place-mention extraction from text.
+"""G2 — geoparsing: coordinate-mention extraction from text.
 
 Three mention kinds:
   * ``dec``  — decimal pairs  ``40.712800, -74.006000``
   * ``geo``  — RFC-5870 URIs  ``geo:40.7128,-74.0060``
   * ``dms``  — DMS            ``40°26'46.0"N 79°58'56.0"W``
-plus gazetteer place names resolved against a broadcast lookup table.
 
 Two execution paths, same semantics:
   * JVM path (hot, 100-TB scale): `regexp_extract_all` Column expressions for
@@ -82,36 +81,6 @@ def parse_mentions(text: str | None) -> list[dict]:
             )
     out.sort(key=lambda r: (r["start"], r["kind"]))
     return out
-
-
-def find_places(text: str | None, names: list[str]) -> list[str]:
-    """Gazetteer mention scan (longest-name-first to avoid prefix shadowing)."""
-    if not text:
-        return []
-    found = []
-    for n in sorted(names, key=lambda s: (-len(s), s)):
-        if n in text:
-            found.append(n)
-    return sorted(found)
-
-
-def with_places(df, names: list[str], text_col: str = "text",
-                out_col: str = "places"):
-    """Gazetteer place-mention scan as a pure Column stage (no UDF).
-
-    ``names`` is the broadcast lookup table (small by definition); the scan
-    is `filter(array(<literals>), n -> instr(text, n) > 0)` — JVM-side,
-    whole-stage codegen, identical semantics to the `find_places` kernel
-    (longest-first ordering only matters for overlap dedup, which our
-    gazetteer avoids by construction — names are substring-free, synth.py).
-    Output: sorted array of matched names (deterministic).
-    """
-    from pyspark.sql import functions as F
-
-    ordered = sorted(names)
-    arr = F.array(*[F.lit(n) for n in ordered])
-    matched = F.filter(arr, lambda n: F.instr(F.col(text_col), n) > 0)
-    return df.withColumn(out_col, F.sort_array(matched))
 
 
 # ---------------------------------------------------------------------------

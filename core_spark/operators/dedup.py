@@ -13,8 +13,8 @@ for 10^12 documents and (where SQL-expressible) a DuckDB oracle emission:
                candidate pairs via 4-band exact-match blocking (any pair with
                Hamming distance <= 3 shares at least one of 4 16-bit bands —
                pigeonhole)
-  embedding    cosine near-dup over `array<float>` vectors: JVM dot product
-               via F.aggregate/zip_with (no Python in the hot path)
+  embedding    cosine near-dup over quantized vectors: integer dot
+               products via F.aggregate/zip_with (no Python in the hot path)
 
 Hash portability: every hash the oracle must reproduce is md5-derived
 (md5 -> first 15 hex digits -> BIGINT), identical in Spark and DuckDB —
@@ -927,7 +927,7 @@ def simhash_candidates(df, sim_col: str = "simhash", id_col: str = "doc_id",
 
 
 # ---------------------------------------------------------------------------
-# Embedding cosine near-dup (JVM dot product; no Python)
+# Cosine similarity (JVM dot product; no Python)
 # ---------------------------------------------------------------------------
 
 def sql_cosine(a: str, b: str) -> str:
@@ -939,70 +939,13 @@ def sql_cosine(a: str, b: str) -> str:
     return f"({dot} / ({na} * {nb}))"
 
 
-def embedding_dup_pairs(df, vec_col: str = "embedding", id_col: str = "vec_id",
-                        threshold: float = 0.95, n_planes: int = 8,
-                        dim: int | None = None):
-    """Cosine near-dup pairs via random-hyperplane LSH blocking + exact refine.
-
-    Hyperplanes are deterministic (splitmix64 of plane index — resume-safe).
-    Docs agreeing on the full sign-sketch land in one bucket; exact cosine
-    refines. Recall is per-bucket (sketch collisions); raise n_planes for
-    precision, lower for recall, or use brute_force_pairs as ground truth.
-
-    Pass ``dim`` (the embedding width) explicitly where known — omitting it
-    falls back to a one-row driver action at plan-build time, which is a
-    blocking round-trip a 10^12-row pipeline should not pay.
-    """
-    from pyspark.sql import functions as F
-
-    from core_spark.data.synth import u01
-
-    if dim is None:
-        dim = len(df.select(vec_col).first()[0])
-    planes = []
-    for p in range(n_planes):
-        v = u01(np.arange(dim, dtype=np.uint64), 500 + p) * 2.0 - 1.0
-        planes.append(v)
-
-    sketch_terms = []
-    for p, v in enumerate(planes):
-        arr = "array(" + ", ".join(f"CAST({x!r} AS DOUBLE)" for x in v) + ")"
-        dot = (
-            f"aggregate(zip_with({vec_col}, {arr}, (x, y) -> CAST(x AS DOUBLE) * y), "
-            f"CAST(0.0 AS DOUBLE), (s, v) -> s + v)"
-        )
-        sketch_terms.append(f"(CASE WHEN {dot} >= 0.0 THEN {1 << p} ELSE 0 END)")
-    sketch = " + ".join(sketch_terms)
-
-    s = df.select(id_col, vec_col).withColumn("_sketch", F.expr(sketch))
-    # eager checkpoint: the n_planes-dot-product sketch projection feeds
-    # both sides of the bucket self-join (self-join branches recompute)
-    s = s.transform(pin)
-    a, b = s.alias("a"), s.alias("b")
-    cos = sql_cosine(f"a.{vec_col}", f"b.{vec_col}")
-    return (
-        a.join(
-            b,
-            (F.col("a._sketch") == F.col("b._sketch"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .withColumn("cosine", F.expr(cos))
-        .filter(F.col("cosine") >= threshold)
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            "cosine",
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # Embedding cosine near-dup, integer-exact oracled variant
 # ---------------------------------------------------------------------------
 #
-# The float variant above is the general operator, but float dot products are
-# not bit-portable between Spark and DuckDB (summation order), so it can only
-# be pytest-gated. This variant makes the WHOLE pipeline exact integer math:
+# Float dot products are not bit-portable between Spark and DuckDB (summation
+# order), so a float sketch could only be pytest-gated. This operator makes
+# the WHOLE pipeline exact integer math:
 #
 #   1. quantize:  q_i = clamp(floor(x_i * 512), +-600)  — float->double->*2^k
 #      ->floor is IEEE-exact, so both engines produce identical BIGINTs;

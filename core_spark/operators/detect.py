@@ -1,15 +1,10 @@
-"""D1-D8 — the detection cascade: priority-ordered, early-return framework
-routing as pure Column expressions.
+"""D1, D4, D6-D8 — the detection cascade: priority-ordered, early-return
+framework routing as pure Column expressions.
 
-Reference semantics reproduced exactly (SURVEY.md §2.3):
+Reference semantics reproduced (SURVEY.md §2.3):
 
   D1  language detect        extension -> lang (when-chain)
-  D2  import extraction      regexp_extract_all -> array column
-  D3  import matcher         exact or 'prefix/' match vs definition patterns
   D4  strong-filename        confidence-100 filename patterns
-  D5  config-scope           broadcast scopes + window tie-break (deepest
-                             base dir, then longest path, then lexicographic
-                             — detector.go:213-230)
   D6  content matcher        regex battery, confidence 40
   D7  priority registry      Definitions sorted by (priority DESC, name ASC)
                              (framework/registry.go:50-71); the sort fixes
@@ -17,10 +12,11 @@ Reference semantics reproduced exactly (SURVEY.md §2.3):
                              determinism is compile-time — free on Spark
   D8  negative match         veto predicate evaluated before positive arms
 
-The early-return priority order is import > strong-filename > config-scope >
-content (detection/detector.go:14-21, ADR core/04); each source gets a
-``detect_source`` label and confidence, reproducing the reference's
-ConfidenceDist stats (scanner.go:116-118 -> A3 aggregation).
+The early-return order is strong-filename > content (detection/detector.go:
+14-21, ADR core/04); each source gets a ``detect_source`` label and
+confidence. The reference's import tier (D2/D3) and config-scope tier (D5)
+need an import list and a config-file discovery walk; the input here is a
+table of (path, text), so neither tier has an analog.
 
 Everything is whole-stage-codegen'd Column logic — at 10^12 rows the cascade
 costs one projection, no UDF, no shuffle.
@@ -28,7 +24,7 @@ costs one projection, no UDF, no shuffle.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 # ---------------------------------------------------------------------------
 # Registry (D7)
@@ -46,7 +42,6 @@ class Definition:
     name: str
     priority: int = 100
     languages: tuple[str, ...] = ()          # empty = any
-    import_patterns: tuple[str, ...] = ()    # exact or 'prefix/' match
     filename_patterns: tuple[str, ...] = ()  # strong, confidence 100
     content_patterns: tuple[str, ...] = ()   # confidence 40
     negative_patterns: tuple[str, ...] = ()  # veto (D8)
@@ -86,30 +81,7 @@ def lang_col(path_col: str):
 
 
 # ---------------------------------------------------------------------------
-# D2: import extraction
-# ---------------------------------------------------------------------------
-
-IMPORT_PATTERNS = {
-    # per-language import regexes (detection/extraction/*.go analogs)
-    "python": r"(?m)^\s*(?:from|import)\s+([A-Za-z_][\w\.]*)",
-    "javascript": r"""(?:from|require\()\s*['"]([^'"]+)['"]""",
-    "go": r'"([\w\./-]+)"',
-}
-
-
-def imports_col(text_col: str, lang: str):
-    from pyspark.sql import functions as F
-
-    pat = IMPORT_PATTERNS.get(lang)
-    if pat is None:
-        return F.array().cast("array<string>")
-    # F.lit for the pattern: regexes with quotes never round-trip through a
-    # SQL string literal
-    return F.regexp_extract_all(F.col(text_col), F.lit(pat), F.lit(1))
-
-
-# ---------------------------------------------------------------------------
-# Cascade assembly (D3, D4, D6, D8 in priority order; D5 separate join)
+# Cascade assembly (D4, D6, D8 in priority order)
 # ---------------------------------------------------------------------------
 
 def _content_cond(F, text_col: str, d: Definition):
@@ -129,14 +101,12 @@ def _veto_cond(F, text_col: str, path_col: str, d: Definition):
 
 
 def detect(df, registry: list[Definition], path_col: str = "url",
-           text_col: str = "text", imports_col_name: str | None = None,
-           lang_col_name: str | None = None):
+           text_col: str = "text", lang_col_name: str | None = None):
     """Append (framework, detect_source, confidence) via the full cascade.
 
-    Early-return is encoded by ONE when-chain whose arm order is:
-    every import arm (priority order), then every strong-filename arm, then
-    every content arm — first true arm wins, exactly detector.go:42-78.
-    Negative patterns guard their definition's arms (D8). When
+    Early-return is encoded by ONE when-chain whose arm order is: every
+    strong-filename arm (priority order), then every content arm — first
+    true arm wins, as in detector.go:42-78. Negative patterns guard their definition's arms (D8). When
     ``lang_col_name`` is given, definitions with a language list only
     compete for matching rows (registry.go FindByLanguage — minitest's
     `def test_*` must never beat pytest's on a Python file).
@@ -151,22 +121,6 @@ def detect(df, registry: list[Definition], path_col: str = "url",
             return cond & F.col(lang_col_name).isin(*d.languages)
         return cond
 
-    for d in defs:
-        veto = _veto_cond(F, text_col, path_col, d)
-        if d.import_patterns and imports_col_name:
-            cond = None
-            for p in d.import_patterns:
-                if p.endswith("/"):
-                    c = F.exists(
-                        F.col(imports_col_name),
-                        lambda x, pp=p: x.startswith(pp) | (x == pp[:-1]),
-                    )
-                else:
-                    c = F.array_contains(F.col(imports_col_name), p)
-                cond = c if cond is None else (cond | c)
-            if veto is not None:
-                cond = cond & ~veto
-            arms.append((lang_guard(d, cond), d.name, "import", 90))
     for d in defs:
         veto = _veto_cond(F, text_col, path_col, d)
         for p in d.filename_patterns:
@@ -199,57 +153,8 @@ def detect(df, registry: list[Definition], path_col: str = "url",
 
 
 # ---------------------------------------------------------------------------
-# D5: config-scope resolution (broadcast join + window tie-break)
-# ---------------------------------------------------------------------------
-
-def resolve_scopes(files_df, scopes_df, path_col: str = "path"):
-    """Best config scope per file: containment by base-dir prefix, tie-broken
-    by deepest base dir, then longest config path, then lexicographic config
-    path — the EXACT determinism rule of detector.go:213-230 as a window.
-
-    ``scopes_df``: (cfg_path, base_dir, framework) — tiny, broadcast.
-    """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    contained = files_df.join(
-        F.broadcast(scopes_df),
-        F.col(path_col).startswith(
-            F.when(F.col("base_dir") == "", F.lit("")).otherwise(
-                F.concat(F.col("base_dir"), F.lit("/"))
-            )
-        )
-        | (F.col("base_dir") == ""),
-        "left",
-    )
-    depth = F.when(
-        F.col("base_dir").isNull() | (F.col("base_dir") == ""), F.lit(0)
-    ).otherwise(F.size(F.split(F.col("base_dir"), "/")))
-    w = (
-        Window.partitionBy(path_col)
-        .orderBy(
-            depth.desc(),
-            F.length(F.col("cfg_path")).desc(),
-            F.col("cfg_path").asc(),
-        )
-    )
-    return (
-        contained.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
-def confidence_dist(df):
-    """A3: ConfidenceDist — count per detection source."""
-    from pyspark.sql import functions as F
-
-    return df.groupBy("detect_source").agg(F.count("*").alias("n"))
-
-
-# ---------------------------------------------------------------------------
 # The real framework registry (D6/D7): all 23 strategies with the
-# reference's actual import/filename/content patterns (each strategy's
+# reference's actual filename/content patterns (each strategy's
 # NewDefinition + content matcher battery; representative subset per
 # framework, Java-regex-safe). Priorities mirror framework/constants.go:
 # Specialized=200 (vitest, rspec, swift-testing, testng) > E2E=150
@@ -262,28 +167,24 @@ def default_registry() -> list[Definition]:
         Definition(
             name="vitest", priority=PRIORITY_SPECIALIZED,
             languages=("javascript", "typescript"),
-            import_patterns=("vitest", "vitest/"),
             content_patterns=(r"\bvi\.fn\s*\(", r"\bvi\.mock\s*\(",
                               r"import\s*\{[^}]*\}\s*from\s*['\"]vitest['\"]"),
         ),
         Definition(
             name="jest", priority=PRIORITY_GENERIC,
             languages=("javascript", "typescript"),
-            import_patterns=("@jest/globals", "@jest/", "jest"),
             content_patterns=(r"\bjest\.fn\s*\(", r"\bjest\.mock\s*\(",
                               r"\bjest\.spyOn\s*\(", r"\bjest\.clearAllMocks\s*\("),
         ),
         Definition(
             name="playwright", priority=PRIORITY_E2E,
             languages=("javascript", "typescript"),
-            import_patterns=("@playwright/test", "@playwright/test/"),
             content_patterns=(r"\btest\.describe\s*\(", r"\bpage\.goto\s*\(",
                               r"\bexpect\s*\(\s*page\s*[\).]"),
         ),
         Definition(
             name="cypress", priority=PRIORITY_E2E,
             languages=("javascript", "typescript"),
-            import_patterns=("cypress", "cypress/"),
             filename_patterns=(r"\.cy\.(js|ts|jsx|tsx)$",),
             content_patterns=(r"\bcy\.visit\s*\(", r"\bcy\.get\s*\(",
                               r"\bcy\.intercept\s*\("),
@@ -291,14 +192,12 @@ def default_registry() -> list[Definition]:
         Definition(
             name="mocha", priority=PRIORITY_GENERIC,
             languages=("javascript", "typescript"),
-            import_patterns=("mocha", "mocha/"),
             content_patterns=(r"\bthis\.timeout\s*\(", r"\bthis\.retries\s*\(",
                               r"\bmocha\.setup\s*\("),
         ),
         # -- Python ---------------------------------------------------------
         Definition(
             name="pytest", priority=PRIORITY_GENERIC, languages=("python",),
-            import_patterns=("pytest",),
             # NOTE: the reference's PytestFileMatcher (test_*.py, partial
             # confidence 20) is deliberately NOT a filename_pattern here —
             # detector.go:133-137 only consults DefiniteMatch (100)
@@ -310,14 +209,12 @@ def default_registry() -> list[Definition]:
         ),
         Definition(
             name="unittest", priority=PRIORITY_GENERIC, languages=("python",),
-            import_patterns=("unittest",),
             content_patterns=(r"unittest\.TestCase", r"self\.assertEqual\s*\(",
                               r"@unittest\.skip"),
         ),
         # -- Go / Rust / C++ ------------------------------------------------
         Definition(
             name="go-testing", priority=PRIORITY_GENERIC, languages=("go",),
-            import_patterns=("testing",),
             filename_patterns=(r"_test\.go$",),
             content_patterns=(r"func\s+Test[A-Z_]\w*\s*\(t\s+\*testing\.T\)",
                               r"\bt\.Run\s*\("),
@@ -329,7 +226,6 @@ def default_registry() -> list[Definition]:
         ),
         Definition(
             name="gtest", priority=PRIORITY_GENERIC, languages=("cpp",),
-            import_patterns=("gtest/gtest.h",),
             content_patterns=(r"#include\s*<gtest/gtest\.h>", r"\bTEST\s*\(",
                               r"\bTEST_F\s*\(", r"\bTEST_P\s*\(",
                               r"::testing::Test"),
@@ -337,30 +233,22 @@ def default_registry() -> list[Definition]:
         # -- JVM ------------------------------------------------------------
         Definition(
             name="testng", priority=PRIORITY_SPECIALIZED, languages=("java",),
-            import_patterns=("org.testng.annotations.Test", "org.testng.annotations.",
-                             "org.testng."),
             content_patterns=(r"import\s+org\.testng", r"@Test\s*\([^)]*enabled\s*=",
                               r"@DataProvider"),
         ),
         Definition(
             name="junit5", priority=PRIORITY_GENERIC, languages=("java", "kotlin"),
-            import_patterns=("org.junit.jupiter.api.Test", "org.junit.jupiter.api.",
-                             "org.junit.jupiter.params."),
             content_patterns=(r"@ParameterizedTest", r"@RepeatedTest",
                               r"@TestFactory", r"@Nested",
                               r"org\.junit\.jupiter"),
         ),
         Definition(
             name="junit4", priority=PRIORITY_GENERIC, languages=("java",),
-            import_patterns=("org.junit.Test", "org.junit.Before", "org.junit.After",
-                             "org.junit.Ignore"),
             content_patterns=(r"import\s+org\.junit\.Test\s*;", r"@BeforeClass",
                               r"@RunWith"),
         ),
         Definition(
             name="kotest", priority=PRIORITY_GENERIC, languages=("kotlin",),
-            import_patterns=("io.kotest.core", "io.kotest.core.spec",
-                             "io.kotest.core.spec.style"),
             content_patterns=(r":\s*FunSpec\s*\(", r":\s*StringSpec\s*\(",
                               r":\s*BehaviorSpec\s*\(", r":\s*DescribeSpec\s*\(",
                               r":\s*WordSpec\s*\(", r":\s*FreeSpec\s*\("),
@@ -368,19 +256,16 @@ def default_registry() -> list[Definition]:
         # -- .NET -----------------------------------------------------------
         Definition(
             name="nunit", priority=PRIORITY_GENERIC, languages=("csharp",),
-            import_patterns=("NUnit.Framework",),
             content_patterns=(r"\[TestFixture\]", r"\[TestCase\(",
                               r"using\s+NUnit\.Framework\s*;"),
         ),
         Definition(
             name="xunit", priority=PRIORITY_GENERIC, languages=("csharp",),
-            import_patterns=("Xunit",),
             content_patterns=(r"\[Fact\]", r"\[Theory\]", r"\[InlineData\(",
                               r"using\s+Xunit\s*;"),
         ),
         Definition(
             name="mstest", priority=PRIORITY_GENERIC, languages=("csharp",),
-            import_patterns=("Microsoft.VisualStudio.TestTools.UnitTesting",),
             content_patterns=(r"\[TestMethod\]", r"\[TestClass\]",
                               r"\[DataTestMethod\]",
                               r"using\s+Microsoft\.VisualStudio\.TestTools\.UnitTesting\s*;"),
@@ -388,27 +273,23 @@ def default_registry() -> list[Definition]:
         # -- Ruby -----------------------------------------------------------
         Definition(
             name="rspec", priority=PRIORITY_SPECIALIZED, languages=("ruby",),
-            import_patterns=("rspec", "rspec/"),
             filename_patterns=(r"_spec\.rb$",),
             content_patterns=(r"RSpec\.describe\b", r"RSpec\.configure\b",
                               r"\bshared_examples\b"),
         ),
         Definition(
             name="minitest", priority=PRIORITY_GENERIC, languages=("ruby",),
-            import_patterns=("minitest", "minitest/"),
             content_patterns=(r"Minitest::Test", r"\bdef\s+test_\w+",
                               r"\bmust_equal\b"),
         ),
         # -- PHP / Swift ----------------------------------------------------
         Definition(
             name="phpunit", priority=PRIORITY_GENERIC, languages=("php",),
-            import_patterns=("PHPUnit\\Framework\\TestCase",),
             content_patterns=(r"extends\s+TestCase", r"#\[Test\]",
                               r"\$this->assert\w+\("),
         ),
         Definition(
             name="swift-testing", priority=PRIORITY_SPECIALIZED, languages=("swift",),
-            import_patterns=("import Testing",),
             content_patterns=(r"#expect\(", r"#require\(", r"import\s+Testing",
                               r"@Suite\b"),
         ),

@@ -164,21 +164,3 @@ def extract_hints_stage(df, source_col: str = "source", path_col: str = "path"):
 
     return df.select(path_col, source_col).mapInPandas(run, HINTS_SCHEMA)
 
-
-def inventory_counts(inv):
-    """A1/A2 analog over the real kernels: per-path suite/test/status
-    counts (recursive counts are flat counts after flattening)."""
-    from pyspark.sql import functions as F
-
-    return (
-        inv.filter("err IS NULL")
-        .groupBy("path")
-        .agg(
-            F.sum(F.when(F.col("kind") == "suite", 1).otherwise(0)).alias("n_suites"),
-            F.sum(F.when(F.col("kind") == "test", 1).otherwise(0)).alias("n_tests"),
-            F.sum(F.when(F.col("status") == "skipped", 1).otherwise(0)).alias("n_skipped"),
-            F.sum(F.when(F.col("status") == "focused", 1).otherwise(0)).alias("n_focused"),
-            F.sum(F.when(F.col("status") == "todo", 1).otherwise(0)).alias("n_todo"),
-            F.sum(F.when(F.col("status") == "xfail", 1).otherwise(0)).alias("n_xfail"),
-        )
-    )

@@ -15,17 +15,11 @@ needs no sampling. An explicit salt stage (``salted_counts``) is provided
 for aggregations that cannot be decomposed that way, with the salt derived
 deterministically from the row key (never an RNG — resume-safe).
 
-Zonal vectorize (raster -> vector): cell ids back to hex boundary polygons
-via hexgrid.cell_to_boundary in an Arrow batch stage.
-
 Reference analog: framework histogram + confidence distribution
 (tests/integration/snapshot.go:44-47; pkg/parser/scanner.go:116-118).
 """
 
 from __future__ import annotations
-
-import numpy as np
-import pandas as pd
 
 from core_spark.functions import hexgrid as hx
 
@@ -105,21 +99,3 @@ def rasterize(spark, zonal_df, res: int, pixel_deg: float = 2.0,
         .selectExpr("ix", "iy", f"COALESCE({value_col}, 0) AS {value_col}")
     )
 
-
-BOUNDARY_SCHEMA = "cell bigint, boundary_wkt string"
-
-
-def cells_to_boundaries(df, cell_col: str):
-    """Vectorize: cell ids -> hex boundary polygons as WKT (Arrow stage)."""
-    def run(batches):
-        for pdf in batches:
-            cells = pdf[cell_col].to_numpy(dtype=np.int64)
-            wkts = []
-            for c in cells:
-                verts = hx.cell_to_boundary(int(c))
-                ring = ", ".join(f"{lon:.9f} {lat:.9f}" for lat, lon in verts)
-                first = verts[0]
-                wkts.append(f"POLYGON (({ring}, {first[1]:.9f} {first[0]:.9f}))")
-            yield pd.DataFrame({"cell": cells, "boundary_wkt": wkts})
-
-    return df.select(df[cell_col].alias(cell_col)).distinct().mapInPandas(run, BOUNDARY_SCHEMA)

@@ -1,35 +1,15 @@
-"""Sources & sinks — the reference's Source abstraction re-expressed as
-Spark readers (SURVEY.md §2.1 S1-S8).
+"""Sources — the corpus table scan and the reference's test-file candidate
+predicate (SURVEY.md §2.1).
 
-Reference model: a Source streams files under a root with path-escape
-protection (pkg/source/local.go:21-113), discovery walks skip vendored
-subtrees (pkg/parser/scanner.go:42-51), candidates are filtered by name
-pattern and size BEFORE being read (scanner.go:468-489). The Spark analogs
-keep the same ordering discipline: every cheap predicate is a pushed Column
-filter on the scan, applied before any UDF stage.
-
-| Reference | Here |
-| --- | --- |
-| LocalSource + discovery walk (S1, S3) | ``read_file_tree`` (binaryFile) |
-| skip-dir pruning (S4) | path predicates -> partition/file pruning |
-| glob patterns (F2) | ``pathGlobFilter`` read option + regexp filter |
-| max-file-size (F3) | ``length(content) <= cap`` filter |
-| corpus table scan (graft) | ``read_corpus`` (parquet / iceberg) |
-| JSON / snapshot sinks (S7, S8) | ``write_snapshot`` (deterministic order) |
+``read_corpus`` scans the web-pages table (parquet or Iceberg) that every
+registry query and the flagship read. ``sql_test_file_candidate`` is the
+reference's name filter (F1) as one portable SQL boolean over a path
+column, so a scan can drop non-candidates before any Arrow stage runs.
+The reference's filesystem discovery walk and config-scope phase
+(SURVEY.md §3.1 steps 1-2) have no analog here: the input is a table.
 """
 
 from __future__ import annotations
-
-import os
-import re
-
-DEFAULT_SKIP_DIRS = (
-    "node_modules", ".git", "vendor", "dist", ".next", "__pycache__", ".cache",
-)  # reference list: pkg/parser/scanner.go:42-51 ('coverage' is special:
-# skipped ONLY at the scan root — shouldSkipDir, scanner.go:656-659 — so
-# it is handled positionally in read_file_tree, not in this set)
-
-DEFAULT_MAX_FILE_SIZE = 10 * 1024 * 1024  # scanner.go:37
 
 CORPUS_SCHEMA_FIELDS = {
     "url": "string",
@@ -59,300 +39,6 @@ def read_corpus(spark, path: str, fmt: str = "parquet", validate: bool = True):
         if missing:
             raise ValueError(f"corpus schema mismatch, need {missing}, have {have}")
     return df
-
-
-def read_file_tree(
-    spark,
-    root: str,
-    glob: str | None = None,
-    skip_dirs: tuple[str, ...] = DEFAULT_SKIP_DIRS,
-    max_file_size: int = DEFAULT_MAX_FILE_SIZE,
-    recursive: bool = True,
-):
-    """binaryFile scan of a file tree with the reference's pruning rules.
-
-    Returns (path, modificationTime, length, content) rows. Skip-dir and
-    size predicates are Column filters — Catalyst prunes listed files before
-    content ever reaches Python (the S4 'never descend' analog; at the
-    listing level Spark still enumerates, so for vendored monorepos prefer a
-    ``pathGlobFilter`` that excludes the dirs outright).
-
-    CAVEAT (test_golden_adversarial.py): Hadoop's hidden-path filter
-    silently drops every path segment starting with ``_`` or ``.`` —
-    ``__tests__``, ``__mocks__``, ``.github`` never reach this scan, and
-    jest trees live in ``__tests__``. Repo-shaped trees should use
-    ``walk_file_tree`` (the reference's WalkDir analog, which also
-    implements the F4 symlink filter); this scan is for big plain trees
-    where distributed listing matters.
-    """
-    from pyspark.sql import functions as F
-
-    reader = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true" if recursive else "false")
-    )
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    df = reader.load(root)
-    for d in skip_dirs:
-        df = df.filter(~F.col("path").contains(f"/{d}/"))
-    # root-level 'coverage/' only (scanner.go:656-659: shouldSkipDir skips
-    # a coverage dir iff its parent IS the scan root; nested
-    # tests/*/coverage dirs are real content and stay)
-    df = df.filter(
-        ~F.col("path").rlike("^" + re.escape(_root_uri(root)) + "/coverage/")
-    )
-    df = df.filter(F.col("length") <= max_file_size)
-    return df
-
-
-def _root_uri(root: str) -> str:
-    """The scan root as the ``path`` column spells it, no trailing slash."""
-    uri = (
-        root if "://" in root or root.startswith("file:")
-        else "file:" + os.path.abspath(root)
-    )
-    return uri.rstrip("/")
-
-
-#: Arrow-safe source text from a binary content column: a plain CAST keeps
-#: invalid UTF-8 bytes inside the UTF8String, and the first Arrow transfer
-#: (mapInPandas kernels, toPandas) then throws MALFORMED_CHARACTER_CODING.
-#: make_valid_utf8 repairs invalid sequences to U+FFFD up front — the Go
-#: reference regex-scans raw bytes and never crashes on them; this is the
-#: Spark-side equivalent (test_golden_adversarial.py pins it end-to-end).
-SAFE_SOURCE_EXPR = "make_valid_utf8(CAST(content AS STRING))"
-
-
-def _empty_meta_pdf():
-    import pandas as pd
-
-    return pd.DataFrame(
-        {"path": pd.Series(dtype=object),
-         "modificationTime": pd.Series(dtype="datetime64[ns, UTC]"),
-         "length": pd.Series(dtype="int64")}
-    )
-
-
-def _read_contents(batches):
-    """mapInPandas stage: attach file bytes to (path, mtime, length) rows
-    (shared by both walk_file_tree modes); unreadable files yield NULL."""
-    for pdf in batches:
-        blobs = []
-        for pth in pdf["path"]:
-            fp = pth[5:] if pth.startswith("file:") else pth
-            try:
-                with open(fp, "rb") as fh:
-                    blobs.append(fh.read())
-            except OSError:
-                blobs.append(None)
-        pdf = pdf.copy()
-        pdf["content"] = blobs
-        yield pdf
-
-
-def _walk_subtree(
-    top: str,
-    skip_dirs: tuple[str, ...],
-    max_file_size: int,
-) -> list[tuple[str, object, int]]:
-    """Reference shouldSkipDir semantics over ONE subtree: named skip
-    dirs pruned everywhere, symlinked files skipped, symlinked dirs
-    never followed. ``coverage`` is NOT special here — the root-level
-    rule is the caller's job. Pure stdlib so it runs on executors."""
-    import datetime
-    import stat as statmod
-
-    out: list[tuple[str, object, int]] = []
-    for dirpath, dirnames, filenames in os.walk(top):
-        dirnames[:] = sorted(d for d in dirnames if d not in skip_dirs)
-        for fn in sorted(filenames):
-            p = os.path.join(dirpath, fn)
-            try:
-                st = os.lstat(p)
-            except OSError:
-                continue
-            if statmod.S_ISLNK(st.st_mode):  # F4: symlink filter
-                continue
-            if st.st_size > max_file_size:
-                continue
-            out.append((
-                "file:" + p,
-                datetime.datetime.fromtimestamp(
-                    st.st_mtime, tz=datetime.timezone.utc
-                ),
-                int(st.st_size),
-            ))
-    return out
-
-
-def walk_file_tree(
-    spark,
-    root: str,
-    glob: str | None = None,
-    skip_dirs: tuple[str, ...] = DEFAULT_SKIP_DIRS,
-    max_file_size: int = DEFAULT_MAX_FILE_SIZE,
-    distributed: bool = False,
-):
-    """Discovery walk + distributed content read — the faithful analog
-    of the reference's filepath.WalkDir scan (scanner.go:641-662):
-
-    - sees ``__tests__`` / ``__mocks__`` / ``.github`` and every other
-      ``_``/``.``-prefixed dir that Hadoop's hidden-path filter silently
-      drops from ``read_file_tree`` (only the named ``skip_dirs`` are
-      pruned, plus ``coverage`` at the scan root only);
-    - skips symlinked files and never follows symlinked dirs — the F4
-      symlink filter (TestScan_SymlinkSkipping parity);
-    - ``distributed=False`` (default): listing is sequential on the
-      driver exactly like the reference's walk — right for repo-shaped
-      trees. ``distributed=True``: the driver enumerates only the scan
-      root's immediate entries (where the root-only coverage rule and
-      root-level files live) and fans each top-level subtree out to the
-      executors, which walk AND read in one Arrow stage — the monorepo
-      path (a million-file tree costs the driver one readdir; executors
-      parallelize by subtree over the shared filesystem). Both modes
-      return identical rows (pinned in test_golden_adversarial.py).
-      Skew caveat: parallelism is by TOP-LEVEL subtree, so one huge
-      subtree serializes onto one task — for such trees pass that
-      subtree as the scan root instead (its own children then fan out).
-
-    Returns the same (path, modificationTime, length, content) schema as
-    ``read_file_tree``, with the same ``file:`` path prefix.
-    """
-    import datetime
-    import stat as statmod
-
-    import pandas as pd
-
-    root_abs = os.path.abspath(root)
-    if distributed:
-        subtrees: list[str] = []
-        listed: list[tuple[str, object, int]] = []
-        for name in sorted(os.listdir(root_abs)):
-            p = os.path.join(root_abs, name)
-            try:
-                st = os.lstat(p)
-            except OSError:
-                continue
-            if statmod.S_ISLNK(st.st_mode):
-                continue
-            if statmod.S_ISDIR(st.st_mode):
-                if name in skip_dirs or name == "coverage":
-                    continue  # root-only coverage rule lives here
-                subtrees.append(p)
-            elif st.st_size <= max_file_size:
-                listed.append((
-                    "file:" + p,
-                    datetime.datetime.fromtimestamp(
-                        st.st_mtime, tz=datetime.timezone.utc
-                    ),
-                    int(st.st_size),
-                ))
-        meta_schema = "path string, modificationTime timestamp, length long"
-        root_files = spark.createDataFrame(
-            pd.DataFrame(
-                listed, columns=["path", "modificationTime", "length"]
-            )
-            if listed
-            else _empty_meta_pdf(),
-            meta_schema,
-        )
-        tops = spark.createDataFrame(
-            [(t,) for t in subtrees], "top string"
-        ).repartition(max(1, len(subtrees)))
-
-        def _list(batches):
-            for pdf in batches:
-                rows = []
-                for top in pdf["top"]:
-                    rows.extend(_walk_subtree(top, skip_dirs, max_file_size))
-                yield pd.DataFrame(
-                    rows, columns=["path", "modificationTime", "length"]
-                ) if rows else _empty_meta_pdf()
-
-        meta = root_files.unionByName(tops.mapInPandas(_list, meta_schema))
-        if glob:
-            meta = glob_filter(meta, [glob], root_abs)
-        return meta.mapInPandas(
-            _read_contents,
-            "path string, modificationTime timestamp, length long,"
-            " content binary",
-        )
-    listed: list[tuple[str, object, int]] = []
-    for dirpath, dirnames, filenames in os.walk(root_abs):
-        dirnames[:] = sorted(
-            d for d in dirnames
-            if d not in skip_dirs
-            and not (d == "coverage" and dirpath == root_abs)
-        )
-        for fn in sorted(filenames):
-            p = os.path.join(dirpath, fn)
-            try:
-                st = os.lstat(p)
-            except OSError:
-                continue
-            if statmod.S_ISLNK(st.st_mode):  # F4: symlink filter
-                continue
-            if st.st_size > max_file_size:
-                continue
-            listed.append((
-                "file:" + p,
-                datetime.datetime.fromtimestamp(
-                    st.st_mtime, tz=datetime.timezone.utc
-                ),
-                int(st.st_size),
-            ))
-    meta = spark.createDataFrame(
-        pd.DataFrame(listed, columns=["path", "modificationTime", "length"])
-        if listed
-        else _empty_meta_pdf(),
-        "path string, modificationTime timestamp, length long",
-    )
-    if glob:
-        meta = glob_filter(meta, [glob], root_abs)
-    return meta.mapInPandas(
-        _read_contents,
-        "path string, modificationTime timestamp, length long, content binary",
-    )
-
-
-_GLOB_TOKEN = re.compile(r"\*\*/|\*\*|\*|\?|.", re.S)
-_GLOB_REGEX = {"**/": "(?:.*/)?", "**": ".*", "*": "[^/]*", "?": "[^/]"}
-
-
-def glob_regex(pattern: str) -> str:
-    """Doublestar glob -> regex over a root-relative path (F2): ``**/``
-    spans zero or more directories, ``**`` anything, while ``*`` and
-    ``?`` stay inside one path segment."""
-    return "".join(
-        _GLOB_REGEX.get(t) or re.escape(t) for t in _GLOB_TOKEN.findall(pattern)
-    )
-
-
-def glob_filter(df, patterns: list[str], root: str, path_col: str = "path"):
-    """Keep rows whose path, relative to the scan ``root``, matches any of
-    the doublestar ``patterns`` (one anchored regex Column predicate)."""
-    from pyspark.sql import functions as F
-
-    if not patterns:
-        return df
-    alts = "|".join(glob_regex(p) for p in patterns)
-    return df.filter(
-        F.col(path_col).rlike(f"^{re.escape(_root_uri(root))}/(?:{alts})$")
-    )
-
-
-def write_snapshot(df, path: str, order_by: list[str], fmt: str = "parquet"):
-    """Deterministic sink: explicit total order before writing (the
-    reference sorts results because goroutines finish out of order,
-    pkg/parser/scanner.go:558-564 — Spark tasks do too)."""
-    (
-        df.orderBy(*order_by)
-        .coalesce(1)
-        .write.mode("overwrite")
-        .format(fmt)
-        .save(path)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -490,10 +176,3 @@ def sql_test_file_candidate(path_col: str) -> str:
     ])
     return f"(CASE {cases} ELSE FALSE END)"
 
-
-def test_file_candidates(df, path_col: str = "path"):
-    """Filter to test-file candidates — a pure-Column predicate Catalyst
-    pushes to the scan (S4/F1 pushdown; assert PushedFilters in plans)."""
-    from pyspark.sql import functions as F
-
-    return df.filter(F.expr(sql_test_file_candidate(path_col)))

@@ -150,12 +150,6 @@ def test_parse_mentions_prefilter_matches_reference():
     assert all(all(v) for v in seen.values()), seen
 
 
-def test_gazetteer_find_places():
-    names = synth.GAZ_NAMES[:5]
-    t = f"visit {names[0]} and {names[3]} soon"
-    assert gp.find_places(t, synth.GAZ_NAMES) == sorted([names[0], names[3]])
-
-
 def test_sql_dec_mentions_duckdb_matches_kernel():
     con = duckdb.connect()
     con.register("docs", PDF[["url", "text"]])
@@ -229,16 +223,3 @@ def test_spark_pipeline_extract_geoparse_tiles(spark):
     assert sum(r["doc_count"] for r in z) == tiled.count()
     for r in z[:5]:
         assert sum(r["lang_counts"].values()) == r["doc_count"]
-
-
-@pytest.mark.spark
-def test_with_places_matches_kernel(spark):
-    """G2 gazetteer stage (JVM filter/instr) == pure find_places kernel."""
-    from core_spark.functions.geoparse import find_places, with_places
-
-    pdf = synth.webpages_pandas(200)[["doc_id", "text"]]
-    sdf = spark.createDataFrame(pdf)
-    got = {r.doc_id: list(r.places) for r in with_places(sdf, synth.GAZ_NAMES).collect()}
-    for r in pdf.itertuples():
-        assert got[r.doc_id] == find_places(r.text, synth.GAZ_NAMES)
-    assert any(got.values())  # corpus contains place mentions

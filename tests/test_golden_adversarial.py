@@ -1,8 +1,8 @@
-"""Adversarial fixture-tree shapes from the reference's integration
-territory (scanner_test.go:808-1154): root-vs-nested coverage dirs,
-fixture/mock exclusion, deep nesting, mixed-framework files, non-UTF8
-sources. Each runs the REAL distributed path (binaryFile scan ->
-filters -> Arrow inventory kernel / detect cascade), not unit shims.
+"""Adversarial source shapes from the reference's integration territory
+(scanner_test.go:808-1154): fixture/mock exclusion, deep nesting,
+mixed-framework files, non-UTF8 sources. Each builds a (path, source)
+frame in memory and runs the REAL distributed path (candidate filter ->
+Arrow inventory kernel / detect cascade), not unit shims.
 """
 
 from __future__ import annotations
@@ -10,54 +10,23 @@ from __future__ import annotations
 import pytest
 
 
-def _write_tree(root, files: dict[str, bytes]) -> None:
-    for rel, content in files.items():
-        p = root / rel
-        p.parent.mkdir(parents=True, exist_ok=True)
-        p.write_bytes(content)
-
-
 JEST_BYTES = b"import { it } from '@jest/globals'; it('test', () => {});"
 
 
 @pytest.mark.spark
-def test_root_coverage_skipped_nested_scanned(spark, tmp_path):
-    """scanner.go:656-659 / TestScan_NestedCoverageDirectory parity: a
-    root-level coverage/ dir is skipped, a nested tests/*/coverage/ dir
-    is real content and scanned."""
-    from core_spark.sources.ingest import read_file_tree
-
-    _write_tree(tmp_path, {
-        "coverage/report.test.ts": JEST_BYTES,
-        "tests/robustness/coverage/contract.test.ts": JEST_BYTES,
-    })
-    paths = [r["path"] for r in read_file_tree(spark, str(tmp_path)).collect()]
-    assert len(paths) == 1
-    assert paths[0].endswith("tests/robustness/coverage/contract.test.ts")
-
-
-@pytest.mark.spark
-def test_fixture_and_mock_dirs_excluded(spark, tmp_path):
+def test_fixture_and_mock_dirs_excluded(spark):
     """TestScan_FixtureExclusion parity: __fixtures__/__mocks__ content
     under __tests__ never becomes a test-file candidate; the sibling
-    component.test.ts does. Uses walk_file_tree — the binaryFile scan
-    cannot even SEE __tests__ (next test)."""
+    component.test.ts does."""
     from pyspark.sql import functions as F
 
-    from core_spark.sources.ingest import (
-        sql_test_file_candidate,
-        walk_file_tree,
-    )
+    from core_spark.sources.ingest import sql_test_file_candidate
 
-    _write_tree(tmp_path, {
-        "__tests__/__fixtures__/data.js": b"module.exports = {};",
-        "__tests__/__mocks__/module.js": b"module.exports = {};",
-        "__tests__/component.test.ts": JEST_BYTES,
-    })
-    tree = walk_file_tree(spark, str(tmp_path)).select(
-        F.regexp_replace("path", f"^file:{tmp_path}/", "").alias("path")
+    tree = spark.createDataFrame(
+        [("__tests__/__fixtures__/data.js",), ("__tests__/__mocks__/module.js",),
+         ("__tests__/component.test.ts",)],
+        "path string",
     )
-    assert tree.count() == 3  # the walk scans __tests__ and children
     cands = [
         r["path"]
         for r in tree.filter(F.expr(sql_test_file_candidate("path"))).collect()
@@ -66,64 +35,11 @@ def test_fixture_and_mock_dirs_excluded(spark, tmp_path):
 
 
 @pytest.mark.spark
-def test_hidden_path_filter_caveat_pinned(spark, tmp_path):
-    """The documented platform caveat, pinned in BOTH directions:
-    Hadoop's hidden-path filter makes the binaryFile scan drop
-    _/.-prefixed dirs (__tests__, .github) entirely, while
-    walk_file_tree sees them like the reference's WalkDir — and still
-    prunes the named skip dirs."""
-    from core_spark.sources.ingest import read_file_tree, walk_file_tree
-
-    _write_tree(tmp_path, {
-        "__tests__/a.test.ts": JEST_BYTES,
-        ".github/workflows/ci.yml": b"on: push",
-        "src/b.test.ts": JEST_BYTES,
-        "node_modules/pkg/c.test.ts": JEST_BYTES,  # skip dir, both scans
-    })
-    binary_paths = {
-        r["path"].rsplit("/", 2)[-2] + "/" + r["path"].rsplit("/", 1)[-1]
-        for r in read_file_tree(spark, str(tmp_path)).collect()
-    }
-    walk_paths = {
-        r["path"].replace(f"file:{tmp_path}/", "")
-        for r in walk_file_tree(spark, str(tmp_path)).collect()
-    }
-    assert binary_paths == {"src/b.test.ts"}
-    assert walk_paths == {
-        "__tests__/a.test.ts", ".github/workflows/ci.yml", "src/b.test.ts"
-    }
-
-
-@pytest.mark.spark
-def test_symlinks_skipped(spark, tmp_path):
-    """F4 / TestScan_SymlinkSkipping parity: symlinked files are not
-    scanned and symlinked dirs are not followed (no duplicate rows, no
-    cycles)."""
-    import os
-
-    from core_spark.sources.ingest import walk_file_tree
-
-    _write_tree(tmp_path, {
-        "real/x.test.ts": JEST_BYTES,
-    })
-    os.symlink(tmp_path / "real" / "x.test.ts", tmp_path / "alias.test.ts")
-    os.symlink(tmp_path / "real", tmp_path / "mirror")
-    os.symlink(tmp_path, tmp_path / "cycle")  # walk must not loop
-    rows = walk_file_tree(spark, str(tmp_path)).collect()
-    assert [r["path"].replace(f"file:{tmp_path}/", "") for r in rows] == [
-        "real/x.test.ts"
-    ]
-
-
-@pytest.mark.spark
-def test_deep_nesting_inventory(spark, tmp_path):
+def test_deep_nesting_inventory(spark):
     """An 8-directory-deep file with 5 nested describe levels: the
     distributed inventory keeps the full suite_path chain and 1-based
     line spans at every depth."""
-    from pyspark.sql import functions as F
-
     from core_spark.operators.inventory import extract_inventory
-    from core_spark.sources.ingest import read_file_tree
 
     deep_src = (
         "jest.mock('./x');\n"
@@ -139,11 +55,8 @@ def test_deep_nesting_inventory(spark, tmp_path):
         " });\n"
         "});\n"
     )
-    rel = "a/b/c/d/e/f/g/h/deep.test.js"
-    _write_tree(tmp_path, {rel: deep_src.encode()})
-    docs = read_file_tree(spark, str(tmp_path)).select(
-        F.regexp_replace("path", f"^file:{tmp_path}/", "").alias("path"),
-        F.col("content").cast("string").alias("source"),
+    docs = spark.createDataFrame(
+        [("a/b/c/d/e/f/g/h/deep.test.js", deep_src)], "path string, source string"
     )
     rows = {r["name"]: r for r in extract_inventory(docs).collect()}
     leaf = rows["leaf"]
@@ -174,14 +87,15 @@ def test_mixed_framework_file_priority(spark):
 
 
 @pytest.mark.spark
-def test_non_utf8_source_survives(spark, tmp_path):
-    """A latin-1 source (invalid UTF-8 bytes) flows through the binary
-    scan -> string cast -> Arrow kernel without crashing; ASCII test
-    names still extract, the mojibake byte lands in U+FFFD."""
+def test_non_utf8_source_survives(spark):
+    """A latin-1 source (invalid UTF-8 bytes) flows from a binary column
+    through string cast -> Arrow kernel without crashing; ASCII test names
+    still extract, the mojibake byte lands in U+FFFD. A plain CAST keeps
+    the invalid bytes inside the UTF8String and the first Arrow transfer
+    throws MALFORMED_CHARACTER_CODING; make_valid_utf8 repairs them."""
     from pyspark.sql import functions as F
 
     from core_spark.operators.inventory import extract_inventory
-    from core_spark.sources.ingest import SAFE_SOURCE_EXPR, read_file_tree
 
     latin1 = (
         "// caf\xe9 r\xe9sum\xe9 comment\n"
@@ -189,11 +103,9 @@ def test_non_utf8_source_survives(spark, tmp_path):
         "  it('works', () => { jest.mock('./x'); });\n"
         "});\n"
     ).encode("latin-1")
-    _write_tree(tmp_path, {"enc/weird.test.js": latin1})
-    docs = read_file_tree(spark, str(tmp_path)).select(
-        F.regexp_replace("path", f"^file:{tmp_path}/", "").alias("path"),
-        F.expr(SAFE_SOURCE_EXPR).alias("source"),
-    )
+    docs = spark.createDataFrame(
+        [("enc/weird.test.js", latin1)], "path string, content binary"
+    ).select("path", F.expr("make_valid_utf8(CAST(content AS STRING))").alias("source"))
     rows = {r["name"]: r for r in extract_inventory(docs).collect()}
     assert "works" in rows and rows["works"]["kind"] == "test"
     assert list(rows["works"]["suite_path"]) == ["suite"]
@@ -202,20 +114,16 @@ def test_non_utf8_source_survives(spark, tmp_path):
 
 
 @pytest.mark.spark
-def test_cargo_crates_and_csharp_test_dir(spark, tmp_path):
+def test_cargo_crates_and_csharp_test_dir(spark):
     """TestScan_CargoTest + TestScan_CSharpTestDirectory parity, through
-    the real distributed path (walk -> candidate filter -> detect ->
-    inventory): a non-_test.rs file under crates/ is a candidate and
+    the real distributed path (candidate filter -> detect -> inventory): a non-_test.rs file under crates/ is a candidate and
     yields cargo-test with both #[test] fns; a non-standard-named .cs
     under test/ yields mstest with its [TestMethod]."""
     from pyspark.sql import functions as F
 
     from core_spark.operators.detect import default_registry, detect, lang_col
     from core_spark.operators.inventory import extract_inventory
-    from core_spark.sources.ingest import (
-        sql_test_file_candidate,
-        walk_file_tree,
-    )
+    from core_spark.sources.ingest import sql_test_file_candidate
 
     rust = (
         "#[cfg(test)]\n"
@@ -236,13 +144,10 @@ def test_cargo_crates_and_csharp_test_dir(spark, tmp_path):
         "    public void Test1() => Assert.IsTrue(true);\n"
         "}\n"
     )
-    _write_tree(tmp_path, {
-        "crates/core/flags/defs.rs": rust.encode(),
-        "test/SomeProject/DataRowTests_Regular.cs": cs.encode(),
-    })
-    tree = walk_file_tree(spark, str(tmp_path)).select(
-        F.regexp_replace("path", f"^file:{tmp_path}/", "").alias("path"),
-        F.col("content").cast("string").alias("source"),
+    tree = spark.createDataFrame(
+        [("crates/core/flags/defs.rs", rust),
+         ("test/SomeProject/DataRowTests_Regular.cs", cs)],
+        "path string, source string",
     )
     cand = tree.filter(F.expr(sql_test_file_candidate("path")))
     assert cand.count() == 2  # both non-standard names are candidates
@@ -275,57 +180,15 @@ def test_cargo_crates_and_csharp_test_dir(spark, tmp_path):
 
 
 @pytest.mark.spark
-def test_walk_distributed_matches_sequential(spark, tmp_path):
-    """distributed=True (driver lists only the root; executors walk AND
-    read each top-level subtree in one Arrow stage — the monorepo path)
-    returns exactly the sequential walk's rows, including the tricky
-    rules: root-only coverage skip, hidden dirs kept, skip dirs pruned,
-    symlinks dropped, root-LEVEL files included."""
-    import os
-
-    from core_spark.sources.ingest import walk_file_tree
-
-    _write_tree(tmp_path, {
-        "ROOTFILE.test.ts": JEST_BYTES,          # root-level file
-        "coverage/report.test.ts": JEST_BYTES,   # root coverage: skipped
-        "a/coverage/nested.test.ts": JEST_BYTES, # nested coverage: kept
-        "__tests__/t.test.ts": JEST_BYTES,       # hidden dir: kept
-        ".github/ci.yml": b"on: push",
-        "node_modules/x/y.test.ts": JEST_BYTES,  # skip dir
-        "b/deep/leaf.test.ts": JEST_BYTES,
-    })
-    os.symlink(tmp_path / "b", tmp_path / "mirror")
-
-    def rows(distributed):
-        return sorted(
-            (r["path"], r["length"], bytes(r["content"] or b""))
-            for r in walk_file_tree(
-                spark, str(tmp_path), distributed=distributed
-            ).collect()
-        )
-
-    seq, dist = rows(False), rows(True)
-    assert seq == dist
-    rels = [p.replace(f"file:{tmp_path}/", "") for p, _, _ in seq]
-    assert rels == sorted([
-        "ROOTFILE.test.ts", "a/coverage/nested.test.ts",
-        "__tests__/t.test.ts", ".github/ci.yml", "b/deep/leaf.test.ts",
-    ])
-
-
-@pytest.mark.spark
-def test_empty_tree_yields_empty_stable_schema(spark, tmp_path):
+def test_empty_tree_yields_empty_stable_schema(spark):
     """Reference TestScan 'empty inventory for empty directory'
-    (scanner_test.go:27-47): an empty scan root is a valid scan — zero
-    rows, not an error, and the inventory schema is the full stable one
-    so downstream aggregations compile against nothing."""
+    (scanner_test.go:27-47): an empty input is a valid scan — zero rows,
+    not an error, and the inventory schema is the full stable one so
+    downstream aggregations compile against nothing."""
     from core_spark.operators.inventory import INVENTORY_SCHEMA, extract_inventory
-    from core_spark.sources.ingest import walk_file_tree
 
-    (tmp_path / "empty").mkdir()
-    files = walk_file_tree(spark, str(tmp_path / "empty"))
-    assert files.count() == 0
-    inv = extract_inventory(files.withColumnRenamed("content", "source"))
+    files = spark.createDataFrame([], "path string, source string")
+    inv = extract_inventory(files)
     assert inv.count() == 0
     assert inv.schema == spark.createDataFrame([], INVENTORY_SCHEMA).schema
 

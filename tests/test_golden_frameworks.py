@@ -235,24 +235,14 @@ def _family(path: str) -> str:
 
 
 @pytest.fixture(scope="module")
-def inventory_rows(spark, tmp_path_factory):
-    """Run the REAL distributed path once: file tree -> binaryFile scan ->
+def inventory_rows(spark):
+    """Run the REAL distributed path once: (path, source) frame ->
     inventory Arrow stage; return {path: [row, ...]} sorted canonically."""
-    from pyspark.sql import functions as F
-
     from core_spark.operators.inventory import extract_inventory
-    from core_spark.sources.ingest import read_file_tree
 
-    root = tmp_path_factory.mktemp("fw_tree")
-    for rel, (_fw, content) in FRAMEWORK_FILES.items():
-        p = root / rel
-        p.parent.mkdir(parents=True, exist_ok=True)
-        p.write_text(content)
-
-    tree = read_file_tree(spark, str(root))
-    docs = tree.select(
-        F.regexp_replace("path", f"^file:{root}/", "").alias("path"),
-        F.col("content").cast("string").alias("source"),
+    docs = spark.createDataFrame(
+        [(p, c) for p, (_fw, c) in FRAMEWORK_FILES.items()],
+        "path string, source string",
     )
     rows = extract_inventory(docs).collect()
     by_path: dict[str, list[dict]] = {}

@@ -2,11 +2,10 @@
 (tests/integration/snapshot.go: scan a real repo tree, compare aggregate
 counts field-by-field against a pinned golden).
 
-Here the 'repo' is a deterministic multi-language fixture tree written to
-tmp, ingested through the REAL distributed path (binaryFile scan ->
-decode -> inventory Arrow stage -> counts), and compared against literal
-expected counts per file — exercising the read_file_tree -> inventory
-integration end-to-end.
+Here the 'repo' is a deterministic multi-language set of fixture files in
+a (path, source) frame, run through the REAL distributed path (inventory
+Arrow stage -> counts) and compared against literal expected counts per
+file.
 """
 
 from __future__ import annotations
@@ -81,22 +80,13 @@ GOLDEN = {
 }
 
 
-def test_golden_inventory_over_file_tree(spark, tmp_path_factory):
+def test_golden_inventory_over_file_tree(spark):
     from pyspark.sql import functions as F
 
     from core_spark.operators.inventory import extract_inventory
-    from core_spark.sources.ingest import read_file_tree
 
-    root = tmp_path_factory.mktemp("fixture_repo")
-    for rel, content in FIXTURE_FILES.items():
-        p = root / rel
-        p.parent.mkdir(parents=True, exist_ok=True)
-        p.write_text(content)
-
-    tree = read_file_tree(spark, str(root))
-    docs = tree.select(
-        F.regexp_replace("path", f"^file:{root}/", "").alias("path"),
-        F.col("content").cast("string").alias("source"),
+    docs = spark.createDataFrame(
+        list(FIXTURE_FILES.items()), "path string, source string"
     )
     inv = extract_inventory(docs)
     agg = (

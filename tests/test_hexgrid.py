@@ -186,28 +186,6 @@ def test_spark_plan_has_no_python_udf(spark):
     assert "Python" not in plan and "BatchEval" not in plan
 
 
-@pytest.mark.spark
-def test_cells_to_boundaries_stage(spark):
-    """G7 vectorize: distinct cells -> hex boundary WKT polygons whose ring
-    parses back to 6 vertices enclosing the cell center."""
-    import numpy as np
-
-    from core_spark.functions.geometry import point_in_ring, wkt_to_ring
-    from core_spark.operators.zonal import cells_to_boundaries
-
-    lat = np.array([10.0, 20.0, -33.0])
-    lon = np.array([5.0, 100.0, -70.0])
-    cells = hx.latlon_to_cell(lat, lon, 6)
-    df = spark.createDataFrame([(int(c),) for c in cells] * 2, "cell bigint")
-    rows = cells_to_boundaries(df, "cell").collect()
-    assert len(rows) == 3  # distinct
-    for r in rows:
-        ring = wkt_to_ring(r.boundary_wkt)
-        assert len(ring) == 6
-        clat, clon = hx.cell_to_center(np.array([r.cell]))
-        assert point_in_ring(float(clon[0]), float(clat[0]), ring)
-
-
 class TestCompactCells:
     def _gen_cells(self, n=700):
         # filled 50-wide axial box at r9 (same rule as the driver query)

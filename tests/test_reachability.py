@@ -6,8 +6,10 @@ Roots are the code that runs outside the test suite: ``__spark_entry__.py``
 the module-level code of every ``core_spark`` module except its imports. A
 def is live when a root or a live def names it. Names are NAME tokens from
 ``tokenize`` plus the names in f-string replacement fields, so docstrings,
-comments and plain strings do not count as uses. The match is by bare name:
-a def is live if anything live uses its name.
+comments and plain strings do not count as uses. A use counts only in the
+def's own module or in a file that imports that module (absolute or
+relative, at top level or inside a function), so a name that two modules
+share does not keep both alive.
 
 A def that only tests call fails the gate: delete it, wire it to a root, or
 add it to ``TEST_ONLY`` with the reason it stays.
@@ -27,18 +29,12 @@ _NO_CALLER = "feature with no caller yet (ROADMAP direction 12)"
 
 #: Defs no root reaches, kept on purpose: "module.name" -> why it stays.
 TEST_ONLY: dict[str, str] = {
-    "functions.configparse.parse_config": _NO_CALLER,
-    "functions.configparse.scan_configs": _NO_CALLER,
-    "functions.configparse.scope_depth": "helper of scan_configs",
-    "functions.configparse.scopes_to_rows": "helper of resolve_scopes",
     "functions.geohash.geohash_py": "reference model of the SQL geohash",
     "functions.geometry.haversine_m": "reference distance for the kNN goldens",
     "functions.geometry.point_in_ring": "scalar reference ray cast",
     "functions.geometry.points_in_ring": "vectorized reference ray cast for match_points",
     "functions.geometry.wkt_to_ring": "test helper: polygon WKT -> ring",
-    "functions.geoparse.find_places": "reference model of with_places",
     "functions.geoparse.sql_dec_mentions": "DuckDB oracle of the decimal-pair scan",
-    "functions.geoparse.with_places": _NO_CALLER,
     "functions.hexgrid.cell_to_center": "numpy reference of the hexgrid SQL",
     "functions.hexgrid.cell_to_children": "numpy reference of the hexgrid SQL",
     "functions.hexgrid.cell_to_parent": "numpy reference of the hexgrid SQL",
@@ -49,8 +45,11 @@ TEST_ONLY: dict[str, str] = {
     "functions.jstest.format_each_name": "reference-parity helper of parse_js_tests",
     "functions.pii.with_pii": _NO_CALLER,
     "functions.s2.cell_center_latlon": "numpy reference of the S2 SQL",
+    "functions.s2.contains": "numpy reference of the S2 SQL",
     "functions.s2.face_uv_to_xyz": "helper of cell_center_latlon",
     "functions.s2.level_of": "numpy reference of the S2 SQL",
+    "functions.s2.range_max": "numpy reference of the S2 SQL",
+    "functions.s2.range_min": "numpy reference of the S2 SQL",
     "functions.s2.st_to_uv": "numpy reference of the S2 SQL",
     "operators.bloomadmit.merge_bloom_words": "mergeability property of bloom_words",
     "operators.c4clean.c4_clean": _NO_CALLER,
@@ -60,39 +59,23 @@ TEST_ONLY: dict[str, str] = {
     "operators.cardsketch.hll_registers": "mergeability property of the HLL sketch",
     "operators.cardsketch.merge_hll_registers": "mergeability property of the HLL sketch",
     "operators.cmsketch.merge_cms": "mergeability property of the count-min sketch",
-    "operators.dedup.embedding_dup_pairs": _NO_CALLER,
     "operators.dedup.lsh_recall_bound": "analytic bound the LSH recall tests check",
     "operators.dedup.simhash64": "pure kernel of the SimHash property tests",
-    "operators.detect.confidence_dist": _NO_CALLER,
-    "operators.detect.imports_col": _NO_CALLER,
-    "operators.detect.resolve_scopes": _NO_CALLER,
+    "operators.detect.lang_col": "test helper of the 22-framework detect test",
     "operators.frontier.frontier_stats": _NO_CALLER,
     "operators.gopherrules.gopher_gate": _NO_CALLER,
     "operators.gopherrules.sql_gopher_gate": "DuckDB oracle of gopher_gate",
     "operators.hilbert.hilbert_d2xy_py": "reference inverse walk for the adjacency test",
     "operators.hilbert.hilbert_py": "reference model of the SQL Hilbert key",
     "operators.hilbert.layout_by_hilbert": _NO_CALLER,
-    "operators.inventory.inventory_counts": _NO_CALLER,
     "operators.knn.guaranteed_radius_m": "analytic bound the kNN tests check",
     "operators.knn.knn_bruteforce_pandas": "reference model for the kNN goldens",
     "operators.linkgraph.hits_bound": "analytic bound the HITS tests check",
     "operators.multimodal.with_media_metadata": _NO_CALLER,
     "operators.multimodal.with_thumbnail": _NO_CALLER,
     "operators.redirects.sql_resolve_redirects": "DuckDB oracle of resolve_redirects",
-    "operators.sessions.sql_sessionize": "DuckDB oracle of sessionize_batch",
-    "operators.zonal.cells_to_boundaries": _NO_CALLER,
     "operators.zorder.layout_by_zorder": _NO_CALLER,
     "sources.geojson.read_geojson": _NO_CALLER,
-    "sources.ingest._empty_meta_pdf": "helper of walk_file_tree",
-    "sources.ingest._read_contents": "helper of walk_file_tree",
-    "sources.ingest._root_uri": "helper of read_file_tree",
-    "sources.ingest._walk_subtree": "helper of walk_file_tree",
-    "sources.ingest.glob_filter": _NO_CALLER,
-    "sources.ingest.glob_regex": "helper of glob_filter",
-    "sources.ingest.read_file_tree": _NO_CALLER,
-    "sources.ingest.test_file_candidates": _NO_CALLER,
-    "sources.ingest.walk_file_tree": _NO_CALLER,
-    "sources.ingest.write_snapshot": _NO_CALLER,
     "sources.warc.build_warc": "test helper: writes WARC fixtures",
     "sources.warc.read_warc": _NO_CALLER,
 }
@@ -121,16 +104,46 @@ def _names(path: str) -> list[tuple[int, str]]:
     return out
 
 
-def _defs(path: str) -> tuple[dict[str, set[str]], set[str]]:
+def _module(path: str) -> str:
+    """``core_spark/operators/dedup.py`` -> "operators.dedup" (a package's
+    ``__init__.py`` is the package itself)."""
+    parts = os.path.relpath(path, os.path.join(ROOT, "core_spark"))[:-3].split(os.sep)
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _imports(tree: ast.Module, path: str, modules: set[str]) -> set[str]:
+    """The ``core_spark`` modules that ``path`` imports anywhere in its body."""
+    if path.startswith(os.path.join(ROOT, "core_spark") + os.sep):
+        package = _module(path) if path.endswith("__init__.py") else _module(path).rpartition(".")[0]
+    else:
+        package = None
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            out |= {a.name.removeprefix("core_spark.") for a in node.names
+                    if a.name.startswith("core_spark.")}
+        elif isinstance(node, ast.ImportFrom):
+            if node.level:
+                if package is None:
+                    continue
+                parts = package.split(".") if package else []
+                base = ".".join(parts[:len(parts) + 1 - node.level] + [node.module or ""]).strip(".")
+            elif node.module == "core_spark" or (node.module or "").startswith("core_spark."):
+                base = node.module.removeprefix("core_spark").removeprefix(".")
+            else:
+                continue
+            out.add(base)
+            out |= {f"{base}.{a.name}".lstrip(".") for a in node.names}
+    return out & modules
+
+
+def _defs(path: str, tree: ast.Module) -> tuple[dict[str, set[str]], set[str]]:
     """({"module.name": names its body uses}, names module-level code uses).
 
     A decorated def's span starts at its first decorator. Import statements
     are not uses: a name counts only where the code that imports it uses it.
     """
-    with open(path, encoding="utf-8") as fh:
-        tree = ast.parse(fh.read(), path)
-    module = os.path.relpath(path, os.path.join(ROOT, "core_spark"))[:-3].replace(os.sep, ".")
-    module = module.removesuffix(".__init__")
+    module = _module(path)
     owner: dict[int, str | None] = {}
     defs: dict[str, set[str]] = {}
     for node in tree.body:
@@ -153,28 +166,40 @@ def _defs(path: str) -> tuple[dict[str, set[str]], set[str]]:
     return defs, module_level
 
 
+def _parse(path: str) -> ast.Module:
+    with open(path, encoding="utf-8") as fh:
+        return ast.parse(fh.read(), path)
+
+
 def unreached() -> set[str]:
     """Top-level ``core_spark`` defs that no root reaches, as "module.name"."""
-    roots: set[str] = set()
+    lib = _py_files(os.path.join(ROOT, "core_spark"))
+    modules = {_module(path) for path in lib}
+    # (names used, modules whose defs those names may reach): one per root
+    # file, one per core_spark module's top-level code, one per def
+    todo: list[tuple[set[str], set[str]]] = []
     for path in [os.path.join(ROOT, "__spark_entry__.py"), os.path.join(ROOT, "bench.py")] \
             + _py_files(os.path.join(ROOT, "scripts"), recurse=False) \
             + _py_files(os.path.join(ROOT, "perfbench"), recurse=False):
-        roots.update(name for _, name in _names(path))
-    uses: dict[str, set[str]] = {}
+        todo.append(({name for _, name in _names(path)}, _imports(_parse(path), path, modules)))
+    uses: dict[str, tuple[set[str], set[str]]] = {}
     by_name: dict[str, list[str]] = {}
-    for path in _py_files(os.path.join(ROOT, "core_spark")):
-        defs, module_level = _defs(path)
-        uses.update(defs)
-        roots |= module_level
+    for path in lib:
+        tree = _parse(path)
+        scope = _imports(tree, path, modules) | {_module(path)}
+        defs, module_level = _defs(path, tree)
+        uses.update({key: (names, scope) for key, names in defs.items()})
+        todo.append((module_level, scope))
         for key in defs:
             by_name.setdefault(key.rsplit(".", 1)[1], []).append(key)
     live: set[str] = set()
-    todo = list(roots)
     while todo:
-        for key in by_name.get(todo.pop(), ()):
-            if key not in live:
-                live.add(key)
-                todo.extend(uses[key])
+        names, scope = todo.pop()
+        for name in names:
+            for key in by_name.get(name, ()):
+                if key not in live and key.rsplit(".", 1)[0] in scope:
+                    live.add(key)
+                    todo.append(uses[key])
     return set(uses) - live
 
 

@@ -1,98 +1,10 @@
-"""S1-S8 source/sink parity tests (SURVEY.md §2.1)."""
+"""Corpus scan and test-file candidate predicate tests (SURVEY.md §2.1)."""
 
 from __future__ import annotations
 
-import os
-import re
-
 import pytest
 
-from core_spark.sources.ingest import (
-    CORPUS_SCHEMA_FIELDS,
-    glob_filter,
-    glob_regex,
-    read_corpus,
-    read_file_tree,
-    write_snapshot,
-)
-
-
-#: Doublestar semantics over root-relative paths (SURVEY.md F2):
-#: (pattern, path, matches).
-GLOB_CASES = [
-    ("*.py", "app.py", True),
-    ("*.py", "src/app.py", False),
-    ("src/*.js", "src/x.js", True),
-    ("src/*.js", "src/a/x.js", False),
-    ("a/**/b.js", "a/b.js", True),
-    ("a/**/b.js", "a/x/y/b.js", True),
-    ("a/**/b.js", "a/xb.js", False),
-    ("**/*.py", "app.py", True),
-    ("**/*.py", "src/a/app.py", True),
-    ("?.md", "a.md", True),
-    ("?.md", "ab.md", False),
-    ("?.md", "a/b.md", False),
-    ("a.py", "axpy", False),
-]
-
-
-@pytest.mark.parametrize("pattern,path,hit", GLOB_CASES)
-def test_glob_table(pattern, path, hit):
-    assert (re.fullmatch(glob_regex(pattern), path) is not None) is hit
-
-
-@pytest.mark.spark
-class TestFileTree:
-    @pytest.fixture()
-    def tree(self, tmp_path):
-        files = {
-            "src/app.py": b"print('hi')",
-            "src/node_modules/dep/index.js": b"module.exports = 1",
-            "vendor/lib.go": b"package lib",
-            "docs/readme.md": b"# readme",
-            "big.bin": b"x" * 2048,
-        }
-        for rel, content in files.items():
-            p = tmp_path / rel
-            p.parent.mkdir(parents=True, exist_ok=True)
-            p.write_bytes(content)
-        return str(tmp_path)
-
-    def test_skip_dirs_and_size(self, spark, tree):
-        df = read_file_tree(spark, tree, max_file_size=1024)
-        paths = sorted(r.path.split(str(tree))[-1] for r in df.collect())
-        assert "/src/app.py" in paths
-        assert "/docs/readme.md" in paths
-        assert not any("node_modules" in p for p in paths)  # S4
-        assert not any("vendor" in p for p in paths)        # S4
-        assert not any("big.bin" in p for p in paths)       # F3
-
-    def test_glob_filter(self, spark, tree):
-        df = read_file_tree(spark, tree)
-        py = glob_filter(df, ["**/*.py"], tree)
-        assert all(r.path.endswith(".py") for r in py.collect())
-        assert py.count() == 1
-
-    def test_glob_table_through_spark(self, spark):
-        """The same table through the JVM regex, on absolute ``file:``
-        paths under a scan root."""
-        prefix = "file:/scan/root/"
-        df = spark.createDataFrame(
-            sorted({(prefix + p,) for _pat, p, _hit in GLOB_CASES}),
-            "path string",
-        )
-        for pat in {pat for pat, _p, _hit in GLOB_CASES}:
-            got = {r.path for r in glob_filter(df, [pat], "/scan/root").collect()}
-            for q, p, hit in GLOB_CASES:
-                if q == pat:
-                    assert ((prefix + p) in got) is hit, (pat, p)
-
-    def test_pushdown_in_plan(self, spark, tree):
-        """The size/skip predicates must appear as data filters, not Python."""
-        df = read_file_tree(spark, tree, max_file_size=1024)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "Filter" in plan
-        assert "mapInPandas" not in plan.lower()
+from core_spark.sources.ingest import CORPUS_SCHEMA_FIELDS, read_corpus
 
 
 @pytest.mark.spark
@@ -111,16 +23,6 @@ class TestCorpusAndSinks:
         spark.range(5).write.parquet(bad)
         with pytest.raises(ValueError, match="corpus schema mismatch"):
             read_corpus(spark, bad)
-
-    def test_snapshot_sink_deterministic(self, spark, tmp_path):
-        df = spark.createDataFrame(
-            [(3, "c"), (1, "a"), (2, "b")], "id bigint, v string"
-        )
-        out = str(tmp_path / "snap")
-        write_snapshot(df, out, order_by=["id"])
-        back = spark.read.parquet(out).collect()
-        assert [r.id for r in back] == [1, 2, 3]
-        assert len([f for f in os.listdir(out) if f.endswith(".parquet")]) == 1
 
 
 class TestCandidatePredicate:
@@ -165,15 +67,6 @@ class TestCandidatePredicate:
                 f"SELECT {sql} FROM (SELECT '{path}' AS p)"
             ).fetchone()[0]
             assert bool(duck) is want, f"duckdb: {path}"
-
-    def test_predicate_is_pushed_to_scan(self, spark, tmp_path):
-        from core_spark.sources.ingest import read_file_tree, test_file_candidates
-
-        (tmp_path / "a_test.go").write_text("package a")
-        (tmp_path / "a.go").write_text("package a")
-        df = test_file_candidates(read_file_tree(spark, str(tmp_path)))
-        rows = [r["path"] for r in df.select("path").collect()]
-        assert len(rows) == 1 and rows[0].endswith("a_test.go")
 
 
 def test_iceberg_seam_fails_cleanly_without_runtime(spark):

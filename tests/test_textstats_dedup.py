@@ -474,14 +474,6 @@ class TestEmbeddingOps:
         rows = [(i, [float(x) for x in vecs[i]]) for i in range(20)]
         vdf = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
 
-        pairs = dd.embedding_dup_pairs(vdf, threshold=0.99, n_planes=4, dim=16).toPandas()
-        assert (2, 5) in set(zip(pairs["id_a"], pairs["id_b"]))
-        # dim inference fallback produces the identical plan/result
-        inferred = dd.embedding_dup_pairs(vdf, threshold=0.99, n_planes=4).toPandas()
-        assert set(zip(inferred["id_a"], inferred["id_b"])) == set(
-            zip(pairs["id_a"], pairs["id_b"])
-        )
-
         from core_spark.operators.similarity import brute_force_topk
 
         qdf = spark.createDataFrame(
