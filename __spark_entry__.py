@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from core_spark.data.polygons import edges_sql_values
 from core_spark.functions import hexgrid as hx
 from core_spark.functions import textstats as ts
-from core_spark.functions.geoparse import DEC_PATTERN
+from core_spark.functions.geoparse import sql_dec_mentions
 from core_spark.functions.repetition import duck_rep_sql
 from core_spark.functions.textstats import duck_stop_count, duck_token_count
 from core_spark.operators import dedup as dd
@@ -214,16 +214,15 @@ def q_knn(spark, sf_dir):
 def q_geoparse_dec(spark, sf_dir):
     """G2: decimal-coordinate extraction via the shared regex — the mention
     text is synthesized portably (integer printf only), then parsed back."""
-    from core_spark.functions.geoparse import DEC_PATTERN
-
+    lats, lons = sql_dec_mentions("mention_text")
     return _docs(spark, sf_dir, wide=False).selectExpr(
         "doc_id",
         "concat('located at ', CAST(doc_id % 90 AS STRING), '.1234', ', -',"
         " CAST(doc_id % 179 AS STRING), '.5678', ' nearby') AS mention_text",
     ).selectExpr(
         "doc_id",
-        f"CAST(regexp_extract_all(mention_text, '{DEC_PATTERN}', 1)[0] AS DOUBLE) AS mlat",
-        f"CAST(regexp_extract_all(mention_text, '{DEC_PATTERN}', 2)[0] AS DOUBLE) AS mlon",
+        f"CAST({lats}[0] AS DOUBLE) AS mlat",
+        f"CAST({lons}[0] AS DOUBLE) AS mlon",
     )
 
 
@@ -2962,8 +2961,7 @@ def q_warc_roundtrip(spark, sf_dir):
     same Arrow stage; the emitted fields come from the PARSED record,
     so header grammar, Content-Length slicing, gzip membering, and
     payload bytes are all gated byte-for-byte against a pure-SQL
-    derivation of the same fields. File-level ingestion (binaryFile →
-    the same parser) is pytest-gated in test_warc.py."""
+    derivation of the same fields."""
     import pandas as pd
 
     from core_spark.sources.warc import encode_warc, parse_warc_bytes
@@ -4325,8 +4323,8 @@ def q_crawl_frontier(spark, sf_dir):
     fetch_slot = per-host rank × 5s with rank ordered (priority DESC,
     md5(url), url) — deterministic and partition-invariant (pytested).
     ONE window shuffle on the host key; a mega-host's deep partition IS
-    the crawl's inherent politeness lower bound, surfaced per worker by
-    frontier_stats.makespan_s and mitigated upstream by cap_per_host."""
+    the crawl's inherent politeness lower bound, mitigated upstream by
+    cap_per_host."""
     from pyspark.sql import functions as F
 
     from core_spark.operators.frontier import schedule_frontier
@@ -5191,14 +5189,11 @@ def q_geo_mentions(spark, sf_dir):
 
 
 def _sql_geo_mentions() -> str:
-    from core_spark.functions.geoparse import DEC_PATTERN
-
+    lats, lons = sql_dec_mentions("mention_text")
     mention_src = f"""
-        SELECT CAST(FLOOR(CAST(regexp_extract_all(mention_text,
-                 '{DEC_PATTERN}', 1)[1] AS DOUBLE) / {_GM_CELL!r})
+        SELECT CAST(FLOOR(CAST({lats}[1] AS DOUBLE) / {_GM_CELL!r})
                AS BIGINT) AS cell_i,
-               CAST(FLOOR(CAST(regexp_extract_all(mention_text,
-                 '{DEC_PATTERN}', 2)[1] AS DOUBLE) / {_GM_CELL!r})
+               CAST(FLOOR(CAST({lons}[1] AS DOUBLE) / {_GM_CELL!r})
                AS BIGINT) AS cell_j
         FROM (SELECT 'located at ' || CAST(doc_id % 90 AS VARCHAR)
                      || '.1234' || ', -'
@@ -9634,8 +9629,8 @@ REGISTRY: tuple[Query, ...] = (
         """),
     Query("geoparse_dec", q_geoparse_dec, lambda: f"""
             SELECT doc_id,
-                   CAST(regexp_extract_all(mention_text, '{DEC_PATTERN}', 1)[1] AS DOUBLE) AS mlat,
-                   CAST(regexp_extract_all(mention_text, '{DEC_PATTERN}', 2)[1] AS DOUBLE) AS mlon
+                   CAST({sql_dec_mentions('mention_text')[0]}[1] AS DOUBLE) AS mlat,
+                   CAST({sql_dec_mentions('mention_text')[1]}[1] AS DOUBLE) AS mlon
             FROM (SELECT doc_id,
                          'located at ' || CAST(doc_id % 90 AS VARCHAR) || '.1234' ||
                          ', -' || CAST(doc_id % 179 AS VARCHAR) || '.5678' ||

@@ -76,15 +76,3 @@ def pii_cols(text_col: str, dialect: str) -> dict[str, str]:
     }
     out["redacted"] = _redact_expr(safe, dialect)
     return out
-
-
-def with_pii(df, text_col: str = "text"):
-    """Append PII count columns + ``redacted`` (Spark DataFrame stage).
-
-    Pure JVM regex map — no shuffle; safe at any row count.
-    """
-    from pyspark.sql import functions as F
-
-    for out_col, expr in pii_cols(text_col, "spark").items():
-        df = df.withColumn(out_col, F.expr(expr))
-    return df

@@ -29,8 +29,6 @@ No reference counterpart (specvital/core has no corpus subsystem).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-
 TERMINALS = ("'.'", "'!'", "'?'")
 
 
@@ -114,22 +112,6 @@ def clean_steps(
             f" AND {' AND '.join(page_bans)}, false)",
         ),
     ]
-
-
-def c4_clean(
-    df: DataFrame,
-    text_col: str = "text",
-    min_words: int = 3,
-    min_sentences: int = 5,
-    banned: tuple[str, ...] = (),
-) -> DataFrame:
-    """Append the C4 cleaning columns (see clean_steps) to ``df``."""
-    from core_spark.functions.hexgrid import apply_steps
-
-    # apply_steps drops the '_'-prefixed intermediates itself
-    return apply_steps(
-        df, clean_steps(text_col, "spark", min_words, min_sentences, banned)
-    )
 
 
 def sql_c4_clean(

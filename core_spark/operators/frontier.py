@@ -26,8 +26,7 @@ the host's OWN queue — politeness serializes a host's fetches no matter
 how you compute the schedule, so a mega-host's deep partition is the
 inherent crawl-time lower bound surfacing at plan time, not an
 accident; the per-host cap operator (weburl.cap_per_host) upstream is
-the mitigation, and ``makespan_s`` in frontier_stats makes the bound
-visible per worker. Per-host delay (robots.txt Crawl-delay) plugs in as
+the mitigation. Per-host delay (robots.txt Crawl-delay) plugs in as
 a ``delay_sql`` expression so the slot math stays JVM-side.
 
 No reference counterpart (specvital/core has no crawl subsystem).
@@ -112,14 +111,3 @@ def sql_schedule_frontier(
                ) - 1) * {delay_s} AS BIGINT) AS fetch_slot
         FROM {table_sql}
     """
-
-
-def frontier_stats(scheduled: DataFrame) -> DataFrame:
-    """Per-worker load summary: URL count, host count, and makespan_s
-    (the largest fetch_slot — the worker's schedule length, dominated by
-    its deepest host queue). One hash-agg on the worker key."""
-    return scheduled.groupBy("worker").agg(
-        F.count("*").alias("n_urls"),
-        F.countDistinct("host").alias("n_hosts"),
-        F.max("fetch_slot").alias("makespan_s"),
-    )

@@ -27,8 +27,6 @@ subsystem); thresholds follow the published Gopher appendix.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-
 from core_spark.functions.textstats import _ALPHABET
 
 #: Gopher's stop-word presence list (Rae et al. A1: "must contain at
@@ -135,14 +133,6 @@ def gopher_steps(text_col: str, dialect: str) -> list[tuple[str, str]]:
             " AND g_ellipsis AND g_alpha AND g_stop, false)",
         ),
     ]
-
-
-def gopher_gate(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Append the Gopher signals + gates (see gopher_steps) to ``df``."""
-    from core_spark.functions.hexgrid import apply_steps
-
-    # apply_steps drops the '_'-prefixed intermediates itself
-    return apply_steps(df, gopher_steps(text_col, "spark"))
 
 
 def sql_gopher_gate(

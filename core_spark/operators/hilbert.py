@@ -103,21 +103,6 @@ def with_hilbert_key(
     return apply_steps(df, hilbert_steps(lat_col, lon_col))
 
 
-def layout_by_hilbert(
-    df: DataFrame,
-    n_files: int,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-) -> DataFrame:
-    """Range-cluster into ``n_files`` contiguous, internally-sorted
-    Hilbert-key partitions — zorder.layout_by_zorder with the
-    jump-free key."""
-    keyed = with_hilbert_key(df, lat_col, lon_col)
-    return keyed.repartitionByRange(n_files, "hkey").sortWithinPartitions(
-        "hkey"
-    )
-
-
 def hilbert_py(x: int, y: int, order: int = ORDER) -> int:
     """Reference model (tests only): the textbook xy2d walk."""
     n = 1 << order

@@ -311,71 +311,19 @@ def encode_fake_image(arr: np.ndarray) -> bytes:
     return FAKE_MAGIC + struct.pack("<II", w, h) + bytes([c]) + arr.tobytes()
 
 
-def with_media_metadata(df, blob_col: str = "media"):
-    """Append MEDIA_META_SCHEMA columns via mapInPandas (Arrow binary batches).
-
-    Partition sizing rule: media rows are fat — set
-    spark.sql.files.maxPartitionBytes (or repartition upstream) so a batch of
-    blobs fits executor memory; this stage never concatenates blobs.
-    """
-    keep = [f for f in df.schema.fields]
-    fields = ", ".join(f.name + " " + f.dataType.simpleString() for f in keep)
-
-    def run(batches):
-        for pdf in batches:
-            metas = [parse_media_header(b) for b in pdf[blob_col]]
-            out = pdf.copy()
-            mdf = pd.DataFrame(metas)
-            for col in ("media_ok", "media_format", "width", "height",
-                        "channels", "n_bytes", "media_error"):
-                out[col] = mdf[col].to_numpy()
-            yield out
-
-    return df.mapInPandas(run, fields + ", " + MEDIA_META_SCHEMA)
-
-
-def with_thumbnail(df, blob_col: str = "media", size: int = 8):
-    """Decode + nearest-neighbor resize to (size, size, c) mean-pooled
-    features. Works end-to-end for the fake codec; rows whose codec is
-    unavailable emit NULL features with the error recorded (never a stage
-    failure)."""
-    keep_names = [f.name for f in df.schema.fields if f.name != blob_col]
-    fields = ", ".join(
-        f.name + " " + f.dataType.simpleString()
-        for f in df.schema.fields if f.name != blob_col
-    )
-
-    def run(batches):
-        for pdf in batches:
-            feats, errs = [], []
-            for b in pdf[blob_col]:
-                try:
-                    img = decode_image(b)
-                    h, w, _ = img.shape
-                    yi = (np.arange(size) * h // size).clip(0, h - 1)
-                    xi = (np.arange(size) * w // size).clip(0, w - 1)
-                    thumb = img[np.ix_(yi, xi)].mean(axis=2)
-                    feats.append([float(v) for v in thumb.ravel()])
-                    errs.append(None)
-                except (NotImplementedError, ValueError) as e:
-                    feats.append(None)
-                    errs.append(str(e)[:80])
-            out = pdf[keep_names].copy()
-            out["thumb"] = feats
-            out["decode_error"] = errs
-            yield out
-
-    return df.mapInPandas(run, fields + ", thumb array<double>, decode_error string")
-
-
 def with_media_features(df, blob_col: str = "media", size: int = 8):
     """Metadata + thumbnail in ONE fused Arrow stage (the CLAUDE.md rule:
     chained mapInPandas anti-scales — each stage is its own Python worker
-    pipeline with a JVM round-trip between). Semantically identical to
-    `with_thumbnail(with_media_metadata(df))` minus the blob column
-    (projected away so downstream shuffles stay thin); the header is parsed
-    once and reused by the decoder. Use this in pipelines; keep the two
-    single-purpose stages for metadata-only or features-only passes."""
+    pipeline with a JVM round-trip between). Appends MEDIA_META_SCHEMA
+    (parse_media_header) plus a ``size`` x ``size`` channel-mean
+    nearest-neighbour thumbnail and ``decode_error``; rows whose codec is
+    unavailable get NULL features with the error recorded (never a stage
+    failure). The blob column is projected away so downstream shuffles
+    stay thin; the header is parsed once and reused by the decoder.
+
+    Partition sizing rule: media rows are fat — set
+    spark.sql.files.maxPartitionBytes (or repartition upstream) so a batch
+    of blobs fits executor memory; this stage never concatenates blobs."""
     keep_names = [f.name for f in df.schema.fields if f.name != blob_col]
     fields = ", ".join(
         f.name + " " + f.dataType.simpleString()

@@ -22,12 +22,12 @@ integer-division token differs). Quantization is FLOOR-before-cast on
 plain +,*,/ double arithmetic (the portable subset; NULL/out-of-range
 coords are clamped after a NULL guard).
 
-``layout_by_zorder`` is the actual layout op: ``repartitionByRange`` on
-the key (Spark samples range bounds, so output files hold contiguous,
-disjoint key ranges) + ``sortWithinPartitions`` (row groups inside each
-file stay clustered too). At 10^12 rows this is one range-exchange —
-the same cost as any global sort-write, paid once at ingest and repaid
-on every pruned scan. Skew: Morton keys of a skewed corpus ARE skewed
+The layout itself is the writer's ``repartitionByRange`` on the key
+(Spark samples range bounds, so output files hold contiguous, disjoint
+key ranges) + ``sortWithinPartitions`` (row groups inside each file
+stay clustered too). At 10^12 rows this is one range-exchange — the
+same cost as any global sort-write, paid once at ingest and repaid on
+every pruned scan. Skew: Morton keys of a skewed corpus ARE skewed
 (mega-cities); range partitioning absorbs it by splitting hot key
 ranges across files — the sampler sees the density, unlike fixed-width
 cell bucketing.
@@ -103,25 +103,6 @@ def with_zorder_key(
 
     # all intermediates are '_z*'-prefixed, so apply_steps drops them
     return apply_steps(df, zorder_steps(lat_col, lon_col))
-
-
-def layout_by_zorder(
-    df: DataFrame,
-    n_files: int,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-) -> DataFrame:
-    """Range-cluster ``df`` into ``n_files`` partitions by Morton key.
-
-    Each output partition (= file at write time) holds a contiguous,
-    disjoint zkey range, sorted within — the ZORDER write layout
-    (disjointness + internal sort are plan- and data-asserted in
-    tests/test_zorder.py).
-    """
-    keyed = with_zorder_key(df, lat_col, lon_col)
-    return keyed.repartitionByRange(n_files, "zkey").sortWithinPartitions(
-        "zkey"
-    )
 
 
 def sql_zorder_bucket_stats(

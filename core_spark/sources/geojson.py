@@ -25,13 +25,12 @@ text form), so downstream SQL extracts typed ids with one element_at +
 cast — no nested-schema inference, which real-world GeoJSON (ragged
 properties) routinely breaks.
 
-Plumbing: parsing runs in ONE Arrow-batched stage (stdlib ``json`` —
-GeoJSON's heterogeneous coordinate nesting has no single Spark schema,
-the same reason the WARC grammar is Python-side); ``read_geojson`` is
-the file path (wholetext scan — GeoJSON is one object per file, not
-line-delimited), ``parse_geojson`` the table path. At scale a polygon
-directory is host-bounded like robots/sitemaps: the directory pays the
-parse, the point corpus never does.
+Plumbing: ``parse_geojson`` parses a (src, geojson) text table in ONE
+Arrow-batched stage (stdlib ``json`` — GeoJSON's heterogeneous
+coordinate nesting has no single Spark schema, the same reason the WARC
+grammar is Python-side). At scale a polygon directory is host-bounded
+like robots/sitemaps: the directory pays the parse, the point corpus
+never does.
 
 No reference counterpart (specvital/core has no spatial subsystem);
 semantics follow RFC 7946 (published August 2016).
@@ -202,15 +201,3 @@ def parse_geojson(
             )
 
     return df.select(src_col, text_col).mapInPandas(run, _SCHEMA)
-
-
-def read_geojson(spark, path: str) -> DataFrame:
-    """File path: wholetext scan (one GeoJSON object per file) -> parsed
-    feature rows, with the file path as ``src``."""
-    files = spark.read.text(path, wholetext=True).withColumnRenamed(
-        "value", "geojson"
-    )
-    from pyspark.sql import functions as F
-
-    files = files.withColumn("src", F.input_file_name())
-    return parse_geojson(files)

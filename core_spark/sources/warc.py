@@ -5,9 +5,9 @@ Crawl examples document).
 A web-scale corpus engine must ingest WARC directly: crawl dumps arrive
 as `*.warc.gz` with ONE GZIP MEMBER PER RECORD (the standard layout —
 it is what makes per-record random access and streaming splits possible
-at all). Two layers:
+at all). Two surfaces:
 
-  pure bytes (testable without Spark):
+  file level, pure bytes (the `warc_roundtrip` query):
     encode_warc(records)        fixture-grade writer, response records
     parse_warc_bytes(data)      record splitter + header parser; plain
                                 concatenated records OR multi-member gzip
@@ -16,16 +16,11 @@ at all). Two layers:
                                 instead of raising, keeping every
                                 well-formed prefix record
 
-  Spark (one Arrow stage):
-    read_warc(spark, glob)      binaryFile scan → mapInPandas decode →
-                                one row per record (path, url, warc_ts,
-                                rec_type, payload BINARY, error)
+  record scan (the `warc_scan` query, below):
+    scan_warc(df)               WARC blobs → ONE Arrow-batched
+                                mapInPandas stage → one row per record
+                                (SCAN_SCHEMA, md5 payload digests)
 
-100-TB shape: binaryFile gives one task per archive file (Common Crawl
-shards are ~1 GB — natural task granularity); the decode is a single
-Arrow-batched Python stage per the fused-stage rule, payloads stay
-opaque BINARY columns for the multimodal/text operators downstream, and
-header fields land as ordinary columns so Catalyst prunes/filters them.
 Per-record gzip means a future split-by-member reader can parallelize
 INSIDE a file; documented, not needed at fixture scale.
 
@@ -162,45 +157,17 @@ def parse_warc_bytes(data: bytes) -> list[dict]:
     return recs
 
 
-WARC_SCHEMA = (
-    "path string, url string, warc_ts string, rec_type string,"
-    " payload binary, error string"
-)
-
-
-def read_warc(spark, path_glob: str):
-    """binaryFile scan → ONE Arrow decode stage → one row per record."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "path", "url", "warc_ts", "rec_type", "payload", "error")}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                for r in parse_warc_bytes(bytes(content)):
-                    rows["path"].append(path)
-                    rows["url"].append(r["url"])
-                    rows["warc_ts"].append(r["ts"])
-                    rows["rec_type"].append(r["rec_type"])
-                    rows["payload"].append(r["payload"])
-                    rows["error"].append(r["error"])
-            yield pd.DataFrame(rows)
-
-    df = spark.read.format("binaryFile").load(path_glob)
-    return df.select("path", "content").mapInPandas(run, WARC_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # Record-scan face (second WARC surface, added in the statistics wave)
 # ---------------------------------------------------------------------------
 # The functions above are the FILE-level surface (encode_warc /
-# parse_warc_bytes / read_warc: gzip members, binaryFile ingestion,
-# the warc_roundtrip oracle). The section below is the independent
-# RECORD-SCAN surface used by the `warc_scan` generation-rule oracle:
-# a plain-text record walker with Content-Length-authoritative skip,
-# error-as-data rows (bad-version / bad-content-length / truncated-*)
-# with salvaged URIs, deterministic resync, and an Arrow mapInPandas
-# face (scan_warc) emitting SCAN_SCHEMA with md5 payload digests.
+# parse_warc_bytes: gzip members, the warc_roundtrip oracle). The
+# section below is the independent RECORD-SCAN surface used by the
+# `warc_scan` generation-rule oracle: a plain-text record walker with
+# Content-Length-authoritative skip, error-as-data rows (bad-version /
+# bad-content-length / truncated-*) with salvaged URIs, deterministic
+# resync, and an Arrow mapInPandas face (scan_warc) emitting
+# SCAN_SCHEMA with md5 payload digests.
 
 import hashlib
 

@@ -11,7 +11,8 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from core_spark.operators.c4clean import c4_clean, sql_c4_clean
+from core_spark.functions.hexgrid import apply_steps
+from core_spark.operators.c4clean import clean_steps, sql_c4_clean
 
 MIN_WORDS = 3
 MIN_SENTENCES = 5
@@ -67,7 +68,7 @@ def test_c4_matches_model_spark(spark):
         r["doc_id"]: (
             r["c4_clean"], r["n_lines"], r["n_kept"], r["n_sent"], r["c4_kept"]
         )
-        for r in c4_clean(df)
+        for r in apply_steps(df, clean_steps("text", "spark"))
         .select("doc_id", "c4_clean", "n_lines", "n_kept", "n_sent", "c4_kept")
         .collect()
     }
@@ -123,7 +124,7 @@ def test_c4_banned_phrases_casefold_and_escape(spark):
     df = spark.createDataFrame(pages, "doc_id long, text string")
     got = {
         r["doc_id"]: r["c4_kept"]
-        for r in c4_clean(df, banned=banned)
+        for r in apply_steps(df, clean_steps("text", "spark", banned=banned))
         .select("doc_id", "c4_kept").collect()
     }
     assert got == {0: False, 1: False, 2: True}
@@ -175,7 +176,8 @@ def test_c4_duckdb_twin_matches_model_fuzz(texts):
 def test_c4_plan_is_one_jvm_projection(spark):
     df = spark.createDataFrame(PAGES, "doc_id long, text string")
     plan = (
-        c4_clean(df)._jdf.queryExecution().executedPlan().toString()
+        apply_steps(df, clean_steps("text", "spark"))
+        ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange" not in plan  # row-local: no shuffle
     assert "EvalPython" not in plan  # no Python stage

@@ -9,7 +9,7 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from core_spark.operators.frontier import (
-    frontier_stats, schedule_frontier, sql_schedule_frontier,
+    schedule_frontier, sql_schedule_frontier,
 )
 
 N_WORKERS, DELAY = 4, 7
@@ -97,16 +97,6 @@ class TestParityAndStats:
             "f", N_WORKERS, DELAY, priority_sql="prio",
             cols="doc_id")).fetchall()}
         assert got == want
-
-    def test_stats_makespan_tracks_deepest_host(self, spark):
-        df = spark.createDataFrame(
-            _ROWS, "doc_id long, host string, url string, prio long")
-        sched = schedule_frontier(df, N_WORKERS, DELAY, priority_sql="prio")
-        stats = {r.worker: r for r in frontier_stats(sched).collect()}
-        h0_worker = int(hashlib.md5(
-            b"h0.example:frontier").hexdigest()[:15], 16) % N_WORKERS
-        assert stats[h0_worker].makespan_s == 19 * DELAY
-        assert sum(r.n_urls for r in stats.values()) == len(_ROWS)
 
     def test_validation(self):
         with pytest.raises(ValueError, match="positive"):

@@ -6,7 +6,7 @@ import json
 
 import pytest
 
-from core_spark.sources.geojson import parse_geojson, read_geojson
+from core_spark.sources.geojson import parse_geojson
 
 SQUARE = [[0.0, 0.0], [1.0, 0.0], [1.0, 1.0], [0.0, 1.0], [0.0, 0.0]]
 HOLE = [[0.25, 0.25], [0.75, 0.25], [0.75, 0.75], [0.25, 0.75], [0.25, 0.25]]
@@ -165,18 +165,6 @@ def test_parser_never_raises_fuzz():
                         assert isinstance(p[0], float)
 
     run()
-
-
-@pytest.mark.spark
-def test_read_geojson_files(spark, tmp_path):
-    d = tmp_path / "gj"
-    d.mkdir()
-    (d / "a.geojson").write_text(COLLECTION)
-    (d / "b.geojson").write_text("oops")
-    out = read_geojson(spark, str(d)).collect()
-    assert len(out) == 7 + 1  # 7 rows from the collection + 1 error row
-    assert sum(1 for r in out if r["error"] == "invalid json") == 1
-    assert all(r["src"].endswith((".geojson",)) for r in out)
 
 
 @pytest.mark.spark

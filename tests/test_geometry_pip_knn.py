@@ -10,6 +10,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from core_spark.data import synth
 from core_spark.data.polygons import admin_polygons, edges_sql_values, gen_polygon
@@ -567,8 +569,7 @@ class TestRingBands:
         """The same rings as polygons (one of them holed by the zero-height
         ring), points on vertex ys, band boundaries, outside every ring and
         non-finite: ``match_points`` equals the per-polygon reference."""
-        # no NaN vertices here: a NaN envelope spreads to every STRtree
-        # ancestor box and blanks the whole table
+        # NaN polygons are fuzzed in TestPipFuzz
         names = [n for n in BAND_RINGS if not n.startswith("nan")]
         payload = [(10 + i, [BAND_RINGS[n].tolist()]) for i, n in enumerate(names)]
         payload.append((5, [BAND_RINGS["square"].tolist(),
@@ -582,6 +583,101 @@ class TestRingBands:
         got = match_points(lons, lats, packed, fp=fp)
         assert got.tolist() == _owners_by_polygon(lons, lats, payload).tolist()
         assert len(set(got.tolist())) > 5
+
+
+
+_GRID = 16.0  # vertices and points snap to 1/16 degree, so ties on edges are common
+
+
+def _snap(v) -> float:
+    return float(np.round(np.asarray(v) * _GRID) / _GRID)
+
+
+@st.composite
+def _star(draw, cx: float, cy: float, r_max: float = 4.0) -> list:
+    """Star-shaped ring about (cx, cy): 3-9 vertices at increasing angles,
+    each at its own radius, snapped to the grid (so it may self-touch)."""
+    n = draw(st.integers(3, 9))
+    angles = sorted(draw(st.lists(st.floats(0, 2 * np.pi, allow_nan=False),
+                                  min_size=n, max_size=n)))
+    radii = draw(st.lists(st.floats(0.1, r_max), min_size=n, max_size=n))
+    return [(_snap(cx + r * np.cos(t)), _snap(cy + r * np.sin(t)))
+            for t, r in zip(angles, radii)]
+
+
+@st.composite
+def _fuzz_polygon(draw) -> list:
+    """One table entry, or two for an antimeridian pair: [(admin_id, rings)].
+    Ids come from a small range, so duplicate ids are common."""
+    aid = draw(st.integers(0, 12))
+    kind = draw(st.sampled_from(
+        ["star", "holed", "holed", "antimeridian", "degenerate", "nan"]))
+    if kind == "antimeridian":
+        y0 = _snap(draw(st.floats(-8, 6)))
+        w, h = _snap(draw(st.floats(0.25, 3))), _snap(draw(st.floats(0.25, 4)))
+        west = [(-180.0, y0), (-180.0 + w, y0), (-180.0 + w, y0 + h), (-180.0, y0 + h)]
+        east = [(180.0 - w, y0), (180.0, y0), (180.0, y0 + h), (180.0 - w, y0 + h)]
+        return [(aid, [west]), (aid, [east])]
+    cx, cy = _snap(draw(st.floats(-8, 8))), _snap(draw(st.floats(-8, 8)))
+    if kind == "degenerate":  # one vertex, a doubled vertex, or a line
+        x1, y1 = _snap(draw(st.floats(-8, 8))), _snap(draw(st.floats(-8, 8)))
+        ring = draw(st.sampled_from([
+            [(cx, cy)], [(cx, cy), (cx, cy), (cx, cy)], [(cx, cy), (x1, y1)],
+            [(cx, cy), ((cx + x1) / 2, (cy + y1) / 2), (x1, y1)],
+        ]))
+        return [(aid, [ring])]
+    outer = draw(_star(cx, cy))
+    rings = [outer]
+    if kind == "holed":  # the hole may poke out of the outer ring: even-odd
+        rings.append(draw(_star(cx, cy, r_max=2.0)))
+    if kind == "nan":  # a non-finite vertex in the outer ring, maybe a hole too
+        i = draw(st.integers(0, len(outer) - 1))
+        x, y = outer[i]
+        outer[i] = draw(st.sampled_from([(np.nan, y), (x, np.nan), (np.nan, np.nan)]))
+        if draw(st.booleans()):
+            rings.append(draw(_star(cx, cy, r_max=2.0)))
+    return [(aid, rings)]
+
+
+@st.composite
+def _fuzz_case(draw):
+    """(polygon table, lons, lats, batch cut points)."""
+    table = [e for es in draw(st.lists(_fuzz_polygon(), min_size=1, max_size=25)) for e in es]
+    vertices = np.asarray([v for _, rs in table for r in rs for v in r], dtype=np.float64)
+    vertices = vertices[np.isfinite(vertices).all(axis=1)]
+    n_random = draw(st.integers(0, 300))
+    seed = draw(st.integers(0, 2**32 - 1))
+    rng = np.random.default_rng(seed)
+    lons = np.r_[np.round(rng.uniform(-10, 10, n_random) * _GRID) / _GRID,
+                 vertices[:, 0], -180.0, 180.0, -179.5, 179.5, np.nan, 0.0]
+    lats = np.r_[np.round(rng.uniform(-10, 10, n_random) * _GRID) / _GRID,
+                 vertices[:, 1], 0.0, 0.0, 1.0, 1.0, 0.0, np.nan]
+    cuts = sorted(draw(st.lists(st.integers(0, len(lons)), max_size=6)))
+    return table, lons, lats, cuts
+
+
+class TestPipFuzz:
+    """Random polygon tables (star-shaped rings, holes, overlaps, duplicate
+    ids, antimeridian fragments, degenerate and NaN rings), random points
+    and random batch splits: ``match_points`` equals the per-polygon
+    ``points_in_ring`` owner scan with the lowest-id tie-break."""
+
+    @settings(max_examples=150, deadline=None)
+    @given(_fuzz_case())
+    def test_match_points_equals_owner_scan(self, case):
+        table, lons, lats, cuts = case
+        packed, fp = polygon_payload(TestPackedPayload._table(table))
+        edges = [0, *cuts, len(lons)]
+        got = np.concatenate([match_points(lons[a:b], lats[a:b], packed, fp=fp)
+                              for a, b in zip(edges, edges[1:])])
+        # a NaN polygon matches nothing and leaves every other point's id
+        # as it is without that polygon in the table
+        finite = [(aid, rs) for aid, rs in table
+                  if not np.isnan(np.asarray(rs[0], dtype=np.float64)).any()]
+        want = _owners_by_polygon(lons, lats, finite)
+        assert got.tolist() == want.tolist()
+        if len(finite) < len(table):
+            assert match_points(lons, lats, finite).tolist() == got.tolist()
 
 
 class TestHaversine:

@@ -12,10 +12,11 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from core_spark.functions.hexgrid import apply_steps
 from core_spark.operators.gopherrules import (
     GATE_COLS,
     GOPHER_STOPS,
-    gopher_gate,
+    gopher_steps,
     sql_gopher_gate,
 )
 
@@ -95,8 +96,8 @@ def test_gopher_matches_model_spark(spark):
     df = spark.createDataFrame(PAGES, "doc_id long, text string")
     got = {
         r["doc_id"]: tuple(r[c] for c in SIGNALS + GATE_COLS)
-        for r in gopher_gate(df).select("doc_id", *SIGNALS, *GATE_COLS)
-        .collect()
+        for r in apply_steps(df, gopher_steps("text", "spark"))
+        .select("doc_id", *SIGNALS, *GATE_COLS).collect()
     }
     assert got == _expected()
     # each fixture fails exactly the gate it was built to fail:
@@ -159,6 +160,9 @@ def test_gopher_duckdb_twin_matches_model_fuzz(texts):
 @pytest.mark.spark
 def test_gopher_plan_is_one_jvm_projection(spark):
     df = spark.createDataFrame(PAGES, "doc_id long, text string")
-    plan = gopher_gate(df)._jdf.queryExecution().executedPlan().toString()
+    plan = (
+        apply_steps(df, gopher_steps("text", "spark"))
+        ._jdf.queryExecution().executedPlan().toString()
+    )
     assert "Exchange" not in plan
     assert "EvalPython" not in plan

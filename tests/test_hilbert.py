@@ -1,6 +1,6 @@
 """Hilbert curve: textbook tables, the adjacency property (the whole
-point vs Z-order), roundtrip bijectivity, quantization hygiene, layout
-contract, and the stepwise-SQL twins."""
+point vs Z-order), roundtrip bijectivity, quantization hygiene, and the
+stepwise-SQL twins."""
 
 from __future__ import annotations
 
@@ -14,7 +14,6 @@ from core_spark.operators.hilbert import (
     hilbert_d2xy_py,
     hilbert_py,
     hilbert_steps,
-    layout_by_hilbert,
     with_hilbert_key,
 )
 
@@ -81,22 +80,6 @@ def test_quantization_hygiene_clamps_and_null_guards(spark):
     # NULL/NaN quantize to 0 like zorder's _quant
     assert all(0 <= k < N * N for k in rows)
     assert len(rows) == 5
-
-
-def test_layout_partitions_are_disjoint_and_sorted(spark):
-    pts = [(float((i * 7) % 170 - 85), float((i * 11) % 350 - 175))
-           for i in range(400)]
-    df = spark.createDataFrame(pts, "lat double, lon double")
-    parts = layout_by_hilbert(df, 4, "lat", "lon").rdd.glom().collect()
-    ranges = []
-    for p in parts:
-        keys = [row["hkey"] for row in p]
-        assert keys == sorted(keys)  # sorted within
-        if keys:
-            ranges.append((keys[0], keys[-1]))
-    ranges.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2  # contiguous, disjoint key ranges
 
 
 def test_order_matches_zorder_resolution():

@@ -52,7 +52,10 @@ def test_with_pii_spark(spark):
     df = spark.createDataFrame(
         [(i, t) for i, (t, *_rest) in enumerate(CASES)], "doc_id INT, text STRING"
     )
-    rows = {r.doc_id: r for r in pii.with_pii(df, "text").collect()}
+    from pyspark.sql import functions as F
+
+    cols = {k: F.expr(e) for k, e in pii.pii_cols("text", "spark").items()}
+    rows = {r.doc_id: r for r in df.withColumns(cols).collect()}
     for i, (_t, ne, ns, np_, ni, red) in enumerate(CASES):
         r = rows[i]
         got = (r.n_email, r.n_ssn, r.n_phone, r.n_ipv4, r.redacted)

@@ -25,8 +25,6 @@ import tokenize
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-_NO_CALLER = "feature with no caller yet (ROADMAP direction 12)"
-
 #: Defs no root reaches, kept on purpose: "module.name" -> why it stays.
 TEST_ONLY: dict[str, str] = {
     "functions.geohash.geohash_py": "reference model of the SQL geohash",
@@ -34,7 +32,6 @@ TEST_ONLY: dict[str, str] = {
     "functions.geometry.point_in_ring": "scalar reference ray cast",
     "functions.geometry.points_in_ring": "vectorized reference ray cast for match_points",
     "functions.geometry.wkt_to_ring": "test helper: polygon WKT -> ring",
-    "functions.geoparse.sql_dec_mentions": "DuckDB oracle of the decimal-pair scan",
     "functions.hexgrid.cell_to_center": "numpy reference of the hexgrid SQL",
     "functions.hexgrid.cell_to_children": "numpy reference of the hexgrid SQL",
     "functions.hexgrid.cell_to_parent": "numpy reference of the hexgrid SQL",
@@ -43,7 +40,6 @@ TEST_ONLY: dict[str, str] = {
     "functions.jstest.count_tests": "reference-parity helper of parse_js_tests",
     "functions.jstest.detect_language": "reference-parity helper of parse_js_tests",
     "functions.jstest.format_each_name": "reference-parity helper of parse_js_tests",
-    "functions.pii.with_pii": _NO_CALLER,
     "functions.s2.cell_center_latlon": "numpy reference of the S2 SQL",
     "functions.s2.contains": "numpy reference of the S2 SQL",
     "functions.s2.face_uv_to_xyz": "helper of cell_center_latlon",
@@ -52,8 +48,7 @@ TEST_ONLY: dict[str, str] = {
     "functions.s2.range_min": "numpy reference of the S2 SQL",
     "functions.s2.st_to_uv": "numpy reference of the S2 SQL",
     "operators.bloomadmit.merge_bloom_words": "mergeability property of bloom_words",
-    "operators.c4clean.c4_clean": _NO_CALLER,
-    "operators.c4clean.sql_c4_clean": "DuckDB oracle of c4_clean",
+    "operators.c4clean.sql_c4_clean": "DuckDB twin of clean_steps",
     "operators.cardsketch.estimate_distinct": "driver-side estimate from the oracled integers",
     "operators.cardsketch.hll_estimate": "driver-side estimate from the oracled integers",
     "operators.cardsketch.hll_registers": "mergeability property of the HLL sketch",
@@ -62,22 +57,14 @@ TEST_ONLY: dict[str, str] = {
     "operators.dedup.lsh_recall_bound": "analytic bound the LSH recall tests check",
     "operators.dedup.simhash64": "pure kernel of the SimHash property tests",
     "operators.detect.lang_col": "test helper of the 22-framework detect test",
-    "operators.frontier.frontier_stats": _NO_CALLER,
-    "operators.gopherrules.gopher_gate": _NO_CALLER,
-    "operators.gopherrules.sql_gopher_gate": "DuckDB oracle of gopher_gate",
+    "operators.gopherrules.sql_gopher_gate": "DuckDB twin of gopher_steps",
     "operators.hilbert.hilbert_d2xy_py": "reference inverse walk for the adjacency test",
     "operators.hilbert.hilbert_py": "reference model of the SQL Hilbert key",
-    "operators.hilbert.layout_by_hilbert": _NO_CALLER,
     "operators.knn.guaranteed_radius_m": "analytic bound the kNN tests check",
     "operators.knn.knn_bruteforce_pandas": "reference model for the kNN goldens",
     "operators.linkgraph.hits_bound": "analytic bound the HITS tests check",
-    "operators.multimodal.with_media_metadata": _NO_CALLER,
-    "operators.multimodal.with_thumbnail": _NO_CALLER,
     "operators.redirects.sql_resolve_redirects": "DuckDB oracle of resolve_redirects",
-    "operators.zorder.layout_by_zorder": _NO_CALLER,
-    "sources.geojson.read_geojson": _NO_CALLER,
     "sources.warc.build_warc": "test helper: writes WARC fixtures",
-    "sources.warc.read_warc": _NO_CALLER,
 }
 
 

@@ -563,11 +563,7 @@ class TestEmbeddingOps:
 @pytest.mark.spark
 class TestMultimodalStage:
     def test_media_metadata_stage(self, spark):
-        from core_spark.operators.multimodal import (
-            encode_png,
-            with_media_metadata,
-            with_thumbnail,
-        )
+        from core_spark.operators.multimodal import with_media_features
 
         from core_spark.functions.jpeg import encode_jpeg
 
@@ -582,30 +578,25 @@ class TestMultimodalStage:
         ]
         df = spark.createDataFrame(rows, "media_id bigint, media binary")
 
-        meta = with_media_metadata(df).orderBy("media_id").toPandas()
-        assert meta["media_ok"].tolist() == [True, True, False, True, False]
-        assert meta["media_format"].tolist() == [
+        out = with_media_features(df, size=2).orderBy("media_id").toPandas()
+        assert out["media_ok"].tolist() == [True, True, False, True, False]
+        assert out["media_format"].tolist() == [
             "fakeimg/v1", "image/jpeg", None, "image/png", "image/jpeg",
         ]
-        assert meta["width"].tolist()[0] == 4 and meta["width"].tolist()[3] == 4
+        assert out["width"].tolist()[0] == 4 and out["width"].tolist()[3] == 4
 
-        thumb = with_thumbnail(df, size=2).orderBy("media_id").toPandas()
-        assert thumb["thumb"].iloc[0] is not None and len(thumb["thumb"].iloc[0]) == 4
-        assert thumb["thumb"].iloc[1] == [158.0] * 4  # constant gray, exact
-        assert thumb["thumb"].iloc[4] is None  # corrupt -> error-as-data
-        assert "truncated" in thumb["decode_error"].iloc[4]
+        assert out["thumb"].iloc[0] is not None and len(out["thumb"].iloc[0]) == 4
+        assert out["thumb"].iloc[1] == [158.0] * 4  # constant gray, exact
+        assert out["thumb"].iloc[4] is None  # corrupt -> error-as-data
+        assert "truncated" in out["decode_error"].iloc[4]
         # PNG decodes to the SAME pixels as the fake codec -> same features
-        assert thumb["thumb"].iloc[3] == thumb["thumb"].iloc[0]
+        assert out["thumb"].iloc[3] == out["thumb"].iloc[0]
 
     def test_fused_features_match_chained(self, spark):
-        """with_media_features (ONE Arrow stage) == metadata->thumbnail
-        chain, row for row, on the mixed ok/corrupt/null batch."""
-        from core_spark.operators.multimodal import (
-            encode_png,
-            with_media_features,
-            with_media_metadata,
-            with_thumbnail,
-        )
+        """with_media_features (ONE Arrow stage) == the pure kernels
+        (parse_media_header, decode_image, nearest-neighbour channel-mean
+        thumbnail), row for row, on the mixed ok/corrupt/null batch."""
+        from core_spark.operators.multimodal import MEDIA_META_SCHEMA, with_media_features
 
         from core_spark.functions.jpeg import encode_jpeg
 
@@ -619,16 +610,32 @@ class TestMultimodalStage:
             (5, bytearray(encode_fake_image(img))[:-3]),  # truncated fake
         ]
         df = spark.createDataFrame(rows, "media_id bigint, media binary")
+        size = 3
+        meta_cols = [f.split()[0] for f in MEDIA_META_SCHEMA.split(", ")]
 
-        fused = with_media_features(df, size=3).orderBy("media_id").toPandas()
-        chained = (
-            with_thumbnail(with_media_metadata(df), size=3)
-            .orderBy("media_id").toPandas()
-        )
-        assert list(fused.columns) == list(chained.columns)
-        pd.testing.assert_frame_equal(fused, chained)  # NaN-aligned equality
+        want = []
+        for media_id, blob in rows:
+            blob = None if blob is None else bytes(blob)
+            meta = parse_media_header(blob)
+            rec = {"media_id": media_id, **{c: meta[c] for c in meta_cols}}
+            try:
+                px = decode_image(blob)
+                h, w, _ = px.shape
+                yi = (np.arange(size) * h // size).clip(0, h - 1)
+                xi = (np.arange(size) * w // size).clip(0, w - 1)
+                thumb = px[np.ix_(yi, xi)].mean(axis=2)
+                rec.update(thumb=[float(v) for v in thumb.ravel()], decode_error=None)
+            except (NotImplementedError, ValueError) as e:
+                rec.update(thumb=None, decode_error=str(e)[:80])
+            want.append(rec)
+
+        fused = with_media_features(df, size=size)
+        assert fused.columns == ["media_id", *meta_cols, "thumb", "decode_error"]
+        got = [r.asDict() for r in fused.orderBy("media_id").collect()]
+        assert got == want
+        assert [r["media_ok"] for r in got] == [True, True, False, True, False, False]
         # exactly one Python-worker stage in the fused plan
-        plan = with_media_features(df, size=3)._jdf.queryExecution().executedPlan().toString()
+        plan = fused._jdf.queryExecution().executedPlan().toString()
         assert plan.count("MapInPandas") == 1
 
 

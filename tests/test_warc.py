@@ -1,5 +1,4 @@
-"""WARC source (ISO 28500): round trips, gzip members, malformed tails,
-and the Spark read path."""
+"""WARC source (ISO 28500): round trips, gzip members, malformed tails."""
 
 from __future__ import annotations
 
@@ -9,11 +8,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from core_spark.sources.warc import (
-    encode_warc,
-    parse_warc_bytes,
-    read_warc,
-)
+from core_spark.sources.warc import encode_warc, parse_warc_bytes
 
 RECS = [
     {"url": "https://a.example/x", "ts": "2026-01-02T03:04:05Z",
@@ -145,34 +140,3 @@ def test_roundtrip_fuzz(pairs, gz):
     assert [(r["url"], r["payload"], r["error"]) for r in got] == [
         (r["url"], r["payload"], None) for r in recs
     ]
-
-
-@pytest.mark.spark
-def test_read_warc_spark(spark, tmp_path):
-    """Two archive files (one plain, one .warc.gz) through the real
-    binaryFile → Arrow path; one corrupt file yields error rows, not a
-    stage failure."""
-    (tmp_path / "a.warc").write_bytes(encode_warc(RECS[:2]))
-    (tmp_path / "b.warc.gz").write_bytes(
-        encode_warc(RECS[2:], per_record_gzip=True)
-    )
-    (tmp_path / "c.warc").write_bytes(b"GARBAGE\r\n\r\n")
-    out = read_warc(spark, str(tmp_path)).collect()
-    good = sorted(
-        (r["url"], r["warc_ts"], bytes(r["payload"]))
-        for r in out
-        if r["error"] is None
-    )
-    assert good == sorted(
-        (r["url"], r["ts"], r["payload"]) for r in RECS
-    )
-    bad = [r for r in out if r["error"] is not None]
-    assert len(bad) == 1 and bad[0]["path"].endswith("c.warc")
-    plan = (
-        read_warc(spark, str(tmp_path))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("ArrowEvalPython") + plan.count("MapInPandas") >= 1
-    assert "BatchEvalPython" not in plan

@@ -1,7 +1,7 @@
 """WARC record-scan face: roundtrip, Content-Length-authoritative
 skip (marker inside payload), error-as-data arms with resync,
-truncation, Spark face. (The file-level surface — gzip members,
-read_warc — is covered in test_warc.py.)"""
+truncation, Spark face. (The file-level surface — gzip members — is
+covered in test_warc.py.)"""
 
 from __future__ import annotations
 

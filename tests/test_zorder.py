@@ -1,4 +1,4 @@
-"""Z-order layout: model parity, engine parity, layout disjointness, clamps."""
+"""Z-order keys: model parity, engine parity, clamps."""
 
 from __future__ import annotations
 
@@ -7,7 +7,6 @@ import math
 import pytest
 
 from core_spark.operators.zorder import (
-    layout_by_zorder,
     sql_zorder_bucket_stats,
     with_zorder_key,
 )
@@ -91,43 +90,6 @@ def test_duckdb_twin_matches_spark(spark):
         ).collect()
     )
     assert got == want
-
-
-@pytest.mark.spark
-def test_layout_partitions_hold_disjoint_sorted_ranges(spark):
-    import pyspark.sql.functions as F
-
-    pts = spark.range(2000).selectExpr(
-        "CAST((id * 37) % 170 AS DOUBLE) - 85.0 + 0.25 AS lat",
-        "CAST((id * 53) % 350 AS DOUBLE) - 175.0 + 0.5 AS lon",
-    )
-    laid = layout_by_zorder(pts, n_files=8)
-    assert "REPARTITION_BY_RANGE" in laid._jdf.queryExecution().toString() \
-        or "rangepartitioning" in laid._jdf.queryExecution().toString().lower()
-
-    # data-asserted: per-partition [min,max] zkey ranges don't overlap
-    stats = (
-        laid.withColumn("pid", F.spark_partition_id())
-        .groupBy("pid")
-        .agg(F.min("zkey").alias("lo"), F.max("zkey").alias("hi"),
-             F.count("*").alias("n"))
-        .orderBy("pid")
-        .collect()
-    )
-    assert sum(r["n"] for r in stats) == 2000
-    ordered = sorted((r["lo"], r["hi"]) for r in stats if r["n"] > 0)
-    for (lo1, hi1), (lo2, _) in zip(ordered, ordered[1:]):
-        assert hi1 <= lo2  # disjoint (range-partitioned)
-
-    # within-partition sort: zkey non-decreasing inside each partition
-    def check(it):
-        prev = None
-        for row in it:
-            assert prev is None or row.zkey >= prev
-            prev = row.zkey
-        return iter(())
-
-    laid.select("zkey").rdd.mapPartitions(check).count()
 
 
 @pytest.mark.spark

@@ -104,13 +104,14 @@ def test_spark_query_equals_plain_filter(spark):
 def test_range_filter_pushes_to_parquet_scan(spark, tmp_path):
     """The payoff demo: on a ZORDER-laid-out parquet table the zkey
     ranges appear in PushedFilters — the stats-pruning clause."""
-    from core_spark.operators.zorder import layout_by_zorder, with_zorder_key
+    from core_spark.operators.zorder import with_zorder_key
 
     rows = [(i, (i * 37) % 170 - 85.0 + 0.25, (i * 53) % 350 - 175.0 + 0.5)
             for i in range(2000)]
     df = spark.createDataFrame(rows, "doc_id long, lat double, lon double")
     path = str(tmp_path / "zlaid")
-    layout_by_zorder(df, 8).write.mode("overwrite").parquet(path)
+    (with_zorder_key(df).repartitionByRange(8, "zkey")
+     .sortWithinPartitions("zkey").write.mode("overwrite").parquet(path))
     laid = spark.read.parquet(path)
     q = bbox_query(laid.drop("zkey"), -20.0, 30.0, -60.0, 40.0)
     got = {r["doc_id"] for r in q.collect()}
