@@ -12,7 +12,7 @@ rollup stays JVM-side. This is the idiomatic shape for a 10^12-row pipeline:
     scan -> [ONE vectorized Python stage] -> JVM shuffle/agg
 
 The kernel composes the already-golden-tested pure kernels (html_to_text,
-parse_mentions, hexgrid.latlon_to_cell, pip.match_points) — byte-identical
+mention_batch, hexgrid.latlon_to_cell, pip.match_points) — byte-identical
 results to the staged pipeline, proven in tests/test_fused.py. The staged
 (manifest) pipeline never hits the chaining issue because each stage
 materializes to parquet (separate jobs); use fused for single-pass
@@ -26,7 +26,7 @@ import pandas as pd
 
 from core_spark.functions import hexgrid as hx
 from core_spark.functions.extract import html_to_text
-from core_spark.functions.geoparse import parse_mentions
+from core_spark.functions.geoparse import mention_batch, mention_index
 from core_spark.operators.pip import match_points, polygon_payload
 
 FUSED_SCHEMA = (
@@ -41,32 +41,22 @@ RESOLUTIONS = (5, 6, 7, 8, 9)
 
 def fused_batch(pdf: pd.DataFrame, payload, payload_fp: int) -> pd.DataFrame:
     """Pure batch kernel: corpus rows -> mention rows with tiles + admin."""
-    doc_ids, urls, langs, midx, lats, lons, kinds = [], [], [], [], [], [], []
-    for did, url, lang, html in zip(
-        pdf["doc_id"], pdf["url"], pdf["lang"], pdf["html"]
-    ):
-        text = html_to_text(html)
-        if text is None:
-            continue
-        for i, m in enumerate(parse_mentions(text)):
-            doc_ids.append(did)
-            urls.append(url)
-            langs.append(lang)
-            midx.append(i)
-            lats.append(m["lat"])
-            lons.append(m["lon"])
-            kinds.append(m["kind"])
-
-    lat_a = np.asarray(lats, dtype=np.float64)
-    lon_a = np.asarray(lons, dtype=np.float64)
+    mb = mention_batch([html_to_text(h) for h in pdf["html"]])
+    doc, idx = mention_index(mb.counts)
+    lat_a, lon_a = mb.lat, mb.lon
+    doc_id = pdf["doc_id"].to_numpy()[doc]
+    # Arrow hands a bigint column holding nulls over as float64 with NaN,
+    # which a plain cast would turn into INT64_MIN keys.
+    if pd.isna(doc_id).any():
+        raise ValueError("fused_batch: null doc_id on a document with mentions")
     out = {
-        "doc_id": pd.array(doc_ids, dtype="int64"),
-        "url": urls,
-        "lang": langs,
-        "mention_idx": pd.array(midx, dtype="int32"),
+        "doc_id": doc_id.astype(np.int64),
+        "url": pdf["url"].to_numpy()[doc],
+        "lang": pdf["lang"].to_numpy()[doc],
+        "mention_idx": idx.astype(np.int32),
         "lat": lat_a,
         "lon": lon_a,
-        "kind": kinds,
+        "kind": mb.kind,
     }
     for res in RESOLUTIONS:
         cells = hx.latlon_to_cell(lat_a, lon_a, res).astype(np.int64)

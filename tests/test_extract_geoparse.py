@@ -9,6 +9,8 @@ import duckdb
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from core_spark.data import synth
 from core_spark.functions import geoparse as gp
@@ -148,6 +150,32 @@ def test_parse_mentions_prefilter_matches_reference():
             if lit in text:
                 seen[lit][kind in kinds] = True
     assert all(all(v) for v in seen.values()), seen
+
+
+# Adversarial pieces for the anchored scans: digit runs past group 1's 10
+# characters, ", " near either end, chained candidates, decimal pairs after
+# "geo:", "°" without a match, "-" runs, non-ASCII (incl. U+3000).
+_ADVERSARIAL = st.lists(
+    st.one_of(
+        st.sampled_from([
+            ", ", ",", " ", "1.5, 2.5", "1.5, 2.5, 3.5", "-1.5, -2.5, -3.5, -4.5",
+            "-89.999999, -179.999999", "geo:1.5, 2.5", "geo:1.5,2.5", "geo:", "°", "°°",
+            "12°", "1°2'3\"N", '40°26\'46.0"N 79°58\'56.0"W', '1°2\'3"S 4°5\'6.5"E',
+            "---", "-", ".", "..", "\u3000", "é", "中", "N ", "E",
+        ]),
+        st.text(alphabet="0123456789", min_size=11, max_size=24),
+        st.from_regex(r"-?[0-9]{1,3}[.][0-9]{1,7}", fullmatch=True),
+        st.text(alphabet="0123456789.-", min_size=1, max_size=14),
+        st.text(alphabet="0123456789.-, °'\"NSEWgeo:\u3000é中", max_size=12),
+    ),
+    max_size=12,
+).map("".join)
+
+
+@settings(max_examples=600, deadline=None)
+@given(_ADVERSARIAL)
+def test_parse_mentions_anchored_scan_matches_finditer(text):
+    assert gp.parse_mentions(text) == _mentions_without_prefilter(text)
 
 
 def test_sql_dec_mentions_duckdb_matches_kernel():

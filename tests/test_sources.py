@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from core_spark.sources.ingest import CORPUS_SCHEMA_FIELDS, read_corpus
@@ -23,6 +25,62 @@ class TestCorpusAndSinks:
         spark.range(5).write.parquet(bad)
         with pytest.raises(ValueError, match="corpus schema mismatch"):
             read_corpus(spark, bad)
+
+    @staticmethod
+    def _corpus(spark, path, n=50, extra=False):
+        from pyspark.sql import functions as F
+
+        from core_spark.data.synth import webpages_spark
+
+        df = webpages_spark(spark, n, 2).select("url", "warc_ts", "html", "lang", "doc_id")
+        (df.withColumn("extra", F.lit(1)) if extra else df).write.mode("overwrite").parquet(path)
+
+    @staticmethod
+    def _jobs(spark, group, fn):
+        """Spark jobs that ``fn`` starts, counted by job group."""
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def test_read_corpus_reread_starts_no_job(self, spark, tmp_path):
+        path = str(tmp_path / "corpus")
+        self._corpus(spark, path)
+        assert self._jobs(spark, "corpus-first", lambda: read_corpus(spark, path)) >= 1
+        assert self._jobs(spark, "corpus-again", lambda: read_corpus(spark, path)) == 0
+        assert read_corpus(spark, path).count() == 50
+
+    def test_read_corpus_added_bad_file_revalidates(self, spark, tmp_path):
+        path = tmp_path / "corpus"
+        self._corpus(spark, str(path))
+        read_corpus(spark, str(path))
+        bad = tmp_path / "bad"
+        spark.range(3).write.parquet(str(bad))
+        # inference reads the footer of the first data file in path order
+        (path / "a.parquet").write_bytes(next(bad.glob("*.parquet")).read_bytes())
+        with pytest.raises(ValueError, match="corpus schema mismatch"):
+            read_corpus(spark, str(path))
+
+    def test_read_corpus_replaced_files_revalidate(self, spark, tmp_path):
+        path = str(tmp_path / "corpus")
+        self._corpus(spark, path)
+        assert "extra" not in read_corpus(spark, path).columns
+        part = next((tmp_path / "corpus").glob("part-*.parquet"))
+        st = part.stat()  # rewritten in place: same names and bytes, newer mtime
+        os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns + 5 * 10**9))
+        assert self._jobs(spark, "corpus-touched", lambda: read_corpus(spark, path)) >= 1
+        assert self._jobs(spark, "corpus-touched-again", lambda: read_corpus(spark, path)) == 0
+        part.rename(part.with_name("part-renamed.parquet"))  # same bytes, other files
+        assert self._jobs(spark, "corpus-renamed", lambda: read_corpus(spark, path)) >= 1
+        self._corpus(spark, path, n=60, extra=True)
+        df = read_corpus(spark, path)
+        assert "extra" in df.columns and df.count() == 60
+        spark.range(3).write.mode("overwrite").parquet(path)
+        with pytest.raises(ValueError, match="corpus schema mismatch"):
+            read_corpus(spark, path)
 
 
 class TestCandidatePredicate:
