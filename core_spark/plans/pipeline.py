@@ -26,6 +26,26 @@ from __future__ import annotations
 from core_spark.plans.manifest import StageManifest, content_fingerprint
 
 
+def _input_fingerprint(df) -> str:
+    """Schema plus SHA-256 of the ``FileStatus`` strings (path, length, mtime)
+    every leaf of the analyzed plan lists, built in the JVM: no Spark job, no
+    O(files) py4j reply. A leaf that lists no files (``createDataFrame``, a
+    pinned frame) makes it random: such a run recomputes, never resumes."""
+    import uuid
+
+    jvm = df.sparkSession._jvm
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    text = jvm.scala.collection.mutable.StringBuilder()
+    for leaf in (leaves.apply(i) for i in range(leaves.size())):
+        relation = leaf.relation() if leaf.nodeName() == "LogicalRelation" else None
+        if relation is None or relation.getClass().getSimpleName() != "HadoopFsRelation":
+            return uuid.uuid4().hex
+        relation.location().allFiles().addString(text, "[", "\n", "]")
+    sha = jvm.java.security.MessageDigest.getInstance("SHA-256")
+    sha.update(jvm.java.nio.charset.StandardCharsets.UTF_8.encode(jvm.java.nio.CharBuffer.wrap(text)))
+    return content_fingerprint("ingest-external", str(df.schema), bytes(sha.digest()).hex())
+
+
 def run_pipeline(
     spark,
     workdir: str,
@@ -65,7 +85,7 @@ def run_pipeline(
         )
     else:
         out["ingest"] = docs_df
-        fp_ingest = content_fingerprint("ingest-external", str(docs_df.schema))
+        fp_ingest = _input_fingerprint(docs_df)
 
     # -- extract (G1) -------------------------------------------------------
     fp_extract = content_fingerprint("extract", fp_ingest)

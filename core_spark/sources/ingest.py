@@ -19,66 +19,42 @@ CORPUS_SCHEMA_FIELDS = {
 }
 
 
-# (fmt, path) -> (validated schema, digest of the file listing it came from).
-# The memo pays off only where one process reads an unchanged path again:
-# every fused_scan benchmark pass after the first does, and so would a
-# long-lived session that re-queries one corpus. A job that reads its corpus
-# once gains nothing from it; no registry query, script or the spatial_join
-# workload calls read_corpus. One entry per distinct (fmt, path) read.
-_SCHEMAS: dict[tuple[str, str], tuple] = {}
+def _footer_schema(spark, path: str):
+    """``spark.read.parquet(path).schema`` with no Spark job: the footer that
+    inference reads in a one-task job (the first ``_common_metadata``, else
+    ``_metadata``, else data file, in path-string order), read on the driver
+    with Spark's reader and converter under the session's settings."""
+    from urllib.parse import unquote
+
+    from pyspark.sql.types import StructType, _parse_datatype_json_string
+
+    jvm, jspark = spark._jvm, spark._jsparkSession
+    # a user schema skips inference: this load only lists the files
+    index = spark.read.schema(StructType()).parquet(path)._jdf.queryExecution().analyzed().relation().location()
+    uris = jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(index.inputFiles()).mkString("\n")
+    names = [unquote(u) for u in uris.split("\n") if u]
+    if not names:
+        return StructType()  # fails the corpus schema check
+    rank = {"_common_metadata": 0, "_metadata": 1}
+    i = min(range(len(names)), key=lambda i: (rank.get(names[i].rsplit("/", 1)[-1], 2), names[i]))
+    parquet = getattr(getattr(jvm.org.apache.spark.sql.execution.datasources.parquet, "ParquetFileFormat$"), "MODULE$")
+    conf = jspark.sessionState().newHadoopConf()
+    footers = parquet.readParquetFootersInParallel(conf, index.allFiles().slice(i, i + 1), False)
+    return _parse_datatype_json_string(parquet.readSchema(footers, jspark).get().json())
 
 
-def _listing_digest(df) -> str:
-    """SHA-256 of the ``FileStatus`` strings (path, length, modification
-    time; Spark's listing leaves access time and owner empty) of every file
-    a path read covers, in listing order (a reordered listing only costs a
-    new inference). The file index the read already listed holds them, and
-    the string and its digest are built in the JVM: no Spark job, no
-    per-file py4j call, and no O(files) string through py4j (handing over
-    the 11 KB string of 32 files took 42 ms). Driver time is O(files) in
-    the JVM: 6 ms at 32 files, 11 ms at 2,000 (4-core host)."""
-    jvm = df.sparkSession._jvm
-    files = df._jdf.queryExecution().analyzed().relation().location().allFiles()
-    text = files.addString(jvm.scala.collection.mutable.StringBuilder(), "\n")
-    sha = jvm.java.security.MessageDigest.getInstance("SHA-256")
-    sha.update(jvm.java.nio.charset.StandardCharsets.UTF_8.encode(jvm.java.nio.CharBuffer.wrap(text)))
-    return bytes(sha.digest()).hex()
-
-
-def read_corpus(spark, path: str, fmt: str = "parquet", validate: bool = True):
-    """Scan the web-pages table (BASELINE.json input_hint schema).
-
-    ``fmt='iceberg'`` reads a catalog table name instead of a path (same
-    DataFrame downstream — Iceberg's scan does partition pruning on pushed
-    predicates exactly like the parquet reader here).
-
-    Inferring a path's schema costs a Spark job on every read, so the
-    validated schema is kept per ``(fmt, path)`` with a digest of the files
-    it came from (``_listing_digest``); a read whose files, lengths and
-    modification times are unchanged reuses it, and any other read is
-    inferred and validated again. Only repeated reads of one path gain; a
-    first read pays the digest on top of the inference.
-    """
-    key = (fmt, path)
+def read_corpus(spark, path: str, fmt: str = "parquet"):
+    """Scan the web-pages table (a parquet path, or with ``fmt='iceberg'`` a
+    catalog table name) and check its ``CORPUS_SCHEMA_FIELDS``. A parquet read
+    loads the path with ``_footer_schema``: no Spark job, and no state kept."""
     if fmt == "iceberg":
         df = spark.read.table(path)
     else:
-        if validate and key in _SCHEMAS:
-            schema, digest = _SCHEMAS[key]
-            df = spark.read.format(fmt).schema(schema).load(path)
-            if _listing_digest(df) == digest:
-                return df
-        df = spark.read.format(fmt).load(path)
-    if validate:
-        have = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-        missing = [
-            f"{k}:{t}" for k, t in CORPUS_SCHEMA_FIELDS.items()
-            if have.get(k) != t
-        ]
-        if missing:
-            raise ValueError(f"corpus schema mismatch, need {missing}, have {have}")
-        if fmt != "iceberg":
-            _SCHEMAS[key] = (df.schema, _listing_digest(df))
+        df = spark.read.schema(_footer_schema(spark, path)).parquet(path)
+    have = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    missing = [f"{k}:{t}" for k, t in CORPUS_SCHEMA_FIELDS.items() if have.get(k) != t]
+    if missing:
+        raise ValueError(f"corpus schema mismatch, need {missing}, have {have}")
     return df
 
 

@@ -4,7 +4,7 @@ Cluster launch (the py-files zip ships the package to executors):
 
     cd /root/repo && zip -qr /tmp/core_spark.zip core_spark
     spark-submit --py-files /tmp/core_spark.zip scripts/run_pipeline.py \
-        --workdir /data/run1 --n-docs 1000000 [--input-table <parquet/iceberg path>]
+        --workdir /data/run1 --n-docs 1000000 [--input-table <parquet path or Iceberg table root>]
 
 Local smoke:
 
@@ -32,15 +32,19 @@ def main() -> None:
     ap.add_argument("--n-docs", type=int, default=100_000)
     ap.add_argument("--partitions", type=int, default=64)
     ap.add_argument("--input-table", default=None,
-                    help="read this parquet path instead of the synthetic corpus")
+                    help="read this parquet path or Iceberg table root instead of the synthetic corpus")
     ap.add_argument("--zonal-res", type=int, default=7)
     args = ap.parse_args()
 
     from core_spark.plans.pipeline import run_pipeline
     from core_spark.session import spark_session
+    from core_spark.sources.iceberg import read_iceberg
+    from core_spark.sources.ingest import read_corpus
 
     spark = spark_session()
-    docs_df = spark.read.parquet(args.input_table) if args.input_table else None
+    table = args.input_table
+    iceberg = table and os.path.isdir(os.path.join(table, "metadata"))  # an Iceberg table root
+    docs_df = (read_iceberg if iceberg else read_corpus)(spark, table) if table else None
 
     t0 = time.monotonic()
     out = run_pipeline(
