@@ -2962,9 +2962,11 @@ def q_warc_roundtrip(spark, sf_dir):
     so header grammar, Content-Length slicing, gzip membering, and
     payload bytes are all gated byte-for-byte against a pure-SQL
     derivation of the same fields."""
+    import hashlib
+
     import pandas as pd
 
-    from core_spark.sources.warc import encode_warc, parse_warc_bytes
+    from core_spark.sources.warc import encode_warc, parse_warc
 
     def run(batches):
         for pdf in batches:
@@ -2981,14 +2983,12 @@ def q_warc_roundtrip(spark, sf_dir):
                     "payload": str(text).encode("utf-8"),
                 }
                 data = encode_warc([rec], per_record_gzip=bool(i % 2))
-                (p,) = parse_warc_bytes(data)
-                assert p["error"] is None, p["error"]
-                import hashlib
-
+                (p,) = parse_warc(data)
+                assert p["parse_error"] is None, p["parse_error"]
                 out["doc_id"].append(i)
-                out["url"].append(p["url"])
-                out["warc_ts"].append(p["ts"])
-                out["rec_type"].append(p["rec_type"])
+                out["url"].append(p["target_uri"])
+                out["warc_ts"].append(p["warc_date"])
+                out["rec_type"].append(p["warc_type"])
                 out["n_payload"].append(len(p["payload"]))
                 out["payload_fp"].append(
                     hashlib.md5(p["payload"]).hexdigest()[:16]
@@ -3029,10 +3029,10 @@ def q_iceberg_scan(spark, sf_dir):
     Three arms oracle three read paths: `current` (both delete layers),
     `snap1` (time travel by snapshot id), `asof_pos` (time travel by
     timestamp, position deletes only). Values gated byte-for-byte via
-    md5(text). At scale the production path is the Iceberg runtime's own
-    scan (ingest.read_corpus fmt='iceberg'); this proves the engine
-    speaks the format itself and that MOR deletes stay broadcast
-    anti-joins (plan-asserted in test_iceberg.py)."""
+    md5(text). ``ingest.read_corpus`` reads a table root through the
+    same ``read_iceberg``; this proves the engine speaks the format
+    itself and that MOR deletes stay broadcast anti-joins
+    (plan-asserted in test_iceberg.py)."""
     import shutil
     import tempfile
 
@@ -7595,9 +7595,7 @@ def q_bm25_topk(spark, sf_dir):
     cross a map-side-prefiltered corpus (arrays_overlap gate), per-term
     document frequency from the same pinned candidate table, integer-
     exact rational tf-saturation x rarity idf (Spark DIV == DuckDB //),
-    top-k per query via a WindowGroupLimit-rewritten rank window. The
-    float log-idf scorer is the documented at-scale mode (pytest pins
-    set/head agreement)."""
+    top-k per query via a WindowGroupLimit-rewritten rank window."""
     from core_spark.operators.bm25 import bm25_topk
 
     # wide=False: bm25 scans docs twice (candidates + corpus stats) and
@@ -8514,8 +8512,7 @@ def q_profile_table(spark, sf_dir):
     via its caller-named BIGINT derivation (cents for doubles,
     LENGTH for strings) — exact non-null / null / distinct counts
     and range, all five columns in ONE aggregation pass (Expand for
-    the exact COUNT DISTINCTs; approx_count_distinct is the
-    documented at-scale mode, never oracled). The 1-row wide result
+    the exact COUNT DISTINCTs). The 1-row wide result
     explodes JVM-side into the long layout. Twin: the INDEPENDENT
     per-column UNION ALL plan."""
     from core_spark.operators.profile import profile_table
@@ -9383,7 +9380,7 @@ REGISTRY: tuple[Query, ...] = (
         "SELECT doc_id FROM documents", n_hosts=97, k_out=4, iters=3
     )),
     Query("zorder_layout", q_zorder_layout, lambda: sql_zorder_bucket_stats(
-        _POINTS_SQL, bucket_shift_pow2=1 << 26, dialect="duck"
+        _POINTS_SQL, bucket_shift_pow2=1 << 26, dialect="duckdb"
     )),
     Query("span_dedup", q_span_dedup, lambda: sql_dedup_substrings(
         f"(SELECT doc_id, {SPAN_GEN_SQL} AS text FROM documents)",

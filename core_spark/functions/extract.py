@@ -93,22 +93,20 @@ def extract_batch(html: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"text": pd.array(texts, dtype="string"), "extract_error": pd.array(errs, dtype="string")})
 
 
-def with_extracted_text(df, html_col: str = "html", out_col: str = "text",
-                        keep_html: bool = False):
+def with_extracted_text(df, html_col: str = "html", out_col: str = "text"):
     """Append extracted text + error columns via Arrow-batched mapInPandas.
 
-    Adds ``out_col`` (string) and ``extract_error``. By default the fat
-    ``html_col`` is consumed by the stage and NOT re-emitted — returning it
-    would round-trip every document's raw bytes through the Arrow channel a
-    second time for nothing (measured ~2x stage cost). Pass
-    ``keep_html=True`` when a downstream stage genuinely needs the bytes.
+    Adds ``out_col`` (string) and ``extract_error``. The fat ``html_col`` is
+    consumed by the stage and NOT re-emitted — returning it would round-trip
+    every document's raw bytes through the Arrow channel a second time for
+    nothing (measured ~2x stage cost).
 
     UDF stage placement rule (SURVEY.md §4): apply cheap Column filters
     (size, lang, url predicates) BEFORE this stage — Catalyst cannot push
     predicates through a Python map stage.
     """
     schema_in = df.schema
-    drop = {out_col, "extract_error"} | (set() if keep_html else {html_col})
+    drop = {out_col, "extract_error", html_col}
     keep = [f for f in schema_in.fields if f.name not in drop]
     keep_names = [f.name for f in keep]
     out_schema = (

@@ -16,8 +16,9 @@ pipeline uses) exploits that a Bloom filter has NO false negatives:
              Bucketing is what makes 10^12 work: a single monolithic
              filter for 10^12 keys is ~TB-scale (unbroadcastable), but
              per-bucket bitmaps are row-sized values in an ordinary
-             table, maintained incrementally (bitwise-OR mergeable —
-             fold each admitted batch in; see merge_bloom_words).
+             table, bitwise-OR mergeable (build(A) ⊕ build(B) ≡
+             build(A ∪ B); see merge_bloom_words). The operator builds
+             them from the ledger in the same job.
   2. probe   the new batch's winners join the bucket bitmaps on the
              uniform bucket key (tiny vs the ledger) and evaluate the
              k bit-tests JVM-side. Definite misses — the overwhelming
@@ -112,16 +113,14 @@ def pack_bloom(words):
 
 def admit_new_docs_bloom(existing, new, key: str = "doc_id",
                          fp_col: str = "fp", n_buckets: int = 64,
-                         m_bits: int = 1 << 16, bloom=None):
+                         m_bits: int = 1 << 16):
     """Bloom-gated admission; output ≡ dedup.admit_new_docs exactly.
 
-    ``bloom`` accepts a pre-packed (bucket, bloom_words) table — the
-    maintained-ledger path; omitted, it is built from ``existing`` in
-    the same job (still shuffle-free on the ledger).
+    The bloom is built from ``existing`` in the same job (shuffle-free on
+    the ledger).
     """
-    if bloom is None:
-        bloom = pack_bloom(
-            bloom_words(existing.select(fp_col), fp_col, n_buckets, m_bits))
+    bloom = pack_bloom(
+        bloom_words(existing.select(fp_col), fp_col, n_buckets, m_bits))
 
     winners = new.groupBy(fp_col).agg(F.min(key).alias(key))
     flagged = (

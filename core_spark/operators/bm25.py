@@ -21,31 +21,20 @@ these queries"), and eval-set mining. Shape:
 The candidate table feeds two branches (document frequency + scoring), so
 it pins via ``plans.materialize.pin`` (CLAUDE.md multi-consumer rule).
 
-Scoring comes in two modes:
+Scoring is ORACLE-PORTABLE: every quantity is BIGINT and every division
+is truncating integer division (Spark ``DIV`` == DuckDB ``//`` for the
+all-positive operands here), so the score is bit-identical cross-engine.
+BM25's tf saturation term ``tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl))``
+is computed as an exact rational by clearing denominators — with
+k1 = a/c, b = p/q and avgdl = T/N:
 
-  ``scoring="int"`` (default, the ORACLE-PORTABLE variant): every quantity
-  is BIGINT and every division is truncating integer division (Spark
-  ``DIV`` == DuckDB ``//`` for the all-positive operands here), so the
-  score is bit-identical cross-engine. BM25's tf saturation term
-  ``tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl))`` is computed as an exact
-  rational by clearing denominators — with k1 = a/c, b = p/q and
-  avgdl = T/N:
+    tf_component = (tf*(a+c)*q*T*SCALE)  DIV  (c*q*T*tf + a*(q-p)*T + a*p*dl*N)
 
-      tf_component = (tf*(a+c)*q*T*SCALE)  DIV  (c*q*T*tf + a*(q-p)*T + a*p*dl*N)
-
-  and the idf is the same integer rarity weight ``(N*RARITY) DIV df`` that
-  ``lmscore.py`` uses — monotone in 1/df (rarer terms weigh more), portable
-  by construction. Operating envelope (documented, like lm_fluency): exact
-  while ``tf*(a+c)*q*T*SCALE < 2**63`` — with the defaults that is ~2e13
-  corpus tokens per stats scope; beyond it, or when real log-idf is wanted,
-  use:
-
-  ``scoring="float"`` — the at-scale production scorer: double
-  ``ln(1 + (N - df + 0.5)/(df + 0.5))`` (BM25+ idf, always positive) times
-  the same saturation term. Not oracle-compared (transcendental — CLAUDE.md
-  portability rules); a pytest pins that on the fixture corpus both modes
-  return the SAME top-k set per query and identical ranks 1-3 (the two
-  weightings differ only by adjacent swaps among near-tied tail scores).
+and the idf is the same integer rarity weight ``(N*RARITY) DIV df`` that
+``lmscore.py`` uses — monotone in 1/df (rarer terms weigh more), portable
+by construction. Operating envelope (documented, like lm_fluency): exact
+while ``tf*(a+c)*q*T*SCALE < 2**63`` — with the defaults that is ~2e13
+corpus tokens per stats scope.
 
 No reference counterpart (specvital/core has no retrieval subsystem); the
 formula is Robertson & Zaragoza 2009 ("The Probabilistic Relevance
@@ -78,34 +67,20 @@ def _int_contrib_sql(dialect: str) -> str:
     return f"(({num}) {div} ({den})) * ((n_docs * {RARITY}) {div} df_t)"
 
 
-def _float_contrib_sql() -> str:
-    """Double BM25+ contribution (Spark-side only; never oracle-compared)."""
-    a, c, p, q = K1_NUM, K1_DEN, B_NUM, B_DEN
-    k1 = f"(CAST({a} AS DOUBLE) / {c})"
-    b = f"(CAST({p} AS DOUBLE) / {q})"
-    avgdl = "(CAST(t_tokens AS DOUBLE) / n_docs)"
-    idf = "ln(1.0 + (n_docs - df_t + 0.5) / (df_t + 0.5))"
-    sat = f"(tf * ({k1} + 1.0)) / (tf + {k1} * (1.0 - {b} + {b} * dl / {avgdl}))"
-    return f"{idf} * {sat}"
-
-
 def bm25_topk(
     docs: DataFrame,
     queries: list[tuple[str, list[str]]],
     k: int = 5,
     toks_col: str = "toks",
     key: str = "doc_id",
-    scoring: str = "int",
 ) -> DataFrame:
     """Top-k docs per query by BM25-shaped score.
 
     ``queries`` is a literal list of (query_id, [terms]) — the driver-side
     query workload, broadcast everywhere it is used. Output:
     (query_id, doc_id, score, rank), rank 1-based BIGINT, ties broken by
-    doc_id ASC; score is BIGINT (``scoring="int"``) or DOUBLE ("float").
+    doc_id ASC; score is BIGINT.
     """
-    if scoring not in ("int", "float"):
-        raise ValueError(f"scoring must be 'int' or 'float', got {scoring!r}")
     spark = docs.sparkSession
     all_terms = sorted({t for _, terms in queries for t in terms})
     # literal tables built JVM-side (range + explode of a struct-array
@@ -156,14 +131,11 @@ def bm25_topk(
         F.sum(F.size(toks_col)).cast("long").alias("t_tokens"),
     )
 
-    contrib = (
-        _int_contrib_sql("spark") if scoring == "int" else _float_contrib_sql()
-    )
     scored = (
         cand.join(F.broadcast(dfreq), "term")
         .join(F.broadcast(qterms), "term")
         .crossJoin(F.broadcast(stats))
-        .withColumn("_contrib", F.expr(contrib))
+        .withColumn("_contrib", F.expr(_int_contrib_sql("spark")))
         .groupBy("query_id", key)
         .agg(F.sum("_contrib").alias("score"))
     )
@@ -184,7 +156,7 @@ def sql_bm25_topk(
     k: int = 5,
     key: str = "doc_id",
 ) -> str:
-    """DuckDB oracle twin for ``scoring="int"`` — an independent plan
+    """DuckDB oracle twin of ``bm25_topk`` — an independent plan
     (list_contains theta join + full window, no pre-filter/broadcast
     structure) over the same integer math.
     """

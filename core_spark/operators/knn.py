@@ -187,12 +187,11 @@ def knn_adaptive(
     res: int = 5,
     ring: int = 2,
     max_rounds: int = 2,
-    bruteforce: bool = True,
     **kw,
 ):
     """Exact kNN: run knn_join, re-run provably-incomplete queries with a
-    doubled ring, and (by default) finish the stragglers with a distributed
-    brute-force pass — so every returned row is ``complete``.
+    doubled ring, and finish the stragglers with a distributed brute-force
+    pass — so every returned row is ``complete``.
 
     Fully distributed: the per-round remainder is a left-anti join against
     the completed query ids — no driver collect()/isin round-trip (that
@@ -207,7 +206,6 @@ def knn_adaptive(
     query_id = kw.get("query_id", "query_id")
     remaining = queries
     parts = []
-    last_topk = None
     r = ring
     for _ in range(max_rounds):
         # eager checkpoint: the ring pass output is tiny (<= k rows per
@@ -216,7 +214,6 @@ def knn_adaptive(
         # anti-join, and the brute-force fallback all reuse the result
         # instead of re-planning and re-executing the ring join per branch
         topk = pin(knn_join(docs, remaining, k, res=res, ring=r, **kw))
-        last_topk = topk
         done = topk.filter(F.col("complete"))
         parts.append(done)
         # distributed remainder: queries with no complete result this round
@@ -224,37 +221,29 @@ def knn_adaptive(
         done_ids = done.select(query_id).distinct()
         remaining = remaining.join(done_ids, on=query_id, how="left_anti")
         r *= 2
-    if bruteforce:
-        # The remainder is tiny by construction (stragglers of the ring
-        # passes), so materialize it once and gate the brute-force stage on
-        # it being non-empty: when every query completed in the ring pass,
-        # nothing may schedule a full docs scan (at 10^12 docs an un-elided
-        # empty-broadcast crossJoin is a full-table scan per kNN call, and
-        # AQE's empty-relation propagation is not guaranteed for a noop
-        # sink). The isEmpty() is a driver check on already-materialized
-        # local data — not a collect() of a data path.
-        remaining = pin(remaining)
-        if not remaining.isEmpty():
-            parts.append(
-                knn_bruteforce(
-                    docs,
-                    remaining,
-                    k,
-                    doc_id=kw.get("doc_id", "doc_id"),
-                    query_id=query_id,
-                    doc_lat=kw.get("doc_lat", "lat"),
-                    doc_lon=kw.get("doc_lon", "lon"),
-                    q_lat=kw.get("q_lat", "qlat"),
-                    q_lon=kw.get("q_lon", "qlon"),
-                )
+    # The remainder is tiny by construction (stragglers of the ring
+    # passes), so materialize it once and gate the brute-force stage on
+    # it being non-empty: when every query completed in the ring pass,
+    # nothing may schedule a full docs scan (at 10^12 docs an un-elided
+    # empty-broadcast crossJoin is a full-table scan per kNN call, and
+    # AQE's empty-relation propagation is not guaranteed for a noop
+    # sink). The isEmpty() is a driver check on already-materialized
+    # local data — not a collect() of a data path.
+    remaining = pin(remaining)
+    if not remaining.isEmpty():
+        parts.append(
+            knn_bruteforce(
+                docs,
+                remaining,
+                k,
+                doc_id=kw.get("doc_id", "doc_id"),
+                query_id=query_id,
+                doc_lat=kw.get("doc_lat", "lat"),
+                doc_lon=kw.get("doc_lon", "lon"),
+                q_lat=kw.get("q_lat", "qlat"),
+                q_lon=kw.get("q_lon", "qlon"),
             )
-    elif last_topk is not None:
-        # bruteforce=False: keep the final round's provably-incomplete rows
-        # flagged complete=False so callers see which queries fell short
-        # instead of losing them silently. (Queries whose covered rings held
-        # zero candidates produce no rows at all — documented limitation of
-        # the flag-only mode; bruteforce=True is the exact path.)
-        parts.append(last_topk.filter(~F.col("complete")))
+        )
     return reduce(lambda a, b: a.unionByName(b), parts)
 
 

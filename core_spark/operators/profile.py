@@ -13,10 +13,8 @@ scan, map-side partials, a 1-row result exploded JVM-side into the
 per-column long layout (range+explode, the bm25 literal-table
 pattern; never createDataFrame on a query path). The COUNT(DISTINCT)
 expressions make Spark plan an Expand (one replicated stream per
-distinct aggregate): exact mode is the oracle-able default;
-``approx=True`` swaps in approx_count_distinct (HLL, one pass, no
-Expand) — the documented at-scale mode for wide tables, not
-bit-portable so never oracled.
+distinct aggregate); the counts are exact, so the DuckDB twin gates
+them bit for bit.
 
 All outputs BIGINT; min/max of the DERIVED value (the derivation is
 part of the profile's contract — range of cents, range of lengths).
@@ -35,7 +33,6 @@ from pyspark.sql import DataFrame, functions as F
 def profile_table(
     df: DataFrame,
     cols: list[tuple[str, str]],
-    approx: bool = False,
 ) -> DataFrame:
     """Rows (column, n_nonnull, n_null, n_distinct, min_v, max_v) —
     one per entry of ``cols`` = [(name, bigint_expr), ...], computed
@@ -43,17 +40,13 @@ def profile_table(
     if not cols:
         raise ValueError("profile_table needs at least one column spec")
     aggs = []
-    for i, (_, expr) in enumerate(cols):
-        d = (
-            f"approx_count_distinct(_c{i})" if approx
-            else f"COUNT(DISTINCT _c{i})"
-        )
+    for i in range(len(cols)):
         aggs += [
             F.expr(f"CAST(COUNT(_c{i}) AS BIGINT)").alias(f"nn{i}"),
             F.expr(
                 f"CAST(COUNT(*) - COUNT(_c{i}) AS BIGINT)"
             ).alias(f"nu{i}"),
-            F.expr(f"CAST({d} AS BIGINT)").alias(f"nd{i}"),
+            F.expr(f"CAST(COUNT(DISTINCT _c{i}) AS BIGINT)").alias(f"nd{i}"),
             F.expr(f"CAST(MIN(_c{i}) AS BIGINT)").alias(f"mn{i}"),
             F.expr(f"CAST(MAX(_c{i}) AS BIGINT)").alias(f"mx{i}"),
         ]

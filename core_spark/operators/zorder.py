@@ -71,16 +71,13 @@ def _quant(col: str, lo: float, span: float) -> str:
 
 
 def zorder_steps(
-    lat_col: str = "lat", lon_col: str = "lon", dialect: str = "spark"
+    lat_col: str = "lat", lon_col: str = "lon"
 ) -> list[tuple[str, str]]:
     """Stepwise (name, expr) columns ending in ``zkey``.
 
-    Same emission for both engines; only the integer-division token
-    would differ and none is needed (shifts here are all left/multiply).
-    ``dialect`` is accepted for symmetry with the other emitters —
-    both 'duckdb' (the repo-wide token) and the legacy 'duck' work.
+    Same emission for both engines: only the integer-division token would
+    differ and none is needed (shifts here are all left/multiply).
     """
-    assert dialect in ("spark", "duck", "duckdb")
     steps: list[tuple[str, str]] = [
         ("_zx0", _quant(lon_col, -180.0, 360.0)),
         ("_zy0", _quant(lat_col, -90.0, 180.0)),
@@ -110,7 +107,7 @@ def sql_zorder_bucket_stats(
     lat_col: str = "lat",
     lon_col: str = "lon",
     bucket_shift_pow2: int = 1 << 26,
-    dialect: str = "duck",
+    dialect: str = "duckdb",
 ) -> str:
     """Per-bucket footprint stats: the data-skipping evidence query.
 
@@ -119,8 +116,9 @@ def sql_zorder_bucket_stats(
     stats a scan would prune on. Identical emission both dialects bar
     the integer-division token.
     """
+    assert dialect in ("spark", "duckdb")
     div = "DIV" if dialect == "spark" else "//"
-    steps = zorder_steps(lat_col, lon_col, dialect)
+    steps = zorder_steps(lat_col, lon_col)
     cols = ", ".join(f"{expr} AS {name}" for name, expr in steps)
     return f"""
         WITH keyed AS (

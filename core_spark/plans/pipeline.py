@@ -26,21 +26,29 @@ from __future__ import annotations
 from core_spark.plans.manifest import StageManifest, content_fingerprint
 
 
+#: admin polygons the PIP stage joins against
+N_POLYGONS = 96
+
+
 def _input_fingerprint(df) -> str:
     """Schema plus SHA-256 of the ``FileStatus`` strings (path, length, mtime)
-    every leaf of the analyzed plan lists, built in the JVM: no Spark job, no
-    O(files) py4j reply. A leaf that lists no files (``createDataFrame``, a
-    pinned frame) makes it random: such a run recomputes, never resumes."""
+    every leaf of the analyzed plan lists and of the canonicalized analyzed
+    plan's text (the operators over those files, with expression ids
+    normalized), built in the JVM: no Spark job, no O(files) py4j reply. A
+    leaf that lists no files (``createDataFrame``, a pinned frame) makes it
+    random: such a run recomputes, never resumes."""
     import uuid
 
     jvm = df.sparkSession._jvm
-    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    analyzed = df._jdf.queryExecution().analyzed()
+    leaves = analyzed.collectLeaves()
     text = jvm.scala.collection.mutable.StringBuilder()
     for leaf in (leaves.apply(i) for i in range(leaves.size())):
         relation = leaf.relation() if leaf.nodeName() == "LogicalRelation" else None
         if relation is None or relation.getClass().getSimpleName() != "HadoopFsRelation":
             return uuid.uuid4().hex
         relation.location().allFiles().addString(text, "[", "\n", "]")
+    text.append(analyzed.canonicalized())
     sha = jvm.java.security.MessageDigest.getInstance("SHA-256")
     sha.update(jvm.java.nio.charset.StandardCharsets.UTF_8.encode(jvm.java.nio.CharBuffer.wrap(text)))
     return content_fingerprint("ingest-external", str(df.schema), bytes(sha.digest()).hex())
@@ -51,9 +59,7 @@ def run_pipeline(
     workdir: str,
     n_docs: int = 10_000,
     partitions: int = 32,
-    resolutions: tuple[int, ...] = (5, 6, 7, 8, 9),
     zonal_res: int = 7,
-    n_polygons: int = 96,
     docs_df=None,
 ):
     """Run (or resume) the full pipeline; returns {stage: DataFrame}.
@@ -66,6 +72,7 @@ def run_pipeline(
     from core_spark.data.polygons import admin_polygons
     from core_spark.data.synth import webpages_spark
     from core_spark.functions.extract import with_extracted_text
+    from core_spark.functions.fused import RESOLUTIONS
     from core_spark.functions.geoparse import with_mentions
     from core_spark.operators.pip import pip_join
     from core_spark.operators.tiles import assign_tiles
@@ -107,15 +114,15 @@ def run_pipeline(
     )
 
     # -- tiles (G3) ---------------------------------------------------------
-    fp_tiles = content_fingerprint("tiles", fp_mentions, resolutions)
+    fp_tiles = content_fingerprint("tiles", fp_mentions, RESOLUTIONS)
     out["tiles"] = man.run_stage(
         spark, "tiles", fp_tiles,
-        lambda: assign_tiles(out["mentions"], resolutions=resolutions),
+        lambda: assign_tiles(out["mentions"], resolutions=RESOLUTIONS),
     )
 
     # -- pip (G5) -----------------------------------------------------------
-    polys = admin_polygons(n_polygons)
-    fp_pip = content_fingerprint("pip", fp_tiles, n_polygons)
+    polys = admin_polygons(N_POLYGONS)
+    fp_pip = content_fingerprint("pip", fp_tiles, N_POLYGONS)
     out["pip"] = man.run_stage(
         spark, "pip", fp_pip, lambda: pip_join(out["tiles"], polys)
     )

@@ -3,12 +3,12 @@ Iceberg runtime jar, plus a fixture-grade writer so the reader is
 testable (and oracle-gated) in a hermetic environment.
 
 Why this exists: BASELINE.json's north rule targets "Iceberg tables of
-Common-Crawl-style web pages at 10^12-document scale". With the Iceberg
-runtime on the cluster, ``read_corpus(fmt='iceberg')`` (ingest.py) is
-the production path — Iceberg's own scan does partition pruning and
-pushdown. This module is the self-contained fallback AND the in-sandbox
-proof that the engine genuinely speaks the table format: it implements
-the PUBLIC Iceberg Table Spec (format-version 2) metadata chain
+Common-Crawl-style web pages at 10^12-document scale". ``read_corpus``
+(ingest.py) reads any directory holding ``metadata/`` through
+``read_iceberg``, so the flagship takes an Iceberg table root as it
+takes a parquet path, with no Iceberg runtime jar on the cluster. It
+implements the PUBLIC Iceberg Table Spec (format-version 2) metadata
+chain
 
     version-hint.text / vN.metadata.json     (JSON, driver-side)
       -> snapshot (current, by id, or time travel by timestamp)
@@ -32,14 +32,13 @@ and then hands the DATA path straight to Spark's parquet scan:
     data sequence number: a delete at sequence S removes rows only from
     data files sequenced STRICTLY below S, so rows (re)appended after
     the delete stay live (spec §"Scan Planning"/delete application).
+    Each row's file sequence number is a literal map lookup on its
+    ``_metadata.file_path``, so every leaf of the plan is a file scan.
 
 100-TB shape: manifest avro files are metadata (KBs–MBs per manifest
 even on petabyte tables); reading them on the driver is exactly what
-Iceberg's own planner does. For tables with tens of thousands of
-manifests, ``plan_files`` accepts the already-fetched manifest list so
-a caller can distribute manifest parsing; the default mirrors Iceberg's
-driver-side planning. Snapshot pruning means a reader never lists the
-table directory — only files the chosen snapshot references are
+Iceberg's own planner does. Snapshot pruning means a reader never lists
+the table directory — only files the chosen snapshot references are
 touched, which is what makes 10^12-row tables plannable at all.
 
 The fixture writer emits spec-shaped metadata (v2 field names/ids on
@@ -177,30 +176,22 @@ def _resolve_path(p: str, table_path: str) -> str:
     return os.path.join(table_path, p)
 
 
-def plan_files(table_path: str, snapshot: dict,
-               manifest_bytes: dict[str, bytes] | None = None) -> dict:
+def plan_files(table_path: str, snapshot: dict) -> dict:
     """Walk manifest-list -> manifests -> live files for one snapshot.
 
     Returns {"data": [file...], "position_deletes": [...],
     "equality_deletes": [(path, [field_id...])...]} where each file dict has
     file_path/record_count/sequence_number (the entry's data sequence
     number, inherited from the manifest when the entry carries NULL —
-    spec §"Sequence Number Inheritance"). ``manifest_bytes`` (path ->
-    bytes) lets a caller pre-fetch manifests (e.g. distributed) —
-    default reads local.
+    spec §"Sequence Number Inheritance").
     """
     ml_path = _resolve_path(snapshot["manifest-list"], table_path)
     with open(ml_path, "rb") as f:
         _, manifests = read_avro_file(f.read())
     plan = {"data": [], "position_deletes": [], "equality_deletes": []}
     for m in manifests:
-        mp = _resolve_path(m["manifest_path"], table_path)
-        if manifest_bytes is not None and m["manifest_path"] in manifest_bytes:
-            raw = manifest_bytes[m["manifest_path"]]
-        else:
-            with open(mp, "rb") as f:
-                raw = f.read()
-        _, entries = read_avro_file(raw)
+        with open(_resolve_path(m["manifest_path"], table_path), "rb") as f:
+            _, entries = read_avro_file(f.read())
         for e in entries:
             if e["status"] == _DELETED:
                 continue  # removed from this snapshot
@@ -274,11 +265,12 @@ def read_iceberg(spark, table_path: str, snapshot_id: int | None = None,
 
     data_paths = [f["file_path"] for f in plan["data"]]
     df = spark.read.parquet(*data_paths)
+    # the scan's file_path is a file: URI, the plan's paths are plain
+    norm = lambda c: F.regexp_replace(c, "^file:/+", "/")
 
     if plan["position_deletes"]:
-        # normalize both sides to a plain path: the scan's file_path is a
-        # file: URI, delete rows carry whatever the writer recorded
-        norm = lambda c: F.regexp_replace(c, "^file:/+", "/")
+        # normalize both sides to a plain path: delete rows carry
+        # whatever the writer recorded
         dels = spark.read.parquet(
             *[f["file_path"] for f in plan["position_deletes"]])
         dels = dels.select(
@@ -295,29 +287,16 @@ def read_iceberg(spark, table_path: str, snapshot_id: int | None = None,
     if plan["equality_deletes"]:
         # spec scoping: an equality delete with data sequence number S
         # applies only to data files with sequence number STRICTLY below
-        # S — rows (re)added after the delete are live. Map each scanned
-        # row to its file's sequence number via a broadcast literal
-        # table built JVM-side (range+explode — never createDataFrame on
-        # a query path), then carry the bound into each anti-join.
-        norm = lambda c: F.regexp_replace(c, "^file:/+", "/")
-        seq_rows = [
-            F.struct(
-                F.lit(f["file_path"]).alias("_ice_fp"),
-                F.lit(int(f["sequence_number"])).alias("_ice_seq"),
-            )
-            for f in plan["data"]
-        ]
-        seq_tbl = (
-            spark.range(1)
-            .select(F.explode(F.array(*seq_rows)).alias("_s"))
-            .select("_s._ice_fp", "_s._ice_seq")
-        )
-        df = df.withColumn("_ice_row_fp", norm(F.col("_metadata.file_path")))
-        df = df.join(
-            F.broadcast(seq_tbl),
-            F.col("_ice_row_fp") == F.col("_ice_fp"),
-            "left",
-        ).drop("_ice_fp")
+        # S — rows (re)added after the delete are live. Each scanned row
+        # looks up its file's sequence number in a literal map (no join,
+        # no leaf without files), then carries the bound into each
+        # anti-join.
+        seq_of = F.create_map(*[
+            x for f in plan["data"]
+            for x in (F.lit(f["file_path"]), F.lit(int(f["sequence_number"])))
+        ])
+        df = df.withColumn(
+            "_ice_seq", F.element_at(seq_of, norm(F.col("_metadata.file_path"))))
         for rec, field_ids in plan["equality_deletes"]:
             cols = _schema_field_names(md, field_ids)
             dels = spark.read.parquet(rec["file_path"]).select(
@@ -327,7 +306,7 @@ def read_iceberg(spark, table_path: str, snapshot_id: int | None = None,
             for c in cols:
                 cond = cond & (F.col(c) == F.col(f"_ice_eq_{c}"))
             df = df.join(F.broadcast(dels), cond, "left_anti")
-        df = df.drop("_ice_row_fp", "_ice_seq")
+        df = df.drop("_ice_seq")
 
     return df
 

@@ -1,15 +1,20 @@
 """Sources — the corpus table scan and the reference's test-file candidate
 predicate (SURVEY.md §2.1).
 
-``read_corpus`` scans the web-pages table (parquet or Iceberg) that every
-registry query and the flagship read. ``sql_test_file_candidate`` is the
-reference's name filter (F1) as one portable SQL boolean over a path
-column, so a scan can drop non-candidates before any Arrow stage runs.
+``read_corpus`` scans the web-pages table that the flagship reads: a parquet
+path or an Iceberg table root, told apart by the input itself.
+``sql_test_file_candidate`` is the reference's name filter (F1) as one
+portable SQL boolean over a path column, so a scan can drop non-candidates
+before any Arrow stage runs.
 The reference's filesystem discovery walk and config-scope phase
 (SURVEY.md §3.1 steps 1-2) have no analog here: the input is a table.
 """
 
 from __future__ import annotations
+
+import os
+
+from .iceberg import read_iceberg
 
 CORPUS_SCHEMA_FIELDS = {
     "url": "string",
@@ -43,12 +48,14 @@ def _footer_schema(spark, path: str):
     return _parse_datatype_json_string(parquet.readSchema(footers, jspark).get().json())
 
 
-def read_corpus(spark, path: str, fmt: str = "parquet"):
-    """Scan the web-pages table (a parquet path, or with ``fmt='iceberg'`` a
-    catalog table name) and check its ``CORPUS_SCHEMA_FIELDS``. A parquet read
-    loads the path with ``_footer_schema``: no Spark job, and no state kept."""
-    if fmt == "iceberg":
-        df = spark.read.table(path)
+def read_corpus(spark, path: str):
+    """Scan the web-pages table at ``path`` and check its ``CORPUS_SCHEMA_FIELDS``.
+
+    A local Iceberg table root (a directory holding ``metadata/``) is read with
+    ``read_iceberg``; any other path is parquet, loaded with ``_footer_schema``:
+    no Spark job, and no state kept."""
+    if os.path.isdir(os.path.join(path, "metadata")):
+        df = read_iceberg(spark, path)
     else:
         df = spark.read.schema(_footer_schema(spark, path)).parquet(path)
     have = {f.name: f.dataType.simpleString() for f in df.schema.fields}

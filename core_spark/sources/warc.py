@@ -5,21 +5,24 @@ Crawl examples document).
 A web-scale corpus engine must ingest WARC directly: crawl dumps arrive
 as `*.warc.gz` with ONE GZIP MEMBER PER RECORD (the standard layout —
 it is what makes per-record random access and streaming splits possible
-at all). Two surfaces:
+at all). One writer, one reader, one Spark face:
 
-  file level, pure bytes (the `warc_roundtrip` query):
-    encode_warc(records)        fixture-grade writer, response records
-    parse_warc_bytes(data)      record splitter + header parser; plain
-                                concatenated records OR multi-member gzip
-                                (auto-detected by magic); error-as-data —
-                                a malformed tail yields an `error` record
-                                instead of raising, keeping every
-                                well-formed prefix record
-
-  record scan (the `warc_scan` query, below):
+    encode_warc(records)        fixture-grade writer, response records,
+                                optionally one gzip member per record
+    parse_warc(data)            record walker over plain concatenated
+                                records OR multi-member gzip (auto-detected
+                                by magic); Content-Length-authoritative
+                                slicing; error-as-data rows (bad-gzip /
+                                bad-version / bad-content-length /
+                                truncated-*) with salvaged headers, then
+                                resync at the next `WARC/` marker, so one
+                                bad record never ends the archive
     scan_warc(df)               WARC blobs → ONE Arrow-batched
                                 mapInPandas stage → one row per record
                                 (SCAN_SCHEMA, md5 payload digests)
+
+The `warc_roundtrip` query gates the writer and reader field by field;
+`warc_scan` gates the walker's resync on corrupted records.
 
 Per-record gzip means a future split-by-member reader can parallelize
 INSIDE a file; documented, not needed at fixture scale.
@@ -35,11 +38,13 @@ archives).
 from __future__ import annotations
 
 import gzip
+import hashlib
 import io
 import zlib
 from datetime import datetime, timezone
 
 _CRLF = b"\r\n"
+_CRLF2 = _CRLF + _CRLF
 _GZIP_MAGIC = b"\x1f\x8b"
 
 
@@ -66,7 +71,7 @@ def encode_warc(records: list[dict], per_record_gzip: bool = False) -> bytes:
             + b"Content-Length: " + str(len(payload)).encode() + _CRLF
             + _CRLF
         )
-        rec = head + payload + _CRLF + _CRLF
+        rec = head + payload + _CRLF2
         if per_record_gzip:
             buf = io.BytesIO()
             with gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as gz:
@@ -76,103 +81,23 @@ def encode_warc(records: list[dict], per_record_gzip: bool = False) -> bytes:
     return b"".join(out)
 
 
-def _gunzip_members(data: bytes) -> bytes:
-    """Decompress ALL concatenated gzip members (zlib stops at the first
-    member; warc.gz has one per record)."""
+def _gunzip_members(data: bytes) -> tuple[bytes, bool]:
+    """Decompress the concatenated gzip members (zlib stops at the first
+    member; warc.gz has one per record) up to the first corrupt one:
+    (the bytes, whether every member decompressed)."""
     out, pos = [], 0
     while pos < len(data):
         d = zlib.decompressobj(wbits=31)
-        out.append(d.decompress(data[pos:]))
-        out.append(d.flush())
+        try:
+            out.append(d.decompress(data[pos:]) + d.flush())
+        except zlib.error:
+            return b"".join(out), False
         consumed = len(data) - pos - len(d.unused_data)
         if consumed <= 0:  # pragma: no cover - defensive
             break
         pos += consumed
-    return b"".join(out)
+    return b"".join(out), True
 
-
-def parse_warc_bytes(data: bytes) -> list[dict]:
-    """Parse concatenated WARC records (plain or multi-member gzip).
-
-    Returns one dict per record: url, ts, rec_type, payload, error.
-    Malformed input never raises: the well-formed prefix is kept and ONE
-    trailing dict with ``error`` set describes the failure (error-as-
-    data, the media-decoder convention)."""
-    recs: list[dict] = []
-
-    def err(msg: str) -> list[dict]:
-        recs.append(
-            {"url": None, "ts": None, "rec_type": None,
-             "payload": None, "error": msg[:200]}
-        )
-        return recs
-
-    if data[:2] == _GZIP_MAGIC:
-        try:
-            data = _gunzip_members(data)
-        except Exception as e:
-            return err(f"gzip: {type(e).__name__}: {e}")
-    pos = 0
-    while pos < len(data):
-        if data[pos:pos + 4] == _CRLF + _CRLF:  # stray delimiter slack
-            pos += 4
-            continue
-        head_end = data.find(_CRLF + _CRLF, pos)
-        if head_end < 0:
-            return err("truncated header block")
-        head = data[pos:head_end]
-        lines = head.split(_CRLF)
-        if not lines[0].startswith(b"WARC/"):
-            return err(f"bad version line at offset {pos}")
-        hdrs = {}
-        for ln in lines[1:]:
-            # the grammar allows zero whitespace after ':' — partition
-            # on the bare colon and strip, or 'Content-Length:123'
-            # (spec-legal) kills parsing for the whole archive tail
-            k, sep, v = ln.partition(b":")
-            if sep:
-                hdrs[k.decode("ascii", "replace").strip().lower()] = (
-                    v.decode("utf-8", "replace").strip()
-                )
-        try:
-            n = int(hdrs.get("content-length", ""))
-        except ValueError:
-            return err("missing/invalid Content-Length")
-        body_start = head_end + 4
-        body_end = body_start + n
-        if body_end + 4 > len(data):
-            return err("truncated record block")
-        if data[body_end:body_end + 4] != _CRLF + _CRLF:
-            return err("missing record delimiter")
-        recs.append(
-            {
-                "url": hdrs.get("warc-target-uri"),
-                "ts": hdrs.get("warc-date"),
-                "rec_type": hdrs.get("warc-type"),
-                "payload": data[body_start:body_end],
-                "error": None,
-            }
-        )
-        pos = body_end + 4
-    return recs
-
-
-# ---------------------------------------------------------------------------
-# Record-scan face (second WARC surface, added in the statistics wave)
-# ---------------------------------------------------------------------------
-# The functions above are the FILE-level surface (encode_warc /
-# parse_warc_bytes: gzip members, the warc_roundtrip oracle). The
-# section below is the independent RECORD-SCAN surface used by the
-# `warc_scan` generation-rule oracle: a plain-text record walker with
-# Content-Length-authoritative skip, error-as-data rows (bad-version /
-# bad-content-length / truncated-*) with salvaged URIs, deterministic
-# resync, and an Arrow mapInPandas face (scan_warc) emitting
-# SCAN_SCHEMA with md5 payload digests.
-
-import hashlib
-
-
-_CRLF2 = b"\r\n\r\n"
 
 # record schema emitted by the Spark face (and mirrored by oracles)
 SCAN_SCHEMA = (
@@ -180,23 +105,26 @@ SCAN_SCHEMA = (
     " content_length BIGINT, payload_md5 STRING, parse_error STRING"
 )
 
+_FIELDS = ("version", "warc_type", "target_uri", "record_id", "warc_date",
+           "content_length", "payload", "parse_error")
+
 
 def parse_warc(data: bytes) -> list[dict]:
-    """Parse a WARC byte stream into record dicts (version,
-    warc_type, target_uri, record_id, content_length, payload,
-    parse_error). Malformed records surface as error-as-data rows;
-    parsing never raises on input bytes."""
+    """Parse a WARC byte stream, plain or multi-member gzip, into record
+    dicts with the ``_FIELDS`` keys. Malformed records surface as
+    error-as-data rows; parsing never raises on input bytes. A corrupt gzip
+    member ends the walk with a ``bad-gzip`` row after the records of the
+    members before it."""
+    whole = True
+    if data[:2] == _GZIP_MAGIC:
+        data, whole = _gunzip_members(data)
     out: list[dict] = []
     pos, n = 0, len(data)
     while pos < n:
         start = data.find(b"WARC/", pos)
         if start < 0:
             break
-        rec: dict = {
-            "version": None, "warc_type": None, "target_uri": None,
-            "record_id": None, "content_length": None,
-            "payload": None, "parse_error": None,
-        }
+        rec = dict.fromkeys(_FIELDS)
         eol = data.find(b"\r\n", start)
         if eol < 0:
             rec["parse_error"] = "truncated-version"
@@ -218,6 +146,7 @@ def parse_warc(data: bytes) -> list[dict]:
         rec["warc_type"] = headers.get("warc-type")
         rec["target_uri"] = headers.get("warc-target-uri")
         rec["record_id"] = headers.get("warc-record-id")
+        rec["warc_date"] = headers.get("warc-date")
         body_at = hdr_end + len(_CRLF2)
         if version not in ("WARC/1.0", "WARC/1.1"):
             rec["parse_error"] = "bad-version"
@@ -249,31 +178,9 @@ def parse_warc(data: bytes) -> list[dict]:
         rec["payload"] = payload
         out.append(rec)
         pos = body_at + cl
+    if not whole:
+        out.append(dict(dict.fromkeys(_FIELDS), parse_error="bad-gzip"))
     return out
-
-
-def build_warc(records: list[dict]) -> bytes:
-    """Serialize record dicts (warc_type, target_uri, payload bytes,
-    optional record_id / extra_headers / content_length override)
-    into a WARC/1.0 byte stream — the test/fixture inverse of
-    ``parse_warc``."""
-    parts: list[bytes] = []
-    for i, r in enumerate(records):
-        payload = r.get("payload", b"")
-        cl = r.get("content_length", len(payload))
-        hdrs = [
-            b"WARC/1.0",
-            b"WARC-Type: " + str(r.get("warc_type", "response")).encode(),
-            b"WARC-Record-ID: "
-            + str(r.get("record_id", f"<urn:test:{i}>")).encode(),
-        ]
-        if r.get("target_uri") is not None:
-            hdrs.append(b"WARC-Target-URI: " + str(r["target_uri"]).encode())
-        for k, v in (r.get("extra_headers") or {}).items():
-            hdrs.append(f"{k}: {v}".encode())
-        hdrs.append(b"Content-Length: " + str(cl).encode())
-        parts.append(b"\r\n".join(hdrs) + _CRLF2 + payload + _CRLF2)
-    return b"".join(parts)
 
 
 def records_frame(rows: list[dict]) -> list[tuple]:

@@ -38,13 +38,10 @@ def main() -> None:
 
     from core_spark.plans.pipeline import run_pipeline
     from core_spark.session import spark_session
-    from core_spark.sources.iceberg import read_iceberg
     from core_spark.sources.ingest import read_corpus
 
     spark = spark_session()
-    table = args.input_table
-    iceberg = table and os.path.isdir(os.path.join(table, "metadata"))  # an Iceberg table root
-    docs_df = (read_iceberg if iceberg else read_corpus)(spark, table) if table else None
+    docs_df = read_corpus(spark, args.input_table) if args.input_table else None
 
     t0 = time.monotonic()
     out = run_pipeline(

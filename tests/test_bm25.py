@@ -1,9 +1,7 @@
-"""BM25 retrieval: Python-model parity on both engines, int/float ranking
-agreement, edge semantics, and the plan shape that makes it scale."""
+"""BM25 retrieval: Python-model parity on both engines, edge semantics, and
+the plan shape that makes it scale."""
 
 from __future__ import annotations
-
-import math
 
 import duckdb
 import pytest
@@ -60,12 +58,12 @@ def _model_topk(docs, queries, k):
 
 @pytest.mark.spark
 class TestBM25:
-    def _spark_rows(self, spark, k=3, scoring="int"):
+    def _spark_rows(self, spark, k=3):
         df = spark.createDataFrame(DOCS, "doc_id long, text string").selectExpr(
             "doc_id", "filter(split(text, ' '), x -> x != '') AS toks"
         )
         return sorted(
-            tuple(r) for r in bm25_topk(df, QUERIES, k=k, scoring=scoring).collect()
+            tuple(r) for r in bm25_topk(df, QUERIES, k=k).collect()
         )
 
     def test_matches_python_model(self, spark):
@@ -89,50 +87,12 @@ class TestBM25:
         rows = [r for r in self._spark_rows(spark) if r[0] == "qr"]
         assert [r[1] for r in rows] == [4, 6]
 
-    def test_float_mode_agrees_on_set_and_head(self, spark):
-        ints = self._spark_rows(spark, k=3, scoring="int")
-        flts = self._spark_rows(spark, k=3, scoring="float")
-        by_q = lambda rows, q: [r for r in rows if r[0] == q]
-        for qid, _ in QUERIES:
-            i, f = by_q(ints, qid), by_q(flts, qid)
-            assert {r[1] for r in i} == {r[1] for r in f}  # same top-k set
-            # identical head (rank 1): the two idf weightings only ever
-            # disagree by adjacent swaps among near-tied tail scores
-            assert min(i, key=lambda r: r[3])[1] == min(f, key=lambda r: r[3])[1]
-
-    def test_float_scores_match_formula(self, spark):
-        rows = self._spark_rows(spark, k=3, scoring="float")
-        n = len(DOCS)
-        toks = {d: [x for x in t.split(" ") if x] for d, t in DOCS}
-        t_total = sum(len(t) for t in toks.values())
-        k1, b = K1_NUM / K1_DEN, B_NUM / B_DEN
-        avgdl = t_total / n
-        for qid, d, score, _ in rows:
-            terms = dict(QUERIES)[qid]
-            want = 0.0
-            for term in set(terms):
-                df = sum(1 for t in toks.values() if term in t)
-                tf = toks[d].count(term)
-                if tf == 0 or df == 0:
-                    continue
-                idf = math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-                sat = (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * len(toks[d]) / avgdl))
-                want += idf * sat
-            assert score == pytest.approx(want, rel=1e-12)
-
     def test_no_hit_query_returns_nothing(self, spark):
         df = spark.createDataFrame(DOCS, "doc_id long, text string").selectExpr(
             "doc_id", "filter(split(text, ' '), x -> x != '') AS toks"
         )
         out = bm25_topk(df, [("qz", ["zzz"])], k=3).collect()
         assert out == []
-
-    def test_bad_scoring_mode_raises(self, spark):
-        df = spark.createDataFrame(DOCS, "doc_id long, text string").selectExpr(
-            "doc_id", "split(text, ' ') AS toks"
-        )
-        with pytest.raises(ValueError):
-            bm25_topk(df, QUERIES, scoring="both")
 
     def test_plan_shape(self, spark):
         """Broadcast joins everywhere, no sort-merge join, and the top-k

@@ -824,30 +824,9 @@ class TestKnnAdaptive:
         docs = assign_tiles(spark.createDataFrame(docs_pd), resolutions=(0,))
         out = knn_adaptive(
             docs, spark.createDataFrame(queries_pd), k=3, res=0, ring=2,
-            max_rounds=1, bruteforce=True,
+            max_rounds=1,
         )
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastNestedLoopJoin" not in plan
         assert "CartesianProduct" not in plan
         assert set(out.toPandas()["query_id"]) == {0, 1, 2}
-
-    def test_no_bruteforce_keeps_flagged_incomplete_rows(self, spark):
-        """bruteforce=False: queries still incomplete after max_rounds come
-        back flagged complete=False instead of being dropped."""
-        from core_spark.operators.knn import knn_adaptive
-        from core_spark.operators.tiles import assign_tiles
-
-        # 2 candidate docs near the query but k=3: the ring pass can never
-        # prove completeness, so the rows MUST come back flagged False
-        docs_pd = pd.DataFrame(
-            {"doc_id": [1, 2], "lat": [0.5, 1.0], "lon": [0.5, 1.0]}
-        )
-        queries_pd = pd.DataFrame({"query_id": [0], "qlat": [0.0], "qlon": [0.0]})
-        docs = assign_tiles(spark.createDataFrame(docs_pd), resolutions=(0,))
-        got = knn_adaptive(
-            docs, spark.createDataFrame(queries_pd), k=3, res=0, ring=2,
-            max_rounds=1, bruteforce=False,
-        ).toPandas()
-        assert len(got) == 2
-        assert not got["complete"].any()
-        assert set(got["doc_id"]) == {1, 2}

@@ -141,6 +141,36 @@ class TestExternalInput:
         assert _input_fingerprint(local) != _input_fingerprint(local)
         assert _input_fingerprint(on_files.union(local)) != _input_fingerprint(on_files.union(local))
 
+    def test_fingerprint_covers_the_operators_over_the_files(self, spark, tmp_path):
+        """One corpus filtered two ways gets two fingerprints; the same
+        filter over two reads of it gets one."""
+        from core_spark.data.synth import webpages_spark
+        from core_spark.plans.pipeline import _input_fingerprint
+        from core_spark.sources.ingest import read_corpus
+
+        path = str(tmp_path / "corpus")
+        webpages_spark(spark, 50, 2).select(*CORPUS_COLS).write.parquet(path)
+
+        def fp(lang):
+            return _input_fingerprint(read_corpus(spark, path).where(f"lang = '{lang}'"))
+
+        assert fp("en") == fp("en") != fp("de")
+
+    def test_iceberg_equality_deletes_keep_one_fingerprint(self, spark, tmp_path):
+        """An Iceberg snapshot with equality deletes plans only file scans, so
+        two reads of it get one fingerprint and a re-run can resume."""
+        from core_spark.data.synth import webpages_spark
+        from core_spark.plans.pipeline import _input_fingerprint
+        from core_spark.sources.iceberg import IcebergFixtureWriter, read_iceberg
+
+        table = str(tmp_path / "table")
+        docs = webpages_spark(spark, 60, 2).select(*CORPUS_COLS)
+        writer = IcebergFixtureWriter(table, docs.schema)
+        writer.append(docs)
+        writer.delete_equality(docs.where("doc_id < 10"), ["doc_id"])
+        assert read_iceberg(spark, table).count() == 50
+        assert _input_fingerprint(read_iceberg(spark, table)) == _input_fingerprint(read_iceberg(spark, table))
+
     def test_script_reads_an_iceberg_table_root(self, spark, tmp_path):
         """``scripts/run_pipeline.py --input-table`` on an Iceberg table root
         completes, and a new snapshot changes the ingest fingerprint, so the

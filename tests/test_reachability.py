@@ -13,6 +13,13 @@ share does not keep both alive.
 
 A def that only tests call fails the gate: delete it, wire it to a root, or
 add it to ``TEST_ONLY`` with the reason it stays.
+
+The flag rule does the same for modes inside live code: every bool-default
+parameter of a function in a live def (the def itself, a class's methods,
+nested defs) must be passed by a call in a root or a live def, by keyword,
+by position or through ``**kw``. A flag that only tests set fails the gate:
+delete it with its branch, or add it to ``UNSET_FLAGS`` with the reason it
+stays.
 """
 
 from __future__ import annotations
@@ -22,6 +29,7 @@ import os
 import re
 import time
 import tokenize
+from types import MappingProxyType
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -64,8 +72,13 @@ TEST_ONLY: dict[str, str] = {
     "operators.knn.knn_bruteforce_pandas": "reference model for the kNN goldens",
     "operators.linkgraph.hits_bound": "analytic bound the HITS tests check",
     "operators.redirects.sql_resolve_redirects": "DuckDB oracle of resolve_redirects",
-    "sources.warc.build_warc": "test helper: writes WARC fixtures",
 }
+
+#: Bool-default parameters no root passes, kept on purpose:
+#: "module.def.param" -> why the flag stays.
+UNSET_FLAGS = MappingProxyType({
+    "functions.jpeg.encode_jpeg.subsample": "writes the decoder's 4:2:0 test fixtures",
+})
 
 
 def _py_files(top: str, recurse: bool = True) -> list[str]:
@@ -158,16 +171,20 @@ def _parse(path: str) -> ast.Module:
         return ast.parse(fh.read(), path)
 
 
-def unreached() -> set[str]:
-    """Top-level ``core_spark`` defs that no root reaches, as "module.name"."""
+def _roots() -> list[str]:
+    return [os.path.join(ROOT, "__spark_entry__.py"), os.path.join(ROOT, "bench.py")] \
+        + _py_files(os.path.join(ROOT, "scripts"), recurse=False) \
+        + _py_files(os.path.join(ROOT, "perfbench"), recurse=False)
+
+
+def _live() -> tuple[set[str], set[str]]:
+    """(every top-level ``core_spark`` def, those a root reaches), as "module.name"."""
     lib = _py_files(os.path.join(ROOT, "core_spark"))
     modules = {_module(path) for path in lib}
     # (names used, modules whose defs those names may reach): one per root
     # file, one per core_spark module's top-level code, one per def
     todo: list[tuple[set[str], set[str]]] = []
-    for path in [os.path.join(ROOT, "__spark_entry__.py"), os.path.join(ROOT, "bench.py")] \
-            + _py_files(os.path.join(ROOT, "scripts"), recurse=False) \
-            + _py_files(os.path.join(ROOT, "perfbench"), recurse=False):
+    for path in _roots():
         todo.append(({name for _, name in _names(path)}, _imports(_parse(path), path, modules)))
     uses: dict[str, tuple[set[str], set[str]]] = {}
     by_name: dict[str, list[str]] = {}
@@ -187,7 +204,76 @@ def unreached() -> set[str]:
                 if key not in live and key.rsplit(".", 1)[0] in scope:
                     live.add(key)
                     todo.append(uses[key])
-    return set(uses) - live
+    return set(uses), live
+
+
+def unreached() -> set[str]:
+    """Top-level ``core_spark`` defs that no root reaches, as "module.name"."""
+    defs, live = _live()
+    return defs - live
+
+
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+
+def _flags(node: ast.AST, key: str) -> list[tuple[str, str, str, int | None]]:
+    """(key, callee name, parameter, positional index) of each bool-default
+    parameter of the functions in top-level def ``node``. The callee of
+    ``__init__`` is its class; a method's ``self`` takes no index; a
+    keyword-only parameter has index None."""
+    methods = {id(f): node.name for f in (node.body if isinstance(node, ast.ClassDef) else ())
+               if isinstance(f, _FUNCS)
+               and not any(getattr(d, "id", None) == "staticmethod" for d in f.decorator_list)}
+    out = []
+    for fn in (n for n in ast.walk(node) if isinstance(n, _FUNCS)):
+        a = fn.args
+        positional = [x.arg for x in a.posonlyargs + a.args]
+        defaults = dict(zip(positional[len(positional) - len(a.defaults):], a.defaults))
+        defaults.update((x.arg, d) for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None)
+        bound = positional[1:] if id(fn) in methods else positional
+        callee = methods[id(fn)] if fn.name == "__init__" and id(fn) in methods else fn.name
+        prefix = key if fn is node else f"{key}.{fn.name}"
+        out += [(f"{prefix}.{p}", callee, p, bound.index(p) if p in bound else None)
+                for p, d in defaults.items() if isinstance(getattr(d, "value", None), bool)]
+    return out
+
+
+def _passes(call: ast.Call, param: str, index: int | None) -> bool:
+    """Does ``call`` set ``param``: by keyword, through ``**kw`` or ``*args``, or by position?"""
+    return any(k.arg in (param, None) for k in call.keywords) \
+        or any(isinstance(x, ast.Starred) for x in call.args) \
+        or (index is not None and len(call.args) > index)
+
+
+def unset_flags() -> set[str]:
+    """Bool-default parameters of live ``core_spark`` functions that no call in
+    a root or a live def passes, as "module.def.param"."""
+    _, live = _live()
+    lib = _py_files(os.path.join(ROOT, "core_spark"))
+    modules = {_module(path) for path in lib}
+    flags = []  # (key, module, callee name, parameter, positional index)
+    calls: dict[str, list[tuple[set[str], ast.Call]]] = {}  # callee name -> (scope, call)
+
+    def add_calls(node, scope):
+        for call in (n for n in ast.walk(node) if isinstance(n, ast.Call)):
+            name = getattr(call.func, "id", None) or getattr(call.func, "attr", None)
+            calls.setdefault(name, []).append((scope, call))
+
+    for path in lib:
+        tree, module = _parse(path), _module(path)
+        scope = _imports(tree, path, modules) | {module}
+        for node in tree.body:
+            if isinstance(node, (*_FUNCS, ast.ClassDef)):
+                if f"{module}.{node.name}" not in live:
+                    continue
+                flags += [(key, module, *rest) for key, *rest in _flags(node, f"{module}.{node.name}")]
+            add_calls(node, scope)
+    for path in _roots():
+        tree = _parse(path)
+        add_calls(tree, _imports(tree, path, modules))
+    return {key for key, module, callee, param, index in flags
+            if not any(module in scope and _passes(call, param, index)
+                       for scope, call in calls.get(callee, ()))}
 
 
 def test_only_listed_defs_are_unreached():
@@ -198,3 +284,11 @@ def test_only_listed_defs_are_unreached():
     stale = sorted(set(TEST_ONLY) - dead)
     assert not new, f"defs that only tests reach (delete them or wire them to a root): {new}"
     assert not stale, f"TEST_ONLY entries that a root now reaches or that are gone: {stale}"
+
+
+def test_every_flag_is_set_by_a_root():
+    unset = unset_flags()
+    new = sorted(unset - set(UNSET_FLAGS))
+    stale = sorted(set(UNSET_FLAGS) - unset)
+    assert not new, f"bool flags that no root sets (delete the flag and its branch): {new}"
+    assert not stale, f"UNSET_FLAGS entries that a root now sets or that are gone: {stale}"

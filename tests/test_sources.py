@@ -79,6 +79,22 @@ class TestCorpusAndSinks:
         with pytest.raises(ValueError, match="corpus schema mismatch"):
             read_corpus(spark, str(path))
 
+    def test_read_corpus_reads_an_iceberg_table_root(self, spark, tmp_path):
+        """A directory holding ``metadata/`` is an Iceberg table root: it is
+        read through ``read_iceberg`` and gets the same corpus schema check."""
+        from core_spark.data.synth import webpages_spark
+        from core_spark.sources.iceberg import IcebergFixtureWriter
+
+        docs = webpages_spark(spark, 50, 2).select("url", "warc_ts", "html", "lang", "doc_id")
+        table = str(tmp_path / "table")
+        IcebergFixtureWriter(table, docs.schema).append(docs)
+        df = read_corpus(spark, table)
+        assert sorted(df.columns) == sorted(docs.columns) and df.count() == 50
+        bad = str(tmp_path / "bad")
+        IcebergFixtureWriter(bad, spark.range(5).schema).append(spark.range(5))
+        with pytest.raises(ValueError, match="corpus schema mismatch"):
+            read_corpus(spark, bad)
+
     def test_read_corpus_replaced_files_revalidate(self, spark, tmp_path):
         path = str(tmp_path / "corpus")
         self._corpus(spark, path)
@@ -140,16 +156,3 @@ class TestCandidatePredicate:
             ).fetchone()[0]
             assert bool(duck) is want, f"duckdb: {path}"
 
-
-def test_iceberg_seam_fails_cleanly_without_runtime(spark):
-    """The Iceberg arm is a wired seam: without the runtime jar/catalog in
-    this container, the read must fail with Spark's own catalog error (not
-    a silent wrong-format read). Documents the README limitation."""
-    import pytest as _pytest
-
-    from core_spark.sources.ingest import read_corpus
-
-    from pyspark.errors import AnalysisException
-
-    with _pytest.raises(AnalysisException):
-        read_corpus(spark, "nosuch_iceberg_table", fmt="iceberg")

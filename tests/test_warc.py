@@ -1,4 +1,5 @@
-"""WARC source (ISO 28500): round trips, gzip members, malformed tails."""
+"""WARC source (ISO 28500): round trips through ``encode_warc`` and
+``parse_warc``, gzip members, malformed tails."""
 
 from __future__ import annotations
 
@@ -8,7 +9,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from core_spark.sources.warc import encode_warc, parse_warc_bytes
+from core_spark.sources.warc import encode_warc, parse_warc
 
 RECS = [
     {"url": "https://a.example/x", "ts": "2026-01-02T03:04:05Z",
@@ -23,7 +24,8 @@ RECS = [
 
 def _fields(rs):
     return [
-        (r["url"], r["ts"], r["rec_type"], r["payload"], r["error"])
+        (r["target_uri"], r["warc_date"], r["warc_type"], r["payload"],
+         r["parse_error"])
         for r in rs
     ]
 
@@ -39,7 +41,7 @@ def _expected():
 @pytest.mark.parametrize("gz", [False, True])
 def test_roundtrip(gz):
     data = encode_warc(RECS, per_record_gzip=gz)
-    assert _fields(parse_warc_bytes(data)) == _expected()
+    assert _fields(parse_warc(data)) == _expected()
 
 
 def test_no_space_after_header_colon():
@@ -57,7 +59,7 @@ def test_no_space_after_header_colon():
     )
     # followed by a normal record: the tail must survive
     data = raw + encode_warc(RECS[:1])
-    rs = parse_warc_bytes(data)
+    rs = parse_warc(data)
     assert _fields(rs)[0] == (
         "https://nospace.example/p", "2026-04-05T06:07:08Z",
         "response", body, None,
@@ -68,12 +70,23 @@ def test_no_space_after_header_colon():
 def test_content_length_is_authoritative():
     """The block is sliced by Content-Length, never by scanning for the
     delimiter — record 3 embeds \\r\\n\\r\\n inside its payload."""
-    rs = parse_warc_bytes(encode_warc(RECS))
+    rs = parse_warc(encode_warc(RECS))
     assert rs[2]["payload"] == RECS[2]["payload"]
 
 
+#: damage -> (the error row it leaves, None if the walk skips the damaged
+#: bytes; how many records still parse whole)
+_TAILS = {
+    "missing record delimiter": (None, 2),
+    "truncated record block": ("truncated-payload", 1),
+    "missing/invalid Content-Length": ("bad-content-length", 2),
+    "truncated header block": ("truncated-headers", 2),
+    "bad version line": ("bad-version", 2),
+}
+
+
 @pytest.mark.parametrize(
-    "mangle, msg",
+    "mangle, damage",
     [
         # corrupt (not remove) the final record delimiter bytes
         (lambda d: d[:-4] + b"XXXX", "missing record delimiter"),
@@ -85,23 +98,38 @@ def test_content_length_is_authoritative():
         # trailing header block that never terminates
         (lambda d: d + b"WARC/1.0\r\nWARC-Target-URI: u",
          "truncated header block"),
-        (lambda d: d + b"GARBAGE" + b"\r\n\r\n", "bad version line"),
+        # trailing record with an unknown version
+        (lambda d: d + b"WARC/0.9\r\nContent-Length: 0\r\n\r\n",
+         "bad version line"),
     ],
 )
-def test_malformed_tail_is_error_as_data(mangle, msg):
+def test_malformed_tail_is_error_as_data(mangle, damage):
     # prefix = record 1 (non-empty payload) stays intact in every case
-    data = mangle(encode_warc([RECS[0], RECS[0]]))
-    rs = parse_warc_bytes(data)
-    good = [r for r in rs if r["error"] is None]
-    bad = [r for r in rs if r["error"] is not None]
-    assert len(bad) == 1 and msg in bad[0]["error"]
-    assert len(good) >= 1  # well-formed prefix always kept
-    assert _fields(good) == _expected()[:1] * len(good)
+    rs = parse_warc(mangle(encode_warc([RECS[0], RECS[0]])))
+    error, n_good = _TAILS[damage]
+    good = [r for r in rs if r["parse_error"] is None]
+    assert [r["parse_error"] for r in rs if r["parse_error"]] == ([error] if error else [])
+    assert _fields(good) == _expected()[:1] * n_good
+
+
+def test_bad_record_mid_archive_resyncs():
+    """A corrupted Content-Length costs its own record only: the walk
+    resyncs at the next record, plain or gzipped."""
+    plain = encode_warc(RECS).replace(b"Content-Length: 0\r\n", b"Content-Length: x\r\n", 1)
+    for data in (plain, gzip.compress(plain, mtime=0)):
+        rs = parse_warc(data)
+        assert [r["parse_error"] for r in rs] == [None, "bad-content-length", None]
+        assert rs[1]["target_uri"] == RECS[1]["url"]  # headers salvaged
+        assert _fields([rs[0], rs[2]]) == [_expected()[0], _expected()[2]]
 
 
 def test_gzip_garbage_is_error_as_data():
-    rs = parse_warc_bytes(b"\x1f\x8b not actually gzip")
-    assert len(rs) == 1 and rs[0]["error"].startswith("gzip:")
+    rs = parse_warc(b"\x1f\x8b not actually gzip")
+    assert [r["parse_error"] for r in rs] == ["bad-gzip"]
+    # the records of the members before a corrupt one are kept
+    rs = parse_warc(encode_warc(RECS, per_record_gzip=True) + b"\x1f\x8b junk")
+    assert _fields(rs[:3]) == _expected()
+    assert [r["parse_error"] for r in rs[3:]] == ["bad-gzip"]
 
 
 def test_gzip_members_are_independent():
@@ -110,7 +138,7 @@ def test_gzip_members_are_independent():
     data = encode_warc(RECS, per_record_gzip=True)
     one = encode_warc(RECS[:1], per_record_gzip=True)
     assert data.startswith(one)  # record 1's member is byte-identical
-    assert _fields(parse_warc_bytes(one)) == _expected()[:1]
+    assert _fields(parse_warc(one)) == _expected()[:1]
 
 
 @settings(max_examples=40, deadline=None)
@@ -136,7 +164,7 @@ def test_roundtrip_fuzz(pairs, gz):
          "payload": p}
         for u, p in pairs
     ]
-    got = parse_warc_bytes(encode_warc(recs, per_record_gzip=gz))
-    assert [(r["url"], r["payload"], r["error"]) for r in got] == [
+    got = parse_warc(encode_warc(recs, per_record_gzip=gz))
+    assert [(r["target_uri"], r["payload"], r["parse_error"]) for r in got] == [
         (r["url"], r["payload"], None) for r in recs
     ]

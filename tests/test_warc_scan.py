@@ -1,7 +1,7 @@
-"""WARC record-scan face: roundtrip, Content-Length-authoritative
-skip (marker inside payload), error-as-data arms with resync,
-truncation, Spark face. (The file-level surface — gzip members — is
-covered in test_warc.py.)"""
+"""WARC record scan: roundtrip, Content-Length-authoritative skip
+(marker inside payload), error-as-data arms with resync, truncation,
+Spark face. (Gzip members and malformed tails are covered in
+test_warc.py.)"""
 
 from __future__ import annotations
 
@@ -10,26 +10,36 @@ import hashlib
 import pytest
 
 from core_spark.sources.warc import (
-    build_warc,
+    encode_warc,
     parse_warc,
     records_frame,
     scan_warc,
 )
 
+TS = "2026-01-01T00:00:00Z"
+
 
 def _recs():
     return [
-        {"warc_type": "warcinfo", "payload": b"software: test\r\n"},
-        {"warc_type": "response", "target_uri": "http://a.example/",
+        {"rec_type": "warcinfo", "url": "urn:x-test:info", "ts": TS,
+         "payload": b"software: test\r\n"},
+        {"url": "http://a.example/", "ts": TS,
          "payload": b"HTTP/1.1 200 OK\r\n\r\n<html>hello</html>"},
         # payload CONTAINS a fake record marker: must not desync
-        {"warc_type": "response", "target_uri": "http://b.example/",
+        {"url": "http://b.example/", "ts": TS,
          "payload": b"binary WARC/1.0 lookalike\r\n\r\ninside"},
     ]
 
 
+def _bad_length(data: bytes, i: int) -> bytes:
+    """``data`` with record ``i``'s Content-Length value replaced by junk."""
+    head, *recs = data.split(b"Content-Length: ")
+    recs[i] = b"XXX" + recs[i][recs[i].index(b"\r\n"):]
+    return b"Content-Length: ".join([head, *recs])
+
+
 def test_roundtrip():
-    data = build_warc(_recs())
+    data = encode_warc(_recs())
     rows = parse_warc(data)
     assert [r["parse_error"] for r in rows] == [None, None, None]
     assert [r["warc_type"] for r in rows] == [
@@ -40,10 +50,7 @@ def test_roundtrip():
 
 
 def test_bad_content_length_resyncs():
-    recs = _recs()
-    recs[1]["content_length"] = "XXX"          # corrupt header
-    data = build_warc(recs)
-    rows = parse_warc(data)
+    rows = parse_warc(_bad_length(encode_warc(_recs()), 1))
     assert len(rows) == 3
     assert rows[1]["parse_error"] == "bad-content-length"
     assert rows[1]["target_uri"] == "http://a.example/"   # salvaged
@@ -53,7 +60,7 @@ def test_bad_content_length_resyncs():
 
 
 def test_truncated_payload_and_headers():
-    data = build_warc(_recs()[:2])
+    data = encode_warc(_recs()[:2])
     rows = parse_warc(data[:-12])              # cut into payload
     assert rows[-1]["parse_error"] == "truncated-payload"
     rows = parse_warc(b"WARC/1.0\r\nWARC-Type: response\r\nno-end")
@@ -64,26 +71,24 @@ def test_truncated_payload_and_headers():
 
 def test_bad_version_errors():
     data = b"WARC/9.9\r\nWARC-Type: x\r\nContent-Length: 0\r\n\r\n\r\n\r\n"
-    data += build_warc(_recs()[:1])
+    data += encode_warc(_recs()[:1])
     rows = parse_warc(data)
     assert rows[0]["parse_error"] == "bad-version"
     assert rows[1]["parse_error"] is None
 
 
 def test_records_frame_digest():
-    rows = records_frame(parse_warc(build_warc(_recs())))
+    rows = records_frame(parse_warc(encode_warc(_recs())))
     assert rows[1][4] == hashlib.md5(_recs()[1]["payload"]).hexdigest()
     assert all(r[5] is None for r in rows)
 
 
 @pytest.mark.spark
 def test_scan_warc_spark_face(spark):
-    recs = _recs()
-    recs_bad = list(recs)
-    recs_bad[0] = dict(recs[0], content_length="nope")
+    data = encode_warc(_recs())
     rows = [
-        (1, bytearray(build_warc(recs))),
-        (2, bytearray(build_warc(recs_bad))),
+        (1, bytearray(data)),
+        (2, bytearray(_bad_length(data, 0))),
         (3, None),
     ]
     df = spark.createDataFrame(rows, "file_id long, warc binary")

@@ -80,7 +80,7 @@ def test_duckdb_twin_matches_spark(spark):
     want = sorted(
         tuple(r)
         for r in duckdb.sql(
-            sql_zorder_bucket_stats(lattice.format(v="t.range"), dialect="duck")
+            sql_zorder_bucket_stats(lattice.format(v="t.range"), dialect="duckdb")
         ).fetchall()
     )
     got = sorted(

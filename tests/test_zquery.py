@@ -76,7 +76,7 @@ def test_small_box_covers_tiny_fraction_of_keyspace():
 def test_python_quant_mirrors_sql_quant():
     import duckdb
     vals = [-200.0, -180.0, -179.9, 0.0, 17.3, 179.99, 180.0, 250.0]
-    steps = dict(zorder_steps("lat", "lon", "duckdb"))
+    steps = dict(zorder_steps("lat", "lon"))
     got = duckdb.sql(
         "SELECT " + ", ".join(
             steps["_zx0"].replace("lon", repr(v)) for v in vals)
