@@ -41,14 +41,15 @@ replay to (one parquet read + a handful of JSON tails) no matter how
 many commits the table has accumulated — proven here by a test that
 deletes the pre-checkpoint commits (log cleanup) and reads on. Snapshot
 planning never lists the table directory, so dead files from failed
-writes or pre-vacuum tombstones are invisible.
+writes or removed (tombstoned) files are invisible.
 
 Unsupported (raise, never silently wrong): deletion vectors (an `add`
 with a non-null ``deletionVector``), column mapping, and any
 ``minReaderVersion`` > 1 whose ``readerFeatures`` we don't implement.
 The fixture writer is copy-on-write (DELETE rewrites affected files),
 so it never produces DVs — matching delta-spark's default until DVs are
-explicitly enabled.
+explicitly enabled. It has no maintenance actions (OPTIMIZE, VACUUM):
+removed files stay on disk, which is what time travel reads.
 
 No reference counterpart (specvital/core has no table-format layer).
 """
@@ -450,83 +451,6 @@ class DeltaFixtureWriter:
                    for p in sorted(affected)]
         return self._commit(removes + self._add_actions(new),
                             operation="DELETE")
-
-    def optimize(self, spark) -> int:
-        """OPTIMIZE-style small-file compaction: per partition, rewrite
-        every multi-file partition into ONE file and commit
-        remove(old) + add(new) with ``dataChange: false`` — the snapshot
-        is row-identical (the protocol's signal that incremental
-        consumers may skip the commit). The lakehouse small-file
-        problem is operational, not hypothetical: a crawl appending
-        every hour leaves thousands of KB-files per partition, and scan
-        task count tracks file count; compaction restores ~one task per
-        target size. Returns the new version."""
-        snap = load_delta_snapshot(self.path)
-        by_part: dict[tuple, list[dict]] = {}
-        for a in snap["adds"].values():
-            key = tuple(sorted((a.get("partitionValues") or {}).items()))
-            by_part.setdefault(key, []).append(a)
-        removes, victims = [], []
-        for _key, adds in sorted(by_part.items()):
-            if len(adds) < 2:
-                continue
-            victims.extend(
-                os.path.join(self.path, _decode_path(a["path"]))
-                for a in adds)
-            removes.extend(
-                {"remove": {"path": a["path"], "dataChange": False,
-                            "deletionTimestamp": self._ts}}
-                for a in sorted(adds, key=lambda a: a["path"]))
-        if not victims:
-            return self._commit([], operation="OPTIMIZE")
-        reader = spark.read.schema(self.schema)
-        if self.partition_cols:
-            reader = reader.option("basePath", self.path)
-        packed = reader.parquet(*victims)
-        before = self._data_files()
-        if self.partition_cols:
-            # one file per hive dir: cluster rows by the partition columns
-            # so each dir gets exactly one writer task
-            (packed.repartition(*self.partition_cols)
-             .write.mode("append")
-             .partitionBy(*self.partition_cols).parquet(self.path))
-        else:
-            packed.coalesce(1).write.mode("append").parquet(self.path)
-        new = self._data_files() - before
-        adds = self._add_actions(new)
-        for a in adds:
-            a["add"]["dataChange"] = False
-        return self._commit(removes + adds, operation="OPTIMIZE")
-
-    def vacuum(self, retain_versions: int = 1) -> int:
-        """Delete data files no RETAINED snapshot references (VACUUM).
-
-        Copy-on-write deletes and OPTIMIZE leave tombstoned files on
-        disk so time travel keeps working; at crawl scale that is the
-        storage bill growing monotonically. Retention here is counted
-        in VERSIONS (the newest ``retain_versions`` snapshots stay
-        readable — the fixture's logical clock has no wall time to age
-        against; real Delta retains by deletionTimestamp age, same
-        reconciliation). Files referenced by NO retained snapshot are
-        unlinked; time travel below the retention horizon then fails
-        with the reader's normal missing-file error instead of reading
-        partial state. Returns how many files were deleted."""
-        if retain_versions < 1:
-            raise ValueError("delta: retain_versions must be >= 1")
-        commits, ckpts = _list_log(self.path)
-        newest = max([*commits, *ckpts])
-        retained = range(max(0, newest - retain_versions + 1), newest + 1)
-        keep: set[str] = set()
-        for v in retained:
-            try:
-                snap = load_delta_snapshot(self.path, version=v)
-            except ValueError:
-                continue  # below a cleaned log's checkpoint horizon
-            keep.update(_decode_path(p) for p in snap["adds"])
-        victims = sorted(self._data_files() - keep)
-        for rel in victims:
-            os.remove(os.path.join(self.path, rel))
-        return len(victims)
 
     def checkpoint(self) -> str:
         """Write the full snapshot state as %020d.checkpoint.parquet and

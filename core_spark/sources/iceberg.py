@@ -16,24 +16,33 @@ chain
       -> manifests (content: data | deletes)  (Avro)
       -> live data files + delete files
 
-and then hands the DATA path straight to Spark's parquet scan:
+and then hands the DATA path straight to Spark's parquet scan, with the
+schema the table metadata holds (no inference job, on any read):
 
-  * data files     -> ``spark.read.parquet(*files)`` — column pruning,
-    predicate pushdown and whole-stage codegen all apply exactly as for
-    any parquet scan; nothing Python touches row data.
+  * data files     -> ``spark.read.schema(table).parquet(*files)`` —
+    column pruning, predicate pushdown and whole-stage codegen all apply
+    exactly as for any parquet scan; nothing Python touches row data. A
+    snapshot with no data files is the same scan over no paths.
   * position deletes (content=1) -> anti-join on
     ``(_metadata.file_path, _metadata.row_index)`` — Spark's file
     metadata columns ARE the (file, pos) coordinates the spec keys
     deletes by, so merge-on-read costs ONE shuffle-free broadcast
     anti-join when the delete set is small (the common case: deletes
-    are a trickle vs the data).
+    are a trickle vs the data). Delete files are read with the spec's
+    fixed ``file_path string, pos long`` schema.
   * equality deletes (content=2) -> anti-join on the equality columns
-    (field ids resolved to names through the table schema), scoped by
-    data sequence number: a delete at sequence S removes rows only from
-    data files sequenced STRICTLY below S, so rows (re)appended after
-    the delete stay live (spec §"Scan Planning"/delete application).
-    Each row's file sequence number is a literal map lookup on its
-    ``_metadata.file_path``, so every leaf of the plan is a file scan.
+    (field ids resolved to names through the table schema, the delete
+    file read with the table schema narrowed to them), NULL-safe: a NULL
+    delete value matches a NULL data value (spec: "equivalent to
+    ``col IS NULL``"). Each is scoped by data sequence number: a delete
+    at sequence S removes rows only from data files sequenced STRICTLY
+    below S, so rows (re)appended after the delete stay live (spec
+    §"Scan Planning"/delete application). Each row's file sequence
+    number is a literal map lookup on its ``_metadata.file_path``, so
+    every leaf of the plan is a file scan.
+
+Only flat column types convert; a column of any other Iceberg type
+raises ``ValueError`` when the scan is planned.
 
 100-TB shape: manifest avro files are metadata (KBs–MBs per manifest
 even on petabyte tables); reading them on the driver is exactly what
@@ -44,7 +53,8 @@ touched, which is what makes 10^12-row tables plannable at all.
 The fixture writer emits spec-shaped metadata (v2 field names/ids on
 manifest-list entries, one gzip-independent avro per manifest) but is
 NOT a production writer: no stats, unpartitioned spec only, single
-metadata lineage. It exists so tests and the driver oracle can build a
+metadata lineage, append and delete commits only (no compaction or
+snapshot expiry). It exists so tests and the driver oracle can build a
 real on-disk table, mutate it across snapshots, and byte-compare reads.
 
 Public spec: https://iceberg.apache.org/spec/ (format-version 2).
@@ -55,18 +65,19 @@ from __future__ import annotations
 
 import json
 import os
-import time
 import uuid
 
 from .avrolite import read_avro_file, write_avro_file
 
-# Iceberg type names for the fixture writer's schema JSON
+# Spark simpleString -> Iceberg type name, for the fixture writer's schema
 _SPARK_TO_ICEBERG = {
-    "long": "long", "bigint": "long", "int": "int", "integer": "int",
-    "string": "string", "double": "double", "float": "float",
-    "boolean": "boolean", "binary": "binary",
+    "bigint": "long", "int": "int", "string": "string", "double": "double",
+    "float": "float", "boolean": "boolean", "binary": "binary",
     "timestamp": "timestamptz", "date": "date",
 }
+# Iceberg type name -> Spark DDL type, for the reader's scan schema
+_ICEBERG_TO_SPARK = {
+    **{v: k for k, v in _SPARK_TO_ICEBERG.items()}, "timestamp": "timestamp"}
 
 MANIFEST_LIST_SCHEMA = {
     "type": "record", "name": "manifest_file", "fields": [
@@ -123,7 +134,9 @@ _DATA, _POSITION_DELETES, _EQUALITY_DELETES = 0, 1, 2
 # ---------------------------------------------------------------------------
 
 def load_table_metadata(table_path: str) -> dict:
-    """Read the current vN.metadata.json (version-hint, else highest N)."""
+    """Read the current metadata.json: the version-hint's ``vN``, else the
+    highest N among ``vN.metadata.json`` (Hadoop tables) and
+    ``NNNNN-<uuid>.metadata.json`` (catalog-written tables)."""
     mdir = os.path.join(table_path, "metadata")
     hint = os.path.join(mdir, "version-hint.text")
     name = None
@@ -133,7 +146,7 @@ def load_table_metadata(table_path: str) -> dict:
     else:
         versions = sorted(
             (f for f in os.listdir(mdir) if f.endswith(".metadata.json")),
-            key=lambda f: int(f.split(".", 1)[0].lstrip("v")))
+            key=lambda f: int(f.split(".", 1)[0].lstrip("v").split("-", 1)[0]))
         if versions:
             name = versions[-1]
     if name is None:
@@ -217,24 +230,25 @@ def plan_files(table_path: str, snapshot: dict) -> dict:
     return plan
 
 
-def _schema_field_names(md: dict, field_ids) -> list[str]:
-    """Resolve equality-delete field ids to column names (current schema)."""
-    schemas = md.get("schemas") or []
+def _current_fields(md: dict) -> list[dict]:
+    """The current schema's fields: the ``schemas`` entry whose id is
+    ``current-schema-id`` (v2), else the last one, else v1's ``schema``."""
+    schemas = md.get("schemas") or [md.get("schema", {})]
     cur = md.get("current-schema-id")
-    fields = []
-    for s in schemas:
-        if s.get("schema-id") == cur or not schemas:
-            fields = s.get("fields", [])
-            break
-    else:
-        fields = schemas[-1].get("fields", []) if schemas else []
-    if not fields and "schema" in md:  # v1 fallback
-        fields = md["schema"].get("fields", [])
-    by_id = {f["id"]: f["name"] for f in fields}
-    try:
-        return [by_id[i] for i in field_ids]
-    except KeyError as e:
-        raise ValueError(f"iceberg: unknown equality field id {e}") from None
+    return next((s for s in schemas if s.get("schema-id") == cur),
+                schemas[-1]).get("fields", [])
+
+
+def _spark_ddl(fields: list[dict]) -> str:
+    """Iceberg schema fields -> Spark DDL string (flat types only)."""
+    parts = []
+    for f in fields:
+        t = f["type"]
+        if not isinstance(t, str) or t not in _ICEBERG_TO_SPARK:
+            raise ValueError(f"iceberg: unsupported column type {t!r}")
+        name = f["name"].replace("`", "``")
+        parts.append(f"`{name}` {_ICEBERG_TO_SPARK[t]}")
+    return ", ".join(parts)
 
 
 # ---------------------------------------------------------------------------
@@ -247,31 +261,29 @@ def read_iceberg(spark, table_path: str, snapshot_id: int | None = None,
 
     Plans driver-side off the metadata chain (what Iceberg's planner
     does), then builds ONE declarative Spark plan: parquet scan of the
-    snapshot's live data files, minus position deletes (anti-join on the
+    snapshot's live data files with the table's current schema (no
+    inference job; a column type outside ``_ICEBERG_TO_SPARK`` raises
+    ``ValueError`` here), minus position deletes (anti-join on the
     spec's (file, pos) coordinates via ``_metadata``), minus equality
-    deletes (anti-join on the resolved equality columns). Small delete
-    sides are broadcast; Catalyst/AQE keep pushdown + pruning on the
-    data scan because deletes never restructure it.
+    deletes (NULL-safe anti-join on the resolved equality columns).
+    Small delete sides are broadcast; Catalyst/AQE keep pushdown +
+    pruning on the data scan because deletes never restructure it.
     """
     from pyspark.sql import functions as F
 
     md = load_table_metadata(table_path)
     snap = select_snapshot(md, snapshot_id=snapshot_id, as_of_ms=as_of_ms)
     plan = plan_files(table_path, snap)
-    if not plan["data"]:
-        # zero-row scan with the table schema (empty-snapshot semantics)
-        names_types = _iceberg_schema_to_spark(md)
-        return spark.createDataFrame([], names_types)
-
-    data_paths = [f["file_path"] for f in plan["data"]]
-    df = spark.read.parquet(*data_paths)
+    fields = _current_fields(md)
+    df = spark.read.schema(_spark_ddl(fields)).parquet(
+        *[f["file_path"] for f in plan["data"]])
     # the scan's file_path is a file: URI, the plan's paths are plain
     norm = lambda c: F.regexp_replace(c, "^file:/+", "/")
 
     if plan["position_deletes"]:
         # normalize both sides to a plain path: delete rows carry
         # whatever the writer recorded
-        dels = spark.read.parquet(
+        dels = spark.read.schema("file_path string, pos long").parquet(
             *[f["file_path"] for f in plan["position_deletes"]])
         dels = dels.select(
             norm(F.col("file_path")).alias("_del_fp"),
@@ -297,38 +309,26 @@ def read_iceberg(spark, table_path: str, snapshot_id: int | None = None,
         ])
         df = df.withColumn(
             "_ice_seq", F.element_at(seq_of, norm(F.col("_metadata.file_path"))))
+        by_id = {f["id"]: f for f in fields}
         for rec, field_ids in plan["equality_deletes"]:
-            cols = _schema_field_names(md, field_ids)
-            dels = spark.read.parquet(rec["file_path"]).select(
+            try:
+                eq = [by_id[i] for i in field_ids]
+            except KeyError as e:
+                raise ValueError(
+                    f"iceberg: unknown equality field id {e}") from None
+            cols = [f["name"] for f in eq]
+            dels = spark.read.schema(_spark_ddl(eq)).parquet(
+                rec["file_path"]).select(
                 *[F.col(c).alias(f"_ice_eq_{c}") for c in cols]
             ).distinct()
             cond = F.col("_ice_seq") < F.lit(int(rec["sequence_number"]))
             for c in cols:
-                cond = cond & (F.col(c) == F.col(f"_ice_eq_{c}"))
+                # spec: a NULL delete value matches NULL (col IS NULL)
+                cond = cond & F.col(c).eqNullSafe(F.col(f"_ice_eq_{c}"))
             df = df.join(F.broadcast(dels), cond, "left_anti")
         df = df.drop("_ice_seq")
 
     return df
-
-
-def _iceberg_schema_to_spark(md: dict) -> str:
-    """Current Iceberg schema -> Spark DDL string (flat types only)."""
-    inv = {v: k for k, v in _SPARK_TO_ICEBERG.items()}
-    inv.update({"long": "long", "int": "int", "string": "string",
-                "double": "double", "float": "float", "boolean": "boolean",
-                "binary": "binary", "timestamptz": "timestamp",
-                "timestamp": "timestamp", "date": "date"})
-    schemas = md.get("schemas") or [md.get("schema", {})]
-    cur = md.get("current-schema-id")
-    fields = next((s.get("fields", []) for s in schemas
-                   if s.get("schema-id") == cur), schemas[-1].get("fields", []))
-    parts = []
-    for f in fields:
-        t = f["type"]
-        if not isinstance(t, str) or t not in inv:
-            raise ValueError(f"iceberg: unsupported column type {t!r}")
-        parts.append(f"{f['name']} {inv[t]}")
-    return ", ".join(parts)
 
 
 # ---------------------------------------------------------------------------
@@ -346,17 +346,17 @@ class IcebergFixtureWriter:
         snap3 = w.delete_equality(key_df, ["url"])    # eq deletes
 
     Each call commits one snapshot (new manifest list + metadata json,
-    version-hint bumped). Timestamps are caller-supplied or a logical
-    counter — never wall clock — so fixtures are deterministic.
+    version-hint bumped). Timestamps come from a logical counter — never
+    wall clock — so fixtures are deterministic.
     """
 
-    def __init__(self, table_path: str, spark_schema, table_uuid: str | None = None):
+    def __init__(self, table_path: str, spark_schema):
         self.path = table_path
         self.mdir = os.path.join(table_path, "metadata")
         self.ddir = os.path.join(table_path, "data")
         os.makedirs(self.mdir, exist_ok=True)
         os.makedirs(self.ddir, exist_ok=True)
-        self.uuid = table_uuid or str(uuid.uuid5(
+        self.uuid = str(uuid.uuid5(
             uuid.NAMESPACE_URL, "core-spark-fixture:" + table_path))
         self.fields = [
             {"id": i + 1, "name": f.name, "required": False,
@@ -397,19 +397,13 @@ class IcebergFixtureWriter:
                 }})
         return out
 
-    def _commit(self, entries: list[dict], content: int, operation: str,
-                replace: bool = False) -> int:
+    def _commit(self, entries: list[dict], content: int, operation: str) -> int:
         self.seq += 1
         snap_id = 7_000_000_000_000 + self.seq
         mpath = os.path.join(self.mdir, f"m{self.seq}.avro")
         with open(mpath, "wb") as f:
             f.write(write_avro_file(MANIFEST_ENTRY_SCHEMA, entries))
         rows = sum(e["data_file"]["record_count"] for e in entries)
-        if replace:
-            # replacement commit (rewrite_data_files): the new snapshot's
-            # manifest list references ONLY the new manifest — prior data
-            # and delete manifests stop being part of snapshots from here
-            self.manifests = []
         self.manifests.append({
             "manifest_path": mpath,
             "manifest_length": os.path.getsize(mpath),
@@ -478,7 +472,7 @@ class IcebergFixtureWriter:
         snap = select_snapshot(md)
         files = [f["file_path"] for f in plan_files(self.path, snap)["data"]]
         d = os.path.join(self.ddir, f"s{self.seq + 1}-pos-del")
-        (spark.read.parquet(*files)
+        (spark.read.schema(_spark_ddl(_current_fields(md))).parquet(*files)
          .select(F.col("_metadata.file_path").alias("file_path"),
                  F.col("_metadata.row_index").alias("pos"),
                  "*")
@@ -488,75 +482,6 @@ class IcebergFixtureWriter:
         entries = self._file_entries(
             self._parquet_files(d), _POSITION_DELETES)
         return self._commit(entries, content=1, operation="delete")
-
-    def rewrite_data_files(self, spark, n_files: int = 2) -> int:
-        """Table maintenance: materialize the CURRENT live rows (all
-        merge-on-read delete layers applied) into fresh data files and
-        commit a REPLACE snapshot whose manifest list carries only the
-        new data manifest. This is Iceberg's rewrite_data_files action —
-        the documented answer to MOR compaction debt (PLANS §43: a
-        growing delete side eventually outgrows the broadcast; the fix
-        is rewriting data files, which belongs to the writer). After it,
-        the current snapshot plans ZERO delete files; history still
-        time-travels to the MOR layout until expire_snapshots."""
-        live = read_iceberg(spark, self.path)
-        d = os.path.join(self.ddir, f"s{self.seq + 1}-rewrite")
-        live.repartition(n_files).write.mode("overwrite").parquet(d)
-        entries = self._file_entries(self._parquet_files(d), _DATA)
-        return self._commit(entries, content=0, operation="replace",
-                            replace=True)
-
-    def expire_snapshots(self, retain_last: int = 1) -> int:
-        """Drop all but the newest ``retain_last`` snapshots from the
-        metadata and unlink every data/delete file no retained snapshot
-        references (plus the expired snapshots' manifest lists) — the
-        storage-reclaim half of maintenance. Time travel to an expired
-        snapshot id then raises the reader's normal 'not found', never
-        a partial read. Returns how many files were unlinked."""
-        if retain_last < 1:
-            raise ValueError("iceberg: retain_last must be >= 1")
-        retained = self.snapshots[-retain_last:]
-        expired = self.snapshots[:-retain_last]
-        if not expired:
-            return 0
-        keep: set[str] = set()
-        for s in retained:
-            plan = plan_files(self.path, s)
-            keep.update(f["file_path"] for f in plan["data"])
-            keep.update(f["file_path"] for f in plan["position_deletes"])
-            keep.update(r["file_path"] for r, _ in plan["equality_deletes"])
-            ml = _resolve_path(s["manifest-list"], self.path)
-            keep.add(ml)
-            with open(ml, "rb") as f:
-                _, mans = read_avro_file(f.read())
-            keep.update(
-                _resolve_path(m["manifest_path"], self.path) for m in mans)
-        victims = []
-        for s in expired:
-            ml = _resolve_path(s["manifest-list"], self.path)
-            if ml in keep or not os.path.exists(ml):
-                continue
-            with open(ml, "rb") as f:
-                _, mans = read_avro_file(f.read())
-            victims.append(ml)
-            keep.add(ml)  # claimed: don't unlink twice
-            # manifests only expired snapshots reference go too
-            for m in mans:
-                mp = _resolve_path(m["manifest_path"], self.path)
-                if mp not in keep and os.path.exists(mp):
-                    victims.append(mp)
-                    keep.add(mp)
-        for root, _dirs, files in os.walk(self.ddir):
-            for name in files:
-                p = os.path.join(root, name)
-                if name.endswith(".parquet") and not name.startswith(".") \
-                        and p not in keep:
-                    victims.append(p)
-        for p in victims:
-            os.remove(p)
-        self.snapshots = retained
-        self._write_metadata(retained[-1]["snapshot-id"])
-        return len(victims)
 
     def delete_equality(self, key_df, key_cols: list[str]) -> int:
         """Commit equality deletes: rows whose key_cols match key_df."""

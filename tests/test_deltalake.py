@@ -241,57 +241,6 @@ class TestPlanShape:
         assert [f["name"] for f in js["fields"]] == ["doc_id", "lang", "text"]
 
 
-class TestOptimize:
-    def test_compaction_is_row_identical_and_one_file_per_partition(
-            self, spark, corpus, tmp_path):
-        w = DeltaFixtureWriter(str(tmp_path), corpus.schema,
-                               partition_cols=["lang"])
-        w.append(corpus, n_files=3)
-        w.append(corpus.withColumn("doc_id", F.col("doc_id") + 1000),
-                 n_files=3)
-        pre = read_delta(spark, str(tmp_path))
-        pre_rows = sorted(tuple(r) for r in pre.collect())
-        pre_files = len(pre.inputFiles())
-        v = w.optimize(spark)
-        post = read_delta(spark, str(tmp_path))
-        assert sorted(tuple(r) for r in post.collect()) == pre_rows
-        # one live file per lang partition now
-        snap = load_delta_snapshot(str(tmp_path))
-        parts = {}
-        for a in snap["adds"].values():
-            parts.setdefault(a["partitionValues"]["lang"], []).append(a)
-        assert set(parts) == {"en", "de", "fr"}
-        assert all(len(v) == 1 for v in parts.values())
-        assert len(post.inputFiles()) < pre_files
-        # dataChange: false on every action of the OPTIMIZE commit
-        import json as _json
-        log = os.path.join(str(tmp_path), "_delta_log", f"{v:020d}.json")
-        acts = [_json.loads(l) for l in open(log) if l.strip()]
-        flags = [a[k]["dataChange"] for a in acts for k in ("add", "remove")
-                 if k in a]
-        assert flags and not any(flags)
-        # time travel to pre-optimize still reads the old layout
-        assert read_delta(spark, str(tmp_path), version=v - 1).count() == \
-            post.count()
-
-    def test_optimize_noop_on_compact_table(self, spark, corpus, tmp_path):
-        w = DeltaFixtureWriter(str(tmp_path), corpus.schema)
-        w.append(corpus, n_files=1)
-        before = set(load_delta_snapshot(str(tmp_path))["adds"])
-        w.optimize(spark)
-        assert set(load_delta_snapshot(str(tmp_path))["adds"]) == before
-
-    def test_optimize_then_checkpoint_reads(self, spark, corpus, tmp_path):
-        w = DeltaFixtureWriter(str(tmp_path), corpus.schema,
-                               partition_cols=["lang"])
-        w.append(corpus, n_files=4)
-        w.optimize(spark)
-        w.checkpoint()
-        w.clean_log()
-        got = {r.doc_id for r in read_delta(spark, str(tmp_path)).collect()}
-        assert got == set(range(120))
-
-
 class TestReviewRegressions:
     """Pins for the closing review findings: NULL-predicate DELETE
     semantics, the column-mapping hard-fail, and readerFeatures
@@ -352,33 +301,6 @@ class TestReviewRegressions:
 
 
 class TestVacuumAndEvolution:
-    def test_vacuum_unlinks_only_unreferenced_files(self, spark, corpus,
-                                                    tmp_path):
-        w, (v1, v2) = _write_table(spark, corpus, tmp_path)
-        # v2 rewrote the files containing doc_id%7==3; their v1 originals
-        # are tombstoned on disk until vacuum
-        all_before = w._data_files()
-        live = set(load_delta_snapshot(str(tmp_path))["adds"])
-        assert live < all_before
-        n = w.vacuum(retain_versions=1)
-        assert n == len(all_before - live)
-        assert w._data_files() == live
-        # the retained (current) snapshot still reads perfectly
-        got = {r.doc_id for r in read_delta(spark, str(tmp_path)).collect()}
-        assert got == set(range(120)) - _DELETED
-        # time travel below the retention horizon fails loudly, not wrong
-        with pytest.raises(Exception):
-            read_delta(spark, str(tmp_path), version=v1).collect()
-
-    def test_vacuum_respects_retention_window(self, spark, corpus,
-                                              tmp_path):
-        w, (v1, _) = _write_table(spark, corpus, tmp_path)
-        n = w.vacuum(retain_versions=3)  # v0..v2 all retained
-        assert n == 0
-        assert read_delta(spark, str(tmp_path), version=v1).count() == 120
-        with pytest.raises(ValueError, match="retain_versions"):
-            w.vacuum(retain_versions=0)
-
     def test_schema_evolution_add_column(self, spark, corpus, tmp_path):
         """Old files lack the new column; the snapshot schema wins and
         Spark fills NULL — per-version schemas stay readable."""
@@ -414,11 +336,11 @@ class TestVacuumAndEvolution:
 class TestLifecycleFuzz:
     def test_random_op_sequences_match_row_model(self, spark, tmp_path):
         """Model-based check of the whole table lifecycle: random
-        interleavings of append / copy-on-write delete / optimize /
-        checkpoint / log-cleanup / vacuum, with the CURRENT snapshot
-        compared to a pure-Python live-row model after every op. The
-        maintenance ops (optimize/checkpoint/clean/vacuum) must be
-        row-invisible no matter where they land in the sequence."""
+        interleavings of append / copy-on-write delete / checkpoint +
+        log-cleanup, with the CURRENT snapshot compared to a pure-Python
+        live-row model after every op. The checkpoint and the cleanup
+        must be row-invisible no matter where they land in the
+        sequence."""
         import random
 
         rng = random.Random(42)
@@ -431,8 +353,7 @@ class TestLifecycleFuzz:
             ops = []
             for step in range(7):
                 op = rng.choice(
-                    ["append", "append", "delete", "optimize",
-                     "checkpoint_clean", "vacuum"])
+                    ["append", "append", "delete", "checkpoint_clean"])
                 ops.append(op)
                 if w is None or op == "append":
                     batch = [(next_id + i, (next_id + i) % 5)
@@ -447,13 +368,9 @@ class TestLifecycleFuzz:
                     r = rng.randrange(5)
                     w.delete_where(spark, F.col("grp") == r)
                     model -= {i for i in model if i % 5 == r}
-                elif op == "optimize":
-                    w.optimize(spark)
                 elif op == "checkpoint_clean":
                     w.checkpoint()
                     w.clean_log()
-                elif op == "vacuum":
-                    w.vacuum(retain_versions=1)
                 got = {r.doc_id
                        for r in read_delta(spark, root).collect()}
                 assert got == model, (seq, step, ops)

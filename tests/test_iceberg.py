@@ -164,6 +164,10 @@ def test_iceberg_time_travel_as_of(spark, corpus, tmp_path):  # noqa: F811
     assert n0 == 120
     with pytest.raises(ValueError, match="no snapshot"):
         select_snapshot(md, as_of_ms=snaps[0]["timestamp-ms"] - 1)
+    # an id the metadata does not hold -> loud 'not found'
+    absent = max(s["snapshot-id"] for s in snaps) + 1
+    with pytest.raises(ValueError, match="not found"):
+        read_iceberg(spark, str(tmp_path), snapshot_id=absent)
     # between commits 2 and 3 -> position deletes only
     mid = (snaps[1]["timestamp-ms"] + snaps[2]["timestamp-ms"]) // 2
     assert read_iceberg(spark, str(tmp_path), as_of_ms=mid).count() == \
@@ -223,20 +227,18 @@ def test_iceberg_equality_delete_sequence_scoping(spark, corpus, tmp_path):  # n
         snapshot_id=s2["snapshot-id"]).count() == 115
 
 
-def test_expire_reclaims_expired_only_manifests(spark, corpus, tmp_path):  # noqa: F811
-    """expire_snapshots unlinks manifest .avro files referenced ONLY by
-    expired snapshots (not just manifest lists and parquet)."""
-    w, _ = _write_table(spark, corpus, tmp_path)
-    w.rewrite_data_files(spark, n_files=2)
-    mdir = os.path.join(str(tmp_path), "metadata")
-    pre_manifests = {f for f in os.listdir(mdir) if f.startswith("m")}
-    assert len(pre_manifests) == 4  # m1..m3 (MOR history) + m4 (rewrite)
-    w.expire_snapshots(retain_last=1)
-    post = {f for f in os.listdir(mdir) if f.startswith("m")}
-    assert post == {"m4.avro"}  # MOR-era manifests reclaimed
+def test_iceberg_equality_delete_null_matches_null(spark, tmp_path):
+    """Spec: a NULL in an equality delete file matches rows where the
+    column is NULL (``col IS NULL``), not no row at all."""
+    rows = spark.createDataFrame(
+        [(1, "en"), (2, None), (3, "de"), (4, None), (5, "fr")],
+        "doc_id long, lang string")
+    w = IcebergFixtureWriter(str(tmp_path), rows.schema)
+    w.append(rows, n_files=2)
+    w.delete_equality(
+        spark.createDataFrame([(None,), ("de",)], "lang string"), ["lang"])
     got = {r.doc_id for r in read_iceberg(spark, str(tmp_path)).collect()}
-    assert got == set(range(120)) - {i for i in range(120) if i % 7 == 3} \
-        - {0, 1, 2, 3, 4}
+    assert got == {1, 5}
 
 
 def test_iceberg_delete_plan_stays_broadcast(spark, corpus, tmp_path):  # noqa: F811
@@ -273,7 +275,8 @@ def test_iceberg_corrupt_manifest_raises(spark, corpus, tmp_path):  # noqa: F811
 
 
 def test_iceberg_version_hint_vs_scan(spark, corpus, tmp_path):  # noqa: F811
-    """Reader honors version-hint.text; without it, highest vN wins."""
+    """Reader honors version-hint.text; without it, the highest version
+    wins among ``vN.metadata.json`` and ``NNNNN-<uuid>.metadata.json``."""
     w = IcebergFixtureWriter(str(tmp_path), corpus.schema)
     w.append(corpus, n_files=1)
     w.delete_positions(spark, F.col("doc_id") < 60)
@@ -283,61 +286,9 @@ def test_iceberg_version_hint_vs_scan(spark, corpus, tmp_path):  # noqa: F811
     assert read_iceberg(spark, str(tmp_path)).count() == 120
     os.remove(hint)  # fall back to the newest metadata file
     assert read_iceberg(spark, str(tmp_path)).count() == 60
-
-
-# ---------------------------------------------------------------------------
-# table maintenance: rewrite_data_files + expire_snapshots
-# ---------------------------------------------------------------------------
-
-def test_rewrite_data_files_clears_mor_debt(spark, corpus, tmp_path):  # noqa: F811
-    """Compaction answers the documented MOR caveat: after the rewrite
-    the current snapshot plans ZERO delete files, rows are identical,
-    and the pre-rewrite snapshot still time-travels to the MOR layout."""
-    w, (s1, s2, s3) = _write_table(spark, corpus, tmp_path)
-    pre = {r.doc_id for r in read_iceberg(spark, str(tmp_path)).collect()}
-    s4 = w.rewrite_data_files(spark, n_files=2)
-    md = load_table_metadata(str(tmp_path))
-    plan = plan_files(str(tmp_path), select_snapshot(md))
-    assert plan["position_deletes"] == [] and plan["equality_deletes"] == []
-    assert len(plan["data"]) == 2
-    got = {r.doc_id for r in read_iceberg(spark, str(tmp_path)).collect()}
-    assert got == pre
-    # history intact: the MOR snapshot still reads through its deletes
-    got3 = {r.doc_id
-            for r in read_iceberg(spark, str(tmp_path),
-                                  snapshot_id=s3).collect()}
-    assert got3 == pre
-
-
-def test_expire_snapshots_reclaims_and_fails_loudly(spark, corpus,  # noqa: F811
-                                                    tmp_path):
-    w, (s1, s2, s3) = _write_table(spark, corpus, tmp_path)
-    w.rewrite_data_files(spark, n_files=2)
-    pre = {r.doc_id for r in read_iceberg(spark, str(tmp_path)).collect()}
-    n = w.expire_snapshots(retain_last=1)
-    assert n > 0  # old data files + delete files + manifest lists gone
-    # current snapshot reads perfectly off the compacted files
-    got = {r.doc_id for r in read_iceberg(spark, str(tmp_path)).collect()}
-    assert got == pre
-    md = load_table_metadata(str(tmp_path))
-    assert len(md["snapshots"]) == 1
-    # expired ids are gone from metadata -> loud 'not found'
-    with pytest.raises(ValueError, match="not found"):
-        read_iceberg(spark, str(tmp_path), snapshot_id=s1)
-    with pytest.raises(ValueError, match="retain_last"):
-        w.expire_snapshots(retain_last=0)
-
-
-def test_expire_without_rewrite_keeps_referenced_files(spark, corpus,  # noqa: F811
-                                                       tmp_path):
-    """Expiring history on an append-only table must keep every data
-    file the retained snapshot references (accumulating manifests) —
-    expire reclaims only what nothing retained points at."""
-    w = IcebergFixtureWriter(str(tmp_path), corpus.schema)
-    w.append(corpus, n_files=2)
-    w.append(corpus.limit(10).selectExpr(
-        "doc_id + 1000 AS doc_id", "url", "text"), n_files=1)
-    n = w.expire_snapshots(retain_last=1)
-    got = {r.doc_id for r in read_iceberg(spark, str(tmp_path)).collect()}
-    assert got == set(range(120)) | {1000 + i for i in range(10)}
-    assert n == 1  # only the first snapshot's manifest list was unlinked
+    # a catalog names version 2 00002-<uuid>; it still beats v1
+    mdir = os.path.join(str(tmp_path), "metadata")
+    os.rename(os.path.join(mdir, "v2.metadata.json"),
+              os.path.join(mdir, "00002-6a1b2c3d-0000-4000-8000-000000000000"
+                                 ".metadata.json"))
+    assert read_iceberg(spark, str(tmp_path)).count() == 60

@@ -158,18 +158,22 @@ class TestExternalInput:
 
     def test_iceberg_equality_deletes_keep_one_fingerprint(self, spark, tmp_path):
         """An Iceberg snapshot with equality deletes plans only file scans, so
-        two reads of it get one fingerprint and a re-run can resume."""
+        two reads of it get one fingerprint and a re-run can resume. A
+        snapshot with no data files is an empty scan with the table schema."""
         from core_spark.data.synth import webpages_spark
         from core_spark.plans.pipeline import _input_fingerprint
         from core_spark.sources.iceberg import IcebergFixtureWriter, read_iceberg
 
-        table = str(tmp_path / "table")
         docs = webpages_spark(spark, 60, 2).select(*CORPUS_COLS)
+        table, no_data = str(tmp_path / "table"), str(tmp_path / "no_data")
         writer = IcebergFixtureWriter(table, docs.schema)
         writer.append(docs)
         writer.delete_equality(docs.where("doc_id < 10"), ["doc_id"])
-        assert read_iceberg(spark, table).count() == 50
-        assert _input_fingerprint(read_iceberg(spark, table)) == _input_fingerprint(read_iceberg(spark, table))
+        IcebergFixtureWriter(no_data, docs.schema).delete_equality(docs.where("doc_id < 10"), ["doc_id"])
+        for root, rows in ((table, 50), (no_data, 0)):
+            df = read_iceberg(spark, root)
+            assert df.count() == rows and df.schema.simpleString() == docs.schema.simpleString()
+            assert _input_fingerprint(df) == _input_fingerprint(read_iceberg(spark, root))
 
     def test_script_reads_an_iceberg_table_root(self, spark, tmp_path):
         """``scripts/run_pipeline.py --input-table`` on an Iceberg table root

@@ -14,6 +14,13 @@ share does not keep both alive.
 A def that only tests call fails the gate: delete it, wire it to a root, or
 add it to ``TEST_ONLY`` with the reason it stays.
 
+The method rule does the same inside live classes: a method whose name
+(dunders aside) no root, no live def and no module-level code uses fails
+the gate as "module.Class.method". Methods are called on instances whose
+module the caller need not import, so here any live code counts, in any
+file. A name counts where it is used, not where a ``def`` or ``class``
+statement binds it.
+
 The flag rule does the same for modes inside live code: every bool-default
 parameter of a function in a live def (the def itself, a class's methods,
 nested defs) must be passed by a call in a root or a live def, by keyword,
@@ -72,6 +79,8 @@ TEST_ONLY: dict[str, str] = {
     "operators.knn.knn_bruteforce_pandas": "reference model for the kNN goldens",
     "operators.linkgraph.hits_bound": "analytic bound the HITS tests check",
     "operators.redirects.sql_resolve_redirects": "DuckDB oracle of resolve_redirects",
+    "sources.deltalake.DeltaFixtureWriter.clean_log":
+        "builds the cleaned-log state the reader's checkpoint-only replay is tested on",
 }
 
 #: Bool-default parameters no root passes, kept on purpose:
@@ -90,17 +99,20 @@ def _py_files(top: str, recurse: bool = True) -> list[str]:
 
 
 def _names(path: str) -> list[tuple[int, str]]:
-    """(line, name) of every NAME token in ``path``, and of every name in an
-    f-string's replacement fields (one STRING token before Python 3.12)."""
+    """(line, name) of every NAME token in ``path`` except the name a ``def``
+    or ``class`` statement binds, and of every name in an f-string's
+    replacement fields (one STRING token before Python 3.12)."""
     out = []
+    prev = None
     with open(path, "rb") as fh:
         for t in tokenize.tokenize(fh.readline):
-            if t.type == tokenize.NAME:
+            if t.type == tokenize.NAME and prev not in ("def", "class"):
                 out.append((t.start[0], t.string))
             elif t.type == tokenize.STRING and "f" in re.match(r"\w*", t.string)[0].lower():
                 out += [(t.start[0], n.id if isinstance(n, ast.Name) else n.attr)
                         for n in ast.walk(ast.parse(t.string, mode="eval"))
                         if isinstance(n, (ast.Name, ast.Attribute))]
+            prev = t.string
     return out
 
 
@@ -135,6 +147,16 @@ def _imports(tree: ast.Module, path: str, modules: set[str]) -> set[str]:
             out.add(base)
             out |= {f"{base}.{a.name}".lstrip(".") for a in node.names}
     return out & modules
+
+
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+
+def _methods(tree: ast.Module, module: str) -> dict[str, list[str]]:
+    """{"module.Class": its methods' names, dunders aside} for top-level classes."""
+    return {f"{module}.{node.name}": [f.name for f in node.body if isinstance(f, _FUNCS)
+                                      and not (f.name.startswith("__") and f.name.endswith("__"))]
+            for node in tree.body if isinstance(node, ast.ClassDef)}
 
 
 def _defs(path: str, tree: ast.Module) -> tuple[dict[str, set[str]], set[str]]:
@@ -177,8 +199,10 @@ def _roots() -> list[str]:
         + _py_files(os.path.join(ROOT, "perfbench"), recurse=False)
 
 
-def _live() -> tuple[set[str], set[str]]:
-    """(every top-level ``core_spark`` def, those a root reaches), as "module.name"."""
+def _live() -> tuple[set[str], set[str], set[str]]:
+    """(every top-level ``core_spark`` def, those a root reaches, as
+    "module.name"; the methods of the reached classes whose name no reached
+    code uses, as "module.Class.method")."""
     lib = _py_files(os.path.join(ROOT, "core_spark"))
     modules = {_module(path) for path in lib}
     # (names used, modules whose defs those names may reach): one per root
@@ -188,32 +212,35 @@ def _live() -> tuple[set[str], set[str]]:
         todo.append(({name for _, name in _names(path)}, _imports(_parse(path), path, modules)))
     uses: dict[str, tuple[set[str], set[str]]] = {}
     by_name: dict[str, list[str]] = {}
+    methods: dict[str, list[str]] = {}
     for path in lib:
         tree = _parse(path)
         scope = _imports(tree, path, modules) | {_module(path)}
         defs, module_level = _defs(path, tree)
+        methods.update(_methods(tree, _module(path)))
         uses.update({key: (names, scope) for key, names in defs.items()})
         todo.append((module_level, scope))
         for key in defs:
             by_name.setdefault(key.rsplit(".", 1)[1], []).append(key)
     live: set[str] = set()
+    used: set[str] = set()  # every name that reached code uses
     while todo:
         names, scope = todo.pop()
+        used |= names
         for name in names:
             for key in by_name.get(name, ()):
                 if key not in live and key.rsplit(".", 1)[0] in scope:
                     live.add(key)
                     todo.append(uses[key])
-    return set(uses), live
+    unused = {f"{cls}.{m}" for cls in live & set(methods) for m in methods[cls] if m not in used}
+    return set(uses), live, unused
 
 
 def unreached() -> set[str]:
-    """Top-level ``core_spark`` defs that no root reaches, as "module.name"."""
-    defs, live = _live()
-    return defs - live
-
-
-_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
+    """Top-level ``core_spark`` defs that no root reaches ("module.name") and
+    methods of reached classes that nothing reached names ("module.Class.method")."""
+    defs, live, unused = _live()
+    return defs - live | unused
 
 
 def _flags(node: ast.AST, key: str) -> list[tuple[str, str, str, int | None]]:
@@ -248,7 +275,7 @@ def _passes(call: ast.Call, param: str, index: int | None) -> bool:
 def unset_flags() -> set[str]:
     """Bool-default parameters of live ``core_spark`` functions that no call in
     a root or a live def passes, as "module.def.param"."""
-    _, live = _live()
+    _, live, _ = _live()
     lib = _py_files(os.path.join(ROOT, "core_spark"))
     modules = {_module(path) for path in lib}
     flags = []  # (key, module, callee name, parameter, positional index)

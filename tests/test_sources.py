@@ -36,6 +36,22 @@ class TestCorpusAndSinks:
         (df.withColumn("extra", F.lit(1)) if extra else df).write.mode("overwrite").parquet(path)
 
     @staticmethod
+    def _iceberg(spark, path):
+        """An Iceberg table root of the corpus with one position-delete and
+        one equality-delete snapshot on top; returns its data files."""
+        from pyspark.sql import functions as F
+
+        from core_spark.data.synth import webpages_spark
+        from core_spark.sources.iceberg import IcebergFixtureWriter, load_table_metadata, plan_files, select_snapshot
+
+        docs = webpages_spark(spark, 50, 2).select("url", "warc_ts", "html", "lang", "doc_id")
+        writer = IcebergFixtureWriter(path, docs.schema)
+        writer.append(docs)
+        writer.delete_positions(spark, F.col("doc_id") % 7 == 3)
+        writer.delete_equality(docs.where("doc_id < 5"), ["doc_id"])
+        return [f["file_path"] for f in plan_files(path, select_snapshot(load_table_metadata(path)))["data"]]
+
+    @staticmethod
     def _jobs(spark, group, fn):
         """Spark jobs that ``fn`` starts, counted by job group."""
         sc = spark.sparkContext
@@ -47,17 +63,24 @@ class TestCorpusAndSinks:
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     def test_read_corpus_reread_starts_no_job(self, spark, tmp_path):
-        path = str(tmp_path / "corpus")
+        """No read starts a job: a parquet path reads one footer on the
+        driver, an Iceberg root (with both kinds of deletes) takes its schema
+        from the table metadata."""
+        path, table = str(tmp_path / "corpus"), str(tmp_path / "table")
         self._corpus(spark, path)
-        assert self._jobs(spark, "corpus-first", lambda: read_corpus(spark, path)) == 0
-        assert self._jobs(spark, "corpus-again", lambda: read_corpus(spark, path)) == 0
-        assert read_corpus(spark, path).count() == 50
+        self._iceberg(spark, table)
+        # the deletes drop doc_ids 3, 10, ..., 45 (7) and 0-4 (5, one shared)
+        for root, rows in ((path, 50), (table, 39)):
+            assert self._jobs(spark, f"first-{root}", lambda: read_corpus(spark, root)) == 0
+            assert self._jobs(spark, f"again-{root}", lambda: read_corpus(spark, root)) == 0
+            assert read_corpus(spark, root).count() == rows
 
     def test_read_corpus_schema_is_the_inferred_schema(self, spark, tmp_path):
         """The footer read gives what inference gives, on a Spark-written
         corpus (its footers carry Spark's row metadata) and on a pyarrow one
         in perfbench's ``write_corpus`` shape (``timestamp[us, tz=UTC]``
-        and ``binary`` columns, no Spark metadata)."""
+        and ``binary`` columns, no Spark metadata). The Iceberg metadata
+        schema gives what inference over the snapshot's data files gives."""
         from perfbench.workloads import DOCS_PER_FILE, write_corpus
 
         by_spark = str(tmp_path / "by_spark")
@@ -67,6 +90,9 @@ class TestCorpusAndSinks:
         for path in (by_spark, by_arrow):
             assert read_corpus(spark, path).schema == spark.read.parquet(path).schema
         assert read_corpus(spark, by_arrow).count() == 2 * DOCS_PER_FILE
+        table = str(tmp_path / "table")
+        data_files = self._iceberg(spark, table)
+        assert read_corpus(spark, table).schema == spark.read.parquet(*data_files).schema
 
     def test_read_corpus_added_bad_file_revalidates(self, spark, tmp_path):
         path = tmp_path / "corpus"
