@@ -2296,7 +2296,6 @@ def q_asof_join(spark, sf_dir):
         key="user_id",
         ts_col="ts",
         payload_cols=["err_id"],
-        inclusive=False,
         prefix="prior_",
     ).select("event_id", "prior_err_id")
 
@@ -3384,7 +3383,7 @@ def _sql_domain_extract() -> str:
 
     src = (f"(SELECT doc_id, {_psl_host_expr('duckdb')} AS host"
            f" FROM documents) src")
-    return sql_registrable(src, "host", "duckdb")
+    return sql_registrable(src, "host")
 
 
 # KDE fixture: a pseudo-scatter on an integer lattice (every coordinate
@@ -9380,7 +9379,7 @@ REGISTRY: tuple[Query, ...] = (
         "SELECT doc_id FROM documents", n_hosts=97, k_out=4, iters=3
     )),
     Query("zorder_layout", q_zorder_layout, lambda: sql_zorder_bucket_stats(
-        _POINTS_SQL, bucket_shift_pow2=1 << 26, dialect="duckdb"
+        _POINTS_SQL, bucket_shift_pow2=1 << 26
     )),
     Query("span_dedup", q_span_dedup, lambda: sql_dedup_substrings(
         f"(SELECT doc_id, {SPAN_GEN_SQL} AS text FROM documents)",
@@ -9505,7 +9504,6 @@ REGISTRY: tuple[Query, ...] = (
         key="user_id",
         ts_col="ts",
         select_cols="l.event_id AS event_id, r.err_id AS prior_err_id",
-        inclusive=False,
     )),
     Query("tile_compact", q_tile_compact, lambda: (
         "SELECT cell, " + RES_FROM_CELL + " AS res FROM ("

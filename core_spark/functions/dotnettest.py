@@ -270,13 +270,11 @@ def detect_dialect(source: str) -> str:
     return "nunit"
 
 
-def parse_csharp_tests(source: str, dialect: str | None = None) -> list[dict]:
+def parse_csharp_tests(source: str) -> list[dict]:
     """Flattened inventory rows (same model as jstest.parse_js_tests)."""
-    if dialect is None:
-        dialect = detect_dialect(source)
     toks = tokenize(source)
     n = len(toks)
-    ex = _CsExtractor(toks, dialect)
+    ex = _CsExtractor(toks, detect_dialect(source))
     rows: list[dict] = []
     pending = []
     pend_start = -1

@@ -28,6 +28,7 @@ from core_spark.functions import hexgrid as hx
 from core_spark.functions.extract import html_to_text
 from core_spark.functions.geoparse import mention_batch, mention_index
 from core_spark.operators.pip import match_points, polygon_payload
+from core_spark.operators.tiles import RESOLUTIONS
 
 FUSED_SCHEMA = (
     "doc_id bigint, url string, lang string, mention_idx int, "
@@ -35,8 +36,6 @@ FUSED_SCHEMA = (
     "h3_r5 bigint, h3_r6 bigint, h3_r7 bigint, h3_r8 bigint, h3_r9 bigint, "
     "admin_id bigint"
 )
-
-RESOLUTIONS = (5, 6, 7, 8, 9)
 
 
 def fused_batch(pdf: pd.DataFrame, payload, payload_fp: int) -> pd.DataFrame:

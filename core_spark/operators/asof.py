@@ -1,8 +1,8 @@
-"""As-of join (attach the most recent right row at or before each left ts).
+"""As-of join (attach the most recent right row strictly before each left ts).
 
 The temporal join the task brief names as a custom operator Spark lacks
-(left row at time t ← latest right row with the same key and ts ≤ t, or
-ts < t in strict mode). A naive SQL formulation is a range self-join
+(left row at time t ← latest right row with the same key and ts < t).
+A naive SQL formulation is a range self-join
 (quadratic in recrawl fan-in); the Spark-native shape is the UNION-WINDOW
 plan:
 
@@ -12,9 +12,8 @@ plan:
    skips whole-row nulls only);
 2. one window per key ordered by (ts, _src): ``last(_snap, ignorenulls)``
    over unbounded-preceding..current carries the latest visible right row
-   forward. Inclusive mode sorts right rows first at equal ts (ts ≤ t);
-   strict mode sorts them after (ts < t) — the mode is just the sort
-   order of the tag;
+   forward. Right rows sort after left rows at equal ts, so a right row
+   is visible only to later left rows (ts < t);
 3. keep left rows, unpack the struct.
 
 One shuffle on the key, one in-partition sort — the same cost as any
@@ -44,11 +43,10 @@ def asof_join(
     key: str,
     ts_col: str,
     payload_cols: list[str],
-    inclusive: bool = True,
     prefix: str = "asof_",
 ) -> DataFrame:
     """Left rows + ``prefix<payload>`` columns from the as-of right match
-    (NULL when no right row precedes). See module docstring for the plan.
+    (NULL when no right row is strictly earlier). See module docstring for the plan.
 
     ``_src``/``_snap``/``_match`` are reserved internals and
     ``prefix<payload>`` must not collide with a left column — both are
@@ -89,10 +87,9 @@ def asof_join(
             r = r.withColumn(c, F.lit(None).cast(dict(left.dtypes)[c]))
     unioned = l.unionByName(r.select(*l.columns))
 
-    src_order = F.col("_src").asc() if inclusive else F.col("_src").desc()
     w = (
         Window.partitionBy(key)
-        .orderBy(F.col(ts_col).asc(), src_order)
+        .orderBy(F.col(ts_col).asc(), F.col("_src").desc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     carried = unioned.withColumn(
@@ -114,13 +111,11 @@ def sql_asof_join(
     key: str,
     ts_col: str,
     select_cols: str,
-    inclusive: bool = True,
 ) -> str:
     """DuckDB oracle twin using the native ASOF JOIN (independent plan)."""
-    op = ">=" if inclusive else ">"
     return f"""
         SELECT {select_cols}
         FROM ({left_sql}) l
         ASOF LEFT JOIN ({right_sql}) r
-        ON l.{key} = r.{key} AND l.{ts_col} {op} r.{ts_col}
+        ON l.{key} = r.{key} AND l.{ts_col} > r.{ts_col}
     """

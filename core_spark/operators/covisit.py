@@ -16,8 +16,8 @@ feeds both join branches, so it is eagerly pinned (CLAUDE.md rule).
 
 The skew story is load-bearing: a crowded bucket (train station at
 9am) contributes |B|² candidate pairs, and at web scale one such
-bucket dwarfs the rest of the join combined. The ``max_bucket_users``
-gate drops buckets with more than that many distinct entities BEFORE
+bucket dwarfs the rest of the join combined. The required
+``max_bucket_users`` gate drops buckets with more than that many distinct entities BEFORE
 pairing — the standard move in the co-location literature (Crandall
 et al. 2010 weight co-occurrences by inverse crowd size; a crowded
 place carries ~zero companionship evidence), so the cap is a
@@ -52,8 +52,8 @@ def co_visits(
     df: DataFrame,
     cell_size: float,
     bucket_seconds: int,
+    max_bucket_users: int,
     min_shared: int = 2,
-    max_bucket_users: int | None = None,
     entity_col: str = "user_id",
     ts_col: str = "ts",
     lat_col: str = "lat",
@@ -71,8 +71,8 @@ def co_visits(
     k = int(min_shared)
     if k < 1:
         raise ValueError(f"min_shared must be >= 1, got {min_shared}")
-    cap = None if max_bucket_users is None else int(max_bucket_users)
-    if cap is not None and cap < 2:
+    cap = int(max_bucket_users)
+    if cap < 2:
         raise ValueError(f"max_bucket_users must be >= 2, got {cap}")
 
     visits = (
@@ -94,12 +94,10 @@ def co_visits(
                " AND _bt IS NOT NULL")
         .distinct()
     )
-    if cap is not None:
-        kept = visits.groupBy("_ci", "_cj", "_bt").agg(
-            F.count(F.lit(1)).alias("_n")
-        ).where(F.col("_n") <= cap).drop("_n")
-        visits = visits.join(kept, ["_ci", "_cj", "_bt"])
-    visits = pin(visits)
+    kept = visits.groupBy("_ci", "_cj", "_bt").agg(
+        F.count(F.lit(1)).alias("_n")
+    ).where(F.col("_n") <= cap).drop("_n")
+    visits = pin(visits.join(kept, ["_ci", "_cj", "_bt"]))
     a = visits.selectExpr("_e AS a", "_ci", "_cj", "_bt")
     bb = visits.selectExpr("_e AS b", "_ci", "_cj", "_bt")
     return (
@@ -115,8 +113,8 @@ def sql_co_visits(
     points_sql: str,
     cell_size: float,
     bucket_seconds: int,
+    max_bucket_users: int,
     min_shared: int = 2,
-    max_bucket_users: int | None = None,
     entity_col: str = "user_id",
     ts_col: str = "ts",
     lat_col: str = "lat",
@@ -127,16 +125,7 @@ def sql_co_visits(
     g = float(cell_size)
     b = int(bucket_seconds)
     k = int(min_shared)
-    cap = None if max_bucket_users is None else int(max_bucket_users)
-    crowd = "" if cap is None else f"""
-        , crowd AS (
-          SELECT _ci, _cj, _bt FROM visits
-          GROUP BY _ci, _cj, _bt HAVING COUNT(*) > {cap}
-        )"""
-    kept_src = "visits" if cap is None else """
-        (SELECT v.* FROM visits v
-         WHERE NOT EXISTS (SELECT 1 FROM crowd c
-           WHERE c._ci = v._ci AND c._cj = v._cj AND c._bt = v._bt))"""
+    cap = int(max_bucket_users)
     return f"""
         WITH visits AS (
           SELECT DISTINCT {entity_col} AS _e,
@@ -148,12 +137,19 @@ def sql_co_visits(
           FROM ({points_sql}) src
           WHERE {entity_col} IS NOT NULL AND {ts_col} IS NOT NULL
             AND {lat_col} IS NOT NULL AND {lon_col} IS NOT NULL
-        ){crowd},
+        ),
+        crowd AS (
+          SELECT _ci, _cj, _bt FROM visits
+          GROUP BY _ci, _cj, _bt HAVING COUNT(*) > {cap}
+        ),
         sets AS (
           -- visits is already row-distinct; scalar-encode each visit
           -- (list_intersect over nested lists is unimplemented)
           SELECT _e, LIST(_ci || ':' || _cj || ':' || _bt) AS vset
-          FROM {kept_src} GROUP BY _e
+          FROM visits v
+          WHERE NOT EXISTS (SELECT 1 FROM crowd c
+            WHERE c._ci = v._ci AND c._cj = v._cj AND c._bt = v._bt)
+          GROUP BY _e
         )
         SELECT s1._e AS a, s2._e AS b,
                CAST(LEN(LIST_INTERSECT(s1.vset, s2.vset)) AS BIGINT)

@@ -27,9 +27,7 @@ shard-invariant by construction. Advancing the horizon T → T+h is
 decayed_scaled DIV 2 per key, exact while the scale headroom lasts.
 
 Scale shape: one codegen'd weight projection + ONE uniform-key
-hash-agg; the horizon T is a 1-row broadcast (max t) unless the
-caller pins it explicitly — pass ``horizon`` for reproducible
-incremental runs.
+hash-agg; the horizon T is the data's max t, a 1-row broadcast.
 
 Overflow envelope: x·2^S needs Σx per key < 2^(63-S); S=40 leaves
 8M mass per key per half-life window — raise/lower S accordingly.
@@ -50,14 +48,13 @@ _S = 40  # scale exponent: weight of "now" = 2^40
 def decayed_counts(
     series: DataFrame,
     halflife: int,
-    horizon: int | None = None,
     key_col: str = "k",
     t_col: str = "t",
     x_col: str = "x",
 ) -> DataFrame:
     """Rows (k, decayed_scaled, decayed, n): per-key exact power-of-
-    two decayed counts at time ``horizon`` (default: the data's max
-    t, attached as a 1-row broadcast). NULL t/x dropped on ingest."""
+    two decayed counts at the data's max t (attached as a 1-row
+    broadcast). NULL t/x dropped on ingest."""
     if halflife < 1:
         raise ValueError("halflife must be >= 1")
     v = series.where(
@@ -66,17 +63,13 @@ def decayed_counts(
         f"{key_col} AS k", f"CAST({t_col} AS BIGINT) AS t",
         f"CAST({x_col} AS BIGINT) AS x",
     )
-    if horizon is None:
-        # pinned: the max-t agg AND the weight join both consume the
-        # series — which may itself be a derived agg, not a raw scan
-        v = pin(v)
-        hz = v.agg(F.expr("CAST(MAX(t) AS BIGINT)").alias("hz"))
-        v = v.join(F.broadcast(hz))
-    else:
-        v = v.selectExpr("k", "t", "x", f"CAST({horizon} AS BIGINT) AS hz")
+    # pinned: the max-t agg AND the weight join both consume the
+    # series — which may itself be a derived agg, not a raw scan
+    v = pin(v)
+    hz = v.agg(F.expr("CAST(MAX(t) AS BIGINT)").alias("hz"))
     # weights via exact bit shifts — pow() sits outside the portable
     # op set; 1 << k is the same BIGINT on any engine
-    weighted = v.where("t <= hz").selectExpr(
+    weighted = v.join(F.broadcast(hz)).selectExpr(
         "k",
         f"x * shiftleft(CAST(1 AS BIGINT),"
         f" CAST({_S} - LEAST((hz - t) DIV {halflife}, {_S}) AS INT))"
@@ -100,17 +93,13 @@ def decayed_counts(
 def sql_decayed_counts(
     series_sql: str,
     halflife: int,
-    horizon: int | None = None,
     key_col: str = "k",
     t_col: str = "t",
     x_col: str = "x",
 ) -> str:
     """DuckDB twin: same staircase weights (// for DIV); the horizon
-    via a scalar subquery when not pinned."""
-    hz = (
-        f"CAST({horizon} AS BIGINT)" if horizon is not None
-        else "(SELECT CAST(MAX(t) AS BIGINT) FROM v)"
-    )
+    via a scalar subquery."""
+    hz = "(SELECT CAST(MAX(t) AS BIGINT) FROM v)"
     return f"""
         WITH v AS (
             SELECT {key_col} AS k, CAST({t_col} AS BIGINT) AS t,
@@ -123,7 +112,7 @@ def sql_decayed_counts(
                    x * (CAST(1 AS BIGINT) <<
                         CAST({_S} - LEAST((({hz}) - t)
                             // {halflife}, {_S}) AS INTEGER)) AS wx
-            FROM v WHERE t <= ({hz})
+            FROM v
         )
         SELECT k, CAST(SUM(wx) AS BIGINT) AS decayed_scaled,
                CAST(SUM(wx) AS DOUBLE) / {float(1 << _S)} AS decayed,

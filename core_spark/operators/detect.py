@@ -100,15 +100,15 @@ def _veto_cond(F, text_col: str, path_col: str, d: Definition):
     return cond
 
 
-def detect(df, registry: list[Definition], path_col: str = "url",
-           text_col: str = "text", lang_col_name: str | None = None):
+def detect(df, registry: list[Definition], lang_col_name: str,
+           path_col: str = "url", text_col: str = "text"):
     """Append (framework, detect_source, confidence) via the full cascade.
 
     Early-return is encoded by ONE when-chain whose arm order is: every
     strong-filename arm (priority order), then every content arm — first
-    true arm wins, as in detector.go:42-78. Negative patterns guard their definition's arms (D8). When
-    ``lang_col_name`` is given, definitions with a language list only
-    compete for matching rows (registry.go FindByLanguage — minitest's
+    true arm wins, as in detector.go:42-78. Negative patterns guard their definition's arms (D8).
+    Definitions with a language list only compete for rows whose
+    ``lang_col_name`` is in it (registry.go FindByLanguage — minitest's
     `def test_*` must never beat pytest's on a Python file).
     """
     from pyspark.sql import functions as F
@@ -117,7 +117,7 @@ def detect(df, registry: list[Definition], path_col: str = "url",
     arms: list[tuple] = []  # (cond, name, source, confidence)
 
     def lang_guard(d, cond):
-        if lang_col_name and d.languages:
+        if d.languages:
             return cond & F.col(lang_col_name).isin(*d.languages)
         return cond
 

@@ -26,8 +26,7 @@ the host's OWN queue — politeness serializes a host's fetches no matter
 how you compute the schedule, so a mega-host's deep partition is the
 inherent crawl-time lower bound surfacing at plan time, not an
 accident; the per-host cap operator (weburl.cap_per_host) upstream is
-the mitigation. Per-host delay (robots.txt Crawl-delay) plugs in as
-a ``delay_sql`` expression so the slot math stays JVM-side.
+the mitigation.
 
 No reference counterpart (specvital/core has no crawl subsystem).
 """
@@ -58,19 +57,15 @@ def schedule_frontier(
     host_col: str = "host",
     url_col: str = "url",
     priority_sql: str = "0",
-    delay_sql: str | None = None,
 ) -> DataFrame:
     """Add (worker, fetch_ix, fetch_slot) to every candidate URL.
 
     ``fetch_ix`` is the 0-based per-host fetch order (priority DESC,
     then portable md5(url), then url); ``fetch_slot`` = fetch_ix ×
     delay seconds — the earliest second the fetch may start.
-    ``delay_sql`` overrides the constant delay per row (e.g. a joined
-    robots Crawl-delay column); it must be per-HOST-constant.
     """
     if n_workers <= 0 or delay_s <= 0:
         raise ValueError("frontier: n_workers and delay_s must be positive")
-    delay = delay_sql if delay_sql is not None else str(delay_s)
     w = Window.partitionBy(host_col).orderBy(
         F.expr(f"({priority_sql})").desc(),
         F.expr(f"md5({url_col})").asc(),
@@ -82,7 +77,7 @@ def schedule_frontier(
         .withColumn("fetch_ix",
                     (F.row_number().over(w) - 1).cast("long"))
         .withColumn("fetch_slot",
-                    F.expr(f"CAST(fetch_ix * ({delay}) AS BIGINT)"))
+                    F.expr(f"CAST(fetch_ix * {delay_s} AS BIGINT)"))
     )
 
 

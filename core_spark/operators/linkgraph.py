@@ -169,6 +169,19 @@ def pagerank_weighted(
     hash-agg on dst, one left join back to the directory — re-pinned
     per round so plans stay flat.
     """
+    teleport = ((_DAMP_DEN - _DAMP_NUM) * r0) // _DAMP_DEN
+    return _damped_ranks(edges, iters, {}, f"CAST({r0} AS BIGINT)", str(teleport))
+
+
+def _damped_ranks(
+    edges: DataFrame, iters: int, node_cols: dict[str, str], start_sql: str, teleport_sql: str
+) -> DataFrame:
+    """(host, rank, *node_cols) after ``iters`` truncating-DIV rounds over
+    (src_host, dst_host, n_links): the rounds :func:`pagerank_weighted` and
+    :func:`pagerank_personalized` share. Every host of ``edges`` is a node;
+    ``node_cols`` (name -> SQL over ``host``) ride along, the start rank is
+    ``start_sql`` and each round adds ``teleport_sql`` (both SQL over the
+    node's columns)."""
     edges = pin(edges)
     deg = edges.groupBy("src_host").agg(F.sum("n_links").alias("out_total"))
     ed = pin(
@@ -176,13 +189,14 @@ def pagerank_weighted(
             "src_host", "dst_host", "n_links", "out_total"
         )
     )
+    carried = list(node_cols)
     nodes = pin(
         edges.select(F.col("src_host").alias("host"))
         .union(edges.select(F.col("dst_host").alias("host")))
         .distinct()
+        .selectExpr("host", *[f"{sql} AS {name}" for name, sql in node_cols.items()])
     )
-    teleport = ((_DAMP_DEN - _DAMP_NUM) * r0) // _DAMP_DEN
-    ranks = nodes.withColumn("rank", F.lit(r0).cast("long"))
+    ranks = nodes.selectExpr("host", *carried, f"{start_sql} AS rank")
     for _ in range(iters):
         contrib = (
             ed.join(ranks, ed.src_host == ranks.host)
@@ -196,13 +210,13 @@ def pagerank_weighted(
         ranks = (
             nodes.join(contrib, nodes.host == contrib.dst_host, "left")
             .selectExpr(
-                "host",
-                f"{teleport} + ({_DAMP_NUM} * coalesce(s, 0))"
+                "host", *carried,
+                f"{teleport_sql} + ({_DAMP_NUM} * coalesce(s, 0))"
                 f" DIV {_DAMP_DEN} AS rank",
             )
         )
         ranks = pin(ranks)
-    return ranks
+    return ranks.select("host", "rank", *carried)
 
 
 def sql_pagerank_weighted(
@@ -213,6 +227,14 @@ def sql_pagerank_weighted(
     ``edges_sql`` must yield (src_host, dst_host, n_links).
     """
     teleport = ((_DAMP_DEN - _DAMP_NUM) * r0) // _DAMP_DEN
+    return _sql_damped_ranks(edges_sql, iters, {}, str(r0), str(teleport))
+
+
+def _sql_damped_ranks(
+    edges_sql: str, iters: int, node_cols: dict[str, str], start_sql: str, teleport_sql: str
+) -> str:
+    """DuckDB twin of :func:`_damped_ranks` (unrolled CTE chain)."""
+    carried = "".join(f", {name}" for name in node_cols)
     rounds = []
     prev = "r0"
     for t in range(1, iters + 1):
@@ -224,14 +246,15 @@ def sql_pagerank_weighted(
               FROM ed e JOIN {prev} r ON r.host = e.src_host
               GROUP BY e.dst_host
             ), r{t} AS (
-              SELECT n.host,
-                     {teleport} + ({_DAMP_NUM} * COALESCE(c.s, 0))
+              SELECT host{carried},
+                     {teleport_sql} + ({_DAMP_NUM} * COALESCE(c.s, 0))
                        // {_DAMP_DEN} AS rank
               FROM nodes n LEFT JOIN c{t} c USING (host)
             )"""
         )
         prev = f"r{t}"
     rounds_sql = ",\n".join(rounds)
+    node_sql = "".join(f", {sql} AS {name}" for name, sql in node_cols.items())
     return f"""
         WITH edges AS ({edges_sql}),
         deg AS (
@@ -243,15 +266,17 @@ def sql_pagerank_weighted(
           FROM edges e JOIN deg d USING (src_host)
         ),
         nodes AS (
-          SELECT src_host AS host FROM edges
-          UNION
-          SELECT dst_host AS host FROM edges
+          SELECT host{node_sql} FROM (
+            SELECT src_host AS host FROM edges
+            UNION
+            SELECT dst_host AS host FROM edges
+          )
         ),
         r0 AS (
-          SELECT host, CAST({r0} AS BIGINT) AS rank FROM nodes
+          SELECT host{carried}, CAST({start_sql} AS BIGINT) AS rank FROM nodes
         ),
         {rounds_sql}
-        SELECT host, rank FROM {prev}
+        SELECT host, rank{carried} FROM {prev}
     """
 
 
@@ -488,48 +513,14 @@ def pagerank_personalized(
         raise ValueError("pagerank_personalized: seeds must be non-empty")
     if iters < 1:
         raise ValueError("pagerank_personalized: iters must be >= 1")
-    edges = pin(edges)
-    deg = edges.groupBy("src_host").agg(F.sum("n_links").alias("out_total"))
-    ed = pin(
-        edges.join(deg, "src_host").select(
-            "src_host", "dst_host", "n_links", "out_total"
-        )
-    )
-    seed_list = ", ".join(str(int(s)) for s in seeds)
-    nodes = pin(
-        edges.select(F.col("src_host").alias("host"))
-        .union(edges.select(F.col("dst_host").alias("host")))
-        .distinct()
-        .selectExpr(
-            "host",
-            f"CAST(host IN ({seed_list}) AS BIGINT) AS is_seed",
-        )
-    )
     teleport = ((_DAMP_DEN - _DAMP_NUM) * r0) // _DAMP_DEN
-    ranks = nodes.selectExpr("host", f"is_seed * {teleport} AS rank")
-    for _ in range(iters):
-        contrib = (
-            ed.join(ranks, ed.src_host == ranks.host)
-            .selectExpr(
-                "dst_host",
-                "(rank * n_links) DIV out_total AS c",
-            )
-            .groupBy("dst_host")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = (
-            nodes.join(contrib, nodes.host == contrib.dst_host, "left")
-            .selectExpr(
-                "host",
-                f"is_seed * {teleport}"
-                f" + ({_DAMP_NUM} * coalesce(s, 0))"
-                f" DIV {_DAMP_DEN} AS rank",
-            )
-        )
-        ranks = pin(ranks)
-    return ranks.join(nodes.select("host", "is_seed"), "host").select(
-        "host", "rank", "is_seed"
-    )
+    restart = f"is_seed * {teleport}"
+    return _damped_ranks(edges, iters, _seed_col(seeds), restart, restart)
+
+
+def _seed_col(seeds: list) -> dict[str, str]:
+    seed_list = ", ".join(str(int(s)) for s in seeds)
+    return {"is_seed": f"CAST(host IN ({seed_list}) AS BIGINT)"}
 
 
 def sql_pagerank_personalized(
@@ -546,52 +537,5 @@ def sql_pagerank_personalized(
     if iters < 1:
         raise ValueError("pagerank_personalized: iters must be >= 1")
     teleport = ((_DAMP_DEN - _DAMP_NUM) * r0) // _DAMP_DEN
-    seed_list = ", ".join(str(int(s)) for s in seeds)
-    rounds = []
-    prev = "p0"
-    for t in range(1, iters + 1):
-        rounds.append(
-            f"""pc{t} AS (
-              SELECT e.dst_host AS host,
-                     CAST(SUM((r.rank * e.n_links) // e.out_total)
-                          AS BIGINT) AS s
-              FROM ped e JOIN {prev} r ON r.host = e.src_host
-              GROUP BY e.dst_host
-            ), p{t} AS (
-              SELECT n.host,
-                     n.is_seed * {teleport}
-                       + ({_DAMP_NUM} * COALESCE(c.s, 0))
-                       // {_DAMP_DEN} AS rank,
-                     n.is_seed
-              FROM pnodes n LEFT JOIN pc{t} c USING (host)
-            )"""
-        )
-        prev = f"p{t}"
-    rounds_sql = ",\n".join(rounds)
-    return f"""
-        WITH pedges AS ({edges_sql}),
-        pdeg AS (
-          SELECT src_host, SUM(n_links) AS out_total
-          FROM pedges GROUP BY src_host
-        ),
-        ped AS (
-          SELECT e.src_host, e.dst_host, e.n_links, d.out_total
-          FROM pedges e JOIN pdeg d USING (src_host)
-        ),
-        pnodes AS (
-          SELECT host,
-                 CAST(host IN ({seed_list}) AS BIGINT) AS is_seed
-          FROM (
-            SELECT src_host AS host FROM pedges
-            UNION
-            SELECT dst_host AS host FROM pedges
-          )
-        ),
-        p0 AS (
-          SELECT host, CAST(is_seed * {teleport} AS BIGINT) AS rank,
-                 is_seed
-          FROM pnodes
-        ),
-        {rounds_sql}
-        SELECT host, rank, is_seed FROM {prev}
-    """
+    restart = f"is_seed * {teleport}"
+    return _sql_damped_ranks(edges_sql, iters, _seed_col(seeds), restart, restart)

@@ -134,13 +134,13 @@ def match_points(
     lons: np.ndarray,
     lats: np.ndarray,
     payload: PolygonPayload | list[tuple[int, list]],
-    fp: int | None = None,
+    fp: int,
 ) -> np.ndarray:
     """Pure kernel: point arrays -> admin_id per point (-1 = no match).
 
     ``payload`` is a ``polygon_payload`` or a list of
-    (admin_id, ring | [outer, hole...]); ``fp`` is its fingerprint (a list
-    without one is packed to compute it).
+    (admin_id, ring | [outer, hole...]); ``fp`` is its fingerprint, the
+    key of the executor's index cache.
     One vectorized pass over the candidate pairs, whatever the number of
     polygons they touch: each (point, polygon) pair from the tree expands to
     the polygon's rings, each (pair, ring) to the edges of the y-band that
@@ -149,9 +149,6 @@ def match_points(
     a deterministic tie-break (reference analog: deepest-config tie-break,
     pkg/parser/detection/detector.go:213-230).
     """
-    if fp is None:
-        payload = _pack(payload)
-        fp = _fingerprint(payload)
     tree, bands, ro, ids = _build(payload, fp)
     out = np.full(len(lons), -1, dtype=np.int64)
     lons = np.asarray(lons, np.float64)

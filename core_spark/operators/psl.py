@@ -27,8 +27,8 @@ re-inlined), so Catalyst keeps a single WholeStageCodegen span.
 Normalization (lowercase, trailing-dot strip) and hygiene (empty /
 leading-dot / empty-label hosts -> NULL) happen in the same projection.
 
-Both dialects emit the IDENTICAL SQL text (regex character classes
-``[.]`` avoid the one escaping difference), so the DuckDB oracle gates
+The DuckDB twin runs the IDENTICAL step SQL text (regex character
+classes ``[.]`` avoid the one escaping difference), so the oracle gates
 the expression itself. No reference counterpart (specvital/core scans
 file trees); rule-set shape follows the public publicsuffix.org format.
 """
@@ -150,14 +150,11 @@ def registrable_domain(df: DataFrame, host_col: str = "host") -> DataFrame:
     return df.drop(*_INTERNAL)
 
 
-def sql_registrable(table_sql: str, host_col: str = "host",
-                    dialect: str = "duckdb") -> str:
-    """Dialect SQL twin. The STEP expressions are byte-identical on both
-    engines; only the final column-pruning wrapper differs (DuckDB
-    ``* EXCLUDE``, Spark ``* EXCEPT``)."""
+def sql_registrable(table_sql: str, host_col: str = "host") -> str:
+    """DuckDB SQL twin: the operator's STEP expressions, byte-identical,
+    then ``* EXCLUDE`` prunes the internal columns."""
     inner = f"SELECT * FROM {table_sql}"
     for name, expr in _psl_steps(host_col):
         inner = f"SELECT *, {expr} AS {name} FROM ({inner})"
     drop = ", ".join(_INTERNAL)
-    kw = "EXCLUDE" if dialect == "duckdb" else "EXCEPT"
-    return f"SELECT * {kw} ({drop}) FROM ({inner})"
+    return f"SELECT * EXCLUDE ({drop}) FROM ({inner})"

@@ -39,12 +39,11 @@ def exact_group_quantiles(
     group_col: str,
     val_col: str,
     key: str = "doc_id",
-    ps: dict[str, tuple[int, int]] | None = None,
 ) -> DataFrame:
-    """(group, q, value): exact quantiles per group (module docstring)."""
+    """(group, q, value): the exact ``DEFAULT_PS`` quantiles per group
+    (module docstring)."""
     from pyspark.sql import Window
 
-    ps = DEFAULT_PS if ps is None else ps
     w = Window.partitionBy(group_col).orderBy(
         F.col(val_col).asc(), F.col(key).asc()
     )
@@ -58,7 +57,7 @@ def exact_group_quantiles(
                 F.lit(num).cast("long").alias("_num"),
                 F.lit(den).cast("long").alias("_den"),
             )
-            for label, (num, den) in sorted(ps.items())
+            for label, (num, den) in sorted(DEFAULT_PS.items())
         ]
     )
     targets = (
@@ -85,13 +84,11 @@ def sql_exact_group_quantiles(
     group_col: str,
     val_col: str,
     key: str = "doc_id",
-    ps: dict[str, tuple[int, int]] | None = None,
 ) -> str:
     """DuckDB twin (same integer-rank definition, window formulation)."""
-    ps = DEFAULT_PS if ps is None else ps
     ps_values = ", ".join(
         f"('{label}', {num}, {den})"
-        for label, (num, den) in sorted(ps.items())
+        for label, (num, den) in sorted(DEFAULT_PS.items())
     )
     return f"""
         WITH ranked AS (

@@ -16,11 +16,12 @@ from __future__ import annotations
 from core_spark.functions import hexgrid as hx
 from core_spark.plans.materialize import pin
 
-DEFAULT_RESOLUTIONS = (5, 6, 7, 8, 9)
+#: the flagship's hex resolutions (the fused stage's h3_r5..h3_r9 columns)
+RESOLUTIONS = (5, 6, 7, 8, 9)
 
 
 def assign_tiles(df, lat_col: str = "lat", lon_col: str = "lon",
-                 resolutions=DEFAULT_RESOLUTIONS, s2_level: int | None = None):
+                 resolutions=RESOLUTIONS, s2_level: int | None = None):
     """Append h3_r{res} cell-id columns (and optionally s2_cell).
 
     NULL-safe: invalid/missing coordinates produce NULL cells, which

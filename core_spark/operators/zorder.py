@@ -107,17 +107,15 @@ def sql_zorder_bucket_stats(
     lat_col: str = "lat",
     lon_col: str = "lon",
     bucket_shift_pow2: int = 1 << 26,
-    dialect: str = "duckdb",
 ) -> str:
-    """Per-bucket footprint stats: the data-skipping evidence query.
+    """DuckDB twin of the per-bucket footprint stats: the data-skipping
+    evidence query.
 
     Buckets are zkey-prefix ranges (the file boundaries a ZORDER write
     would produce); min/max lat/lon per bucket are exactly the column
-    stats a scan would prune on. Identical emission both dialects bar
-    the integer-division token.
+    stats a scan would prune on. The key steps are ``with_zorder_key``'s
+    text.
     """
-    assert dialect in ("spark", "duckdb")
-    div = "DIV" if dialect == "spark" else "//"
     steps = zorder_steps(lat_col, lon_col)
     cols = ", ".join(f"{expr} AS {name}" for name, expr in steps)
     return f"""
@@ -125,7 +123,7 @@ def sql_zorder_bucket_stats(
           SELECT {lat_col}, {lon_col}, {cols}
           FROM ({inner_sql})
         )
-        SELECT (zkey {div} {bucket_shift_pow2}) AS bucket,
+        SELECT (zkey // {bucket_shift_pow2}) AS bucket,
                COUNT(*) AS n_docs,
                MIN({lat_col}) AS min_lat, MAX({lat_col}) AS max_lat,
                MIN({lon_col}) AS min_lon, MAX({lon_col}) AS max_lon

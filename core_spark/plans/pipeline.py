@@ -72,10 +72,9 @@ def run_pipeline(
     from core_spark.data.polygons import admin_polygons
     from core_spark.data.synth import webpages_spark
     from core_spark.functions.extract import with_extracted_text
-    from core_spark.functions.fused import RESOLUTIONS
     from core_spark.functions.geoparse import with_mentions
     from core_spark.operators.pip import pip_join
-    from core_spark.operators.tiles import assign_tiles
+    from core_spark.operators.tiles import RESOLUTIONS, assign_tiles
     from core_spark.operators.zonal import zonal_rollup
 
     man = StageManifest(workdir)

@@ -28,6 +28,7 @@ No reference counterpart (specvital/core has no table-format layer).
 
 from __future__ import annotations
 
+import hashlib
 import io
 import json
 import struct
@@ -372,8 +373,7 @@ def read_avro_file(data: bytes):
     return schema_json, records
 
 
-def write_avro_file(schema, records, codec: str = "deflate",
-                    sync: bytes | None = None) -> bytes:
+def write_avro_file(schema, records, codec: str = "deflate") -> bytes:
     """Encode records as an Avro object container file (one block)."""
     if codec not in ("null", "deflate"):
         raise ValueError(f"avro: unsupported codec {codec!r}")
@@ -386,10 +386,8 @@ def write_avro_file(schema, records, codec: str = "deflate",
     if codec == "deflate":
         comp = zlib.compressobj(9, zlib.DEFLATED, -15)
         body = comp.compress(body) + comp.flush()
-    if sync is None:
-        # deterministic marker derived from content (fixture reproducibility)
-        import hashlib
-        sync = hashlib.md5(schema_json.encode() + body).digest()
+    # deterministic marker derived from content (fixture reproducibility)
+    sync = hashlib.md5(schema_json.encode() + body).digest()
     out = bytearray(MAGIC)
     meta_schema, meta_names = parse_schema({"type": "map", "values": "bytes"})
     _encode(meta_schema, meta_names,

@@ -299,15 +299,13 @@ def read_delta(spark, table_path: str, version: int | None = None,
 def _scan_snapshot(spark, table_path: str, snap: dict,
                    partition_filter: dict[str, str] | None = None):
     """Scan an already-replayed snapshot (shared with the fixture
-    writer's internal reads, which avoid a second log replay)."""
+    writer's internal reads, which avoid a second log replay). A snapshot
+    with no live files is the same scan over no paths."""
     from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(json.loads(snap["metaData"]["schemaString"]))
-    adds = plan_delta_files(table_path, snap, partition_filter)
-    if not adds:
-        return spark.createDataFrame([], schema)
     paths = [os.path.join(table_path, _decode_path(a["path"]))
-             for a in adds]
+             for a in plan_delta_files(table_path, snap, partition_filter)]
     reader = spark.read.schema(schema)
     if snap["metaData"].get("partitionColumns"):
         reader = reader.option("basePath", table_path)

@@ -16,7 +16,7 @@ import pytest
 
 from core_spark.functions import hexgrid as hx
 from core_spark.functions import s2
-from core_spark.operators.tiles import DEFAULT_RESOLUTIONS, assign_tiles
+from core_spark.operators.tiles import RESOLUTIONS, assign_tiles
 
 pytestmark = pytest.mark.spark
 
@@ -39,7 +39,7 @@ def adversarial_points(seed: int = 5) -> tuple[list, list]:
     ]
     lat = [p[0] for p in special]
     lon = [p[1] for p in special]
-    for res in DEFAULT_RESOLUTIONS:
+    for res in RESOLUTIONS:
         seeds = hx.latlon_to_cell(rng.uniform(-85, 85, 400), rng.uniform(-180, 180, 400), res)
         for cell in np.unique(seeds)[:300]:
             clat, clon = hx.cell_to_center(np.asarray([cell]))
@@ -66,10 +66,10 @@ def test_assign_tiles_matches_numpy_on_adversarial_points(spark):
     lat, lon = adversarial_points()
     df = _frame(spark, lat, lon)
     out = assign_tiles(df)
-    assert out.columns == ["i", "lat", "lon"] + [f"h3_r{r}" for r in DEFAULT_RESOLUTIONS]
+    assert out.columns == ["i", "lat", "lon"] + [f"h3_r{r}" for r in RESOLUTIONS]
     rows = sorted(out.collect())
     assert len(rows) == len(lat)
-    for res in DEFAULT_RESOLUTIONS:
+    for res in RESOLUTIONS:
         got = [r[f"h3_r{res}"] for r in rows]
         want = _expected(hx.latlon_to_cell, lat, lon, res)
         bad = [i for i, (g, w) in enumerate(zip(got, want)) if g != w]
@@ -121,7 +121,7 @@ def points(spark):
         {"lat": rng.uniform(-90, 90, 100), "lon": rng.uniform(-180, 180, 100)}))
 
 
-@pytest.mark.parametrize("resolutions", [DEFAULT_RESOLUTIONS, (5,)], ids=["r5-r9", "r5"])
+@pytest.mark.parametrize("resolutions", [RESOLUTIONS, (5,)], ids=["r5-r9", "r5"])
 def test_assign_tiles_methods_fit_the_jit_limit(spark, points, resolutions):
     sizes = max_method_bytes(assign_tiles(points, resolutions=resolutions))
     assert sizes and max(sizes) <= JIT_LIMIT, sizes

@@ -29,12 +29,6 @@ def test_staircase_weights_exact(spark):
     assert r.decayed == 3.25 and r.n == 5
 
 
-def test_explicit_horizon_and_future_rows_excluded(spark):
-    data = [("a", 10, 8), ("a", 11, 100)]  # t=11 past the horizon
-    r = _got(spark, data, halflife=1, horizon=10)["a"]
-    assert r.decayed_scaled == 8 << _S and r.n == 1
-
-
 def test_floor_weight_past_s_halflives(spark):
     # age far beyond S half-lives keeps weight 1 (floor, not cliff)
     r = _got(spark, [("a", 0, 7), ("a", 1000, 1)], halflife=1)["a"]
@@ -66,19 +60,17 @@ def test_null_hygiene_and_validation(spark):
 def test_duckdb_twin_matches(spark):
     data = [("k%d" % (i % 3), i % 11, (i * 7) % 4 + 1)
             for i in range(50)]
-    for hz in (None, 8):
-        got = {
-            r.k: (r.decayed_scaled, r.decayed, r.n)
-            for r in _got(spark, data, halflife=2, horizon=hz).values()
-        }
-        con = duckdb.connect()
-        con.execute("CREATE TABLE s (k VARCHAR, t BIGINT, x BIGINT)")
-        con.executemany("INSERT INTO s VALUES (?, ?, ?)", data)
-        want = {
-            k: (ds, d, n)
-            for k, ds, d, n in con.sql(
-                sql_decayed_counts("SELECT * FROM s", halflife=2,
-                                   horizon=hz)
-            ).fetchall()
-        }
-        assert got == want
+    got = {
+        r.k: (r.decayed_scaled, r.decayed, r.n)
+        for r in _got(spark, data, halflife=2).values()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE s (k VARCHAR, t BIGINT, x BIGINT)")
+    con.executemany("INSERT INTO s VALUES (?, ?, ?)", data)
+    want = {
+        k: (ds, d, n)
+        for k, ds, d, n in con.sql(
+            sql_decayed_counts("SELECT * FROM s", halflife=2)
+        ).fetchall()
+    }
+    assert got == want

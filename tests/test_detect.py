@@ -69,7 +69,8 @@ class TestCascade:
                 ("e.txt", "nothing here"),
             ],
         )
-        out = detect(df, REGISTRY, path_col="url").orderBy("url").collect()
+        df = df.withColumn("lang", lang_col("url"))
+        out = detect(df, REGISTRY, "lang", path_col="url").orderBy("url").collect()
         by = {r.url: r for r in out}
         assert by["a.test.js"].framework == "vitest"
         assert by["a.test.js"].detect_source == "content-pattern"

@@ -23,7 +23,6 @@ def test_nunit_basic():
         "    [Test]\n    public void Adds() { Assert.AreEqual(2, 1+1); }\n"
         "    [Test]\n    public void Subtracts() {}\n"
         "    public void Helper() {}\n}\n",
-        dialect="nunit",
     )
     assert [s["name"] for s in suites(rows)] == ["CalculatorTests"]
     assert [t["name"] for t in _tests(rows, ["CalculatorTests"])] == [
@@ -36,7 +35,6 @@ def test_nunit_testcase_counted_individually():
         "public class T {\n"
         "    [TestCase(1, 2)]\n    [TestCase(3, 4)]\n"
         "    public void Sum(int a, int b) {}\n}\n",
-        dialect="nunit",
     )
     # one test PER [TestCase] attribute (CHANGELOG 'dotnet' rule)
     assert [t["name"] for t in _tests(rows, ["T"])] == ["Sum", "Sum"]
@@ -47,7 +45,6 @@ def test_nunit_testcase_testname_rename():
         "public class T {\n"
         "    [TestCase(1, TestName = \"custom case\")]\n"
         "    public void Sum(int a) {}\n}\n",
-        dialect="nunit",
     )
     assert [t["name"] for t in _tests(rows, ["T"])] == ["custom case"]
 
@@ -58,7 +55,6 @@ def test_nunit_description_and_ignore():
         "    [Test(Description = \"pretty\")]\n    public void Ugly() {}\n"
         "    [Test]\n    [Ignore(\"slow\")]\n    public void Skipped() {}\n"
         "    [TestCaseSource(nameof(Cases))]\n    public void FromSource() {}\n}\n",
-        dialect="nunit",
     )
     got = _tests(rows, ["T"])
     assert [(t["name"], t["status"], t["modifier"]) for t in got] == [
@@ -72,7 +68,6 @@ def test_nunit_class_ignore_inherited():
     rows = parse_csharp_tests(
         "[Ignore(\"all\")]\npublic class T {\n"
         "    [Test]\n    public void A() {}\n}\n",
-        dialect="nunit",
     )
     assert suites(rows)[0]["status"] == "skipped"
     assert _tests(rows, ["T"])[0]["status"] == "skipped"
@@ -83,7 +78,6 @@ def test_nunit_nested_classes():
         "public class Outer {\n"
         "    [Test]\n    public void A() {}\n"
         "    public class Inner {\n        [Test]\n        public void B() {}\n    }\n}\n",
-        dialect="nunit",
     )
     assert [t["name"] for t in _tests(rows, ["Outer"])] == ["A"]
     assert [s["name"] for s in suites(rows, ["Outer"])] == ["Inner"]
@@ -102,7 +96,6 @@ def test_xunit_fact_theory():
         "    [Fact]\n    public void Works() {}\n"
         "    [Theory]\n    [InlineData(1)]\n    [InlineData(2)]\n"
         "    public void Param(int x) {}\n}\n",
-        dialect="xunit",
     )
     # Fact single + one per InlineData
     assert [t["name"] for t in _tests(rows, ["T"])] == ["Works", "Param", "Param"]
@@ -115,7 +108,6 @@ def test_xunit_skip_and_displayname():
         "    public void A() {}\n"
         "    [Theory(Skip = \"later\")]\n    [InlineData(1)]\n"
         "    public void B(int x) {}\n}\n",
-        dialect="xunit",
     )
     got = _tests(rows, ["T"])
     assert [(t["name"], t["status"], t["modifier"]) for t in got] == [
@@ -126,10 +118,9 @@ def test_xunit_skip_and_displayname():
 
 def test_xunit_custom_fact_suffix():
     rows = parse_csharp_tests(
-        "public class T {\n"
+        "using Xunit;\n\npublic class T {\n"
         "    [UIFact]\n    public void Custom() {}\n"
         "    [UITheory]\n    public void CustomTheory() {}\n}\n",
-        dialect="xunit",
     )
     assert [t["name"] for t in _tests(rows, ["T"])] == ["Custom", "CustomTheory"]
 
@@ -139,7 +130,6 @@ def test_xunit_theory_memberdata_single():
         "public class T {\n"
         "    [Theory]\n    [MemberData(nameof(Data))]\n"
         "    public void FromMember(int x) {}\n}\n",
-        dialect="xunit",
     )
     assert [t["name"] for t in _tests(rows, ["T"])] == ["FromMember"]
 
@@ -154,7 +144,6 @@ def test_mstest_basic():
         "    [DataTestMethod]\n    [DataRow(1)]\n    public void B(int x) {}\n"
         "    [TestMethod(DisplayName = \"shown\")]\n    public void C() {}\n"
         "    [TestMethod]\n    [Ignore]\n    public void D() {}\n}\n",
-        dialect="mstest",
     )
     got = _tests(rows, ["T"])
     assert [(t["name"], t["status"]) for t in got] == [
@@ -177,7 +166,6 @@ def test_expression_bodied_members_skipped_over():
         "    public int X => 3;\n"
         "    private int Helper() => 4;\n"
         "    [Test]\n    public void Real() {}\n}\n",
-        dialect="nunit",
     )
     assert [t["name"] for t in _tests(rows, ["T"])] == ["Real"]
 
@@ -194,7 +182,6 @@ def test_preprocessor_wrapping_nested_class():
         "#endif\n\n"
         "    public class Generic\n    {\n"
         "        [Fact]\n        public void Test3() { }\n    }\n}\n",
-        dialect="xunit",
     )
     assert [s["name"] for s in suites(rows)] == ["Specs"]
     assert [s["name"] for s in suites(rows, ["Specs"])] == ["NonGeneric", "Generic"]
@@ -211,7 +198,6 @@ def test_preprocessor_wrapping_methods():
         "    [Fact]\n    public void Net6Test2() { }\n"
         "#endif\n\n"
         "    [Fact]\n    public void CommonTest2() { }\n}\n",
-        dialect="xunit",
     )
     assert [t["name"] for t in _tests(rows, ["Specs"])] == [
         "CommonTest1", "Net6Test1", "Net6Test2", "CommonTest2",
@@ -226,7 +212,6 @@ def test_preprocessor_if_else_both_counted():
         "#else\n"
         "    [Fact]\n    public void CoreOnlyTest() { }\n"
         "#endif\n}\n",
-        dialect="xunit",
     )
     assert [t["name"] for t in _tests(rows, ["ConditionalTests"])] == [
         "FrameworkOnlyTest", "CoreOnlyTest",

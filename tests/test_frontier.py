@@ -6,7 +6,6 @@ import hashlib
 import duckdb
 import pytest
 from hypothesis import given, settings, strategies as st
-from pyspark.sql import functions as F
 
 from core_spark.operators.frontier import (
     schedule_frontier, sql_schedule_frontier,
@@ -68,20 +67,6 @@ class TestInvariants:
                                               DELAY,
                                               priority_sql="prio").collect()}
             assert got == want
-
-    def test_per_host_delay_override(self, spark):
-        df = spark.createDataFrame(
-            _ROWS, "doc_id long, host string, url string, prio long") \
-            .withColumn("crawl_delay",
-                        F.when(F.col("host") == "h0.example", 30)
-                        .otherwise(2))
-        rows = schedule_frontier(df, N_WORKERS, DELAY,
-                                 priority_sql="prio",
-                                 delay_sql="crawl_delay").collect()
-        h0 = sorted(r.fetch_slot for r in rows if r.host == "h0.example")
-        h1 = sorted(r.fetch_slot for r in rows if r.host == "h1.example")
-        assert h0 == [i * 30 for i in range(20)]
-        assert h1 == [i * 2 for i in range(5)]
 
 
 class TestParityAndStats:

@@ -171,8 +171,9 @@ def test_parser_never_raises_fuzz():
 def test_feeds_pip_payload(spark):
     """Composition: parsed polygon rows ARE the PIP kernel's payload."""
     import numpy as np
+    import pandas as pd
 
-    from core_spark.operators.pip import match_points
+    from core_spark.operators.pip import match_points, polygon_payload
 
     df = spark.createDataFrame([("coll", COLLECTION)], ["src", "geojson"])
     polys = [
@@ -189,6 +190,6 @@ def test_feeds_pip_payload(spark):
     # 8 and 99 -> lowest-id keeps 8; (5.5, 5.5) only in 99's second part.
     got = match_points(
         np.array([0.5, 0.1, 5.5, 9.0]), np.array([0.5, 0.1, 5.5, 9.0]),
-        payload,
+        *polygon_payload(pd.DataFrame(payload, columns=["admin_id", "rings"])),
     )
     assert got.tolist() == [99, 8, 99, -1]

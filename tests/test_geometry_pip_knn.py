@@ -237,6 +237,12 @@ def _grid_polygons_and_points():
     return squares + [(1300, [outer, hole]), (7, [west]), (7, [east])], pts
 
 
+def _match(lons, lats, payload):
+    """``match_points`` over a list-form polygon table, packed and
+    fingerprinted by ``polygon_payload`` as ``pip_join`` does."""
+    return match_points(lons, lats, *polygon_payload(TestPackedPayload._table(payload)))
+
+
 class TestMatchPoints:
     def test_centers_match_own_polygon(self):
         polys = admin_polygons(96)
@@ -244,13 +250,13 @@ class TestMatchPoints:
         for r in polys.itertuples():
             ring = np.asarray(r.ring)
             cx, cy = ring[:, 0].mean(), ring[:, 1].mean()
-            got = match_points(np.array([cx]), np.array([cy]), payload)
+            got = _match(np.array([cx]), np.array([cy]), payload)
             if len(r.rings) > 1 and _brute_inside(cx, cy, r.rings[1:]) :
                 assert got[0] == -1  # centroid sits in the hole
             else:
                 assert got[0] == r.admin_id
         # far-ocean point matches nothing
-        assert match_points(np.array([0.0]), np.array([-89.0]), payload)[0] == -1
+        assert _match(np.array([0.0]), np.array([-89.0]), payload)[0] == -1
 
     def test_holes_excluded(self):
         """Every 7th polygon carries a hole; points in the hole are outside,
@@ -263,11 +269,11 @@ class TestMatchPoints:
             outer = np.asarray(r.rings[0])
             hole = np.asarray(r.rings[1])
             hc = hole.mean(axis=0)  # deep inside the hole
-            got = match_points(np.array([hc[0]]), np.array([hc[1]]), payload)
+            got = _match(np.array([hc[0]]), np.array([hc[1]]), payload)
             assert got[0] == -1
             # a point midway between hole edge and outer edge (annulus)
             mid = (hole[0] + outer[0]) / 2.0
-            got2 = match_points(np.array([mid[0]]), np.array([mid[1]]), payload)
+            got2 = _match(np.array([mid[0]]), np.array([mid[1]]), payload)
             assert got2[0] == r.admin_id
 
     def test_antimeridian_split_fragments_share_id(self):
@@ -276,7 +282,7 @@ class TestMatchPoints:
         west = [(-180.0, 0.0), (-178.0, 0.0), (-178.0, 5.0), (-180.0, 5.0)]
         east = [(178.0, 0.0), (180.0, 0.0), (180.0, 5.0), (178.0, 5.0)]
         payload = [(7, [west]), (7, [east])]
-        got = match_points(
+        got = _match(
             np.array([-179.0, 179.0, 0.0]), np.array([2.0, 2.0, 2.0]), payload
         )
         assert got.tolist() == [7, 7, -1]
@@ -286,7 +292,7 @@ class TestMatchPoints:
         boxes skip its NaN envelope, so every other polygon still matches."""
         nan_square = [(np.nan, 0.0), (3.0, 0.0), (3.0, 1.0), (2.0, 1.0)]
         unit = [(0.0, 0.0), (1.0, 0.0), (1.0, 1.0), (0.0, 1.0)]
-        got = match_points(np.array([0.5, 2.5]), np.array([0.5, 0.5]),
+        got = _match(np.array([0.5, 2.5]), np.array([0.5, 0.5]),
                            [(1, [unit]), (2, [nan_square])])
         assert got.tolist() == [1, -1]
         # a multi-level tree: 300 disjoint squares, with and without the NaN one
@@ -294,9 +300,9 @@ class TestMatchPoints:
                    for i, (x, y) in enumerate((x, y) for x in range(20) for y in range(15))]
         rng = np.random.default_rng(5)
         lons, lats = rng.uniform(-1, 21, 20_000), rng.uniform(-1, 16, 20_000)
-        want = match_points(lons, lats, squares)
+        want = _match(lons, lats, squares)
         assert (want != -1).sum() > 10_000
-        got = match_points(lons, lats, squares[:150] + [(999, [nan_square])] + squares[150:])
+        got = _match(lons, lats, squares[:150] + [(999, [nan_square])] + squares[150:])
         assert got.tolist() == want.tolist()
 
     def test_matches_bruteforce_on_corpus(self):
@@ -306,7 +312,7 @@ class TestMatchPoints:
         pts = pages.dropna(subset=["true_lat"])
         lons = pts["true_lon"].to_numpy()
         lats = pts["true_lat"].to_numpy()
-        got = match_points(lons, lats, payload)
+        got = _match(lons, lats, payload)
         for i in range(len(lons)):
             want = -1
             for r in polys.itertuples():
@@ -319,7 +325,7 @@ class TestMatchPoints:
         payload, pts = _grid_polygons_and_points()
         assert len(payload) > 512
         lons, lats = pts[:, 0], pts[:, 1]
-        got = match_points(lons, lats, payload)
+        got = _match(lons, lats, payload)
         for i in range(len(pts)):
             owners = [aid for aid, rings in payload
                       if _brute_inside(lons[i], lats[i], rings)]
@@ -476,7 +482,7 @@ class TestBatchSizeInvariance:
         monkeypatch.setattr(geometry, "points_in_ring", boom)
         monkeypatch.setattr(geometry, "point_in_ring", boom)
         monkeypatch.setattr(pip, "points_in_ring", boom, raising=False)
-        got = match_points(pts[:, 0], pts[:, 1], payload)
+        got = _match(pts[:, 0], pts[:, 1], payload)
         assert got.tolist() == want.tolist()
 
 
@@ -677,7 +683,7 @@ class TestPipFuzz:
         want = _owners_by_polygon(lons, lats, finite)
         assert got.tolist() == want.tolist()
         if len(finite) < len(table):
-            assert match_points(lons, lats, finite).tolist() == got.tolist()
+            assert _match(lons, lats, finite).tolist() == got.tolist()
 
 
 class TestHaversine:
@@ -715,7 +721,7 @@ class TestSparkStages:
             .set_index("doc_id")["admin_id"]
             .sort_index()
         )
-        want = match_points(
+        want = _match(
             pts["lon"].to_numpy(), pts["lat"].to_numpy(), payload
         )
         want_s = pd.Series(

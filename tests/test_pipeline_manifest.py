@@ -175,6 +175,21 @@ class TestExternalInput:
             assert df.count() == rows and df.schema.simpleString() == docs.schema.simpleString()
             assert _input_fingerprint(df) == _input_fingerprint(read_iceberg(spark, root))
 
+    def test_empty_delta_snapshot_keeps_one_fingerprint(self, spark, tmp_path):
+        """A Delta table with only its CREATE commit is a scan over no files
+        with the table schema, so two reads of it get one fingerprint."""
+        from core_spark.data.synth import webpages_spark
+        from core_spark.plans.pipeline import _input_fingerprint
+        from core_spark.sources.deltalake import DeltaFixtureWriter, read_delta
+
+        schema = webpages_spark(spark, 10, 1).select(*CORPUS_COLS).schema
+        for name, parts in (("flat", ()), ("by_lang", ["lang"])):
+            root = str(tmp_path / name)
+            DeltaFixtureWriter(root, schema, partition_cols=parts)
+            df = read_delta(spark, root)
+            assert df.count() == 0 and df.schema.simpleString() == schema.simpleString()
+            assert _input_fingerprint(df) == _input_fingerprint(read_delta(spark, root))
+
     def test_script_reads_an_iceberg_table_root(self, spark, tmp_path):
         """``scripts/run_pipeline.py --input-table`` on an Iceberg table root
         completes, and a new snapshot changes the ingest fingerprint, so the

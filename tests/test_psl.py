@@ -106,13 +106,16 @@ def test_python_model_on_vectors():
         assert _py_psl(host) == (ps, reg), host
 
 
-def test_duckdb_emission_on_vectors():
+def _duckdb_rows(hosts):
     con = duckdb.connect()
-    hosts = [v[0] for v in VECTORS]
     con.execute(
         "CREATE TABLE t AS SELECT * FROM (VALUES "
         + ", ".join("(?)" for _ in hosts) + ") v(host)", hosts)
-    got = con.execute(psl.sql_registrable("t", "host")).fetchall()
+    return con.execute(psl.sql_registrable("t", "host")).fetchall()
+
+
+def test_duckdb_emission_on_vectors():
+    got = _duckdb_rows([v[0] for v in VECTORS])
     assert got == [(h, p, r) for h, p, r in VECTORS]
 
 
@@ -124,12 +127,8 @@ def test_spark_matches_duckdb_and_model(spark):
            for r in psl.registrable_domain(df, "host").collect()}
     for host, ps, reg in VECTORS:
         assert got[host] == (ps, reg), host
-    # the Spark-dialect SQL twin agrees with the DataFrame operator
-    df.createOrReplaceTempView("psl_hosts_v")
-    twin = {r.host: (r.public_suffix, r.reg_domain)
-            for r in spark.sql(
-                psl.sql_registrable("psl_hosts_v", "host", "spark")
-            ).collect()}
+    # the DuckDB twin agrees with the DataFrame operator
+    twin = {host: (ps, reg) for host, ps, reg in _duckdb_rows(hosts)}
     assert twin == got
 
 

@@ -76,29 +76,23 @@ SNAPS = [
 ]
 
 
-def _asof_model(inclusive):
+def _asof_model():
     out = {}
     for eid, k, ts in EVENTS:
-        cand = [
-            (sts, sid) for sk, sts, sid in SNAPS
-            if sk == k and (sts <= ts if inclusive else sts < ts)
-        ]
+        cand = [(sts, sid) for sk, sts, sid in SNAPS if sk == k and sts < ts]
         out[eid] = max(cand)[1] if cand else None
     return out
 
 
 @pytest.mark.spark
-@pytest.mark.parametrize("inclusive", [True, False])
-def test_asof_vs_model(spark, inclusive):
+def test_asof_vs_model(spark):
     left = spark.createDataFrame(EVENTS, "event_id long, k string, ts long")
     right = spark.createDataFrame(SNAPS, "k string, ts long, snap_id long")
     got = {
         r["event_id"]: r["asof_snap_id"]
-        for r in asof_join(
-            left, right, "k", "ts", ["snap_id"], inclusive=inclusive
-        ).collect()
+        for r in asof_join(left, right, "k", "ts", ["snap_id"]).collect()
     }
-    assert got == _asof_model(inclusive)
+    assert got == _asof_model()
 
 
 @pytest.mark.spark

@@ -21,12 +21,18 @@ module the caller need not import, so here any live code counts, in any
 file. A name counts where it is used, not where a ``def`` or ``class``
 statement binds it.
 
-The flag rule does the same for modes inside live code: every bool-default
-parameter of a function in a live def (the def itself, a class's methods,
-nested defs) must be passed by a call in a root or a live def, by keyword,
-by position or through ``**kw``. A flag that only tests set fails the gate:
-delete it with its branch, or add it to ``UNSET_FLAGS`` with the reason it
-stays.
+The mode rule does the same for the branches inside live code. A mode
+parameter is a defaulted parameter of a function in a live def (the def
+itself, a class's methods, nested defs) whose default is a bool, or is None
+or a string and whose name the test of an ``if``, ``elif``, ``while`` or
+conditional expression in that function reads (an ``if`` that only raises,
+with no ``else``, is a guard and does not count). Across every call in a
+root or a live def that may reach it (the same scope rule as for defs), a
+mode must take at least two values: an omitted argument gives the default,
+a literal or an ALL_CAPS name gives itself, and any other argument (a
+variable, ``*args``, ``**kw``) varies and passes. A mode that roots give
+one value runs its other branches only in tests: delete them, or add it to
+``ONE_VALUE_MODES`` with the reason they stay.
 """
 
 from __future__ import annotations
@@ -83,10 +89,12 @@ TEST_ONLY: dict[str, str] = {
         "builds the cleaned-log state the reader's checkpoint-only replay is tested on",
 }
 
-#: Bool-default parameters no root passes, kept on purpose:
-#: "module.def.param" -> why the flag stays.
-UNSET_FLAGS = MappingProxyType({
+#: Mode parameters that roots give one value, kept on purpose:
+#: "module.def.param" -> why the other values stay.
+ONE_VALUE_MODES = MappingProxyType({
     "functions.jpeg.encode_jpeg.subsample": "writes the decoder's 4:2:0 test fixtures",
+    "sources.avrolite.write_avro_file.codec":
+        "writes the null-codec files the reader must accept from other writers",
 })
 
 
@@ -243,11 +251,34 @@ def unreached() -> set[str]:
     return defs - live | unused
 
 
-def _flags(node: ast.AST, key: str) -> list[tuple[str, str, str, int | None]]:
-    """(key, callee name, parameter, positional index) of each bool-default
-    parameter of the functions in top-level def ``node``. The callee of
-    ``__init__`` is its class; a method's ``self`` takes no index; a
-    keyword-only parameter has index None."""
+def _tested(fn: ast.AST) -> set[str]:
+    """Names read by the tests of the ``if``, ``elif``, ``while`` and
+    conditional expressions in ``fn``, except the test of an ``if`` whose
+    body only raises and that has no ``else`` (a guard)."""
+    tests = [n.test for n in ast.walk(fn)
+             if isinstance(n, (ast.While, ast.IfExp)) or isinstance(n, ast.If)
+             and (n.orelse or not all(isinstance(s, ast.Raise) for s in n.body))]
+    return {n.id for t in tests for n in ast.walk(t) if isinstance(n, ast.Name)}
+
+
+def _value(node: ast.expr) -> str | None:
+    """The value an argument gives a mode: a literal or an ALL_CAPS name
+    stands for itself; anything else varies (None)."""
+    if isinstance(node, ast.Name):
+        return node.id if node.id.isupper() else None
+    try:
+        return repr(ast.literal_eval(node))
+    except (ValueError, TypeError):
+        return None
+
+
+def _modes(node: ast.AST, key: str) -> list[tuple[str, str, str, int | None, str]]:
+    """(key, callee name, parameter, positional index, default) of each mode
+    parameter of the functions in top-level def ``node``: a parameter whose
+    default is a bool, or is None or a string and which the test of a branch
+    in its function reads. The callee of ``__init__`` is its class; a
+    method's ``self`` takes no index; a keyword-only parameter has index
+    None."""
     methods = {id(f): node.name for f in (node.body if isinstance(node, ast.ClassDef) else ())
                if isinstance(f, _FUNCS)
                and not any(getattr(d, "id", None) == "staticmethod" for d in f.decorator_list)}
@@ -260,25 +291,37 @@ def _flags(node: ast.AST, key: str) -> list[tuple[str, str, str, int | None]]:
         bound = positional[1:] if id(fn) in methods else positional
         callee = methods[id(fn)] if fn.name == "__init__" and id(fn) in methods else fn.name
         prefix = key if fn is node else f"{key}.{fn.name}"
-        out += [(f"{prefix}.{p}", callee, p, bound.index(p) if p in bound else None)
-                for p, d in defaults.items() if isinstance(getattr(d, "value", None), bool)]
+        tested = _tested(fn)
+        out += [(f"{prefix}.{p}", callee, p, bound.index(p) if p in bound else None, _value(d))
+                for p, d in defaults.items()
+                if isinstance(d, ast.Constant) and (
+                    isinstance(d.value, bool)
+                    or (d.value is None or isinstance(d.value, str)) and p in tested)]
     return out
 
 
-def _passes(call: ast.Call, param: str, index: int | None) -> bool:
-    """Does ``call`` set ``param``: by keyword, through ``**kw`` or ``*args``, or by position?"""
-    return any(k.arg in (param, None) for k in call.keywords) \
-        or any(isinstance(x, ast.Starred) for x in call.args) \
-        or (index is not None and len(call.args) > index)
+def _arg(call: ast.Call, param: str, index: int | None) -> ast.expr | None:
+    """The argument ``call`` passes for ``param`` (a ``*args`` or ``**kw``
+    may hold it), or None when the call omits it."""
+    for k in call.keywords:
+        if k.arg in (param, None):
+            return k.value
+    for i, x in enumerate(call.args):
+        if isinstance(x, ast.Starred) or i == index:
+            return x
+    return None
 
 
-def unset_flags() -> set[str]:
-    """Bool-default parameters of live ``core_spark`` functions that no call in
-    a root or a live def passes, as "module.def.param"."""
+def one_value_modes() -> dict[str, set[str]]:
+    """Mode parameters of live ``core_spark`` functions that every call in a
+    root or a live def gives the same value (or that no such call reaches),
+    as {"module.def.param": the values they take}. An omitted argument gives
+    the default; a literal or an ALL_CAPS name gives itself; any other
+    argument varies, and a mode it reaches passes."""
     _, live, _ = _live()
     lib = _py_files(os.path.join(ROOT, "core_spark"))
     modules = {_module(path) for path in lib}
-    flags = []  # (key, module, callee name, parameter, positional index)
+    modes = []  # (key, module, callee name, parameter, positional index, default)
     calls: dict[str, list[tuple[set[str], ast.Call]]] = {}  # callee name -> (scope, call)
 
     def add_calls(node, scope):
@@ -293,14 +336,21 @@ def unset_flags() -> set[str]:
             if isinstance(node, (*_FUNCS, ast.ClassDef)):
                 if f"{module}.{node.name}" not in live:
                     continue
-                flags += [(key, module, *rest) for key, *rest in _flags(node, f"{module}.{node.name}")]
+                modes += [(key, module, *rest) for key, *rest in _modes(node, f"{module}.{node.name}")]
             add_calls(node, scope)
     for path in _roots():
         tree = _parse(path)
         add_calls(tree, _imports(tree, path, modules))
-    return {key for key, module, callee, param, index in flags
-            if not any(module in scope and _passes(call, param, index)
-                       for scope, call in calls.get(callee, ()))}
+    out = {}
+    for key, module, callee, param, index, default in modes:
+        values = set()
+        for scope, call in calls.get(callee, ()):
+            if module in scope:
+                arg = _arg(call, param, index)
+                values.add(default if arg is None else _value(arg))
+        if None not in values and len(values) < 2:
+            out[key] = values
+    return out
 
 
 def test_only_listed_defs_are_unreached():
@@ -313,9 +363,11 @@ def test_only_listed_defs_are_unreached():
     assert not stale, f"TEST_ONLY entries that a root now reaches or that are gone: {stale}"
 
 
-def test_every_flag_is_set_by_a_root():
-    unset = unset_flags()
-    new = sorted(unset - set(UNSET_FLAGS))
-    stale = sorted(set(UNSET_FLAGS) - unset)
-    assert not new, f"bool flags that no root sets (delete the flag and its branch): {new}"
-    assert not stale, f"UNSET_FLAGS entries that a root now sets or that are gone: {stale}"
+def test_every_mode_takes_two_values():
+    t = time.perf_counter()
+    fixed = one_value_modes()
+    assert time.perf_counter() - t < 5.0
+    new = {key: sorted(fixed[key]) for key in sorted(set(fixed) - set(ONE_VALUE_MODES))}
+    stale = sorted(set(ONE_VALUE_MODES) - set(fixed))
+    assert not new, f"modes that roots give one value or none (delete the others' branches): {new}"
+    assert not stale, f"ONE_VALUE_MODES entries that roots now vary or that are gone: {stale}"

@@ -70,24 +70,29 @@ def test_spark_matches_model_incl_clamps(spark):
 
 @pytest.mark.spark
 def test_duckdb_twin_matches_spark(spark):
+    """The DuckDB twin's bucket stats equal the Spark operator's key plus
+    the bucket aggregate that the ``zorder_layout`` query runs."""
     import duckdb
+    from pyspark.sql import functions as F
 
-    lattice = (
-        "SELECT CAST(({v} * 37) % 170 AS DOUBLE) - 85.0 + 0.25 AS lat, "
-        "CAST(({v} * 53) % 350 AS DOUBLE) - 175.0 + 0.5 AS lon "
-        "FROM range(500) AS t"
-    )
+    lat = "CAST(({v} * 37) % 170 AS DOUBLE) - 85.0 + 0.25"
+    lon = "CAST(({v} * 53) % 350 AS DOUBLE) - 175.0 + 0.5"
     want = sorted(
         tuple(r)
-        for r in duckdb.sql(
-            sql_zorder_bucket_stats(lattice.format(v="t.range"), dialect="duckdb")
-        ).fetchall()
+        for r in duckdb.sql(sql_zorder_bucket_stats(
+            f"SELECT {lat.format(v='t.range')} AS lat, {lon.format(v='t.range')} AS lon"
+            " FROM range(500) AS t"
+        )).fetchall()
     )
+    pts = spark.range(500).selectExpr(f"{lat.format(v='id')} AS lat", f"{lon.format(v='id')} AS lon")
     got = sorted(
         tuple(r)
-        for r in spark.sql(
-            sql_zorder_bucket_stats(lattice.format(v="t.id"), dialect="spark")
-        ).collect()
+        for r in with_zorder_key(pts)
+        .selectExpr(f"zkey DIV {1 << 26} AS bucket", "lat", "lon")
+        .groupBy("bucket")
+        .agg(F.count("*").alias("n_docs"), F.min("lat"), F.max("lat"),
+             F.min("lon"), F.max("lon"))
+        .collect()
     )
     assert got == want
 
