@@ -780,15 +780,15 @@ def q_rollup_sets(spark, sf_dir):
 
 
 def q_zonal_salted(spark, sf_dir):
-    """G8: two-phase SALTED count — the salt is internal (deterministic
-    xxhash64 of row identity); the result is exactly the plain per-cell
-    count, which is what the oracle checks. Proves salting never changes
-    semantics, only shuffle shape."""
+    """G8: the per-cell count of the mega-cell-skewed points. A count is
+    decomposable, so ``salted_counts`` needs no salt: the partial count
+    below its one exchange already bounds a mega-cell's reducer input by
+    the number of map tasks. The oracle is the plain per-cell count."""
     from core_spark.operators.tiles import assign_tiles
     from core_spark.operators.zonal import salted_counts
 
     pts = assign_tiles(_points(spark, sf_dir), resolutions=(5,))
-    return salted_counts(pts, "h3_r5", salt_mod=8, salt_src="doc_id")
+    return salted_counts(pts, "h3_r5")
 
 
 # JS/TS test-file templates covering the P6 semantic space; <<I>> is the

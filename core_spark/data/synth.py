@@ -73,7 +73,8 @@ GAZETTEER = [
 GAZ_NAMES = [g[0] for g in GAZETTEER]
 
 # Mega-cells: three "urban" centers that attract ~30% of geotagged docs
-# (FIXTURES.md skew requirement — exercises salted two-phase aggregation).
+# (FIXTURES.md skew requirement — exercises mega-cell skew in the zonal
+# aggregates; a decomposable count needs no salt).
 MEGA_CENTERS = [(40.7128, -74.0060), (35.6895, 139.6917), (-23.5505, -46.6333)]
 
 _EPOCH_2024 = np.datetime64("2024-01-01T00:00:00", "us")

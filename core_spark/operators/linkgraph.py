@@ -43,8 +43,8 @@ and skip the index entirely — ``pagerank()`` takes any edge table whose
 out-degree is uniformly ``k_out``.
 
 At 100 TB: the edge table shuffles on uniform host keys (md5-derived —
-no skew by construction; a real crawl graph would salt mega-hosts the
-same way zonal.py salts mega-cells); the rank table is |hosts| rows,
+no skew by construction; a real crawl graph would salt the join keys
+of mega-hosts, SURVEY.md G8); the rank table is |hosts| rows,
 re-pinned per round so each iteration's plan stays flat (the measured
 7x lineage-keeping-persist lesson, materialize.py docstring). Exactly
 ``iters`` joins + hash-aggs — O(log-free) fixed rounds, no convergence

@@ -281,15 +281,13 @@ def encode_png(arr: np.ndarray) -> bytes:
             + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b""))
 
 
-def decode_image(blob: bytes, meta: dict | None = None) -> np.ndarray:
+def decode_image(blob: bytes, meta: dict) -> np.ndarray:
     """Decode to (h, w, c) uint8. Implemented here: the deterministic fake
     codec, PNG (stdlib zlib decoder above — all legal depth/color/interlace
     combos) and JPEG, baseline or progressive (functions/jpeg.py). Exotic
-    variants (arithmetic/lossless JPEG) raise NotImplementedError. Pass ``meta``
-    (a parse_media_header result for the SAME blob) to skip the re-parse
-    when the caller already has it (with_media_features)."""
-    if meta is None:
-        meta = parse_media_header(blob)
+    variants (arithmetic/lossless JPEG) raise NotImplementedError. ``meta``
+    is the parse_media_header result for the SAME blob, which the caller
+    (with_media_features) has already computed."""
     if meta["media_format"] == "image/png":
         if meta["media_ok"]:
             return _decode_png(blob)

@@ -11,9 +11,10 @@ Strategy (SURVEY.md G8):
      combine map-side, so no single task ever sees a mega-cell's raw rows;
   2. then assemble the tiny (cell, lang, count) triples into a map per cell.
 For the count-distinct-free metrics this is exact, shuffle-minimal, and
-needs no sampling. An explicit salt stage (``salted_counts``) is provided
-for aggregations that cannot be decomposed that way, with the salt derived
-deterministically from the row key (never an RNG — resume-safe).
+needs no sampling. A decomposable count needs no salt either
+(``salted_counts``): the partial aggregate below the one exchange already
+cuts a mega-cell to one row per map task. Salt only an aggregate that
+cannot be split.
 
 Reference analog: framework histogram + confidence distribution
 (tests/integration/snapshot.go:44-47; pkg/parser/scanner.go:116-118).
@@ -40,22 +41,18 @@ def zonal_rollup(df, cell_col: str = "h3_r7", lang_col: str = "lang"):
     )
 
 
-def salted_counts(df, cell_col: str, salt_mod: int = 32, salt_src: str = "url"):
-    """Two-phase count with an explicit deterministic salt.
+def salted_counts(df, cell_col: str, salt_src: str = "url"):
+    """Per-cell ``doc_count`` in one grouped count, with no salt.
 
-    Phase 1 groups by (cell, salt) where salt = pmod(xxhash64(salt_src), m) —
-    derived from row identity, so re-runs and resumes see identical salts.
-    Phase 2 sums the ≤ m partials per cell. Use when a non-decomposable agg
-    would otherwise concentrate a mega-cell on one task.
+    The partial count runs map-side below the single exchange, so a
+    mega-cell reaches its reducer as at most one row per map task, which
+    is all a salted (cell, salt) pre-aggregate would give it, without the
+    second shuffle. ``salt_src`` is unused; callers that still pass it
+    run unchanged.
     """
     from pyspark.sql import functions as F
 
-    partial = (
-        df.withColumn("_salt", F.pmod(F.xxhash64(F.col(salt_src)), F.lit(salt_mod)))
-        .groupBy(cell_col, "_salt")
-        .agg(F.count("*").alias("n"))
-    )
-    return partial.groupBy(cell_col).agg(F.sum("n").alias("doc_count"))
+    return df.groupBy(cell_col).agg(F.count("*").alias("doc_count"))
 
 
 def rasterize(spark, zonal_df, res: int, pixel_deg: float = 2.0,

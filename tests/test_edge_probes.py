@@ -4,6 +4,8 @@ lon ±180/540 wrap, res bounds, empty inputs — error-as-data everywhere
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 
@@ -74,6 +76,24 @@ class TestSparkProbes:
         docs = spark.createDataFrame([], "doc_id bigint, text string")
         assert exact_dedup(docs).count() == 0
         assert minhash_lsh_pairs(docs, n_perm=4, bands=2).count() == 0
+
+    def test_salted_counts_is_one_shuffle_with_a_partial_count(self, spark):
+        from core_spark.operators.zonal import salted_counts
+
+        # cell 0 holds 90% of the rows, spread over 6 input partitions
+        df = spark.range(0, 6_000, numPartitions=6).selectExpr(
+            "id AS point_id", "IF(id % 10 = 0, id % 7 + 1, 0) AS cell")
+        got = salted_counts(df, "cell", salt_src="point_id")
+        want = df.groupBy("cell").count().withColumnRenamed("count", "doc_count")
+        assert got.dtypes == want.dtypes == [("cell", "bigint"), ("doc_count", "bigint")]
+        assert sorted(got.collect()) == sorted(want.collect())
+        plan = got._jdf.queryExecution().executedPlan()
+        final = plan.executedPlan().toString()  # the adaptive plan after the collect
+        assert "isFinalPlan=true" in plan.toString()
+        assert len(re.findall(r"Exchange hashpartitioning", final)) == 1, final
+        below = final[final.index("Exchange hashpartitioning"):]
+        assert re.search(r"HashAggregate\(keys=\[cell#\d+L\], functions=\[partial_count\(1\)\]",
+                         below), final
 
     def test_null_text_and_html_rows_survive(self, spark):
         from core_spark.functions.extract import with_extracted_text

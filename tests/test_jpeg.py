@@ -192,10 +192,10 @@ def test_decode_image_dispatch_and_thumbnail_integration():
 
     img = np.full((16, 12, 3), 173, np.uint8)
     jb = encode_jpeg(img)
-    assert np.array_equal(decode_image(jb), img)
     meta = parse_media_header(jb)
+    assert np.array_equal(decode_image(jb, meta), img)
     assert meta["media_ok"] and meta["media_format"] == "image/jpeg"
     assert meta["width"] == 12 and meta["height"] == 16
     # all three codecs agree on the same constant image
-    assert np.array_equal(decode_image(encode_png(img)), img)
-    assert np.array_equal(decode_image(encode_fake_image(img)), img)
+    for blob in (encode_png(img), encode_fake_image(img)):
+        assert np.array_equal(decode_image(blob, parse_media_header(blob)), img)

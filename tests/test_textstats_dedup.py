@@ -61,32 +61,35 @@ class TestKernels:
         blob = encode_fake_image(img)
         meta = parse_media_header(blob)
         assert meta["media_ok"] and (meta["width"], meta["height"]) == (3, 2)
-        assert np.array_equal(decode_image(blob), img)
+        assert np.array_equal(decode_image(blob, meta), img)
         # error-as-data, never raises
         assert parse_media_header(None)["media_error"] == "null_blob"
         assert parse_media_header(blob[:10])["media_error"] == "truncated_header"
         assert parse_media_header(blob[:-1])["media_error"] == "truncated_payload"
         assert parse_media_header(b"\x89PNG\r\n\x1a\nxxxx")["media_format"] == "image/png"
         # corrupt PNG body -> error-as-data ValueError, not a crash
+        corrupt = b"\x89PNG\r\n\x1a\n" + b"0" * 100
         with pytest.raises(ValueError):
-            decode_image(b"\x89PNG\r\n\x1a\n" + b"0" * 100)
+            decode_image(corrupt, parse_media_header(corrupt))
         # well-formed chunks but zlib-corrupt IDAT -> ValueError, not zlib.error
         good = encode_png(np.zeros((3, 3, 3), np.uint8))
         idat_at = good.index(b"IDAT")
         bad = bytearray(good)
         bad[idat_at + 4:idat_at + 12] = b"\x00" * 8  # clobber the deflate stream
         with pytest.raises(ValueError, match="png_bad_idat"):
-            decode_image(bytes(bad))
+            decode_image(bytes(bad), parse_media_header(bytes(bad)))
         # corrupt JPEG body -> error-as-data ValueError, not a crash
+        corrupt = b"\xff\xd8\xff" + b"0" * 100
         with pytest.raises(ValueError):
-            decode_image(b"\xff\xd8\xff" + b"0" * 100)
+            decode_image(corrupt, parse_media_header(corrupt))
         # real baseline JPEG decodes (codec in functions/jpeg.py)
         from core_spark.functions.jpeg import encode_jpeg
 
         jimg = np.full((6, 5, 3), 158, np.uint8)
-        jmeta = parse_media_header(encode_jpeg(jimg))
+        jblob = encode_jpeg(jimg)
+        jmeta = parse_media_header(jblob)
         assert jmeta["media_ok"] and jmeta["media_format"] == "image/jpeg"
-        assert np.array_equal(decode_image(encode_jpeg(jimg)), jimg)
+        assert np.array_equal(decode_image(jblob, jmeta), jimg)
 
     def test_png_roundtrip_all_color_types(self):
         from core_spark.operators.multimodal import encode_png
@@ -98,7 +101,7 @@ class TestKernels:
             meta = parse_media_header(blob)
             assert meta["media_ok"] and meta["media_format"] == "image/png"
             assert (meta["width"], meta["height"], meta["channels"]) == (4, 5, c)
-            assert np.array_equal(decode_image(blob), img)
+            assert np.array_equal(decode_image(blob, meta), img)
 
     def test_png_filters_1_to_4(self):
         """Hand-filter each scanline with a different filter type (the
@@ -147,7 +150,7 @@ class TestKernels:
         ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
         blob = (PNG_MAGIC + chunk(b"IHDR", ihdr)
                 + chunk(b"IDAT", zlib.compress(bytes(raw))) + chunk(b"IEND", b""))
-        assert np.array_equal(decode_image(blob), img)
+        assert np.array_equal(decode_image(blob, parse_media_header(blob)), img)
 
     def test_png_palette(self):
         import struct
@@ -169,7 +172,7 @@ class TestKernels:
                 + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b""))
         meta = parse_media_header(blob)
         assert meta["media_ok"] and meta["channels"] == 3
-        assert np.array_equal(decode_image(blob), pal[idx])
+        assert np.array_equal(decode_image(blob, meta), pal[idx])
 
     def test_png_unsupported_variants_and_truncation(self):
         import struct
@@ -194,18 +197,18 @@ class TestKernels:
         assert meta["media_error"] == "unsupported_png_variant"
         assert (meta["width"], meta["height"]) == (2, 2)
         with pytest.raises(NotImplementedError):
-            decode_image(blob_bad)
+            decode_image(blob_bad, meta)
         # IDAT that inflates to fewer bytes than h*(stride+1) -> ValueError
         ihdr = struct.pack(">IIBBBBB", 4, 4, 8, 2, 0, 0, 0)
         short = (PNG_MAGIC + chunk(b"IHDR", ihdr)
                  + chunk(b"IDAT", zlib.compress(b"\x00" * 10))
                  + chunk(b"IEND", b""))
         with pytest.raises(ValueError):
-            decode_image(short)
+            decode_image(short, parse_media_header(short))
         # missing IDAT entirely -> ValueError
         noidat = PNG_MAGIC + chunk(b"IHDR", ihdr) + chunk(b"IEND", b"")
         with pytest.raises(ValueError):
-            decode_image(noidat)
+            decode_image(noidat, parse_media_header(noidat))
 
     @staticmethod
     def _png_blob(w, h, depth, color, interlace, raw, plte=None):
@@ -233,11 +236,12 @@ class TestKernels:
         blob = self._png_blob(5, 4, 16, 2, 0, raw)
         meta = parse_media_header(blob)
         assert meta["media_ok"] and meta["channels"] == 3
-        assert np.array_equal(decode_image(blob), (img16 >> 8).astype(np.uint8))
+        assert np.array_equal(decode_image(blob, meta), (img16 >> 8).astype(np.uint8))
         # 16-bit gray-alpha too (raw channels 2)
         ga16 = rng.randint(0, 65536, size=(3, 2, 2), dtype=np.uint16)
         raw = b"".join(b"\x00" + ga16[y].astype(">u2").tobytes() for y in range(3))
-        got = decode_image(self._png_blob(2, 3, 16, 4, 0, raw))
+        blob = self._png_blob(2, 3, 16, 4, 0, raw)
+        got = decode_image(blob, parse_media_header(blob))
         assert np.array_equal(got, (ga16 >> 8).astype(np.uint8))
 
     def test_png_subbyte_gray_and_palette(self):
@@ -248,15 +252,13 @@ class TestKernels:
                 np.unpackbits(g4[y].reshape(-1, 1), axis=1)[:, 4:].ravel()
             ).tobytes()
             for y in range(2))
-        assert np.array_equal(
-            decode_image(self._png_blob(3, 2, 4, 0, 0, raw)),
-            (g4 * 17)[:, :, None])
+        blob = self._png_blob(3, 2, 4, 0, 0, raw)
+        assert np.array_equal(decode_image(blob, parse_media_header(blob)), (g4 * 17)[:, :, None])
         # 1-bit gray: 0/255
         g1 = np.array([[1, 0, 1, 1, 0]], dtype=np.uint8)
         raw = b"\x00" + np.packbits(g1.ravel()).tobytes()
-        assert np.array_equal(
-            decode_image(self._png_blob(5, 1, 1, 0, 0, raw)),
-            (g1 * 255)[:, :, None])
+        blob = self._png_blob(5, 1, 1, 0, 0, raw)
+        assert np.array_equal(decode_image(blob, parse_media_header(blob)), (g1 * 255)[:, :, None])
         # 2-bit palette indices
         pal = np.array([[9, 8, 7], [1, 2, 3], [250, 0, 250], [0, 0, 0]],
                        dtype=np.uint8)
@@ -266,7 +268,8 @@ class TestKernels:
                 np.unpackbits(idx[y].reshape(-1, 1), axis=1)[:, 6:].ravel()
             ).tobytes()
             for y in range(2))
-        got = decode_image(self._png_blob(3, 2, 2, 3, 0, raw, plte=pal.tobytes()))
+        blob = self._png_blob(3, 2, 2, 3, 0, raw, plte=pal.tobytes())
+        got = decode_image(blob, parse_media_header(blob))
         assert np.array_equal(got, pal[idx])
 
     def test_png_adam7_interlace_roundtrip(self):
@@ -288,10 +291,11 @@ class TestKernels:
             blob = self._png_blob(w, h, 8, color, 1, bytes(raw))
             meta = parse_media_header(blob)
             assert meta["media_ok"], (h, w, c)
-            assert np.array_equal(decode_image(blob), img), (h, w, c)
+            assert np.array_equal(decode_image(blob, meta), img), (h, w, c)
         # interlaced + truncated stream still surfaces as ValueError
+        blob = self._png_blob(10, 9, 8, 2, 1, b"\x00" * 8)
         with pytest.raises(ValueError):
-            decode_image(self._png_blob(10, 9, 8, 2, 1, b"\x00" * 8))
+            decode_image(blob, parse_media_header(blob))
 
 
 @pytest.mark.spark
@@ -619,7 +623,7 @@ class TestMultimodalStage:
             meta = parse_media_header(blob)
             rec = {"media_id": media_id, **{c: meta[c] for c in meta_cols}}
             try:
-                px = decode_image(blob)
+                px = decode_image(blob, meta)
                 h, w, _ = px.shape
                 yi = (np.arange(size) * h // size).clip(0, h - 1)
                 xi = (np.arange(size) * w // size).clip(0, w - 1)
